@@ -1,19 +1,21 @@
 #!/usr/bin/env python3
 """proj_spark benchmark: two seeded, closed-loop batch workloads.
 
-    python3 perfbench/run.py --workload etl --seed 1 --seconds 4 --trace 0
+    python3 perfbench/run.py --workload etl --seed 1 --seconds 16 --trace 0
 
 Run it from the repository root.  One client issues one operator call at
 a time against ``local[<cores of this host>]``; every output is sunk to
 the ``noop`` format.  Workloads and their input sizes are described in
 ``perfbench/WORKLOADS.md``.
 
-``--trace 0`` reports the end-to-end metrics (rows_per_s, setup_s,
-peak_rss_mb).  ``--trace 1`` runs the same passes twice, first untraced
-and then with spans and Spark's event log, and reports the per-layer
-metrics.  The last line of standard output is one JSON object with the
-keys ``correct``, ``attempted``, ``failed`` and ``metrics``; the lines
-before it name every metric with its unit, and ``failed_ratio``.
+``--trace 0`` reports the end-to-end metrics (rows_per_ref_cpu_s,
+setup_s, peak_rss_mb), rescaled to a reference host speed, and prints
+the unscaled figures beside them.
+``--trace 1`` alternates quiet and traced passes in one session with
+Spark's event log on, and reports the per-layer metrics.  The last line
+of standard output is one JSON object with the keys ``correct``,
+``attempted``, ``failed`` and ``metrics``; the lines before it name
+every metric with its unit, and ``failed_ratio``.
 """
 
 import time
@@ -28,19 +30,22 @@ import statistics  # noqa: E402
 import subprocess  # noqa: E402
 import sys  # noqa: E402
 import traceback  # noqa: E402
+import zlib  # noqa: E402
 
 from tracing import (Tracer, children, missing_udfs, parse_event_log,  # noqa: E402
-                     peak_rss_mb, plan_summary)
+                     peak_rss_mb, plan_summary, tree_cpu_s)
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 
 SETUP_REPEATS = 3  # input set-ups per run; setup_s counts their median
-WARM_PASSES = 1  # untimed cold pass before timing
+# CPU seconds of calibrate() on the reference host (a 4-vCPU guest in a
+# quiet minute); end-to-end times are rescaled to a host of that speed
+REF_CAL_S = 0.08
 OUT_DIR = os.path.join(ROOT, ".bench_out")
 
 # per-layer quantities reported for each Spark operator call
-_SPARK = ("construct_s", "exec_s", "jobs", "tasks", "executor_cpu_s", "gc_s")
+_SPARK = ("construct_s", "exec_s", "cpu_s", "jobs", "tasks", "executor_cpu_s", "gc_s")
 _PY = ("python_run_s", "python_bytes_in", "python_bytes_out")
 _JVM = ("eager_jobs", "shuffle_write_bytes")
 OP_METRICS = {
@@ -65,7 +70,7 @@ KERNEL_METRICS = {
     "images.phash64_batch.imgs_per_s": "1/s",
 }
 QUANTITY_UNITS = {
-    "construct_s": "s", "exec_s": "s", "executor_cpu_s": "s", "gc_s": "s",
+    "construct_s": "s", "exec_s": "s", "cpu_s": "s", "executor_cpu_s": "s", "gc_s": "s",
     "python_run_s": "s", "jobs": "count", "eager_jobs": "count", "tasks": "count",
     "python_rows_in": "count", "shuffle_write_bytes": "B", "spill_bytes": "B",
     "python_bytes_in": "B", "python_bytes_out": "B", "python_rows_per_hit": "ratio",
@@ -189,15 +194,28 @@ class Calls:
                    for op in self.calls)
 
 
-def run_pass(wl, tracer, tag: str, calls=None, guard=None):
-    """One pass over the workload's operator sequence; returns its wall
-    time and the last output of each operator that did not raise."""
-    built = {}
-    t = time.perf_counter()
+def cpu_clock(spark):
+    """A clock of the CPU seconds used by this process, the Spark JVM and
+    the JVM's Python workers.  Unlike wall time, it does not count time
+    the host gives to other guests or processes."""
+    jvm_pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+
+    def now() -> float:
+        t = os.times()
+        return t.user + t.system + tree_cpu_s(jvm_pid)
+    return now
+
+
+def run_pass(wl, tracer, clock, tag: str, calls=None, guard=None):
+    """One pass over the workload's operator sequence; returns the
+    output, and the wall and CPU seconds, of each operator call that did
+    not raise."""
+    built, times = {}, {}
     with tracer.span("pass", tag):
         for op in wl.ops:
             if calls is not None:
                 calls.calls[op.name] += 1
+            t, c = time.perf_counter(), clock()
             try:
                 with tracer.span(op.name, "call"):
                     with tracer.span(op.name, "construct", f"{tag}|{op.name}|construct"):
@@ -207,11 +225,12 @@ def run_pass(wl, tracer, tag: str, calls=None, guard=None):
                     with tracer.span(op.name, "execute", f"{tag}|{op.name}|execute"):
                         b.sink.write.mode("overwrite").format("noop").save()
                 built[op.name] = b
+                times[op.name] = {"wall_s": time.perf_counter() - t, "cpu_s": clock() - c}
             except Exception:
                 traceback.print_exc(file=sys.stderr)
                 if calls is not None:
                     calls.raised[op.name] += 1
-    return time.perf_counter() - t, built
+    return built, times
 
 
 def release_checkpoints(sc) -> None:
@@ -223,40 +242,72 @@ def release_checkpoints(sc) -> None:
     sc._jvm.java.lang.System.gc()
 
 
-def warm_up(spark, wl, tracer, guard=None) -> None:
-    """Untimed passes; the first records the plan guard."""
-    for i in range(WARM_PASSES):
-        release_checkpoints(spark.sparkContext)
-        run_pass(wl, tracer, f"warm{i}", guard=guard if i == 0 else None)
-
-
-def timed_passes(spark, wl, tracer, calls, seconds: float, prefix: str = "p"):
-    times, built = [], {}
-    start = time.perf_counter()
-    while not times or time.perf_counter() - start < seconds:
-        release_checkpoints(spark.sparkContext)
-        dt, built = run_pass(wl, tracer, f"{prefix}{len(times)}", calls)
-        times.append(dt)
-    return times, built
-
-
-def check_outputs(wl, built, calls, guard) -> None:
+def warm_up(spark, wl, tracer, clock, calls) -> dict:
+    """Untimed: a cold pass that records the plan guard, then each
+    operator's output check, which runs its plan once more.  Returns the
+    plan guard."""
+    guard = {}
+    release_checkpoints(spark.sparkContext)
+    built, _ = run_pass(wl, tracer, clock, "cold", guard=guard)
+    if tracer.enabled:
+        spark.sparkContext.setJobGroup("check", "output checks")
     for op in wl.ops:
-        missing = missing_udfs(guard.get(op.name, {"python_calls": []}), op.udfs)
-        if missing:
-            calls.bad.add(op.name)
-            print(f"plan guard: {op.name} plan lacks {missing}", file=sys.stderr)
-        if op.name not in built:
-            continue
-        try:
-            msgs = op.check(built[op.name])
-        except Exception:
-            traceback.print_exc(file=sys.stderr)
-            msgs = ["output check raised"]
-        for m in msgs:
-            print(f"check failed: {m}", file=sys.stderr)
-        if msgs:
-            calls.bad.add(op.name)
+        if op.name in built:
+            check_op(op, built[op.name], guard[op.name], calls)
+    return guard
+
+
+def calibrate() -> float:
+    """CPU seconds of a fixed single-threaded task (a numpy sort, zlib
+    and a pure-Python loop), which measure how fast this host runs at
+    the moment.  The same work on every run and commit."""
+    import numpy as np
+
+    rng = np.random.default_rng(12345)
+    values = rng.random(1_000_000)
+    data = rng.integers(0, 16, 1_000_000, dtype=np.uint8).tobytes()
+    t = time.process_time()
+    np.sort(values, kind="quicksort")
+    zlib.compress(data, 6)
+    x = 0
+    for i in range(300_000):
+        x = (x * 31 + i) % 1_000_003
+    return time.process_time() - t
+
+
+def pass_count(wl, seconds: float) -> int:
+    """Passes that fit in ``seconds`` at the workload's nominal pass
+    time, at least one.  The count depends on the run length only, so
+    every run of a workload, on any commit, makes the same passes."""
+    return max(1, int(seconds // wl.pass_s))
+
+
+def timed_pass(spark, wl, tracer, clock, calls, tag: str):
+    release_checkpoints(spark.sparkContext)
+    return run_pass(wl, tracer, clock, tag, calls)
+
+
+def pass_time(passes: list, kind: str) -> float:
+    """``wall_s`` or ``cpu_s`` of a typical pass: the sum over operators
+    of each one's median call time across the passes."""
+    ops = {op for p in passes for op in p}
+    return sum(statistics.median(p[op][kind] for p in passes if op in p) for op in ops)
+
+
+def check_op(op, b, summary: dict, calls) -> None:
+    """Plan guard and output check of one operator call; a failure of
+    either counts every call of the operator as failed."""
+    missing = missing_udfs(summary, op.udfs)
+    msgs = [f"plan guard: {op.name} plan lacks {missing}"] if missing else []
+    try:
+        msgs += op.check(b)
+    except Exception:
+        traceback.print_exc(file=sys.stderr)
+        msgs.append(f"{op.name}: output check raised")
+    for m in msgs:
+        print(f"check failed: {m}", file=sys.stderr)
+    if msgs:
+        calls.bad.add(op.name)
 
 
 # ---------------------------------------------------------------------------
@@ -319,49 +370,65 @@ def untraced_run(args, work, cores, build):
             wl = build(spark, args.seed, os.path.join(work, "data"), 2 * cores)
             setups.append(time.perf_counter() - t)
         tracer = Tracer(spark.sparkContext, wl.name, False, T0)
-        guard = {}
-        warm_up(spark, wl, tracer, guard)
+        calls = Calls(wl.ops)
+        clock = cpu_clock(spark)
+        guard = warm_up(spark, wl, tracer, clock, calls)
         first = time.perf_counter()
         # the repeated input set-ups count once, at their median
         setup_s = first - T0 - sum(setups) + statistics.median(setups)
-        calls = Calls(wl.ops)
-        times, built = timed_passes(spark, wl, tracer, calls, args.seconds)
-        check_outputs(wl, built, calls, guard)
+        cal, passes = [], []
+        for i in range(pass_count(wl, args.seconds)):
+            cal.append(calibrate())
+            passes.append(timed_pass(spark, wl, tracer, clock, calls, f"p{i}")[1])
+        cal.append(calibrate())
         jvm_pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
         jvm_mb, worker_mb = peak_rss_mb(jvm_pid)
     finally:
         shutdown(spark)
+    # > 1 when this host runs slower than the reference host right now
+    slowdown = statistics.median(cal) / REF_CAL_S
+    cpu_s = pass_time(passes, "cpu_s")
     metrics = {
-        "rows_per_s": {"value": wl.rows / statistics.median(times), "unit": "rows/s"},
-        "setup_s": {"value": setup_s, "unit": "s"},
+        "rows_per_ref_cpu_s": {"value": wl.rows * slowdown / cpu_s, "unit": "rows/cpu_s"},
+        "setup_s": {"value": setup_s / slowdown, "unit": "s"},
         "peak_rss_mb": {"value": jvm_mb + worker_mb, "unit": "MB"},
     }
-    info = {"passes": len(times), "pass_s": times, "setups_s": setups, "plan_guard": guard,
-            "rss_mb": {"jvm": jvm_mb, "largest_worker": worker_mb}}
-    return wl, calls, metrics, info
+    # as measured, before rescaling: printed and kept, but they follow the
+    # host's speed too closely to gate a change on (see WORKLOADS.md)
+    shown = {
+        "rows_per_s": {"value": wl.rows / pass_time(passes, "wall_s"), "unit": "rows/s"},
+        "rows_per_cpu_s": {"value": wl.rows / cpu_s, "unit": "rows/cpu_s"},
+        "setup_wall_s": {"value": setup_s, "unit": "s"},
+        "host_slowdown": {"value": slowdown, "unit": "ratio"},
+    }
+    info = {"passes": len(passes), "op_times": passes, "calibrate_s": cal, "setups_s": setups,
+            "plan_guard": guard, "rss_mb": {"jvm": jvm_mb, "largest_worker": worker_mb}}
+    return wl, calls, metrics, shown, info
 
 
 def traced_run(args, work, cores, build):
-    half = args.seconds / 2.0
-    data = os.path.join(work, "data")
-    spark = make_session(work, cores, event_log=False)
-    try:
-        wl = build(spark, args.seed, data, 2 * cores)
-        calls = Calls(wl.ops)
-        quiet = Tracer(spark.sparkContext, wl.name, False, T0)
-        warm_up(spark, wl, quiet)
-        base, _ = timed_passes(spark, wl, quiet, calls, half)
-    finally:
-        spark.stop()
+    """One session with Spark's event log on.  After the warm-up, quiet
+    passes (no spans, no per-call job groups) alternate with traced
+    passes, and the per-layer metrics come from the traced ones."""
     spark = make_session(work, cores, event_log=True)
     try:
-        wl = build(spark, args.seed, data, 2 * cores)
+        wl = build(spark, args.seed, os.path.join(work, "data"), 2 * cores)
+        calls = Calls(wl.ops)
         tracer = Tracer(spark.sparkContext, wl.name, True, T0)
-        guard = {}
-        warm_up(spark, wl, tracer, guard)
-        traced, built = timed_passes(spark, wl, tracer, calls, half, prefix="t")
-        spark.sparkContext.setJobGroup("check", "output checks")
-        check_outputs(wl, built, calls, guard)
+        quiet = Tracer(spark.sparkContext, wl.name, False, T0)
+        clock = cpu_clock(spark)
+        guard = warm_up(spark, wl, tracer, clock, calls)
+        base, traced, built = [], {}, {}
+        for i in range(pass_count(wl, args.seconds / 2.0)):
+            # alternate which kind runs first, so neither gains more warm-up
+            for kind in ("qt" if i % 2 == 0 else "tq"):
+                if kind == "q":
+                    spark.sparkContext.setJobGroup("quiet", "untraced pass")
+                    base.append(timed_pass(spark, wl, quiet, clock, calls, f"q{i}")[1])
+                else:
+                    built, traced[f"t{i}"] = timed_pass(spark, wl, tracer, clock, calls,
+                                                        f"t{i}")
+        spark.sparkContext.setJobGroup("hits", "verified output rows")
         hits = {op.name: op.hits(built[op.name]) for op in wl.ops
                 if op.hits is not None and op.name in built}
     finally:
@@ -371,17 +438,19 @@ def traced_run(args, work, cores, build):
     per_call = op_calls(spans, groups)
     values = {f"{op}.{q}": 0.0 for op, qs in OP_METRICS.items() for q in qs}
     for op, rows in per_call.items():
-        if op in hits and hits[op]:
-            for r in rows:
+        for r in rows:
+            r["cpu_s"] = traced[r["pass"]].get(op, {}).get("cpu_s", 0.0)
+            if hits.get(op):
                 r["python_rows_per_hit"] = r.get("python_rows_in", 0.0) / hits[op]
         for q in OP_METRICS.get(op, ()):
             values[f"{op}.{q}"] = statistics.median(r.get(q, 0.0) for r in rows)
     values.update(kernel_metrics(args.seed))
-    values["trace.overhead_ratio"] = statistics.median(traced) / statistics.median(base)
+    values["trace.overhead_ratio"] = (pass_time(list(traced.values()), "wall_s")
+                                      / pass_time(base, "wall_s"))
     metrics = {k: {"value": values[k], "unit": unit_for_metric(k)} for k in per_layer_names()}
-    info = {"untraced_pass_s": base, "traced_pass_s": traced, "plan_guard": guard,
+    info = {"quiet_op_times": base, "traced_op_times": traced, "plan_guard": guard,
             "hits": hits, "spans": spans, "groups": groups, "per_call": per_call}
-    return wl, calls, metrics, info
+    return wl, calls, metrics, {}, info
 
 
 def unit_for_metric(name: str) -> str:
@@ -400,7 +469,7 @@ def op_calls(spans, groups) -> dict:
         if s["phase"] not in ("construct", "execute") or not s["group"].startswith("t"):
             continue
         tag, op, phase = s["group"].split("|")
-        row = out.setdefault(op, {}).setdefault(tag, {})
+        row = out.setdefault(op, {}).setdefault(tag, {"pass": tag})
         row["construct_s" if phase == "construct" else "exec_s"] = s["end"] - s["start"]
         g = groups.get(s["group"], {})
         if phase == "construct":
@@ -430,7 +499,7 @@ def main(argv=None) -> int:
     prepare_env(work)
     try:
         run = traced_run if args.trace else untraced_run
-        wl, calls, metrics, info = run(args, work, cores, BUILDERS[args.workload])
+        wl, calls, metrics, shown, info = run(args, work, cores, BUILDERS[args.workload])
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -444,7 +513,7 @@ def main(argv=None) -> int:
 
     attempted, failed = calls.attempted(), calls.failed()
     print(f"perfbench {wl.name} seed={args.seed} local[{cores}] rows={wl.rows}")
-    for name, m in metrics.items():
+    for name, m in {**metrics, **shown}.items():
         print(f"  {name} = {m['value']:.6g} {m['unit']}")
     print(f"  failed_ratio = {failed / attempted:.6g} ratio ({failed}/{attempted} calls)")
     print(json.dumps({"correct": failed == 0, "attempted": attempted,

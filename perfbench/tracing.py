@@ -199,6 +199,28 @@ def children(pid: int) -> list:
     return kids
 
 
+def tree_cpu_s(pid: int) -> float:
+    """CPU seconds, user plus system, of ``pid`` and its live
+    descendants, each with the CPU of the children it has reaped."""
+    kids, ticks = {}, {}
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+        except OSError:
+            continue
+        kids.setdefault(int(fields[1]), []).append(int(d))
+        ticks[int(d)] = sum(int(x) for x in fields[11:15])  # utime stime cutime cstime
+    total, todo = 0, [pid]
+    while todo:
+        p = todo.pop()
+        total += ticks.get(p, 0)
+        todo += kids.get(p, [])
+    return total / os.sysconf("SC_CLK_TCK")
+
+
 def peak_rss_mb(jvm_pid: int) -> tuple:
     """Peak resident memory (VmHWM) of the Spark JVM and of the largest
     of its Python worker descendants, in MiB."""

@@ -24,19 +24,19 @@ from pyspark.sql import functions as F
 
 # Input sizes.  They are fixed, not derived from the host, so rows/s is
 # always stated at the same input size.
-GEO_POINTS = 250_000
-GEO_POLYGONS = 150
+GEO_POINTS = 120_000
+GEO_POLYGONS = 100
 CITIES = 64
-PROX_POINTS = 100_000
-PROX_QUERIES = 1_000
+PROX_POINTS = 50_000
+PROX_QUERIES = 500
 PROX_SPARSE = 8  # queries placed anywhere on the globe
 PROX_POLAR = 2  # queries above 84 degrees, among sparse polar points
 PROX_RADIUS_M = 50_000.0
 KNN_K = 5
-DOCS = 3_000
+DOCS = 2_000
 DOC_WORDS = 40
-HASHES = 40_000
-IMAGES = 400
+HASHES = 20_000
+IMAGES = 200
 TILE = 16
 ZOOMS = (0, 1, 2)
 
@@ -65,6 +65,7 @@ class Op:
 class Workload:
     name: str
     rows: int  # big-side input rows of one pass
+    pass_s: float  # nominal warm pass time: a run of S seconds makes S // pass_s passes
     ops: list
 
 
@@ -553,7 +554,7 @@ def build_etl(spark: SparkSession, seed: int, data_dir: str,
               files: int) -> Workload:
     """The Python-UDF path: coordinate transforms, cells and tiles and
     PIP over points, then verification and tiling of images."""
-    return Workload("etl", GEO_POINTS + IMAGES,
+    return Workload("etl", GEO_POINTS + IMAGES, 4.0,
                     _geo_ops(spark, seed, data_dir, files)
                     + _image_ops(spark, seed, data_dir, files))
 
@@ -562,7 +563,7 @@ def build_match(spark: SparkSession, seed: int, data_dir: str,
                 files: int) -> Workload:
     """The JVM-only path: kNN and radius joins over points, then
     near-duplicate groups over documents and hashes."""
-    return Workload("match", PROX_POINTS + DOCS + HASHES,
+    return Workload("match", PROX_POINTS + DOCS + HASHES, 7.5,
                     _proximity_ops(spark, seed, data_dir, files)
                     + _dedup_ops(spark, seed, data_dir, files))
 
