@@ -16,12 +16,15 @@ Deterministic hyperplanes: components derive from splitmix64 of
 
 from __future__ import annotations
 
+import math
 from typing import Optional
 
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from .textops import _banded_pairs, _bit_bands
 
 __all__ = [
     "cosine_sim_col",
@@ -45,9 +48,15 @@ def _lit_double_array(vals) -> Column:
     shortest decimal that round-trips, and the SQL parser reads double
     literals with the same correctly-rounded parse, so the values are
     bit-identical to the F.lit path (verified including subnormals,
-    +-0.0 and pi)."""
-    return F.expr(
-        "array(" + ",".join(repr(float(x)) + "D" for x in vals) + ")")
+    +-0.0 and pi).  Non-finite values have no literal syntax (``nanD``
+    does not parse) and go through a string cast instead."""
+    def lit(x: float) -> str:
+        if math.isfinite(x):
+            return repr(x) + "D"
+        return ("double('NaN')" if math.isnan(x)
+                else f"double('{'-' if x < 0 else ''}Infinity')")
+
+    return F.expr("array(" + ",".join(lit(float(x)) for x in vals) + ")")
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -72,8 +81,6 @@ def _seq_norm(vals) -> float:
     double accumulation, BIT-IDENTICAL to the JVM aggregate (so a
     literal centroid norm can replace a per-row recomputation without
     moving any oracle value by an ulp)."""
-    import math
-
     acc = 0.0
     for x in vals:
         acc += float(x) * float(x)
@@ -157,21 +164,12 @@ def ann_lsh_topk(
     re-rank within candidates.  Same output schema as brute force (rank
     may hold fewer than k rows for out-of-bucket queries — by design)."""
     planes = [_hyperplane(p, dim) for p in range(n_planes)]
-    rows_per_band = n_planes // bands
+    band_keys = _bit_bands(F.col("_sig"), [n_planes // bands] * bands)
 
     def with_bands(df: DataFrame, vc: str) -> DataFrame:
         sig = _sign_bits_col(F.col(vc), planes)
         df = df.withColumn("_sig", sig)
-        parts = [
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftrightunsigned(F.col("_sig"), b * rows_per_band)
-                .bitwiseAND(F.lit((1 << rows_per_band) - 1))
-                .alias("key"),
-            )
-            for b in range(bands)
-        ]
-        return df.withColumn("_bk", F.explode(F.array(*parts))).select(
+        return df.withColumn("_bk", F.explode(band_keys)).select(
             *df.columns, F.col("_bk.band").alias("band"), F.col("_bk.key").alias("key")
         ).drop("_bk", "_sig")
 
@@ -426,47 +424,16 @@ def embedding_neardup_pairs(
     (id_a < id_b, cos_sim >= threshold).  Only bucket-colliding pairs
     are scored."""
     planes = [_hyperplane(p, dim) for p in range(n_planes)]
-    rows_per_band = n_planes // bands
-    sig = _sign_bits_col(F.col(vec_col), planes)
+    band_keys = _bit_bands(F.col("_sig"), [n_planes // bands] * bands)
     df = (vectors.select(F.col(id_col), F.col(vec_col))
           .withColumn("__n", _norm(F.col(vec_col)))
-          .withColumn("_sig", sig))
-    parts = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.shiftrightunsigned(F.col("_sig"), b * rows_per_band)
-            .bitwiseAND(F.lit((1 << rows_per_band) - 1))
-            .alias("key"),
-        )
-        for b in range(bands)
-    ]
-    ex = df.withColumn("_bk", F.explode(F.array(*parts))).select(
-        id_col, vec_col, "__n",
-        F.col("_bk.band").alias("band"), F.col("_bk.key").alias("key")
-    )
-    a, b = ex.alias("a"), ex.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.key") == F.col("b.key"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col(f"a.{vec_col}").alias("va"),
-            F.col(f"b.{vec_col}").alias("vb"),
-            F.col("a.__n").alias("na"),
-            F.col("b.__n").alias("nb"),
-        )
-    )
+          .withColumn("_sig", _sign_bits_col(F.col(vec_col), planes)))
     # score + threshold BEFORE the pair-dedup: the exchange then moves
     # (id_a, id_b, cos_sim) for verified pairs only, never the vector
-    # payloads.  cos_sim is a pure function of the pair, so dedup-after-
-    # filter returns the same pair set.
-    return (
-        cand.withColumn(
-            "cos_sim",
-            _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")))
-        .where(F.col("cos_sim") >= threshold)
-        .select("id_a", "id_b", "cos_sim")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    # payloads
+    return _banded_pairs(
+        df, id_col, band_keys, carry=(vec_col, "__n"),
+        score=("cos_sim", _dot(F.col(f"{vec_col}_a"), F.col(f"{vec_col}_b"))
+               / (F.col("__n_a") * F.col("__n_b"))),
+        keep=F.col("cos_sim") >= threshold,
+    ).select("id_a", "id_b", "cos_sim")

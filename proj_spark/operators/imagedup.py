@@ -8,11 +8,9 @@ is a banded-Hamming self-join: split the hash into ``max_hamming + 1``
 bands — by pigeonhole, any pair within the distance budget agrees
 exactly on at least one band — equi-join on (band, band_value), then
 verify exact Hamming distance on the (small) candidate set with the
-JVM ``bit_count`` of the XOR.  No all-pairs product anywhere; the
-shape is identical to the reference-era SimHash text path
-(``textops.simhash_dedup_pairs``) but generic over any precomputed
-64-bit hash column, and uses ``F.bit_count`` (one codegen'd
-instruction) instead of a 64-term bit loop.
+JVM ``bit_count`` of the XOR.  No all-pairs product anywhere.  The
+SimHash text path (``textops.simhash_dedup_pairs``) runs the very same
+Hamming core (``textops._hamming_pairs``) over its simhash projection.
 
 Scale notes (100 TB / 10^12 images):
   * candidate generation is a shuffle on (band, key) — 2^band_bits
@@ -29,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .textops import _spread_small_input
+from .textops import _hamming_pairs, _spread_small_input
 
 __all__ = [
     "hamming_neardup_pairs",
@@ -57,69 +55,8 @@ def hamming_neardup_pairs(
     holds).  Output columns: id_a, id_b, hamming [+ keep_cols from each
     side as <col>_a / <col>_b].
     """
-    if not 1 <= bits <= 64:
-        raise ValueError(f"bits must be in [1, 64], got {bits}")
-    if max_hamming < 0:
-        raise ValueError(f"max_hamming must be >= 0, got {max_hamming}")
-    nb = max_hamming + 1
-    chunk = bits // nb
-    if chunk < 1:
-        raise ValueError(
-            f"max_hamming={max_hamming} needs at least {nb} bands but "
-            f"bits={bits} provides fewer bits than bands")
-
-    df = _spread_small_input(df)
-    base = df.select(id_col, F.col(hash_col).alias("__h"), *keep_cols)
-    # consumed by both self-join sides: one computation, not two
-    base = base.localCheckpoint(eager=False)
-
-    parts = []
-    for i in range(nb):
-        lo = i * chunk
-        # last band absorbs the remainder bits so coverage is exact
-        width = bits - lo if i == nb - 1 else chunk
-        key = F.shiftrightunsigned(F.col("__h"), lo)
-        if lo + width < 64:
-            key = key.bitwiseAND(F.lit((1 << width) - 1))
-        parts.append(F.struct(F.lit(i).alias("band"), key.alias("key")))
-    ex = base.select(
-        id_col, "__h", *keep_cols, F.explode(F.array(*parts)).alias("bk")
-    ).select(id_col, "__h", *keep_cols, "bk.band", "bk.key")
-
-    a, b = ex.alias("a"), ex.alias("b")
-    sel = [
-        F.col(f"a.{id_col}").alias("id_a"),
-        F.col(f"b.{id_col}").alias("id_b"),
-        F.col("a.__h").alias("__ha"),
-        F.col("b.__h").alias("__hb"),
-    ]
-    for c in keep_cols:
-        sel.append(F.col(f"a.{c}").alias(f"{c}_a"))
-        sel.append(F.col(f"b.{c}").alias(f"{c}_b"))
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.key") == F.col("b.key"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(*sel)
-    )
-    x = F.col("__ha").bitwiseXOR(F.col("__hb"))
-    if bits < 64:
-        x = x.bitwiseAND(F.lit((1 << bits) - 1))
-    out_cols = ["id_a", "id_b", "hamming"] + [
-        f"{c}_{s}" for c in keep_cols for s in ("a", "b")
-    ]
-    # verify BEFORE the pair-dedup shuffle: the xor+bit_count test is
-    # whole-stage codegen in the join's own stage, so the random band
-    # collisions (quadratic in per-band density) die without ever being
-    # exchanged; dropDuplicates then shuffles only true near-dup pairs
-    # (linear output).  hamming is a pure function of (id_a, id_b), so
-    # dedup-after-filter returns exactly the same pair set.
-    return (
-        cand.withColumn("hamming", F.bit_count(x).cast("int"))
-        .where(F.col("hamming") <= max_hamming)
-        .select(*out_cols)
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    return _hamming_pairs(_spread_small_input(df), id_col, hash_col,
+                          max_hamming, bits, keep_cols)
 
 
 def phash_neardup_pairs(images: DataFrame, max_hamming: int = 6,

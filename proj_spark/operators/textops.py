@@ -13,8 +13,15 @@ Scale notes per operator:
                           candidate generation shuffles on (band, key),
                           i.e. only colliding docs meet; verified pairs
                           via exact Jaccard on the candidate set only.
-  * simhash             — projection only.
-  * ngram_jaccard_pairs — only for candidate pairs, never all-pairs.
+  * simhash_col         — projection only.
+  * simhash_dedup_pairs — simhash projection, then the pigeonhole
+                          Hamming core (bit_count verify, no all-pairs).
+  * ngram Jaccard       — inside the MinHash verify, candidates only.
+
+Every LSH pair generator in the engine (MinHash, SimHash, pHash,
+embedding hyperplanes) builds its band keys and runs ONE banded
+self-join, ``_banded_pairs``: equi-join on (band, key), verify in the
+join's stage, dedup verified pairs.
 """
 
 from __future__ import annotations
@@ -69,6 +76,106 @@ def _spread_small_input(df: DataFrame) -> DataFrame:
     if 1 <= n_files < target // 2:
         return df.repartition(target)
     return df
+
+
+def _bit_bands(h: Column, widths: list[int]) -> Column:
+    """LSH band keys of a BIGINT column: ``array<struct<band, key>>``
+    whose band ``i`` is the next ``widths[i]`` bits of ``h`` (from bit
+    0 up).  Every band needs at least one bit — a zero-width band keys
+    every row to 0, silently turning the band self-join into all-pairs."""
+    if not widths or min(widths) < 1 or sum(widths) > 64:
+        raise ValueError(
+            f"{len(widths)} bands need 1..64 bits with at least one per "
+            f"band, got band widths {widths}")
+    parts, lo = [], 0
+    for i, width in enumerate(widths):
+        key = F.shiftrightunsigned(h, lo)
+        if lo + width < 64:
+            key = key.bitwiseAND(F.lit((1 << width) - 1))
+        parts.append(F.struct(F.lit(i).alias("band"), key.alias("key")))
+        lo += width
+    return F.array(*parts)
+
+
+def _banded_pairs(base: DataFrame, id_col: str, band_keys: Column,
+                  carry=(), score=None, keep=None) -> DataFrame:
+    """THE banded-candidate self-join: explode ``band_keys`` (an
+    ``array<struct<band, key>>`` over ``base``), equi-join on
+    (band, key) with ``id_a < id_b`` — only colliding rows meet, never
+    all-pairs — carrying each ``carry`` column as ``<c>_a`` / ``<c>_b``.
+
+    ``score`` is an optional ``(name, Column)`` over the carried
+    columns and ``keep`` the predicate a pair's score must pass; both
+    run BEFORE the pair-dedup shuffle, in the join's own codegen stage,
+    so random band collisions die without being exchanged and
+    ``dropDuplicates`` moves verified pairs only.  The score is a pure
+    function of the pair, so dedup-after-filter returns exactly the
+    pair set filter-after-dedup would.  Output: id_a, id_b[, score],
+    carried columns.
+
+    ``base`` is read by both join sides; the caller decides whether it
+    is materialized first."""
+    ex = base.select(id_col, *carry, F.explode(band_keys).alias("bk")) \
+        .select(id_col, *carry, "bk.band", "bk.key")
+    a, b = ex.alias("a"), ex.alias("b")
+    carried = {f"{c}_{s}": F.col(f"{s}.{c}") for c in carry for s in "ab"}
+    pairs = (
+        a.join(b, (F.col("a.band") == F.col("b.band"))
+               & (F.col("a.key") == F.col("b.key"))
+               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
+        .select(F.col(f"a.{id_col}").alias("id_a"),
+                F.col(f"b.{id_col}").alias("id_b"),
+                *[col.alias(name) for name, col in carried.items()])
+    )
+    if score is not None:
+        name, expr = score
+        pairs = pairs.select("id_a", "id_b", expr.alias(name),
+                             *carried).where(keep)
+    return pairs.dropDuplicates(["id_a", "id_b"])
+
+
+def _hamming_pairs(df: DataFrame, id_col: str, hash_col: str,
+                   max_hamming: int, bits: int,
+                   keep_cols: tuple[str, ...] = ()) -> DataFrame:
+    """Pairs whose ``hash_col`` values differ in at most
+    ``max_hamming`` of the low ``bits`` bits — the pigeonhole Hamming
+    core behind :func:`simhash_dedup_pairs` and
+    ``imagedup.hamming_neardup_pairs`` (which documents the output).
+
+    ``max_hamming + 1`` bands of ``bits // (max_hamming + 1)`` bits,
+    the last one widened by the remainder, so every bit is in exactly
+    one band and a pair within the budget agrees on at least one band.
+    Verified by the JVM ``bit_count`` of the masked XOR."""
+    if max_hamming < 0:
+        raise ValueError(f"max_hamming must be >= 0, got {max_hamming}")
+    nb = max_hamming + 1
+    chunk = bits // nb
+    bands = _bit_bands(F.col("__h"),
+                       [chunk] * (nb - 1) + [bits - chunk * (nb - 1)])
+    base = df.select(id_col, F.col(hash_col).alias("__h"), *keep_cols)
+    # consumed by both self-join sides: one computation, not two
+    base = base.localCheckpoint(eager=False)
+    x = F.col("__h_a").bitwiseXOR(F.col("__h_b"))
+    if bits < 64:
+        x = x.bitwiseAND(F.lit((1 << bits) - 1))
+    pairs = _banded_pairs(base, id_col, bands, carry=("__h", *keep_cols),
+                          score=("hamming", F.bit_count(x).cast("int")),
+                          keep=F.col("hamming") <= max_hamming)
+    return pairs.select("id_a", "id_b", "hamming", *[
+        f"{c}_{s}" for c in keep_cols for s in "ab"])
+
+
+def _minhash_bands(num_hashes: int, bands: int) -> Column:
+    """MinHash LSH band keys over the ``mh_<i>`` signature columns:
+    band ``b`` is the md5 of its ``num_hashes // bands`` rows."""
+    rows = num_hashes // bands
+    return F.array(*[
+        F.struct(F.lit(b).alias("band"),
+                 F.md5(F.concat_ws("_", *[
+                     F.col(f"mh_{b * rows + r}").cast("string")
+                     for r in range(rows)])).alias("key"))
+        for b in range(bands)
+    ])
 
 
 def normalize_text_col(text: Column) -> Column:
@@ -198,7 +305,6 @@ def minhash_lsh_pairs(
     on candidates — the all-pairs product never materializes).
     Output: (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
     """
-    rows_per_band = num_hashes // bands
     df = _spread_small_input(df)
     sig = minhash_signature(df.select(id_col, text_col), text_col,
                             num_hashes, k, unit, keep_hashed="__shset")
@@ -208,13 +314,6 @@ def minhash_lsh_pairs(
     # char mode targets — and, at threshold 0, would emit pairs the
     # SQL oracle (where NULL keys never compare equal) does not
     sig = sig.where(F.col("mh_0").isNotNull())
-    band_cols = []
-    for b in range(bands):
-        parts = [F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"),
-                     F.md5(F.concat_ws("_", *[p.cast("string") for p in parts])).alias("key"))
-        )
     # verify over the precomputed DISTINCT hashed-shingle sets (longs),
     # not the raw texts: a doc colliding in P buckets would otherwise
     # re-tokenize + re-shingle P times, and for char mode the shingle
@@ -223,33 +322,17 @@ def minhash_lsh_pairs(
     # equals Jaccard over the raw shingle sets (both engines hash with
     # the same md5, so the oracle mirrors this exactly).
     # the band-key explode carries ONLY (id, band, key): the shingle
-    # arrays never enter the self-join or any exchange
+    # arrays never enter the self-join or any exchange; both self-join
+    # sides re-derive the (cheap) explode from the materialized
+    # signature RDD — one checkpoint, of the signature only
     sig = sig.localCheckpoint(eager=False)
-    exploded = sig.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("bk")
-    ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    # no second checkpoint: both self-join sides re-derive the (cheap)
-    # explode from the materialized signature RDD — one planning pass
-    # and one materialization job fewer than checkpointing the explode
-
-    a = exploded.alias("a")
-    b = exploded.alias("b")
     # dedup the BARE id pairs (a doc pair colliding in several bands is
     # one candidate), then fetch each side's hashed-shingle set with
     # one equi-join against the materialized signature frame — so the
     # exact-Jaccard verify runs ONCE per candidate pair and the only
     # exchanges carrying arrays are the two (tiny) candidate-side
     # joins, which AQE broadcasts.  Same pair set, same jaccard values.
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.key") == F.col("b.key"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cand = _banded_pairs(sig, id_col, _minhash_bands(num_hashes, bands))
     shsets = sig.select(id_col, "__shset")
     cand = (
         cand.join(shsets.select(F.col(id_col).alias("id_a"),
@@ -308,21 +391,14 @@ def minhash_lsh_groups(
     """
     df = _spread_small_input(df)
     base = df.select(id_col, text_col)
-    rows_per_band = num_hashes // bands
     sig = minhash_signature(base, text_col, num_hashes, k,
                             keep_hashed="__shset")
     # feeds the band explode AND both sides of the verify join
     sig = sig.localCheckpoint(eager=False)
-    band_cols = []
-    for b in range(bands):
-        parts = [F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"),
-                     F.md5(F.concat_ws("_", *[p.cast("string") for p in parts])).alias("key"))
-        )
     ex = sig.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("bk")
-    ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+        F.col(id_col),
+        F.explode(_minhash_bands(num_hashes, bands)).alias("bk"),
+    ).select(id_col, "bk.band", "bk.key")
 
     # bucket-min via a partition-wide window min: ONE exchange on
     # (band, key) replaces the old aggregate + join-back (which cost an
@@ -685,9 +761,8 @@ def simhash_dedup_pairs(df: DataFrame, text_col: str = "text",
                         max_hamming: int = 2) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance: band the hash into
     (max_hamming+1) chunks — pigeonhole guarantees colliding docs share
-    a chunk — then verify exact Hamming distance on candidates."""
-    nb = max_hamming + 1
-    chunk = bits // nb
+    a chunk — then verify exact Hamming distance on candidates (the
+    shared core of ``imagedup.hamming_neardup_pairs``)."""
     df = _spread_small_input(df)
     sh = (
         df.withColumn("__toks", F.array_distinct(tokens_col(F.col(text_col))))
@@ -695,45 +770,7 @@ def simhash_dedup_pairs(df: DataFrame, text_col: str = "text",
         .select(F.col(id_col),
                 simhash_from_hashes_col(F.col("__thash"), bits).alias("simhash"))
     )
-    sh = sh.localCheckpoint(eager=False)  # consumed by both join sides
-    parts = [
-        F.struct(
-            F.lit(i).alias("band"),
-            F.shiftrightunsigned(F.col("simhash"), i * chunk)
-            .bitwiseAND(F.lit((1 << chunk) - 1)).alias("key"),
-        )
-        for i in range(nb)
-    ]
-    ex = sh.select(id_col, "simhash", F.explode(F.array(*parts)).alias("bk")).select(
-        id_col, "simhash", "bk.band", "bk.key"
-    )
-    a, b = ex.alias("a"), ex.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.key") == F.col("b.key"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-    )
-    x = F.col("sh_a").bitwiseXOR(F.col("sh_b"))
-    hamming = None
-    for i in range(bits):
-        bit = F.shiftrightunsigned(x, i).bitwiseAND(F.lit(1))
-        hamming = bit if hamming is None else hamming + bit
-    # Hamming verify BEFORE the pair-dedup shuffle (see
-    # hamming_neardup_pairs): random band collisions are filtered in
-    # the join's codegen stage; the exchange sees only verified pairs.
-    # hamming is a pure function of the pair, so the result set is
-    # unchanged.
-    return (
-        cand.withColumn("hamming", hamming.cast("int"))
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    return _hamming_pairs(sh, id_col, "simhash", max_hamming, bits)
 
 
 # ---------------------------------------------------------------------------

@@ -161,47 +161,26 @@ _DCT32 = _dct_mat(32)
 
 def phash64(arr: np.ndarray) -> int:
     """64-bit perceptual hash: gray -> area-resample to 32x32 -> 2D DCT
-    -> 8x8 low-frequency block -> median threshold."""
-    gray = arr.astype(np.float64) @ np.array([0.299, 0.587, 0.114])
-    h, w = gray.shape
-    # area resample to 32x32 via block means on an upsampled grid
-    ys = (np.arange(32) * h // 32)
-    xs = (np.arange(32) * w // 32)
-    ye = np.maximum(((np.arange(32) + 1) * h + 31) // 32, ys + 1)
-    xe = np.maximum(((np.arange(32) + 1) * w + 31) // 32, xs + 1)
-    csum = np.zeros((h + 1, w + 1))
-    csum[1:, 1:] = gray.cumsum(0).cumsum(1)
-    # fully vectorized block means — elementwise identical to the old
-    # per-row loop (same subtraction order, same int product divisor)
-    small = (csum[np.ix_(ye, xe)] - csum[np.ix_(ys, xe)]
-             - csum[np.ix_(ye, xs)] + csum[np.ix_(ys, xs)]) \
-        / ((ye - ys)[:, None] * (xe - xs)[None, :])
-    dct = _DCT32 @ small @ _DCT32.T
-    low = dct[:8, :8].copy()
-    med = np.median(np.concatenate([low.ravel()[1:]]))  # skip DC
-    bits = (low.ravel() > med).astype(np.uint64)
-    # vectorized bit packing — same value as the old 64-step shift loop
-    # (msb-first), same uint64 wrap semantics
-    weights = np.uint64(1) << np.arange(63, -1, -1, dtype=np.uint64)
-    val = (bits * weights).sum(dtype=np.uint64)
-    # to signed int64 for a Spark LongType column
-    return int(np.int64(val.astype(np.uint64)))
+    -> 8x8 low-frequency block -> median threshold.  A batch of one
+    through :func:`phash64_batch`, so the scalar and batched hashes are
+    the same code path and cannot drift apart."""
+    return int(phash64_batch(arr[None])[0])
 
 
 def phash64_batch(arrs: np.ndarray) -> np.ndarray:
-    """Vectorized :func:`phash64` over a same-shape (n, h, w, 3) uint8
-    stack -> int64[n].  Bit-identical to the scalar path: every
-    floating step (gray weights, cumulative sums, block-mean order of
-    operations, per-slice BLAS DCT, axis median) runs in the same order
-    per item, only batched across the leading axis.  This is the
-    tile-pyramid hot path — hashing a level's tiles in one call instead
-    of one Python call per tile."""
+    """The pHash definition, over a same-shape (n, h, w, 3) uint8 stack
+    -> int64[n] (:func:`phash64` is a batch of one).  Every floating
+    step (gray weights, cumulative sums, block-mean order of
+    operations, per-slice BLAS DCT, median) runs per item in the same
+    order whatever ``n`` is, so an image hashes identically alone or in
+    any batch.  This is the tile-pyramid hot path — hashing a level's
+    tiles in one call instead of one Python call per tile."""
     n, h, w = arrs.shape[:3]
     if n == 0:
         return np.empty(0, dtype=np.int64)
     # per-item 2-D matmul: the batched (n,h,w,3)@(3,) gufunc takes a
-    # different summation path than the scalar (h,w,3)@(3,) call and
-    # drifts by ulps, which can flip bits at the median threshold
+    # different summation path than an (h,w,3)@(3,) call and drifts by
+    # ulps with n, which can flip bits at the median threshold
     wvec = np.array([0.299, 0.587, 0.114])
     gray = np.stack([a.astype(np.float64) @ wvec for a in arrs])
     ys = (np.arange(32) * h // 32)
@@ -218,7 +197,7 @@ def phash64_batch(arrs: np.ndarray) -> np.ndarray:
              - csum[:, iy, ix0] + csum[:, iy0, ix0]) \
         / ((ye - ys)[:, None] * (xe - xs)[None, :])
     dct = np.empty((n, 32, 32))
-    for i in range(n):  # per-slice 2-D BLAS, same calls as the scalar
+    for i in range(n):  # per-slice 2-D BLAS, same calls for any n
         dct[i] = _DCT32 @ small[i] @ _DCT32.T
     low = dct[:, :8, :8].reshape(n, 64)
     med = np.median(low[:, 1:], axis=1)  # skip DC

@@ -48,6 +48,28 @@ def test_hamming_pairs_validation(spark):
                               max_hamming=3, bits=3)
 
 
+@pytest.mark.parametrize("call", ["simhash", "ann_lsh", "embedding"])
+def test_zero_width_band_raises(spark, call):
+    # more bands than bits leaves a band 0 bits wide, which keys every
+    # row to 0 and turns the band self-join into all-pairs: every LSH
+    # pair generator must refuse it, as hamming_neardup_pairs does
+    from proj_spark.operators.ann import (ann_lsh_topk,
+                                          embedding_neardup_pairs)
+    from proj_spark.operators.textops import simhash_dedup_pairs
+
+    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    emb = spark.createDataFrame([(1, [1.0, 0.0, 0.0, 0.0])],
+                                "vec_id long, embedding array<float>")
+    qs = emb.withColumnRenamed("vec_id", "query_id")
+    with pytest.raises(ValueError):
+        if call == "simhash":
+            simhash_dedup_pairs(docs, bits=2, max_hamming=3)
+        elif call == "ann_lsh":
+            ann_lsh_topk(emb, qs, dim=4, n_planes=3, bands=4)
+        else:
+            embedding_neardup_pairs(emb, dim=4, n_planes=3, bands=4)
+
+
 def test_planted_hash_twins(spark):
     # every (2k, 2k+1) pair differs in exactly `flips` bits; the
     # operator must surface exactly those pairs over consecutive keys

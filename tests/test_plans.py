@@ -194,11 +194,38 @@ def test_hamming_neardup_plan_no_cartesian_jvm_verify(spark):
                       "phash": np.arange(500) * 2654435761 % (1 << 62)}))
     out = hamming_neardup_pairs(df, id_col="image_id", hash_col="phash",
                                 max_hamming=3)
-    plan = _plan(out)
+    _assert_banded_jvm_plan(_plan(out), bit_count=True)
+
+
+def _assert_banded_jvm_plan(plan: str, bit_count: bool) -> None:
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    assert "bit_count" in plan
+    assert ("bit_count" in plan) == bit_count
     assert "PythonUDF" not in plan and "mapInPandas" not in plan.lower()
+
+
+@pytest.mark.parametrize("op", ["simhash", "embedding"])
+def test_banded_pairs_plan_no_cartesian_jvm_verify(spark, op):
+    """The other users of the shared banded self-join keep the same
+    contract: (band, key) equi-join, verify in the JVM.  SimHash
+    verifies with bit_count like the image path; embeddings score
+    cosine with JVM array math."""
+    from proj_spark.operators.ann import embedding_neardup_pairs
+    from proj_spark.operators.textops import simhash_dedup_pairs
+
+    rng = np.random.default_rng(3)
+    if op == "simhash":
+        words = [f"w{i}" for i in range(50)]
+        df = spark.createDataFrame(pd.DataFrame({
+            "doc_id": np.arange(200),
+            "text": [" ".join(rng.choice(words, 8)) for _ in range(200)]}))
+        out = simhash_dedup_pairs(df)
+    else:
+        df = spark.createDataFrame(pd.DataFrame({
+            "vec_id": np.arange(200),
+            "embedding": [rng.normal(size=8).tolist() for _ in range(200)]}))
+        out = embedding_neardup_pairs(df, dim=8)
+    _assert_banded_jvm_plan(_plan(out), bit_count=op == "simhash")
 
 
 def test_ann_norms_computed_prejoin(spark):

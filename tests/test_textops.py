@@ -13,6 +13,8 @@ from proj_spark.operators.textops import (
     exact_dedup,
     minhash_lsh_groups,
     minhash_lsh_pairs,
+    simhash_col,
+    simhash_dedup_pairs,
     simhash_from_hashes_col,
     token_stats,
 )
@@ -102,6 +104,38 @@ def test_simhash_bits_cap():
         simhash_from_hashes_col(F.array(F.lit(1)), bits=64)
 
 
+def test_simhash_dedup_pairs_match_all_pairs_popcount(spark):
+    # default bits=16, max_hamming=2: three 5-bit bands, the last
+    # widened to 6 so bit 15 is banded too.  The banded pairs must be
+    # EXACTLY the all-pairs set within the budget, over the same
+    # simhash values.
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    vocab = [f"w{i}" for i in range(60)]
+    base = [list(rng.choice(vocab, size=12)) for _ in range(20)]
+    texts = []
+    for i in range(300):
+        t = list(base[i % 20])
+        for _ in range(int(rng.integers(0, 3))):
+            t[int(rng.integers(0, 12))] = vocab[int(rng.integers(0, 60))]
+        texts.append(" ".join(t))
+    df = spark.createDataFrame(
+        pd.DataFrame({"doc_id": np.arange(300), "text": texts}))
+    got = {(r.id_a, r.id_b): r.hamming
+           for r in simhash_dedup_pairs(df).collect()}
+
+    sh = (df.select("doc_id", simhash_col(F.col("text"), bits=16)
+                    .alias("h")).orderBy("doc_id").toPandas())
+    h = sh["h"].to_numpy(dtype=np.int64)
+    x = h[:, None] ^ h[None, :]
+    dist = np.array([[bin(int(v)).count("1") for v in row] for row in x])
+    ia, ib = np.nonzero(np.triu(dist <= 2, k=1))
+    want = {(int(a), int(b)): int(dist[a, b]) for a, b in zip(ia, ib)}
+    assert len(want) > 300  # the planted clusters give many pairs
+    assert got == want
+
+
 def test_token_stats_known(spark):
     df = spark.createDataFrame(
         pd.DataFrame([{"doc_id": 0, "text": "  Hello   WORLD  foo "}])
@@ -138,6 +172,25 @@ def test_ann_ivf_degenerate_equals_bruteforce(spark):
     multi = ann_ivf_topk(vecs, qs, k=4, n_centroids=6, nprobe=2,
                          quantizer="id").toPandas()
     assert set(multi.groupby("query_id").size()) == {4}
+
+
+def test_lit_double_array_bit_identical_to_lit(spark):
+    # the one-parse literal array must equal the F.lit path bit for bit,
+    # non-finite values included (they have no `<x>D` literal form)
+    import struct
+
+    from proj_spark.operators.ann import _lit_double_array
+
+    vals = [float("nan"), float("inf"), float("-inf"), -0.0, 5e-324]
+    r = spark.range(1).select(
+        _lit_double_array(vals).alias("one_parse"),
+        F.array(*[F.lit(v) for v in vals]).alias("per_lit"),
+    ).collect()[0]
+
+    def bits(xs):
+        return [struct.pack("<d", x) for x in xs]
+
+    assert bits(r["one_parse"]) == bits(r["per_lit"]) == bits(vals)
 
 
 def test_dedup_connected_components_vs_union_find(spark):
