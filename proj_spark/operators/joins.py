@@ -21,6 +21,7 @@ Scale design (10^12-point table, 1000 executors):
 
 from __future__ import annotations
 
+import functools
 import math
 from typing import Optional
 
@@ -619,6 +620,8 @@ def radius_join(
 # kNN via cell-ring expansion
 # ---------------------------------------------------------------------------
 _BIG_M = 4.0e7  # > any great-circle distance on Earth (half circumference ~2e7)
+# kNN brute-force budget in (query, point) pairs — the same as PIP's chunk_pairs
+_BRUTE_PAIRS = 4_000_000
 
 
 def _block_guard_col(q_lon: Column, q_lat: Column, level: int, ring: int) -> Column:
@@ -744,7 +747,12 @@ def _ring_topk(
     (2r+1)^2 times and blows up Catalyst analysis; a numpy UDF avoids
     that but puts a Python worker launch inside every broadcast build —
     both measured slower).  Then BROADCAST, equi-join on the big
-    table's cell column, per-query top-k."""
+    table's cell column, per-query top-k.
+
+    Every query also gets one SENTINEL row (NULL ``point_id``, NULL
+    ``dist_m`` ordered after every real distance, NaN included): a query
+    with fewer than k candidates keeps its sentinel, so the round's
+    output holds every query."""
     from .cells import _col_ij, _col_spread
 
     n = 1 << level
@@ -783,10 +791,18 @@ def _ring_topk(
     )
     if two_phase:
         cand = _prereduce_topk(cand, k, query_id_col, point_id_col)
-    w = Window.partitionBy(query_id_col).orderBy(F.col("dist_m").asc(),
+    sentinel = queries.select(
+        F.col(query_id_col),
+        F.col(lon_col).alias("q_lon"),
+        F.col(lat_col).alias("q_lat"),
+        F.lit(None).cast(pts.schema[point_id_col].dataType).alias(point_id_col),
+        F.lit(None).cast("double").alias("dist_m"),
+    )
+    w = Window.partitionBy(query_id_col).orderBy(F.col("dist_m").asc_nulls_last(),
                                                  F.col(point_id_col).asc())
     return (
-        cand.withColumn("rank", F.row_number().over(w))
+        cand.unionByName(sentinel)
+        .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select(query_id_col, "q_lon", "q_lat", point_id_col, "dist_m", "rank")
     )
@@ -826,16 +842,37 @@ def knn_join(
          ``two_phase`` (default: on when the point table is large) a
          shuffle-free per-partition head(k) runs first so the final
          window shuffles O(k x partitions), not O(candidates).
-      3. **Exactness flag, no extra shuffle**: over the rank<=k rows,
-         count/max window functions reuse the query_id partitioning;
-         a query is proven exact iff it has k hits and its kth distance
-         <= the spherical chord lower bound to its block boundary
-         (:func:`_block_guard_col`).
-      4. **Iterative ring expansion**: unproven queries (sparse
-         neighborhoods) retry with ring ``expansion_factor*r + 1`` —
-         never a full scan — for ``expansion_rounds`` rounds; only the
-         still-unproven remainder falls back to an exact brute-force
-         pass (broadcast of those queries only).
+      3. **One status frame per round, no extra shuffle**: every query
+         carries a sentinel row (NULL point_id, ordered after every real
+         candidate), so the round's rank<=k rows hold EVERY query.  Over
+         them, count/max window functions reuse the query_id
+         partitioning; a query is proven exact iff it has k non-null
+         hits and its kth distance <= the spherical chord lower bound
+         to its block boundary (:func:`_block_guard_col`).  The flagged
+         frame is checkpointed once per round: its proven rows are
+         output, and the next round's queries are a NARROW filter over
+         it (unproven, rank 1) — no anti-join against the input.
+      4. **Pair-budget gate, then ring expansion**: each round ends in
+         one bounded probe, ``remaining.limit(T + 1).count()`` with
+         ``T = _BRUTE_PAIRS // n_points`` (0 when ``n_points`` is
+         unknown, i.e. a pinned ``level``).  An empty remainder returns
+         at once.  A remainder of at most T queries goes straight to
+         the exact brute-force pass (a broadcast of those queries
+         only): its <= _BRUTE_PAIRS pairs cost no more than the full
+         points scan of another ring round.  A larger remainder (sparse
+         neighborhoods) retries with ring ``expansion_factor*r + 1`` —
+         never a full scan — for ``expansion_rounds`` rounds; whatever
+         is still unproven then takes the brute-force pass.
+
+    Construction is EAGER: each round's checkpoint runs its candidate
+    join (AQE materializes the broadcast and the window exchange when
+    the checkpoint is planned) and its probe materializes the rest, so
+    the call returns after every ring round it needed has executed;
+    only the union of proven rows (and the brute pass, if any) runs
+    when the result is consumed.  With ``exact_fallback=False`` the
+    call runs no ring job and returns round 1's top-k rows as they are,
+    proven or not (sentinels dropped).  Point ids must be non-null: a
+    NULL ``point_id`` reads as a sentinel.
 
     Output: query_id, q_lon, q_lat, point_id, dist_m, rank (1..k).
     """
@@ -872,58 +909,50 @@ def knn_join(
             two_phase = est_cand > 5000.0
 
     pts = points.withColumn("cell", cell_col(F.col(lon_col), F.col(lat_col), level))
-    topk = _ring_topk(pts, queries, ring, k, level, lon_col, lat_col,
-                      point_id_col, query_id_col, two_phase)
     if not exact_fallback:
-        return topk
+        return _ring_topk(pts, queries, ring, k, level, lon_col, lat_col,
+                          point_id_col, query_id_col, two_phase
+                          ).where(F.col(point_id_col).isNotNull())
 
     out_cols = [query_id_col, "q_lon", "q_lat", point_id_col, "dist_m", "rank"]
     wq = Window.partitionBy(query_id_col)  # reuses topk's partitioning: no exchange
 
     def _flag(tk: DataFrame, r: int) -> DataFrame:
-        ok = (F.count(F.lit(1)).over(wq) >= k) & (
+        # count/max skip the sentinel's NULLs
+        ok = (F.count(point_id_col).over(wq) >= k) & (
             F.max("dist_m").over(wq)
             <= _block_guard_col(F.col("q_lon"), F.col("q_lat"), level, r)
         )
-        # one consumer takes the proven rows, another the proven ids;
-        # defer-checkpoint so the candidate join runs once, not twice
+        # the status frame of the round: proven rows, and the rank-1 row
+        # (real or sentinel) of every unproven query, read by two
+        # consumers — checkpoint so the candidate join runs once
         return tk.withColumn("__ok", ok).localCheckpoint(eager=False)
 
-    flagged = _flag(topk, ring)
-    proven = [flagged.where(F.col("__ok")).select(*out_cols)]
-    # unproven = not proven (covers zero-candidate queries, which have
-    # no topk rows at all); queries are the small side -> cheap anti-join
-    remaining = queries.join(
-        flagged.where(F.col("__ok")).select(query_id_col).distinct(),
-        query_id_col, "left_anti",
-    )
-    # Early exit when round 1 proved EVERY query — the designed common
-    # case at adaptive level.  The probe is one tiny job (queries are
-    # the small side by contract and `flagged` is already the
-    # checkpointed frame the probe's anti-join reads), and it saves
-    # constructing + planning the expansion and brute-force subplans,
-    # whose localCheckpoint calls alone measured ~1.2 s of driver time
-    # per call while contributing zero rows.  The result set is
-    # unchanged: expansion/brute over an empty `remaining` is empty.
-    if remaining.isEmpty():
-        return proven[0]
-
-    r = ring
-    for _ in range(max(expansion_rounds, 0)):
-        r = expansion_factor * r + 1
-        tk = _ring_topk(pts, remaining, r, k, level, lon_col, lat_col,
-                        point_id_col, query_id_col, two_phase)
-        flg = _flag(tk, r)
-        proven.append(flg.where(F.col("__ok")).select(*out_cols))
-        remaining = remaining.join(
-            flg.where(F.col("__ok")).select(query_id_col).distinct(),
-            query_id_col, "left_anti",
+    # a remainder this small costs the brute pass at most _BRUTE_PAIRS
+    # pairs — no more than the full points scan of one ring round
+    brute_max = _BRUTE_PAIRS // n_points if n_points else 0
+    remaining, r, proven = queries, ring, []
+    for rnd in range(max(expansion_rounds, 0) + 1):
+        if rnd:
+            # unproven queries (sparse neighborhoods) retry a wider ring
+            r = expansion_factor * r + 1
+        flagged = _flag(_ring_topk(pts, remaining, r, k, level, lon_col, lat_col,
+                                   point_id_col, query_id_col, two_phase), r)
+        proven.append(flagged.where(F.col("__ok")).select(*out_cols))
+        # narrow: one row per unproven query, zero-candidate ones included
+        remaining = flagged.where(~F.col("__ok") & (F.col("rank") == 1)).select(
+            F.col(query_id_col),
+            F.col("q_lon").alias(lon_col),
+            F.col("q_lat").alias(lat_col),
         )
-        if remaining.isEmpty():
-            out = proven[0]
-            for p in proven[1:]:
-                out = out.unionByName(p)
-            return out
+        # one bounded probe per round; an empty remainder (the designed
+        # common case at adaptive level) skips constructing the later
+        # rounds and the brute-force subplan
+        n_left = remaining.limit(brute_max + 1).count()
+        if n_left == 0:
+            return functools.reduce(DataFrame.unionByName, proven)
+        if n_left <= brute_max:
+            break
 
     # exact brute-force pass for whatever survives expansion (rare:
     # pole-adjacent queries, k > population) — broadcast those queries
@@ -947,7 +976,4 @@ def knn_join(
         .select(*out_cols)
     )
     proven.append(brute_topk)
-    out = proven[0]
-    for p in proven[1:]:
-        out = out.unionByName(p)
-    return out
+    return functools.reduce(DataFrame.unionByName, proven)

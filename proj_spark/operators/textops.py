@@ -433,9 +433,13 @@ def minhash_lsh_groups(
     sa, sb = F.col("__shset"), F.col("__cshset")
     inter = F.size(F.array_intersect(sa, sb)).cast("double")
     union = (F.size(sa) + F.size(sb)).cast("double") - inter
+    # docs shorter than one shingle share the empty-signature bucket;
+    # their union is 0 — a NULL jaccard that never verifies (no
+    # divide-by-zero under ANSI mode), so they stay singletons
+    jac = F.when(union > 0, inter / union)
     verified = need.select(
         F.col(id_col),
-        F.when(inter / union >= jaccard_threshold, F.col("cand_canon"))
+        F.when(jac >= jaccard_threshold, F.col("cand_canon"))
         .otherwise(F.col(id_col))
         .alias("canonical_id"),
     )
@@ -516,10 +520,23 @@ def _cc_local(u: "np.ndarray", v: "np.ndarray", max_iters: int,
         changed = int((label != old).sum())
         if changed == 0:
             break
+    _check_converged(rounds, changed, stats)
+    return nodes, nodes[label]
+
+
+def _check_converged(rounds: int, changed: int, stats: dict | None) -> None:
+    """Report the round count in ``stats`` and fail loudly when the last
+    permitted round still changed labels: the fixpoint was not reached,
+    so the labels may not be component minima."""
+    converged = rounds > 0 and changed == 0
     if stats is not None:
         stats["rounds"] = rounds
-        stats["converged"] = rounds > 0 and changed == 0
-    return nodes, nodes[label]
+        stats["converged"] = converged
+    if not converged:
+        raise RuntimeError(
+            f"dedup_connected_components did not converge in {rounds} "
+            f"rounds: labels were still changing, so components would "
+            f"be wrong; raise max_iters")
 
 
 def dedup_connected_components(
@@ -560,7 +577,11 @@ def dedup_connected_components(
     the label frame (iterative algorithms otherwise grow an unbounded
     lineage); the driver sees one scalar count per round, the data
     never collects.  ``stats["rounds"]`` reports the executed round
-    count when a dict is passed (pinned by pytest).
+    count when a dict is passed (pinned by pytest).  A graph that has
+    not converged after ``max_iters`` rounds raises ``RuntimeError``
+    naming the round count, on both paths, instead of returning labels
+    that are not component minima (a 60-node chain with shuffled ids
+    can need more than 12 rounds).
 
     No SQL oracle by design (iterative/recursive); pytest-verified
     against a union-find reference.  Output: (node, component_id).
@@ -656,12 +677,7 @@ def dedup_connected_components(
         labels = new_labels.select("node", "label")
         if changed == 0:
             break
-    if stats is not None:
-        stats["rounds"] = rounds
-        # observable non-convergence: if the last permitted round
-        # still changed labels, the fixpoint was not CONFIRMED and the
-        # returned labels may not be component minima
-        stats["converged"] = rounds > 0 and changed == 0
+    _check_converged(rounds, changed, stats)
     return labels.select(F.col("node"), F.col("label").alias("component_id"))
 
 

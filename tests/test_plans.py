@@ -77,6 +77,45 @@ def test_knn_early_exit_prunes_brute_branch(spark):
     assert "CartesianProduct" not in plan
 
 
+def _construct_jobs(spark, group, build):
+    """``build()``'s result and the number of jobs it ran before
+    returning, counted per job group with the status tracker (listener
+    bus drained first)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("case, n_points, budget", [
+    # every query proven in round 1: checkpoint + one probe
+    ("proven", None, 4),
+    # one query with no ring-1 candidates and a known point count: the
+    # pair-budget gate sends it straight to the (lazy) brute pass
+    ("brute_gate", 2000, 4),
+    # the same query with a pinned level and no point count: one
+    # expansion round, then the brute pass
+    ("expansion", None, 8),
+])
+def test_knn_construct_job_budget(spark, case, n_points, budget):
+    # eager construct-time jobs are pinned like plan shapes: each round
+    # is one checkpoint and one bounded probe over its status frame
+    lon, lat = [1.0, 2.0], [1.0, 2.0]
+    if case != "proven":
+        lon, lat = lon + [120.0], lat + [0.0]  # outside the points' extent
+    qs = spark.createDataFrame(pd.DataFrame({
+        "query_id": range(len(lon)), "lon": lon, "lat": lat}))
+    pts = _pts(spark)
+    out, jobs = _construct_jobs(spark, f"knn_budget_{case}", lambda: knn_join(
+        pts, qs, k=3, level=6, n_points=n_points))
+    assert jobs <= budget, f"{case}: {jobs} construct-time jobs > {budget}"
+    assert out.count() == 3 * len(lon)
+
+
 def test_parquet_scan_pushdown_and_pruning(spark, tmp_path):
     path = str(tmp_path / "pts.parquet")
     _pts(spark, 5000).withColumn("payload", F.lit("x")).write.parquet(path)

@@ -423,6 +423,100 @@ def test_knn_near_pole_exact(spark):
     assert list(got.sort_values("rank")["point_id"]) == want
 
 
+def _knn_rows(df) -> pd.DataFrame:
+    return (df.select("query_id", "point_id", "rank", "dist_m").toPandas()
+            .sort_values(["query_id", "rank"]).reset_index(drop=True))
+
+
+def _knn_sparse_inputs(spark):
+    """A cluster, two outlying points, and four queries: two inside the
+    cluster, one beside the outliers (2 ring-1 candidates at level 6)
+    and one with no candidate within ring 4 at level 6."""
+    rng = np.random.default_rng(16)
+    lon = np.concatenate([rng.uniform(-20, 20, 1500), [60.0, 61.0]])
+    lat = np.concatenate([rng.uniform(-20, 20, 1500), [10.0, 10.5]])
+    qlon = np.array([0.0, -12.0, 60.5, 100.0])
+    qlat = np.array([0.0, 8.0, 10.2, 40.0])
+    pts = spark.createDataFrame(pd.DataFrame(
+        {"point_id": np.arange(len(lon)), "lon": lon, "lat": lat}))
+    qs = spark.createDataFrame(pd.DataFrame(
+        {"query_id": np.arange(len(qlon)), "lon": qlon, "lat": qlat}))
+    return pts, qs, lon, lat, qlon, qlat
+
+
+def _assert_knn_exact(got, k, lon, lat, qlon, qlat, queries) -> None:
+    d = _np_haversine(qlon[:, None], qlat[:, None], lon[None, :], lat[None, :])
+    for qi in queries:
+        want = np.lexsort((np.arange(len(lon)), d[qi]))[:k]
+        g = got[got["query_id"] == qi]
+        assert list(g["point_id"]) == list(want), f"query {qi}"
+        assert list(g["rank"]) == list(range(1, k + 1)), f"query {qi}"
+        assert np.allclose(g["dist_m"], d[qi][want], rtol=0, atol=1e-6)
+
+
+@pytest.mark.parametrize("n_points", [1502, None],
+                         ids=["brute_gate", "expansion"])
+def test_knn_zero_candidate_query_exact(spark, n_points):
+    # query 3 has no candidate in its ring-1 block.  With n_points the
+    # pair-budget gate sends it straight to the brute-force pass; with a
+    # pinned level and no point count it first takes the expansion
+    # round (also empty), then the brute pass.  Both paths are exact.
+    pts, qs, lon, lat, qlon, qlat = _knn_sparse_inputs(spark)
+    got = _knn_rows(knn_join(pts, qs, k=5, level=6, n_points=n_points))
+    assert len(got) == 5 * len(qlon)
+    _assert_knn_exact(got, 5, lon, lat, qlon, qlat, range(len(qlon)))
+
+
+def test_knn_no_fallback_is_ring_topk_without_sentinels(spark):
+    # exact_fallback=False returns round 1's ring-1 top-k as it is: up
+    # to k rows per query, only 2 for the query beside the outliers,
+    # none for the query with no candidate — and never a sentinel row
+    pts, qs, lon, lat, qlon, qlat = _knn_sparse_inputs(spark)
+    k, level = 5, 6
+    got = _knn_rows(knn_join(pts, qs, k=k, level=level, exact_fallback=False))
+    assert got["point_id"].notna().all()
+    pcell = C.np_cell(lon, lat, level)
+    want = []
+    for qi in range(len(qlon)):
+        ring = C.np_cell_ring(C.np_cell(qlon[qi], qlat[qi], level), 1)[0]
+        cand = np.flatnonzero(np.isin(pcell, ring[ring >= 0]))
+        d = _np_haversine(qlon[qi], qlat[qi], lon[cand], lat[cand])
+        order = np.lexsort((cand, d))[:k]
+        want += [(qi, int(cand[o]), r + 1) for r, o in enumerate(order)]
+    assert [tuple(map(int, t)) for t in
+            got[["query_id", "point_id", "rank"]].itertuples(index=False)] == want
+    assert (got["query_id"] == 2).sum() == 2
+    assert (got["query_id"] == 3).sum() == 0
+
+
+@pytest.mark.parametrize("n_points", [600, None],
+                         ids=["brute_gate", "expansion"])
+def test_knn_nan_point_and_query(spark, n_points):
+    # NaN coordinates land in cell (0, 0), and haversine_col clamps a
+    # NaN distance to half the circumference.  The NaN point must not
+    # displace a finite neighbour of the queries around that cell, the
+    # NaN query must get k real rows (never a NULL-id sentinel) — all
+    # equidistant, so the point_id tiebreak picks them — and finite
+    # queries stay exact
+    rng = np.random.default_rng(17)
+    lon = rng.uniform(-180.0, -170.0, 600)
+    lat = rng.uniform(-90.0, -80.0, 600)
+    lon[7] = lat[7] = np.nan
+    qlon = np.array([-175.0, -179.5, -176.0, np.nan])
+    qlat = np.array([-85.0, -89.5, -88.9, np.nan])
+    pts = spark.createDataFrame(pd.DataFrame(
+        {"point_id": np.arange(len(lon)), "lon": lon, "lat": lat}))
+    qs = spark.createDataFrame(pd.DataFrame(
+        {"query_id": np.arange(len(qlon)), "lon": qlon, "lat": qlat}))
+    got = _knn_rows(knn_join(pts, qs, k=4, level=6, n_points=n_points))
+    assert got["point_id"].notna().all()
+    assert len(got) == 4 * len(qlon)
+    _assert_knn_exact(got, 4, lon, lat, qlon, qlat, range(3))
+    nan_q = got[got["query_id"] == 3]
+    assert list(nan_q["rank"]) == [1, 2, 3, 4]
+    assert list(nan_q["point_id"]) == [0, 1, 2, 3]
+
+
 def test_pip_join_many_polygons_executor_side(spark):
     """10^5 polygons must expand to covering cells on executors (the
     round-1 driver-side toPandas+iterrows path stalls here)."""

@@ -83,6 +83,24 @@ def test_minhash_lsh_groups_linear_output(spark):
     assert all(c <= d for d, c in canon.items())
 
 
+def test_minhash_lsh_groups_zero_shingle_docs_stay_singletons(spark):
+    # docs shorter than one k=3 word shingle have empty shingle sets and
+    # share one band bucket; their verify used to divide 0 / 0, which
+    # raises DIVIDE_BY_ZERO under ANSI mode
+    docs = spark.createDataFrame(pd.DataFrame({
+        "doc_id": [1, 2, 3, 4, 5],
+        "text": ["", "hello", "two words", _BASE, _BASE],
+    }))
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        out = minhash_lsh_groups(docs, k=3, jaccard_threshold=0.0).toPandas()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    canon = dict(zip(out["doc_id"].astype(int), out["canonical_id"].astype(int)))
+    assert canon == {1: 1, 2: 2, 3: 3, 4: 4, 5: 4}
+
+
 def test_minhash_lsh_groups_heavy_cluster(spark):
     # a 300-copy boilerplate cluster: pairs would be ~45k rows, groups
     # must stay at exactly 300 + the uniques
@@ -245,10 +263,11 @@ def test_dedup_cc_pointer_doubling_round_count(spark):
     assert got == {i: 0 for i in range(n)}          # exact closure
     assert stats["rounds"] <= 8, stats               # pinned: log2(59)+1
     assert stats["converged"] is True
-    # non-convergence is OBSERVABLE: with max_iters too small for the
-    # diameter, stats reports converged=False instead of silence
+    # non-convergence is LOUD: with max_iters too small for the
+    # diameter the call raises, and stats reports converged=False
     stats_bad = {}
-    dedup_connected_components(pairs, max_iters=2, stats=stats_bad).collect()
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        dedup_connected_components(pairs, max_iters=2, stats=stats_bad)
     assert stats_bad["converged"] is False
     # star graph (the planted q51 shape): 2 rounds (1 work + 1 confirm)
     star = [(0, i) for i in range(1, 9)]
@@ -258,6 +277,26 @@ def test_dedup_cc_pointer_doubling_round_count(spark):
             for r in dedup_connected_components(pairs2, stats=stats2).collect()}
     assert got2 == {i: 0 for i in range(9)}
     assert stats2["rounds"] == 2, stats2
+
+
+@pytest.mark.parametrize("small_cut", [2_000_000, 0],
+                         ids=["local", "distributed"])
+def test_dedup_cc_unconverged_chain_raises(spark, small_cut):
+    """A 60-node chain with shuffled ids needs 20 rounds, more than
+    max_iters=12.  Stopping there used to return labels that are not
+    component minima; both paths must raise and name the round count."""
+    import numpy as np
+
+    from proj_spark.operators.textops import dedup_connected_components
+
+    perm = np.random.default_rng(0).permutation(60)
+    pairs = spark.createDataFrame(pd.DataFrame(
+        {"id_a": perm[:-1], "id_b": perm[1:]}).astype("int64"))
+    with pytest.raises(RuntimeError, match="did not converge in 12 rounds"):
+        dedup_connected_components(pairs, max_iters=12, small_cut=small_cut)
+    if small_cut:
+        got = dedup_connected_components(pairs, max_iters=40).toPandas()
+        assert len(got) == 60 and (got["component_id"] == 0).all()
 
 
 def test_sessionize_gap_semantics(spark):
