@@ -8,6 +8,7 @@ point-in-polygon joins, kNN joins, raster<->vector tile assignment,
 dedup/similarity operators for training-data pipelines.
 """
 
+from . import _pyworker
 from .crs import (  # noqa: F401
     Area,
     ComparisonCriterion,
@@ -19,3 +20,5 @@ from .crs import (  # noqa: F401
 )
 
 __version__ = "0.1.0"
+
+_pyworker.install()

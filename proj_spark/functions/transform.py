@@ -10,9 +10,15 @@ contract, /root/repo/BASELINE.json:15).
 
 Per-worker transform cache: the reference keeps one PROJ context per
 thread because context setup dominates construction cost
-(/root/reference/src/context.rs:84-89).  Our analog is a module-level
-memo in each Python worker process keyed by the transform spec, so
-kernel setup runs once per worker, not once per batch.
+(reference src/context.rs:84-89).  Our analog is
+``_TRANSFORM_CACHE``, a module-level memo keyed by the transform spec.
+The UDF closures below are pickled by value, and cloudpickle would copy
+a global dict they name into every task's command, so they reach the
+cache only through :func:`_cached_transform`, which is pickled by
+reference: in a Python worker it is this module's function and the dict
+is this module's, kept for the life of the (reused) worker.  Kernel
+setup, grid loading included, runs once per worker process, not once
+per task or batch.
 """
 
 from __future__ import annotations
@@ -37,8 +43,17 @@ __all__ = [
 ]
 
 # per-Python-worker transform cache (reference thread-local context
-# analog, /root/reference/src/context.rs:84-89)
+# analog, reference src/context.rs:84-89); UDF bodies reach it
+# only through _cached_transform
 _TRANSFORM_CACHE: dict = {}
+
+
+def _cached_transform(key, build) -> Transform:
+    """``_TRANSFORM_CACHE[key]``, built by ``build()`` on first use."""
+    t = _TRANSFORM_CACHE.get(key)
+    if t is None:
+        t = _TRANSFORM_CACHE[key] = build()
+    return t
 
 
 def get_transform(spec) -> Transform:
@@ -47,11 +62,7 @@ def get_transform(spec) -> Transform:
     if isinstance(spec, Transform):
         return spec
     key = spec if isinstance(spec, str) else tuple(spec)
-    t = _TRANSFORM_CACHE.get(key)
-    if t is None:
-        t = Transform.from_spec(spec)
-        _TRANSFORM_CACHE[key] = t
-    return t
+    return _cached_transform(key, lambda: Transform.from_spec(spec))
 
 
 def proj_udf(src_crs: str, dst_crs: str, errors: str = "mask",
@@ -71,11 +82,9 @@ def proj_udf(src_crs: str, dst_crs: str, errors: str = "mask",
 
     @pandas_udf("x double, y double, err string")
     def _udf(x: pd.Series, y: pd.Series) -> pd.DataFrame:
-        key = (spec, tuple(sorted(opts.items())), inverse)
-        t = _TRANSFORM_CACHE.get(key)
-        if t is None:
-            t = Transform.new_known_crs(spec[0], spec[1], **opts)
-            _TRANSFORM_CACHE[key] = t
+        t = _cached_transform(
+            (spec, tuple(sorted(opts.items())), inverse),
+            lambda: Transform.new_known_crs(spec[0], spec[1], **opts))
         xv = x.to_numpy(dtype=np.float64, na_value=np.nan)
         yv = y.to_numpy(dtype=np.float64, na_value=np.nan)
         if errors == "strict":
@@ -101,11 +110,9 @@ def projstring_udf(definition: str, input_units: str = "deg",
 
     @pandas_udf("x double, y double, err string")
     def _udf(x: pd.Series, y: pd.Series) -> pd.DataFrame:
-        key = ("projstring", definition, input_units, inverse)
-        t = _TRANSFORM_CACHE.get(key)
-        if t is None:
-            t = Transform.new(definition)
-            _TRANSFORM_CACHE[key] = t
+        t = _cached_transform(
+            ("projstring", definition, input_units, inverse),
+            lambda: Transform.new(definition))
         xv = x.to_numpy(dtype=np.float64, na_value=np.nan)
         yv = y.to_numpy(dtype=np.float64, na_value=np.nan)
         if input_units == "deg" and not inverse:
@@ -134,11 +141,9 @@ def projstring_udf3(definition: str, input_units: str = "deg",
 
     @pandas_udf("x double, y double, z double, err string")
     def _udf(x: pd.Series, y: pd.Series, z: pd.Series) -> pd.DataFrame:
-        key = ("projstring3", definition, input_units, inverse)
-        t = _TRANSFORM_CACHE.get(key)
-        if t is None:
-            t = Transform.new(definition)
-            _TRANSFORM_CACHE[key] = t
+        t = _cached_transform(
+            ("projstring3", definition, input_units, inverse),
+            lambda: Transform.new(definition))
         xv = x.to_numpy(dtype=np.float64, na_value=np.nan)
         yv = y.to_numpy(dtype=np.float64, na_value=np.nan)
         zv = z.to_numpy(dtype=np.float64, na_value=np.nan)

@@ -215,6 +215,8 @@ def geom_bounds_udf():
 
     @pandas_udf("minx double, miny double, maxx double, maxy double")
     def _bounds(g: pd.DataFrame) -> pd.DataFrame:
+        from .. import _pyworker  # noqa: F401  (installs the worker patch)
+
         rows = []
         for geom_parts in g["parts"]:
             xs, ys = [], []

@@ -85,68 +85,6 @@ def _np_point_in_rings(px: np.ndarray, py: np.ndarray, rings) -> np.ndarray:
     return inside
 
 
-def _make_pip_test_udf():
-    """Exact even-odd containment test, vectorized across the WHOLE
-    Arrow batch: every polygon group's (edge x candidate-point) pairs
-    are flattened into shared buffers and ray-cast in a handful of
-    numpy passes (chunked at ~4M pairs to bound memory).  A per-group
-    kernel call is 3-10x slower when a batch holds many small groups —
-    the normal shape once the polygon side reaches 10^5+ rows.  Built
-    lazily: pandas_udf return-type parsing needs an active session."""
-
-    @pandas_udf("boolean")
-    def _pip_test_udf(lon: pd.Series, lat: pd.Series, poly_id: pd.Series,
-                      rings: pd.Series) -> pd.Series:
-        px = lon.to_numpy(dtype=np.float64)
-        py = lat.to_numpy(dtype=np.float64)
-        n = len(px)
-        counts = np.zeros(n, dtype=np.int64)
-        groups = pd.Series(range(n)).groupby(poly_id.values, sort=False).groups
-        bufs: dict = {k: [] for k in ("x1", "y1", "x2", "y2", "row")}
-        pending = 0
-
-        def flush():
-            nonlocal pending
-            if not pending:
-                return
-            x1 = np.concatenate(bufs["x1"])
-            y1 = np.concatenate(bufs["y1"])
-            x2 = np.concatenate(bufs["x2"])
-            y2 = np.concatenate(bufs["y2"])
-            row = np.concatenate(bufs["row"])
-            ppx, ppy = px[row], py[row]
-            cond = (y1 > ppy) != (y2 > ppy)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                xint = (x2 - x1) * (ppy - y1) / (y2 - y1) + x1
-            crossed = cond & (ppx < xint)
-            np.add.at(counts, row[crossed], 1)
-            for k in bufs:
-                bufs[k].clear()
-            pending = 0
-
-        for _pid, idx in groups.items():
-            ii = np.asarray(idx, dtype=np.int64)
-            for ring in rings.iloc[ii[0]]:
-                pts = np.array([np.asarray(p, dtype=np.float64) for p in ring])
-                if len(pts) < 3:
-                    continue
-                n_edges = len(pts) - 1
-                n_pts = len(ii)
-                bufs["x1"].append(np.tile(pts[:-1, 0], n_pts))
-                bufs["y1"].append(np.tile(pts[:-1, 1], n_pts))
-                bufs["x2"].append(np.tile(pts[1:, 0], n_pts))
-                bufs["y2"].append(np.tile(pts[1:, 1], n_pts))
-                bufs["row"].append(np.repeat(ii, n_edges))
-                pending += n_edges * n_pts
-                if pending > 4_000_000:
-                    flush()
-        flush()
-        # global even-odd parity over all rings == per-ring XOR (holes)
-        return pd.Series(counts % 2 == 1)
-
-    return _pip_test_udf
-
-
 def _poly_covering_cells_df(polys: DataFrame, level: int,
                             rings_col: str, poly_id_col: str) -> DataFrame:
     """Executor-side bbox-covering cells per polygon: min/max over the
@@ -216,6 +154,8 @@ def _pack_edges_sdf(polys: DataFrame, poly_id_col: str,
     ])
 
     def _pack(batches):
+        from .. import _pyworker  # noqa: F401  (installs the worker patch)
+
         pids: list = []
         cnts: list = []
         xs1, ys1, xs2, ys2 = [], [], [], []
@@ -291,6 +231,8 @@ def _make_pip_test_udf_bc(edges_bc, chunk_pairs: int = 4_000_000):
     @pandas_udf("boolean")
     def _pip_test_udf(lon: pd.Series, lat: pd.Series,
                       poly_id: pd.Series) -> pd.Series:
+        from .. import _pyworker  # noqa: F401  (installs the worker patch)
+
         pid_index, ex1, ey1, ex2, ey2, eoff, ecnt = edges_bc.value
         px = lon.to_numpy(dtype=np.float64)
         py = lat.to_numpy(dtype=np.float64)
@@ -374,34 +316,41 @@ def pip_join(
 
     ``how``: "inner" (default) or "left" (unmatched points kept with
     null poly_id).
+
+    Eager at construction: one JVM aggregate over the polygon layer
+    (edge count, plus the span stats when ``level=None``), then one
+    packing collect per chunk, never one of the whole layer when it is
+    chunked.
     """
+    # edges as _pack counts them (rings of >= 3 points), summed in the
+    # JVM so the chunking decision collects nothing
+    n_edges_col = F.sum(F.aggregate(
+        F.col(rings_col), F.lit(0).cast("long"),
+        lambda acc, ring: acc + F.when(F.size(ring) >= 3, F.size(ring) - 1)
+        .otherwise(0).cast("long"))).alias("n_edges")
     if level is None:
         # bbox-span stats pass, only when the caller didn't pin the
-        # level (a pinned level previously still paid this job just to
-        # count edges; the edge count now comes free from the packed
-        # blobs below)
+        # level; the edge count rides along in the same job
         ext = F.col(rings_col)[0]
         lons = F.transform(ext, lambda p: p[0])
         lats = F.transform(ext, lambda p: p[1])
         stats = polys.select(
             F.avg(F.array_max(lons) - F.array_min(lons)).alias("w"),
             F.avg(F.array_max(lats) - F.array_min(lats)).alias("h"),
+            n_edges_col,
         ).first()
         span = max(float(stats["w"] or 0.0), float(stats["h"] or 0.0), 1e-9)
         level = int(min(max(round(math.log2(360.0 / (2.0 * span))), 1), 16))
-    # pack the edge buffers ONCE (the collect every pass needs anyway);
-    # the chunking decision reads the edge count from the blobs instead
-    # of a dedicated aggregate job over the polygon layer
-    pack_rows = _pack_edges_sdf(polys, poly_id_col, rings_col).collect()
-    n_edges = sum(
-        int(np.frombuffer(r["cnts"], dtype=np.int64).sum())
-        for r in pack_rows)
+    else:
+        stats = polys.select(n_edges_col).first()
+    n_edges = int(stats["n_edges"] or 0)
     n_chunks = max(1, -(-(n_edges * 32) // max_broadcast_bytes))
 
     if n_chunks == 1:
         hits = _pip_inner(points, polys, level, lon_col, lat_col,
-                          poly_id_col, rings_col, pack_rows=pack_rows)
+                          poly_id_col, rings_col)
     else:
+        # each chunk packs and collects only its own polygons' edges
         chunk = F.pmod(F.xxhash64(F.col(poly_id_col).cast("string")),
                        F.lit(n_chunks))
         parts = [
@@ -425,15 +374,12 @@ def pip_join(
 
 
 def _pip_inner(points, polys, level, lon_col, lat_col,
-               poly_id_col, rings_col, pack_rows=None) -> DataFrame:
-    """One broadcast-sized PIP pass (see :func:`pip_join` for the plan).
-    ``pack_rows`` lets :func:`pip_join` pass the already-collected edge
-    blobs so the single-chunk fast path runs exactly one packing job."""
+               poly_id_col, rings_col) -> DataFrame:
+    """One broadcast-sized PIP pass (see :func:`pip_join` for the plan)."""
     spark = points.sparkSession
     cov_sdf = _poly_covering_cells_df(polys, level, rings_col, poly_id_col)
     # executor-side flattening; only packed buffers transit the driver
-    if pack_rows is None:
-        pack_rows = _pack_edges_sdf(polys, poly_id_col, rings_col).collect()
+    pack_rows = _pack_edges_sdf(polys, poly_id_col, rings_col).collect()
     edges_bc = spark.sparkContext.broadcast(_assemble_edges(pack_rows))
 
     pts = points.withColumn("cell", cell_col(F.col(lon_col), F.col(lat_col), level))
@@ -712,6 +658,8 @@ def _prereduce_topk(cand: DataFrame, k: int, query_id_col: str,
     schema = cand.schema
 
     def _head(batches):
+        from .. import _pyworker  # noqa: F401  (installs the worker patch)
+
         seen: dict = {}
         for pdf in batches:
             if pdf.empty:

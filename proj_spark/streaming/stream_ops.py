@@ -94,6 +94,8 @@ def stream_dedup_first_seen(
     def _update(key, pdfs, state):
         import pandas as pd
 
+        from .. import _pyworker  # noqa: F401  (installs the worker patch)
+
         if state.hasTimedOut:
             state.remove()
             return
@@ -174,6 +176,8 @@ def stream_image_dedup_first_seen(
 
     def _update(key, pdfs, state):
         import pandas as pd
+
+        from .. import _pyworker  # noqa: F401  (installs the worker patch)
 
         if state.hasTimedOut:
             state.remove()

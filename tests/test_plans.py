@@ -27,6 +27,18 @@ def _pts(spark, n=2000, seed=21):
     }))
 
 
+def _squares(spark, n=40, seed=33):
+    # n unit squares scattered over the _pts extent: 4 edges each
+    rng = np.random.default_rng(seed)
+    rows = []
+    for i in range(n):
+        x0, y0 = rng.uniform(-60, 60), rng.uniform(-60, 60)
+        rows.append({"poly_id": f"p{i}", "rings": [[
+            [x0, y0], [x0 + 1.0, y0], [x0 + 1.0, y0 + 1.0],
+            [x0, y0 + 1.0], [x0, y0]]]})
+    return spark.createDataFrame(pd.DataFrame(rows))
+
+
 def test_pip_join_plan_broadcasts_polygons(spark):
     polys = spark.createDataFrame(pd.DataFrame([{
         "poly_id": "p0",
@@ -114,6 +126,24 @@ def test_knn_construct_job_budget(spark, case, n_points, budget):
         pts, qs, k=3, level=6, n_points=n_points))
     assert jobs <= budget, f"{case}: {jobs} construct-time jobs > {budget}"
     assert out.count() == 3 * len(lon)
+
+
+@pytest.mark.parametrize("case, level, max_bytes, budget", [
+    # adaptive level: one span + edge-count aggregate (2 jobs under
+    # AQE) and one packing collect
+    ("single_chunk", None, 256 << 20, 3),
+    # pinned level: the edge-count aggregate alone, then the packing
+    ("pinned_level", 6, 256 << 20, 3),
+    # 3 hash chunks: the aggregate, then one packing collect per chunk
+    # and none of the whole layer
+    ("chunked", None, 2048, 5),
+])
+def test_pip_construct_job_budget(spark, case, level, max_bytes, budget):
+    polys = _squares(spark)
+    out, jobs = _construct_jobs(spark, f"pip_budget_{case}", lambda: pip_join(
+        _pts(spark), polys, level=level, max_broadcast_bytes=max_bytes))
+    assert jobs <= budget, f"{case}: {jobs} construct-time jobs > {budget}"
+    assert out.count() > 0
 
 
 def test_parquet_scan_pushdown_and_pruning(spark, tmp_path):
@@ -208,14 +238,7 @@ def test_knn_pinned_level_defaults_two_phase(spark):
 def test_pip_join_chunked_plan_unions_broadcasts(spark):
     # polygon layers beyond max_broadcast_bytes split into hash chunks:
     # the plan is a union of broadcast joins — still no big-table shuffle
-    rng = np.random.default_rng(33)
-    rows = []
-    for i in range(40):
-        x0, y0 = rng.uniform(-60, 60), rng.uniform(-60, 60)
-        rows.append({"poly_id": f"p{i}", "rings": [[
-            [x0, y0], [x0 + 1.0, y0], [x0 + 1.0, y0 + 1.0],
-            [x0, y0 + 1.0], [x0, y0]]]})
-    polys = spark.createDataFrame(pd.DataFrame(rows))
+    polys = _squares(spark)
     chunked = pip_join(_pts(spark), polys, level=6, max_broadcast_bytes=2048)
     plan = _plan(chunked)
     assert "Union" in plan

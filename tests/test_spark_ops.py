@@ -54,6 +54,37 @@ def test_transform_udf_rowwise_errors(spark):
     assert byid[2]["err"] == "Invalid coordinate"
 
 
+def test_transform_udfs_share_the_worker_cache(spark):
+    # UDF closures are pickled by value; in a fresh interpreter (a
+    # Python worker) two unpickled transform UDFs must build the
+    # Transform once, in the module's own cache, not in per-task copies
+    import ast
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    blob = cloudpickle.dumps([proj_udf("EPSG:4326", "EPSG:3857").func
+                              for _ in range(2)])
+    script = (
+        "import sys\n"
+        "import pandas as pd\n"
+        "from pyspark import cloudpickle\n"
+        "udfs = cloudpickle.loads(sys.stdin.buffer.read())\n"
+        "from proj_spark.functions import transform\n"
+        "built = []\n"
+        "for f in udfs:\n"
+        "    f(pd.Series([10.0]), pd.Series([50.0]))\n"
+        "    built.append([id(t) for t in transform._TRANSFORM_CACHE.values()])\n"
+        "print(built)\n"
+    )
+    r = subprocess.run([sys.executable, "-c", script], input=blob,
+                       capture_output=True, timeout=120)
+    assert r.returncode == 0, r.stderr.decode()[-2000:]
+    first, second = ast.literal_eval(r.stdout.decode().splitlines()[-1])
+    assert len(first) == 1 and second == first
+
+
 def test_cell_column_matches_numpy(spark):
     rng = np.random.default_rng(7)
     lon = rng.uniform(-180, 180, 500)
@@ -636,6 +667,57 @@ def test_pip_join_chunked_matches_unchunked(spark):
                  pip_anti_join(pts, polys, level=6, max_broadcast_bytes=2048)
                  .select("point_id").collect()}
     assert anti_one == anti_many
+
+
+def test_pip_join_chunked_never_collects_whole_layer(spark, monkeypatch):
+    # the chunking decision counts edges in the JVM; each chunk packs,
+    # collects and assembles only its own polygons' edges
+    from proj_spark.operators import joins as J
+
+    rng = np.random.default_rng(37)
+    rows = []
+    for i in range(40):
+        ring = _random_convex_polygon(rng, rng.uniform(-50, 50),
+                                      rng.uniform(-50, 50), 3.0)
+        rows.append({"poly_id": f"p{i}", "rings": [ring]})
+    layer_edges = sum(len(r["rings"][0]) - 1 for r in rows)
+    polys = spark.createDataFrame(pd.DataFrame(rows))
+    pts = spark.createDataFrame(pd.DataFrame({
+        "point_id": np.arange(1200),
+        "lon": rng.uniform(-55, 55, 1200),
+        "lat": rng.uniform(-55, 55, 1200),
+    }))
+    packed, assembled = [], []
+    pack, assemble = J._pack_edges_sdf, J._assemble_edges
+
+    def _edges(rows_):
+        return sum(int(np.frombuffer(r["cnts"], dtype=np.int64).sum())
+                   for r in rows_)
+
+    def pack_spy(*args):
+        out = pack(*args)
+        packed.append(_edges(out.collect()))
+        return out
+
+    def assemble_spy(rows_):
+        rows_ = list(rows_)
+        assembled.append(_edges(rows_))
+        return assemble(rows_)
+
+    def _set(df):
+        return {(int(r["point_id"]), r["poly_id"])
+                for r in df.select("point_id", "poly_id").collect()}
+
+    monkeypatch.setattr(J, "_pack_edges_sdf", pack_spy)
+    monkeypatch.setattr(J, "_assemble_edges", assemble_spy)
+    one = _set(pip_join(pts, polys, level=6))
+    assert packed == assembled == [layer_edges]
+    del packed[:], assembled[:]
+    # 40 polys x 8 edges x 32 B ~ 10 kB -> a 2 kB cap forces 5 chunks
+    many = _set(pip_join(pts, polys, level=6, max_broadcast_bytes=2048))
+    assert len(assembled) == 5 and sum(assembled) == layer_edges
+    assert max(packed) < layer_edges and max(assembled) < layer_edges
+    assert one == many and len(one) > 0
 
 
 def test_radius_join_exact_vs_bruteforce(spark):
