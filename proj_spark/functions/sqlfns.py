@@ -156,8 +156,9 @@ RETURN substr({gh_chars}, 1, precision)
 
     # UDTF surface (the table-function leg of the §2.2 UDF/UDAF/UDTF
     # row): ring_cells(cell, r) expands a cell id to its ring-r
-    # neighbourhood — the SQL-surface twin of cells.np_cell_ring /
-    # cell_ring_col, usable in LATERAL joins for candidate generation:
+    # neighbourhood — the SQL-surface twin of cells.np_cell_ring (the
+    # Column-side rings come from cells._block_cells), usable in
+    # LATERAL joins for candidate generation:
     #   SELECT p.*, rc.cand_cell
     #   FROM points p, LATERAL ring_cells(p.cell, 1) rc
     from pyspark.sql.functions import udtf

@@ -16,9 +16,14 @@ properties the distributed layer needs (BASELINE.json north_rule):
 Everything here is expressed TWICE with identical bit logic:
 
   * as Spark ``Column`` expressions (pure JVM, whole-stage codegen —
-    the hot path; no Python worker involved), and
-  * as numpy functions (used inside pandas UDFs for ring expansion and
-    by the DuckDB oracle builder).
+    the hot path; no Python worker involved).  This is the ONE
+    Column-side grid: :func:`_col_index` (clamped grid index),
+    :func:`_col_cell` (cell-id encoder) and :func:`_block_cells`
+    (wrapped, pole-clipped cell blocks) sit behind ``cell_col``, the
+    geohash and tile-x columns, the PIP covering cells and the
+    radius/kNN candidate rings;
+  * as numpy functions — the reference the tests, the ``ring_cells``
+    UDTF and the DuckDB oracle builder use.
 
 Tests assert the two agree bit-for-bit.
 """
@@ -26,15 +31,13 @@ Tests assert the two agree bit-for-bit.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
     "MAX_LEVEL",
     "cell_col",
-    "with_cell",
     "cell_parent_col",
-    "cell_ring_col",
     "np_cell",
     "np_cell_parent",
     "np_cell_ring",
@@ -83,7 +86,8 @@ def _np_ij(lon, lat, level):
 
 def np_cell(lon, lat, level: int) -> np.ndarray:
     """lon/lat degrees -> cell id at ``level``."""
-    assert 0 <= level <= MAX_LEVEL
+    if not 0 <= level <= MAX_LEVEL:
+        raise ValueError(f"cell level must be in [0, {MAX_LEVEL}], got {level}")
     ix, iy = _np_ij(lon, lat, level)
     morton = _np_spread(ix) | (_np_spread(iy) << 1)
     return (morton << 5) | np.int64(level)
@@ -151,56 +155,50 @@ def _col_compact(c: Column) -> Column:
     return c
 
 
+def _col_index(v: Column, off: float, span: float, bits: int) -> Column:
+    """Clamped grid index ``floor((v + off) / span * 2^bits)`` in
+    ``[0, 2^bits - 1]`` — one axis of every Column-side grid (cells,
+    geohash, slippy-map tile x)."""
+    n = 1 << bits
+    i = F.floor((v + F.lit(off)) / F.lit(span) * F.lit(float(n)))
+    return F.greatest(F.lit(0), F.least(F.lit(n - 1), i)).cast("long")
+
+
 def _col_ij(lon: Column, lat: Column, level: int) -> tuple[Column, Column]:
+    return _col_index(lon, 180.0, 360.0, level), _col_index(lat, 90.0, 180.0, level)
+
+
+def _col_cell(ix: Column, iy: Column, level: int) -> Column:
+    """Cell id ``(morton(ix, iy) << 5) | level`` of grid-index Columns."""
+    if not 0 <= level <= MAX_LEVEL:
+        raise ValueError(f"cell level must be in [0, {MAX_LEVEL}], got {level}")
+    morton = _col_spread(ix).bitwiseOR(F.shiftleft(_col_spread(iy), 1))
+    return F.shiftleft(morton, 5).bitwiseOR(F.lit(level))
+
+
+def _block_cells(df: DataFrame, ix: Column, iy: Column, dx, dy, level: int,
+                 out: str) -> DataFrame:
+    """One row per ``df`` row and per cell ``(ix+i mod 2^level, iy+j)``
+    for ``i`` in ``dx`` and ``j`` in ``dy`` (inclusive ``(lo, hi)``
+    Column bounds), cell id in column ``out``.  Longitude wraps; rows
+    past a pole are dropped.  Relational — explode(dx) x explode(dy),
+    then ONE Morton spread per exploded row — so it stays pure JVM;
+    blocks wider than the globe repeat cells (callers dedup)."""
     n = 1 << level
-    ix = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    iy = F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))
-    ix = F.greatest(F.lit(0), F.least(F.lit(n - 1), ix)).cast("long")
-    iy = F.greatest(F.lit(0), F.least(F.lit(n - 1), iy)).cast("long")
-    return ix, iy
+    return (
+        df.withColumn("__dx", F.explode(F.sequence(*dx)))
+        .withColumn("__dy", F.explode(F.sequence(*dy)))
+        .withColumn("__jx", F.pmod(ix + F.col("__dx"), F.lit(n)))
+        .withColumn("__jy", iy + F.col("__dy"))
+        .where((F.col("__jy") >= 0) & (F.col("__jy") < n))
+        .withColumn(out, _col_cell(F.col("__jx"), F.col("__jy"), level))
+        .drop("__dx", "__dy", "__jx", "__jy")
+    )
 
 
 def cell_col(lon: Column, lat: Column, level: int) -> Column:
     """Cell id Column from lon/lat degree Columns — JVM-side, no UDF."""
-    assert 0 <= level <= MAX_LEVEL
-    ix, iy = _col_ij(lon, lat, level)
-    morton = _col_spread(ix).bitwiseOR(F.shiftleft(_col_spread(iy), 1))
-    return F.shiftleft(morton, 5).bitwiseOR(F.lit(level)).alias("cell")
-
-
-def with_cell(df, lon_col: str, lat_col: str, level: int,
-              out: str = "cell"):
-    """Append a cell-id column via CHAINED projections.
-
-    Equivalent to ``cell_col`` (bit-for-bit; parity tested).  The
-    nested Column form textually duplicates each spread stage's input
-    ~2x per stage; whole-stage codegen's subexpression elimination
-    absorbs that (both measured >10 M rows/s at steady state), but the
-    chained form keeps every intermediate evaluated once even if a
-    plan falls out of codegen — prefer it when composing the cell id
-    with other large expressions in one projection."""
-    assert 0 <= level <= MAX_LEVEL
-    n = 1 << level
-    cx, cy = f"__cix_{out}", f"__ciy_{out}"
-    ix = F.greatest(
-        F.lit(0),
-        F.least(F.lit(n - 1),
-                F.floor((F.col(lon_col) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))),
-    ).cast("long")
-    iy = F.greatest(
-        F.lit(0),
-        F.least(F.lit(n - 1),
-                F.floor((F.col(lat_col) + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))),
-    ).cast("long")
-    df = df.withColumn(cx, ix).withColumn(cy, iy)
-    for shift, mask in _MASKS:
-        df = df.withColumn(
-            cx, (F.col(cx).bitwiseOR(F.shiftleft(F.col(cx), shift))).bitwiseAND(F.lit(mask))
-        ).withColumn(
-            cy, (F.col(cy).bitwiseOR(F.shiftleft(F.col(cy), shift))).bitwiseAND(F.lit(mask))
-        )
-    morton = F.col(cx).bitwiseOR(F.shiftleft(F.col(cy), 1))
-    return df.withColumn(out, F.shiftleft(morton, 5).bitwiseOR(F.lit(level))).drop(cx, cy)
+    return _col_cell(*_col_ij(lon, lat, level), level).alias("cell")
 
 
 def cell_level_col(cell: Column) -> Column:
@@ -213,23 +211,3 @@ def cell_parent_col(cell: Column, level: int, parent_level: int) -> Column:
     return F.shiftleft(
         F.shiftrightunsigned(morton, 2 * (level - parent_level)), 5
     ).bitwiseOR(F.lit(parent_level))
-
-
-def cell_ring_col(cell: Column, level: int, r: int) -> Column:
-    """Array Column of all cells within Chebyshev distance ``r`` of the
-    cell — built from (2r+1)^2 JVM expressions, used for kNN candidate
-    generation (cell-ring expansion, SURVEY.md §2.2 joins row).  Out-of
-    range latitudes yield NULL entries, filtered out of the array."""
-    n = 1 << level
-    morton = F.shiftrightunsigned(cell, 5)
-    ix = _col_compact(morton)
-    iy = _col_compact(F.shiftrightunsigned(morton, 1))
-    cells = []
-    for dx in range(-r, r + 1):
-        for dy in range(-r, r + 1):
-            jx = (ix + F.lit(dx) + F.lit(n)) % F.lit(n)  # wrap lon
-            jy = iy + F.lit(dy)
-            m = _col_spread(jx).bitwiseOR(F.shiftleft(_col_spread(jy), 1))
-            c = F.shiftleft(m, 5).bitwiseOR(F.lit(level))
-            cells.append(F.when((jy >= 0) & (jy < n), c))
-    return F.filter(F.array(*cells), lambda x: x.isNotNull())

@@ -6,28 +6,23 @@ whose prefixes nest, MSB-first bit interleave starting with LONGITUDE
 (the opposite stream order of this engine's Morton cells, and with an
 odd/even split when the bit count 5*precision is odd).
 
-Everything is whole-stage-codegen Column bit math reusing the Morton
-spread/compact kernels (`cells._col_spread/_col_compact`) — no UDF, no
-Python — so geohash columns cost the same as cell ids and push through
-shuffles/joins as plain strings.  DuckDB twin: `oracle.sql_geohash`.
+Everything is whole-stage-codegen Column bit math reusing the cell
+grid's index and Morton spread/compact kernels (`cells._col_index`,
+`cells._col_spread/_col_compact`) — no UDF, no Python — so geohash
+columns cost the same as cell ids and push through shuffles/joins as
+plain strings.  DuckDB twin: `oracle.sql_geohash`.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
-from .cells import _col_compact, _col_spread
+from .cells import _col_compact, _col_index, _col_spread
 
 __all__ = ["GEOHASH32", "geohash_col", "geohash_decode_cols",
            "with_geohash"]
 
 GEOHASH32 = "0123456789bcdefghjkmnpqrstuvwxyz"
-
-
-def _scaled(c: Column, lo: float, span: float, n_bits: int) -> Column:
-    n = 1 << n_bits
-    raw = F.floor((c - F.lit(lo)) / F.lit(span) * F.lit(float(n)))
-    return F.least(F.lit(n - 1), F.greatest(F.lit(0), raw)).cast("long")
 
 
 def geohash_col(lon: Column, lat: Column, precision: int = 8) -> Column:
@@ -38,8 +33,8 @@ def geohash_col(lon: Column, lat: Column, precision: int = 8) -> Column:
     bits = 5 * precision
     n_lon = (bits + 1) // 2
     n_lat = bits // 2
-    ix = _scaled(lon, -180.0, 360.0, n_lon)
-    iy = _scaled(lat, -90.0, 180.0, n_lat)
+    ix = _col_index(lon, 180.0, 360.0, n_lon)
+    iy = _col_index(lat, 90.0, 180.0, n_lat)
     if bits % 2 == 0:
         # LSB of the combined word is a LATITUDE bit
         v = _col_spread(iy).bitwiseOR(F.shiftleft(_col_spread(ix), 1))

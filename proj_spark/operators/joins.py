@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
-from .cells import MAX_LEVEL, cell_col
+from .cells import MAX_LEVEL, _block_cells, _col_ij, cell_col
 
 __all__ = [
     "EARTH_RADIUS_M",
@@ -88,40 +88,32 @@ def _np_point_in_rings(px: np.ndarray, py: np.ndarray, rings) -> np.ndarray:
 def _poly_covering_cells_df(polys: DataFrame, level: int,
                             rings_col: str, poly_id_col: str) -> DataFrame:
     """Executor-side bbox-covering cells per polygon: min/max over the
-    exterior ring (JVM array ops) -> explode the (ix, iy) index ranges ->
-    Morton-encode.  Pure Column math, so a million-polygon layer expands
-    in parallel on executors — the driver never materializes it (it only
-    flows through the driver once more if the result is broadcast)."""
-    from .cells import _col_spread
-
-    n = 1 << level
+    exterior ring (JVM array ops) -> the grid block from the bbox's
+    lower-left cell to its upper-right one (:func:`cells._block_cells`).
+    Pure Column math, so a million-polygon layer expands in parallel on
+    executors — the driver never materializes it (it only flows through
+    the driver once more if the result is broadcast)."""
     ext = F.col(rings_col)[0]
     lons = F.transform(ext, lambda p: p[0])
     lats = F.transform(ext, lambda p: p[1])
-
-    def _idx(v: Column, off: float, span: float) -> Column:
-        i = F.floor((v + F.lit(off)) / F.lit(span) * F.lit(float(n)))
-        return F.greatest(F.lit(0), F.least(F.lit(n - 1), i)).cast("long")
-
-    cov = (
+    ix0, iy0 = _col_ij(F.col("__minx"), F.col("__miny"), level)
+    ix1, iy1 = _col_ij(F.col("__maxx"), F.col("__maxy"), level)
+    bb = (
         polys.select(poly_id_col, rings_col)
         .withColumn("__minx", F.array_min(lons))
         .withColumn("__maxx", F.array_max(lons))
         .withColumn("__miny", F.array_min(lats))
         .withColumn("__maxy", F.array_max(lats))
-        .withColumn("__ix0", _idx(F.col("__minx"), 180.0, 360.0))
-        .withColumn("__ix1", _idx(F.col("__maxx"), 180.0, 360.0))
-        .withColumn("__iy0", _idx(F.col("__miny"), 90.0, 180.0))
-        .withColumn("__iy1", _idx(F.col("__maxy"), 90.0, 180.0))
-        .withColumn("__ix", F.explode(F.sequence(F.col("__ix0"), F.col("__ix1"))))
-        .withColumn("__iy", F.explode(F.sequence(F.col("__iy0"), F.col("__iy1"))))
+        .withColumn("__ix0", ix0)
+        .withColumn("__iy0", iy0)
+        .withColumn("__nx", ix1 - F.col("__ix0"))
+        .withColumn("__ny", iy1 - F.col("__iy0"))
     )
-    morton = _col_spread(F.col("__ix")).bitwiseOR(
-        F.shiftleft(_col_spread(F.col("__iy")), 1)
-    )
-    cell = F.shiftleft(morton, 5).bitwiseOR(F.lit(level))
+    cov = _block_cells(bb, F.col("__ix0"), F.col("__iy0"),
+                       (F.lit(0), F.col("__nx")), (F.lit(0), F.col("__ny")),
+                       level, "cell")
     return cov.select(
-        poly_id_col, rings_col, cell.alias("cell"),
+        poly_id_col, rings_col, "cell",
         F.col("__minx").alias("bb_minx"), F.col("__maxx").alias("bb_maxx"),
         F.col("__miny").alias("bb_miny"), F.col("__maxy").alias("bb_maxy"),
     )
@@ -470,8 +462,6 @@ def radius_join(
     """
     if radius_m <= 0:
         raise ValueError(f"radius_m must be > 0, got {radius_m}")
-    from .cells import _col_ij, _col_spread
-
     rad_deg = math.degrees(radius_m / EARTH_RADIUS_M)
     if level is None:
         # largest level whose cell lat-height still covers the radius
@@ -497,27 +487,19 @@ def radius_join(
     lon_span_deg = F.degrees(F.lit(2.0) * F.asin(ratio))
     rx = F.least(F.ceil(lon_span_deg / F.lit(cw)).cast("int"),
                  F.lit(n // 2 + 1))
-    q = (
-        queries.select(
-            F.col(query_id_col),
-            F.col(lon_col).alias("q_lon"),
-            F.col(lat_col).alias("q_lat"),
-            qix.alias("__qix"),
-            qiy.alias("__qiy"),
-            rx.alias("__rx"),
-        )
-        .withColumn("__dx", F.explode(F.sequence(-F.col("__rx"), F.col("__rx"))))
-        .withColumn("__dy", F.explode(F.sequence(F.lit(-ry), F.lit(ry))))
-        .withColumn("__jx", F.pmod(F.col("__qix") + F.col("__dx"), F.lit(n)))
-        .withColumn("__jy", F.col("__qiy") + F.col("__dy"))
-        .where((F.col("__jy") >= 0) & (F.col("__jy") < n))
+    q = queries.select(
+        F.col(query_id_col),
+        F.col(lon_col).alias("q_lon"),
+        F.col(lat_col).alias("q_lat"),
+        qix.alias("__qix"),
+        qiy.alias("__qiy"),
+        rx.alias("__rx"),
     )
-    morton = _col_spread(F.col("__jx")).bitwiseOR(
-        F.shiftleft(_col_spread(F.col("__jy")), 1))
-    q = q.select(
-        query_id_col, "q_lon", "q_lat",
-        F.shiftleft(morton, 5).bitwiseOR(F.lit(level)).alias("cand_cell"),
-    ).dropDuplicates([query_id_col, "cand_cell"])  # polar wrap collisions
+    q = _block_cells(q, F.col("__qix"), F.col("__qiy"),
+                     (-F.col("__rx"), F.col("__rx")), (F.lit(-ry), F.lit(ry)),
+                     level, "cand_cell")
+    q = q.select(query_id_col, "q_lon", "q_lat", "cand_cell").dropDuplicates(
+        [query_id_col, "cand_cell"])  # polar wrap collisions
     # decide broadcast vs shuffle.  Caller override first (True = no
     # plan-time action at all); else prove safety with the static
     # worst-case ring size and a LIMIT-bounded count; else fall back
@@ -593,10 +575,7 @@ def _block_guard_col(q_lon: Column, q_lat: Column, level: int, ring: int) -> Col
     """
     n = 1 << level
     cw, ch = 360.0 / n, 180.0 / n
-    ix = F.greatest(F.lit(0), F.least(F.lit(n - 1),
-                    F.floor((q_lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))))
-    iy = F.greatest(F.lit(0), F.least(F.lit(n - 1),
-                    F.floor((q_lat + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))))
+    ix, iy = _col_ij(q_lon, q_lat, level)
     west = (ix - F.lit(ring)) * F.lit(cw) - F.lit(180.0)
     east = (ix + F.lit(ring + 1)) * F.lit(cw) - F.lit(180.0)
     south = (iy - F.lit(ring)) * F.lit(ch) - F.lit(90.0)
@@ -689,44 +668,30 @@ def _ring_topk(
     two_phase: bool,
 ) -> DataFrame:
     """One candidate-generation round: queries explode their ring-``r``
-    cells RELATIONALLY — explode(dx) x explode(dy) then ONE Morton
-    spread per exploded row — so the whole q-side stays pure JVM (an
-    array-expression ring duplicates the compact->re-spread tree
-    (2r+1)^2 times and blows up Catalyst analysis; a numpy UDF avoids
-    that but puts a Python worker launch inside every broadcast build —
-    both measured slower).  Then BROADCAST, equi-join on the big
-    table's cell column, per-query top-k.
+    cells RELATIONALLY through :func:`cells._block_cells`, so the whole
+    q-side stays pure JVM (an array-expression ring duplicated the
+    compact->re-spread tree (2r+1)^2 times and blew up Catalyst
+    analysis; a numpy UDF avoids that but puts a Python worker launch
+    inside every broadcast build — both measured slower).  Then
+    BROADCAST, equi-join on the big table's cell column, per-query
+    top-k.
 
     Every query also gets one SENTINEL row (NULL ``point_id``, NULL
     ``dist_m`` ordered after every real distance, NaN included): a query
     with fewer than k candidates keeps its sentinel, so the round's
     output holds every query."""
-    from .cells import _col_ij, _col_spread
-
-    n = 1 << level
     qix, qiy = _col_ij(F.col(lon_col), F.col(lat_col), level)
-    q = (
-        queries.select(
-            F.col(query_id_col),
-            F.col(lon_col).alias("q_lon"),
-            F.col(lat_col).alias("q_lat"),
-            qix.alias("__qix"),
-            qiy.alias("__qiy"),
-        )
-        .withColumn("__dx", F.explode(F.sequence(F.lit(-r), F.lit(r))))
-        .withColumn("__dy", F.explode(F.sequence(F.lit(-r), F.lit(r))))
-        .withColumn("__jx", F.pmod(F.col("__qix") + F.col("__dx"), F.lit(n)))
-        .withColumn("__jy", F.col("__qiy") + F.col("__dy"))
-        .where((F.col("__jy") >= 0) & (F.col("__jy") < n))
+    q = queries.select(
+        F.col(query_id_col),
+        F.col(lon_col).alias("q_lon"),
+        F.col(lat_col).alias("q_lat"),
+        qix.alias("__qix"),
+        qiy.alias("__qiy"),
     )
-    morton = _col_spread(F.col("__jx")).bitwiseOR(
-        F.shiftleft(_col_spread(F.col("__jy")), 1)
-    )
-    q = q.select(
-        query_id_col, "q_lon", "q_lat",
-        F.shiftleft(morton, 5).bitwiseOR(F.lit(level)).alias("cand_cell"),
-    )
-    if 2 * r + 1 >= n:
+    ring = (F.lit(-r), F.lit(r))
+    q = _block_cells(q, F.col("__qix"), F.col("__qiy"), ring, ring, level,
+                     "cand_cell").select(query_id_col, "q_lon", "q_lat", "cand_cell")
+    if 2 * r + 1 >= 1 << level:
         # the ring wraps the whole globe in longitude: pmod collides and
         # would duplicate candidates (and thus top-k rows) — dedup the
         # (small) q side before the join

@@ -492,6 +492,12 @@ def dedup_full(
     )
 
 
+# largest edge list dedup_connected_components closes on the driver
+# (2M pairs ~ 32 MB, the same order as the repo's broadcast budgets);
+# 0 sends every graph through the distributed loop
+_CC_LOCAL_MAX_EDGES = 2_000_000
+
+
 def _cc_local(u: "np.ndarray", v: "np.ndarray", max_iters: int,
               stats: dict | None):
     """Driver-local min-label propagation with pointer doubling —
@@ -545,7 +551,6 @@ def dedup_connected_components(
     id_col_b: str = "id_b",
     max_iters: int = 12,
     stats: dict | None = None,
-    small_cut: int = 2_000_000,
 ) -> DataFrame:
     """FULL transitive closure over a verified near-dup pair set:
     min-label propagation WITH pointer doubling until fixpoint.
@@ -591,24 +596,23 @@ def dedup_connected_components(
     # costs three shuffles plus a count action — ~1.5 s of fixed cost
     # per round at any data size — while a verified near-dup edge list
     # is usually tiny relative to the corpus.  When the pair count is
-    # under ``small_cut`` (2M pairs ~ 32 MB, the same order as the
-    # repo's broadcast budgets), pull the edges once through Arrow and
-    # run the numpy mirror of the SAME algorithm; identical labels,
-    # identical stats, and the result comes back as a LocalRelation the
-    # planner can broadcast into the caller's final join.  Long ids
+    # at most ``_CC_LOCAL_MAX_EDGES``, pull the edges once through
+    # Arrow and run the numpy mirror of the SAME algorithm; identical
+    # labels, identical stats, and the result comes back as a
+    # LocalRelation the planner can broadcast into the caller's final
+    # join.  Long ids
     # only (the dedup callers' shape); anything else — or a bigger
-    # graph — takes the distributed loop unchanged.  ``small_cut=0``
-    # disables the probe entirely.
+    # graph — takes the distributed loop unchanged.
     from pyspark.sql.types import LongType
 
-    if (small_cut > 0
+    if (_CC_LOCAL_MAX_EDGES > 0
             and isinstance(pairs.schema[id_col_a].dataType, LongType)
             and isinstance(pairs.schema[id_col_b].dataType, LongType)):
         import numpy as np
         import pandas as pd
 
         e = e.localCheckpoint(eager=False)  # materialized once, reused
-        if e.count() <= small_cut:
+        if e.count() <= _CC_LOCAL_MAX_EDGES:
             pdf = e.toPandas()
             nodes, comp = _cc_local(
                 pdf["u"].to_numpy(np.int64), pdf["v"].to_numpy(np.int64),

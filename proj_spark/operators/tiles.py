@@ -18,6 +18,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .cells import _col_index
+
 __all__ = [
     "MAX_MERC_LAT",
     "tile_x_col",
@@ -37,9 +39,7 @@ def _clamp_lat(lat: Column) -> Column:
 
 
 def tile_x_col(lon: Column, zoom: int) -> Column:
-    n = float(1 << zoom)
-    tx = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(n))
-    return F.greatest(F.lit(0), F.least(F.lit((1 << zoom) - 1), tx)).cast("int")
+    return _col_index(lon, 180.0, 360.0, zoom).cast("int")
 
 
 def tile_y_col(lat: Column, zoom: int) -> Column:

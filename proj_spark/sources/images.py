@@ -171,10 +171,11 @@ def phash64_batch(arrs: np.ndarray) -> np.ndarray:
     """The pHash definition, over a same-shape (n, h, w, 3) uint8 stack
     -> int64[n] (:func:`phash64` is a batch of one).  Every floating
     step (gray weights, cumulative sums, block-mean order of
-    operations, per-slice BLAS DCT, median) runs per item in the same
-    order whatever ``n`` is, so an image hashes identically alone or in
-    any batch.  This is the tile-pyramid hot path — hashing a level's
-    tiles in one call instead of one Python call per tile."""
+    operations, per-slice BLAS DCT on a C-contiguous 32x32 slice,
+    median) runs per item in the same order whatever ``n`` is, so an
+    image hashes identically alone or in any batch.  This is the
+    tile-pyramid hot path — hashing a level's tiles in one call instead
+    of one Python call per tile."""
     n, h, w = arrs.shape[:3]
     if n == 0:
         return np.empty(0, dtype=np.int64)
@@ -196,6 +197,11 @@ def phash64_batch(arrs: np.ndarray) -> np.ndarray:
     small = (csum[:, iy, ix] - csum[:, iy0, ix]
              - csum[:, iy, ix0] + csum[:, iy0, ix0]) \
         / ((ye - ys)[:, None] * (xe - xs)[None, :])
+    # the fancy-indexed stack puts the batch axis innermost for n > 1,
+    # so small[i] would be a strided view and BLAS would take another
+    # gemm path than for the contiguous n == 1 stack (bits flip at the
+    # median); make every slice C-contiguous, as it is for n == 1
+    small = np.ascontiguousarray(small)
     dct = np.empty((n, 32, 32))
     for i in range(n):  # per-slice 2-D BLAS, same calls for any n
         dct[i] = _DCT32 @ small[i] @ _DCT32.T

@@ -120,21 +120,72 @@ def test_cell_parent_and_decode_roundtrip(spark):
     assert (C.np_cell(clon, clat, 12) == cell).all()
 
 
-def test_cell_ring_matches_numpy(spark):
+def test_block_cells_matches_np_cell_ring(spark):
+    # the Column-side block enumerator against the numpy ring, compared
+    # as sets: antimeridian cells, pole rows, and full-wrap rings
+    # (2r+1 >= 2^level, levels 2 and 3) whose wrapped columns repeat
     rng = np.random.default_rng(9)
-    lon = rng.uniform(-179, 179, 50)
-    lat = rng.uniform(-80, 80, 50)
-    cell = C.np_cell(lon, lat, 7)
-    df = spark.createDataFrame(pd.DataFrame({"cell": cell}))
-    got = (
-        df.select(F.col("cell"), C.cell_ring_col(F.col("cell"), 7, 1).alias("ring"))
-        .toPandas()
-    )
-    want = C.np_cell_ring(cell, 1)
-    for i in range(len(cell)):
-        w = set(int(v) for v in want[i] if v >= 0)
-        g = set(int(v) for v in got["ring"][i])
-        assert g == w
+    lon = np.concatenate([rng.uniform(-180, 180, 40),
+                          [-180.0, 180.0, 179.99, -179.99, 0.0, 0.0, 179.99]])
+    lat = np.concatenate([rng.uniform(-90, 90, 40),
+                          [0.0, 0.0, 45.0, -45.0, 90.0, -90.0, 89.99]])
+    for level, rs in [(3, (0, 1, 3)), (7, (0, 1, 3)), (12, (0, 1, 3)),
+                      (2, (3,)), (3, (4,))]:
+        cell = C.np_cell(lon, lat, level)
+        ix, iy, _ = C.np_cell_decode(cell)
+        pdf = pd.concat([pd.DataFrame({"cell": cell, "ix": ix, "iy": iy, "r": r})
+                         for r in rs])
+        df = spark.createDataFrame(pdf)
+        ring = (-F.col("r"), F.col("r"))
+        got = (
+            C._block_cells(df, F.col("ix"), F.col("iy"), ring, ring, level, "c")
+            .groupBy("cell", "r").agg(F.collect_list("c").alias("cs"))
+            .toPandas()
+        )
+        assert len(got) == len(pdf.drop_duplicates(["cell", "r"])), level
+        for c, r, cs in got.itertuples(index=False):
+            want = {int(v) for v in C.np_cell_ring(np.int64(c), int(r))[0] if v >= 0}
+            assert set(cs) == want, (level, r, c)
+
+
+def test_pip_covering_cells_match_numpy_bbox_cover(spark):
+    from proj_spark.operators.joins import _poly_covering_cells_df
+
+    def box(x0, y0, x1, y1):
+        return [[[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]]
+
+    boxes = {"mid": (-10.0, -10.0, 20.0, 15.0), "east": (170.0, -5.0, 180.0, 5.0),
+             "west": (-180.0, 10.0, -170.0, 20.0), "north": (-40.0, 80.0, 40.0, 90.0),
+             "south": (100.0, -90.0, 140.0, -70.0), "world": (-180.0, -90.0, 180.0, 90.0),
+             "tiny": (3.3, 4.4, 3.31, 4.41)}
+    polys = spark.createDataFrame(pd.DataFrame(
+        {"poly_id": list(boxes), "rings": [box(*b) for b in boxes.values()]}))
+    for level in (0, 3, 7):
+        rows = _poly_covering_cells_df(polys, level, "rings", "poly_id").collect()
+        got = {}
+        for r in rows:
+            got.setdefault(r["poly_id"], []).append(r["cell"])
+        for pid, (x0, y0, x1, y1) in boxes.items():
+            (ix0, ix1), (iy0, iy1) = C._np_ij([x0, x1], [y0, y1], level)
+            gx, gy = np.meshgrid(np.arange(ix0, ix1 + 1), np.arange(iy0, iy1 + 1))
+            morton = C._np_spread(gx.ravel()) | (C._np_spread(gy.ravel()) << 1)
+            want = (morton << 5) | level
+            assert sorted(got[pid]) == sorted(want.tolist()), (level, pid)
+
+
+def test_cell_level_out_of_range_raises(spark):
+    # a real error, not an assert: level 27 would overflow the morton bits
+    for level in (-1, C.MAX_LEVEL + 1):
+        with pytest.raises(ValueError):
+            C.cell_col(F.col("lon"), F.col("lat"), level)
+        with pytest.raises(ValueError):
+            C.np_cell([0.0], [0.0], level)
+    pts = spark.createDataFrame(pd.DataFrame(
+        {"point_id": [0], "lon": [0.0], "lat": [0.0]}))
+    qs = spark.createDataFrame(pd.DataFrame(
+        {"query_id": [0], "lon": [0.0], "lat": [0.0]}))
+    with pytest.raises(ValueError, match="level"):
+        knn_join(pts, qs, k=1, level=C.MAX_LEVEL + 1)
 
 
 def test_tiles_match_numpy_and_bounds(spark):
@@ -591,18 +642,6 @@ def test_haversine_known_value(spark):
         haversine_col(F.col("lon1"), F.col("lat1"), F.col("lon2"), F.col("lat2")).alias("d")
     ).collect()[0]["d"]
     assert abs(d - 343_500) < 1_500
-
-
-def test_with_cell_matches_cell_col(spark):
-    # the chained-projection encoding is bit-for-bit the nested form
-    rng = np.random.default_rng(17)
-    pdf = pd.DataFrame({"lon": rng.uniform(-180, 180, 400),
-                        "lat": rng.uniform(-90, 90, 400)})
-    df = spark.createDataFrame(pdf)
-    for level in (0, 3, 12, 26):
-        a = C.with_cell(df, "lon", "lat", level, out="c").select("c").toPandas()
-        b = df.select(C.cell_col(F.col("lon"), F.col("lat"), level).alias("c")).toPandas()
-        assert (a["c"].values == b["c"].values).all(), level
 
 
 def test_pip_join_left_and_empty_edges(spark):

@@ -9,6 +9,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from proj_spark.operators import textops
 from proj_spark.operators.textops import (
     exact_dedup,
     minhash_lsh_groups,
@@ -211,14 +212,31 @@ def test_lit_double_array_bit_identical_to_lit(spark):
     assert bits(r["one_parse"]) == bits(r["per_lit"]) == bits(vals)
 
 
-def test_dedup_connected_components_vs_union_find(spark):
+# _CC_LOCAL_MAX_EDGES per dedup_connected_components path: the
+# driver-local numpy closure, or 0 for the distributed loop
+_CC_PATHS = {"local": textops._CC_LOCAL_MAX_EDGES, "distributed": 0}
+
+
+def _cc_on_paths(monkeypatch, run):
+    """``run()`` once per CC path; the per-path results."""
+    out = {}
+    for path, local_max in _CC_PATHS.items():
+        monkeypatch.setattr(textops, "_CC_LOCAL_MAX_EDGES", local_max)
+        out[path] = run()
+    return out
+
+
+def test_dedup_connected_components_vs_union_find(spark, monkeypatch):
     from proj_spark.operators.textops import dedup_connected_components
 
     # chain a-b-c-d (diameter 3), a triangle, an isolated pair
     edges = [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)]
     pairs = spark.createDataFrame(pd.DataFrame(edges, columns=["id_a", "id_b"]))
-    got = {int(r["node"]): int(r["component_id"])
-           for r in dedup_connected_components(pairs).collect()}
+    by_path = _cc_on_paths(monkeypatch, lambda: {
+        int(r["node"]): int(r["component_id"])
+        for r in dedup_connected_components(pairs).collect()})
+    got = by_path["local"]
+    assert by_path["distributed"] == got
 
     # union-find reference
     parent = {}
@@ -245,43 +263,48 @@ def test_dedup_connected_components_vs_union_find(spark):
         assert c == min(members)
 
 
-def test_dedup_cc_pointer_doubling_round_count(spark):
+def test_dedup_cc_pointer_doubling_round_count(spark, monkeypatch):
     """Round-3 verdict ask #1: the closure must converge in
     O(log diameter) rounds, not O(diameter).  A 60-node path (diameter
     59) needs 59 propagate-only rounds — more than max_iters=12, i.e.
     the propagate-only algorithm would have returned WRONG labels — but
     propagate+pointer-double spreads the minimum ~2x farther per round
-    and must finish (converged, exact) within 8 rounds."""
+    and must finish (converged, exact) within 8 rounds.  Both CC paths
+    run the same round schedule, so they report the same stats."""
     from proj_spark.operators.textops import dedup_connected_components
 
-    n = 60
-    edges = [(i, i + 1) for i in range(n - 1)]
-    pairs = spark.createDataFrame(pd.DataFrame(edges, columns=["id_a", "id_b"]))
-    stats = {}
-    got = {int(r["node"]): int(r["component_id"])
-           for r in dedup_connected_components(pairs, stats=stats).collect()}
-    assert got == {i: 0 for i in range(n)}          # exact closure
-    assert stats["rounds"] <= 8, stats               # pinned: log2(59)+1
-    assert stats["converged"] is True
-    # non-convergence is LOUD: with max_iters too small for the
-    # diameter the call raises, and stats reports converged=False
-    stats_bad = {}
-    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
-        dedup_connected_components(pairs, max_iters=2, stats=stats_bad)
-    assert stats_bad["converged"] is False
-    # star graph (the planted q51 shape): 2 rounds (1 work + 1 confirm)
-    star = [(0, i) for i in range(1, 9)]
-    pairs2 = spark.createDataFrame(pd.DataFrame(star, columns=["id_a", "id_b"]))
-    stats2 = {}
-    got2 = {int(r["node"]): int(r["component_id"])
-            for r in dedup_connected_components(pairs2, stats=stats2).collect()}
-    assert got2 == {i: 0 for i in range(9)}
-    assert stats2["rounds"] == 2, stats2
+    def check():
+        n = 60
+        edges = [(i, i + 1) for i in range(n - 1)]
+        pairs = spark.createDataFrame(pd.DataFrame(edges, columns=["id_a", "id_b"]))
+        stats = {}
+        got = {int(r["node"]): int(r["component_id"])
+               for r in dedup_connected_components(pairs, stats=stats).collect()}
+        assert got == {i: 0 for i in range(n)}          # exact closure
+        assert stats["rounds"] <= 8, stats               # pinned: log2(59)+1
+        assert stats["converged"] is True
+        # non-convergence is LOUD: with max_iters too small for the
+        # diameter the call raises, and stats reports converged=False
+        stats_bad = {}
+        with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+            dedup_connected_components(pairs, max_iters=2, stats=stats_bad)
+        assert stats_bad["converged"] is False
+        # star graph (the planted q51 shape): 2 rounds (1 work + 1 confirm)
+        star = [(0, i) for i in range(1, 9)]
+        pairs2 = spark.createDataFrame(pd.DataFrame(star, columns=["id_a", "id_b"]))
+        stats2 = {}
+        got2 = {int(r["node"]): int(r["component_id"])
+                for r in dedup_connected_components(pairs2, stats=stats2).collect()}
+        assert got2 == {i: 0 for i in range(9)}
+        assert stats2["rounds"] == 2, stats2
+        return stats, stats_bad
+
+    by_path = _cc_on_paths(monkeypatch, check)
+    assert by_path["local"] == by_path["distributed"]
 
 
-@pytest.mark.parametrize("small_cut", [2_000_000, 0],
-                         ids=["local", "distributed"])
-def test_dedup_cc_unconverged_chain_raises(spark, small_cut):
+@pytest.mark.parametrize("path", list(_CC_PATHS))
+def test_dedup_cc_unconverged_chain_raises(spark, monkeypatch, path):
     """A 60-node chain with shuffled ids needs 20 rounds, more than
     max_iters=12.  Stopping there used to return labels that are not
     component minima; both paths must raise and name the round count."""
@@ -292,9 +315,10 @@ def test_dedup_cc_unconverged_chain_raises(spark, small_cut):
     perm = np.random.default_rng(0).permutation(60)
     pairs = spark.createDataFrame(pd.DataFrame(
         {"id_a": perm[:-1], "id_b": perm[1:]}).astype("int64"))
+    monkeypatch.setattr(textops, "_CC_LOCAL_MAX_EDGES", _CC_PATHS[path])
     with pytest.raises(RuntimeError, match="did not converge in 12 rounds"):
-        dedup_connected_components(pairs, max_iters=12, small_cut=small_cut)
-    if small_cut:
+        dedup_connected_components(pairs, max_iters=12)
+    if path == "local":
         got = dedup_connected_components(pairs, max_iters=40).toPandas()
         assert len(got) == 60 and (got["component_id"] == 0).all()
 
