@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..crs import Transform
-from ..functions.transform import get_transform
+from ..functions.transform import _cached_transform
 
 __all__ = [
     "GEOMETRY_DDL",
@@ -201,8 +201,10 @@ def transform_geometry(
 
     @pandas_udf(GEOMETRY_DDL)
     def _udf(g: pd.DataFrame) -> pd.DataFrame:
-        t = get_transform(spec) if not opts else Transform.new_known_crs(
-            spec[0], spec[1], **opts)
+        # proj_udf's cache key: a worker builds each transform once
+        t = _cached_transform(
+            (spec, tuple(sorted(opts.items())), False),
+            lambda: Transform.new_known_crs(spec[0], spec[1], **opts))
         return _transform_geom_batch(g["kind"], g["parts"], g["offsets"],
                                      t, errors)
 

@@ -65,8 +65,10 @@ def _chunk(tag: bytes, payload: bytes) -> bytes:
 
 def encode_png(arr: np.ndarray) -> bytes:
     """8-bit RGB HxWx3 numpy array -> PNG bytes (filter 0, zlib)."""
-    h, w, c = arr.shape
-    assert c == 3 and arr.dtype == np.uint8
+    if not (arr.ndim == 3 and arr.shape[2] == 3 and arr.dtype == np.uint8):
+        raise ValueError(f"expected a uint8 HxWx3 RGB array, got shape "
+                         f"{arr.shape} dtype {arr.dtype}")
+    h, w, _c = arr.shape
     ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
     raw = np.zeros((h, w * 3 + 1), dtype=np.uint8)
     raw[:, 1:] = arr.reshape(h, w * 3)

@@ -27,6 +27,15 @@ symbols in Python (bounded by coefficient count — this is the
 correctness codec for the per-row PSNR>=40 invariant, not a libjpeg
 replacement; a quality-90 encode of the test rasters clears 40 dB).
 
+Every scan of every frame type — baseline and progressive here,
+arithmetic in ``jpeg_arith.py`` — is written and read in the block
+order of one walker, :func:`_scan_mcus` (T.81 Annex A.2, restart
+points included), with its header parsed by :func:`_parse_sos` and
+the frame's MCU grid from :func:`_mcu_grid`.  The DHT/DRI/SOS marker
+segments come from one writer each (``_dht_segments``,
+``_dri_segment``, ``_sos_segment``).  Each codec keeps only its own
+per-block entropy body.
+
 Tables and algorithm structure follow the published standard (ITU-T
 T.81 Annex K); no reference-repo counterpart exists (the reference is
 a coordinate-transform library).
@@ -144,6 +153,9 @@ def _build_codes(bits, vals):
 
 _ENC_DC = (_build_codes(*_DC_LUM), _build_codes(*_DC_CHR))
 _ENC_AC = (_build_codes(*_AC_LUM), _build_codes(*_AC_CHR))
+# the DCT encoders' tables: (class, id, table), Y -> 0, chroma -> 1
+_ANNEX_K_DHT = ((0, 0, _DC_LUM), (0, 1, _DC_CHR),
+                (1, 0, _AC_LUM), (1, 1, _AC_CHR))
 
 
 def _dct_mat() -> np.ndarray:
@@ -297,6 +309,108 @@ def _downsample_box(plane: np.ndarray, fh: int, fv: int) -> np.ndarray:
     return p.reshape(H // fv, fv, W // fh, fh).mean(axis=(1, 3))
 
 
+def _mcu_grid(samp, h: int, w: int):
+    """(hmax, vmax, mcux, mcuy) of an h x w frame whose components
+    sample at ``samp`` = [(hi, vi), ...]: an MCU covers 8*hmax x 8*vmax
+    pixels (T.81 A.2.4)."""
+    hmax = max(hi for hi, _ in samp)
+    vmax = max(vi for _, vi in samp)
+    return hmax, vmax, -(-w // (8 * hmax)), -(-h // (8 * vmax))
+
+
+def _comp_true_blocks(h, w, hi, vi, hmax, vmax):
+    """A component's TRUE block grid (ceil of the scaled sample dims),
+    not the MCU-padded one."""
+    hc = -(-h * vi // vmax)
+    wc = -(-w * hi // hmax)
+    return -(-hc // 8), -(-wc // 8)
+
+
+def _scan_mcus(scomps, mcux, mcuy, h, w, hmax, vmax, ri=0):
+    """The block order of one scan (T.81 Annex A.2), one MCU at a time.
+
+    ``scomps`` lists the scan's components in scan order as (c, hi,
+    vi); ``c`` is whatever the caller indexes its block arrays with.
+    A component's blocks are numbered row-major over its MCU-padded
+    grid (``mcux * hi`` blocks per line).  Yields ``(rst, blocks)``
+    per MCU: ``blocks`` holds the MCU's (c, block index) pairs in
+    coding order; ``rst`` is the m of the RSTm marker that precedes
+    the MCU (every ``ri`` MCUs, m counting 0..7 from each scan start),
+    else -1.
+
+    An interleaved scan (A.2.3) has one MCU per 8*hmax x 8*vmax pixel
+    cell, holding each component's vi x hi blocks.  A one-component
+    scan (A.2.2) has one block per MCU over the component's true block
+    grid, which can be smaller than its MCU-padded one."""
+    if len(scomps) == 1:
+        ((c, hi, vi),) = scomps
+        nby, nbx = _comp_true_blocks(h, w, hi, vi, hmax, vmax)
+        units = ((c, 1, 1, mcux * hi),)
+    else:
+        nby, nbx = mcuy, mcux
+        units = tuple((c, hi, vi, mcux * hi) for c, hi, vi in scomps)
+    m = 0
+    for my in range(nby):
+        for mx in range(nbx):
+            rst = (m // ri - 1) & 7 if ri > 0 and m and m % ri == 0 else -1
+            yield rst, [(c, (my * vi + by) * bpl + (mx * hi + bx))
+                        for c, hi, vi, bpl in units
+                        for by in range(vi) for bx in range(hi)]
+            m += 1
+
+
+def _parse_sos(seg: bytes, comps):
+    """SOS header (T.81 B.2.3) -> (sel, Ss, Se, Ah, Al), where ``sel``
+    lists the scan's components as (index into ``comps``, Td, Ta).
+    Every frame type parses its scans here, so a malformed header is a
+    ``ValueError`` for all of them."""
+    ns = seg[0]
+    if ns == 0 or len(seg) < 4 + 2 * ns:
+        raise ValueError(f"bad SOS segment: {ns} components in "
+                         f"{len(seg)} bytes")
+    ids = [c["id"] for c in comps]
+    sel = []
+    for i in range(ns):
+        cid, tabs = seg[1 + 2 * i], seg[2 + 2 * i]
+        if cid not in ids:
+            raise ValueError(f"SOS names unknown component {cid}")
+        sel.append((ids.index(cid), tabs >> 4, tabs & 15))
+    ss, se, ahal = seg[1 + 2 * ns:4 + 2 * ns]
+    return sel, ss, se, ahal >> 4, ahal & 15
+
+
+def _dht_segments(tables) -> bytes:
+    """One DHT segment (B.2.4.2) per (class, id, (BITS, HUFFVAL))."""
+    out = bytearray()
+    for cls, tid, (bits, vals) in tables:
+        out += b"\xff\xc4" + struct.pack(">HB", 19 + len(vals),
+                                         (cls << 4) | tid)
+        out += bytes(bits) + bytes(vals)
+    return bytes(out)
+
+
+def _dri_segment(ri: int) -> bytes:
+    """DRI (B.2.4.4) for a restart every ``ri`` MCUs; none if ri <= 0."""
+    return b"\xff\xdd" + struct.pack(">HH", 4, ri) if ri > 0 else b""
+
+
+def _sos_segment(sel, ss: int, se: int, ah: int, al: int) -> bytes:
+    """SOS header (B.2.3); ``sel`` lists (component id, Td, Ta)."""
+    out = bytearray(b"\xff\xda")
+    out += struct.pack(">HB", 6 + 2 * len(sel), len(sel))
+    for cid, td, ta in sel:
+        out += struct.pack(">BB", cid, (td << 4) | ta)
+    out += struct.pack(">BBB", ss, se, (ah << 4) | al)
+    return bytes(out)
+
+
+def _dct_scan(comps, samp):
+    """The DCT encoders' scan of components ``comps`` (0 = Y): its SOS
+    selectors (Y -> tables 0, chroma -> 1) and its walker components."""
+    return ([(c + 1, min(c, 1), min(c, 1)) for c in comps],
+            [(c, *samp[c]) for c in comps])
+
+
 def _quantized_coeffs(rgb: np.ndarray, quality: int, subsampling: str):
     """Shared coefficient front end for ALL four DCT encoders
     (baseline/progressive x huffman/arithmetic): color transform,
@@ -305,18 +419,17 @@ def _quantized_coeffs(rgb: np.ndarray, quality: int, subsampling: str):
     pixels) depends on every encoder quantizing through this one
     function.  Returns (comp_zz, qt, samp, hmax, vmax, mcux, mcuy,
     h, w)."""
-    assert rgb.ndim == 3 and rgb.shape[2] == 3 and rgb.dtype == np.uint8
+    if not (rgb.ndim == 3 and rgb.shape[2] == 3 and rgb.dtype == np.uint8):
+        raise ValueError(f"expected a uint8 HxWx3 RGB array, got shape "
+                         f"{rgb.shape} dtype {rgb.dtype}")
     if subsampling not in _SUBSAMPLING:
         raise ValueError(f"unknown subsampling {subsampling!r}; "
                          f"one of {sorted(_SUBSAMPLING)}")
     samp = _SUBSAMPLING[subsampling]
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
     h, w = rgb.shape[:2]
+    hmax, vmax, mcux, mcuy = _mcu_grid(samp, h, w)
     qt = (_quality_scale(_Q_LUM, quality), _quality_scale(_Q_CHR, quality))
     ycc = _rgb_to_ycbcr(rgb.astype(np.float64))
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
     comp_zz = []
     for c, (hi, vi) in enumerate(samp):
         plane = _downsample_box(ycc[..., c], hmax // hi, vmax // vi)
@@ -367,45 +480,23 @@ def encode_jpeg(rgb: np.ndarray, quality: int = 90,
     error-resilience feature most camera/web JPEGs carry."""
     comp_zz, qt, samp, hmax, vmax, mcux, mcuy, h, w = \
         _quantized_coeffs(rgb, quality, subsampling)
+    ri = int(restart_interval)
+    sel, scomps = _dct_scan((0, 1, 2), samp)
     out = bytearray(_jfif_dqt_headers(qt))
     out += _sof_segment(0xC0, h, w, samp)  # SOF0: baseline sequential
-    # DHT x4
-    for cls, tid, (bits, vals) in ((0, 0, _DC_LUM), (0, 1, _DC_CHR),
-                                   (1, 0, _AC_LUM), (1, 1, _AC_CHR)):
-        out += b"\xff\xc4" + struct.pack(">HB", 19 + len(vals),
-                                         (cls << 4) | tid)
-        out += bytes(bits) + bytes(vals)
-    ri = int(restart_interval)
-    if ri > 0:  # DRI
-        out += b"\xff\xdd" + struct.pack(">HH", 4, ri)
-    # SOS
-    out += b"\xff\xda" + struct.pack(">HB", 12, 3)
-    for cid, t in ((1, 0x00), (2, 0x11), (3, 0x11)):
-        out += struct.pack(">BB", cid, t)
-    out += b"\x00\x3f\x00"
-
-    # interleaved scan: per MCU, each component contributes its
-    # vi x hi raster of blocks (T.81 A.2.3 interleaved order)
+    out += _dht_segments(_ANNEX_K_DHT)
+    out += _dri_segment(ri)
+    out += _sos_segment(sel, 0, 63, 0, 0)
     bw = _BitWriter()
     preds = [0, 0, 0]
-    n_mcu = mcuy * mcux
-    done = 0
-    rst = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            for c, (hi, vi) in enumerate(samp):
-                t = 0 if c == 0 else 1
-                bpl = mcux * hi  # blocks per line in this component
-                for by in range(vi):
-                    for bx in range(hi):
-                        b = (my * vi + by) * bpl + (mx * hi + bx)
-                        preds[c] = _encode_block(bw, comp_zz[c][b], preds[c],
-                                                 _ENC_DC[t], _ENC_AC[t])
-            done += 1
-            if ri and done % ri == 0 and done < n_mcu:
-                bw.restart(rst)
-                rst = (rst + 1) & 7
-                preds = [0, 0, 0]
+    for rst, blocks in _scan_mcus(scomps, mcux, mcuy, h, w, hmax, vmax, ri):
+        if rst >= 0:
+            bw.restart(rst)
+            preds = [0, 0, 0]
+        for c, b in blocks:
+            t = min(c, 1)
+            preds[c] = _encode_block(bw, comp_zz[c][b], preds[c],
+                                     _ENC_DC[t], _ENC_AC[t])
     bw.flush()
     out += bw.out
     out += b"\xff\xd9"  # EOI
@@ -430,45 +521,6 @@ _PROG_SCRIPT = (
     ((1,), 1, 63, 1, 0),       # Cb AC refine
     ((0,), 1, 63, 1, 0),       # Y AC refine
 )
-
-
-def _enc_dc_scan(w: _BitWriter, comp_zz, samp, mcux, mcuy, comps,
-                 ah: int, al: int, ri: int = 0):
-    """Interleaved DC scan: first pass codes diffs of (dc >> Al)
-    (arithmetic shift — two's complement keeps v == (v>>1<<1)|(v&1)),
-    refinement emits the raw Al bit per block, no Huffman.  ``ri`` > 0
-    emits RSTm every ri MCUs (predictors reset, counter per scan)."""
-    preds = {c: 0 for c in comps}
-    n_mcu = mcuy * mcux
-    done = 0
-    rst = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if ri and done and done % ri == 0:
-                w.restart(rst)
-                rst = (rst + 1) & 7
-                preds = {c: 0 for c in comps}
-            done += 1
-            for c in comps:
-                hi, vi = samp[c]
-                t = 0 if c == 0 else 1
-                bpl = mcux * hi
-                for by in range(vi):
-                    for bx in range(hi):
-                        b = (my * vi + by) * bpl + (mx * hi + bx)
-                        dc = int(comp_zz[c][b][0])
-                        if ah == 0:
-                            v = dc >> al
-                            diff = v - preds[c]
-                            preds[c] = v
-                            s = _category(diff)
-                            code, ln = _ENC_DC[t][s]
-                            w.put(code, ln)
-                            if s:
-                                w.put(diff if diff >= 0
-                                      else diff + (1 << s) - 1, s)
-                        else:
-                            w.put((dc >> al) & 1, 1)
 
 
 def _enc_ac_first(w: _BitWriter, zz, ss: int, se: int, al: int, ac_codes):
@@ -536,14 +588,6 @@ def _enc_ac_refine(w: _BitWriter, zz, ss: int, se: int, al: int, ac_codes):
             w.put(bit, 1)
 
 
-def _comp_true_blocks(h, w, hi, vi, hmax, vmax):
-    """Non-interleaved scans walk the component's TRUE block grid
-    (ceil of the scaled sample dims), not the MCU-padded one."""
-    hc = -(-h * vi // vmax)
-    wc = -(-w * hi // hmax)
-    return -(-hc // 8), -(-wc // 8)
-
-
 def encode_jpeg_progressive(rgb: np.ndarray, quality: int = 90,
                             subsampling: str = "4:4:4",
                             restart_interval: int = 0) -> bytes:
@@ -554,44 +598,40 @@ def encode_jpeg_progressive(rgb: np.ndarray, quality: int = 90,
     both must give byte-identical pixels (pinned in tests)."""
     comp_zz, qt, samp, hmax, vmax, mcux, mcuy, h, w = \
         _quantized_coeffs(rgb, quality, subsampling)
+    ri = int(restart_interval)
     out = bytearray(_jfif_dqt_headers(qt))
     out += _sof_segment(0xC2, h, w, samp)  # SOF2: progressive, Huffman
-    for cls, tid, (bits, vals) in ((0, 0, _DC_LUM), (0, 1, _DC_CHR),
-                                   (1, 0, _AC_LUM), (1, 1, _AC_CHR)):
-        out += b"\xff\xc4" + struct.pack(">HB", 19 + len(vals),
-                                         (cls << 4) | tid)
-        out += bytes(bits) + bytes(vals)
-    ri = int(restart_interval)
-    if ri > 0:  # DRI (restart cadence applies per scan, counter resets)
-        out += b"\xff\xdd" + struct.pack(">HH", 4, ri)
+    out += _dht_segments(_ANNEX_K_DHT)
+    out += _dri_segment(ri)  # restart cadence applies per scan
 
     for comps, ss, se, ah, al in _PROG_SCRIPT:
-        out += b"\xff\xda" + struct.pack(">HB", 6 + 2 * len(comps),
-                                         len(comps))
-        for c in comps:
-            tq = 0 if c == 0 else 1
-            out += struct.pack(">BB", c + 1, (tq << 4) | tq)
-        out += struct.pack(">BBB", ss, se, (ah << 4) | al)
+        sel, scomps = _dct_scan(comps, samp)
+        out += _sos_segment(sel, ss, se, ah, al)
+        enc = _enc_ac_first if ah == 0 else _enc_ac_refine
         bw = _BitWriter()
-        if ss == 0:
-            _enc_dc_scan(bw, comp_zz, samp, mcux, mcuy, comps, ah, al,
-                         ri)
-        else:
-            (c,) = comps
-            hi, vi = samp[c]
-            hb, wb = _comp_true_blocks(h, w, hi, vi, hmax, vmax)
-            act = _ENC_AC[0 if c == 0 else 1]
-            enc = _enc_ac_first if ah == 0 else _enc_ac_refine
-            done = 0
-            rst = 0
-            for by in range(hb):
-                for bx in range(wb):
-                    if ri and done and done % ri == 0:
-                        bw.restart(rst)
-                        rst = (rst + 1) & 7
-                    done += 1
-                    enc(bw, comp_zz[c][by * mcux * hi + bx], ss, se, al,
-                        act)
+        preds = [0, 0, 0]
+        for rst, blocks in _scan_mcus(scomps, mcux, mcuy, h, w, hmax, vmax,
+                                      ri):
+            if rst >= 0:
+                bw.restart(rst)
+                preds = [0, 0, 0]
+            for c, b in blocks:
+                zz = comp_zz[c][b]
+                if ss:
+                    enc(bw, zz, ss, se, al, _ENC_AC[min(c, 1)])
+                elif ah == 0:
+                    # DC first: diffs of (dc >> Al), an arithmetic shift
+                    # (two's complement keeps v == (v>>1<<1)|(v&1))
+                    v = int(zz[0]) >> al
+                    diff = v - preds[c]
+                    preds[c] = v
+                    s = _category(diff)
+                    code, ln = _ENC_DC[min(c, 1)][s]
+                    bw.put(code, ln)
+                    if s:
+                        bw.put(diff if diff >= 0 else diff + (1 << s) - 1, s)
+                else:  # DC refine: the raw Al bit, no Huffman
+                    bw.put((int(zz[0]) >> al) & 1, 1)
         bw.flush()
         out += bw.out
     out += b"\xff\xd9"
@@ -881,91 +921,36 @@ def _run_progressive_scan(data: bytes, pos: int, seg: bytes, comps,
     """Decode one progressive scan; returns the position of the next
     marker after the scan's entropy segment."""
     h, w, _nc = frame
-    ns = seg[0]
-    sel = []
-    for i in range(ns):
-        cid, tabs = seg[1 + 2 * i], seg[2 + 2 * i]
-        ci = next(j for j, c in enumerate(comps) if c["id"] == cid)
-        sel.append((ci, tabs >> 4, tabs & 15))
-    ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-    ahal = seg[3 + 2 * ns]
-    ah, al = ahal >> 4, ahal & 15
+    sel, ss, se, ah, al = _parse_sos(seg, comps)
     br = _BitReader(data, pos)
     state = {"eobrun": 0}
-    if ss == 0:
-        if se != 0:
-            raise ValueError("progressive DC scan with Se != 0")
-        if ah == 0:
-            for ci, _, _ in sel:
+    if ss == 0 and se != 0:
+        raise ValueError("progressive DC scan with Se != 0")
+    if ss and len(sel) != 1:
+        raise ValueError("interleaved AC scan is illegal (T.81)")
+    # a DC first scan codes predictor diffs, from 0 at each (re)start
+    dcts = {ci: huff[(0, td)] for ci, td, _ in sel} if ss == ah == 0 else {}
+    act = huff[(1, sel[0][2])] if ss else None
+    dec = _dec_ac_first if ah == 0 else _dec_ac_refine
+    for ci in dcts:
+        dc_preds[ci] = 0
+    scomps = [(ci, comps[ci]["hi"], comps[ci]["vi"]) for ci, _, _ in sel]
+    for rst, blocks in _scan_mcus(scomps, mcux, mcuy, h, w, hmax, vmax, dri):
+        if rst >= 0:
+            br.sync_restart(rst)
+            state["eobrun"] = 0
+            for ci in dcts:
                 dc_preds[ci] = 0
-        if ns > 1:  # interleaved DC scan: standard MCU walk
-            done = 0
-            rst = 0
-            for my in range(mcuy):
-                for mx in range(mcux):
-                    if dri and done and done % dri == 0:
-                        br.sync_restart(rst)
-                        rst = (rst + 1) & 7
-                        if ah == 0:
-                            for ci_, _, _ in sel:
-                                dc_preds[ci_] = 0
-                    done += 1
-                    for ci, td, _ta in sel:
-                        c = comps[ci]
-                        hi, vi = c["hi"], c["vi"]
-                        bpl = mcux * hi
-                        for by in range(vi):
-                            for bx in range(hi):
-                                b = (my * vi + by) * bpl + (mx * hi + bx)
-                                zz = coeffs[ci][b]
-                                if ah == 0:
-                                    _s, d = _read_sym_val(br, huff[(0, td)])
-                                    dc_preds[ci] += d
-                                    zz[0] = dc_preds[ci] << al
-                                elif br.bit():
-                                    zz[0] = int(zz[0]) | (1 << al)
-        else:
-            ci, td, _ta = sel[0]
-            c = comps[ci]
-            hi, vi = c["hi"], c["vi"]
-            hb, wb = _comp_true_blocks(h, w, hi, vi, hmax, vmax)
-            done = 0
-            rst = 0
-            for by in range(hb):
-                for bx in range(wb):
-                    if dri and done and done % dri == 0:
-                        br.sync_restart(rst)
-                        rst = (rst + 1) & 7
-                        if ah == 0:
-                            dc_preds[ci] = 0
-                    done += 1
-                    zz = coeffs[ci][by * mcux * hi + bx]
-                    if ah == 0:
-                        _s, d = _read_sym_val(br, huff[(0, td)])
-                        dc_preds[ci] += d
-                        zz[0] = dc_preds[ci] << al
-                    elif br.bit():
-                        zz[0] = int(zz[0]) | (1 << al)
-    else:
-        if ns != 1:
-            raise ValueError("interleaved AC scan is illegal (T.81)")
-        ci, _td, ta = sel[0]
-        c = comps[ci]
-        hi, vi = c["hi"], c["vi"]
-        hb, wb = _comp_true_blocks(h, w, hi, vi, hmax, vmax)
-        act = huff[(1, ta)]
-        dec = _dec_ac_first if ah == 0 else _dec_ac_refine
-        done = 0
-        rst = 0
-        for by in range(hb):
-            for bx in range(wb):
-                if dri and done and done % dri == 0:
-                    br.sync_restart(rst)
-                    rst = (rst + 1) & 7
-                    state["eobrun"] = 0
-                done += 1
-                dec(br, coeffs[ci][by * mcux * hi + bx], ss, se, al,
-                    act, state)
+        for ci, b in blocks:
+            zz = coeffs[ci][b]
+            if ss:
+                dec(br, zz, ss, se, al, act, state)
+            elif ah == 0:
+                _s, d = _read_sym_val(br, dcts[ci])
+                dc_preds[ci] += d
+                zz[0] = dc_preds[ci] << al
+            elif br.bit():
+                zz[0] = int(zz[0]) | (1 << al)
     # resync: skip residual padding/stuffing up to the next marker
     p = br.pos
     while p + 1 < len(data) and not (data[p] == 0xFF
@@ -1073,11 +1058,9 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             if progressive:
                 if prog_coeffs is None:
                     h, w, nc = frame
-                    hmax = max(c["hi"] for c in comps)
-                    vmax = max(c["vi"] for c in comps)
-                    mcux = -(-w // (8 * hmax))
-                    mcuy = -(-h // (8 * vmax))
-                    prog_geom = (hmax, vmax, mcux, mcuy)
+                    prog_geom = _mcu_grid(
+                        [(c["hi"], c["vi"]) for c in comps], h, w)
+                    _hmax, _vmax, mcux, mcuy = prog_geom
                     prog_coeffs = [
                         np.zeros((mcuy * c["vi"] * mcux * c["hi"], 64),
                                  dtype=np.int32) for c in comps]
@@ -1094,22 +1077,14 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                         data, pos + seglen, seg, comps, prog_coeffs,
                         huff, dc_preds, frame, *prog_geom, dri=dri)
                 continue
-            ns = seg[0]
-            for i in range(ns):
-                cid, tabs = seg[1 + 2 * i], seg[2 + 2 * i]
-                comp = next((c for c in comps if c["id"] == cid), None)
-                if comp is None:
-                    raise ValueError(f"SOS names unknown component {cid}")
-                scan_order.append({
-                    **comp, "dc": tabs >> 4, "ac": tabs & 15})
+            scan_order = [{**comps[ci], "dc": td, "ac": ta}
+                          for ci, td, ta in _parse_sos(seg, comps)[0]]
             if arithmetic:
                 from .jpeg_arith import decode_arith_scan
 
                 h, w, nc = frame
-                hmax = max(c["hi"] for c in comps)
-                vmax = max(c["vi"] for c in comps)
-                mcux = -(-w // (8 * hmax))
-                mcuy = -(-h // (8 * vmax))
+                _hmax, _vmax, mcux, mcuy = _mcu_grid(
+                    [(c["hi"], c["vi"]) for c in comps], h, w)
                 arith_coeffs = [
                     np.zeros((mcuy * sc["vi"] * mcux * sc["hi"], 64),
                              dtype=np.int32) for sc in scan_order]
@@ -1137,15 +1112,13 @@ def decode_jpeg(data: bytes) -> np.ndarray:
         raise ValueError("JPEG without SOF/SOS")
 
     h, w, nc = frame
-    hmax = max(sc["hi"] for sc in scan_order)
-    vmax = max(sc["vi"] for sc in scan_order)
+    hmax, vmax, mcux, mcuy = _mcu_grid(
+        [(sc["hi"], sc["vi"]) for sc in scan_order], h, w)
     for sc in scan_order:
         if hmax % sc["hi"] or vmax % sc["vi"]:
             raise NotImplementedError(
                 f"non-integer sampling ratio {sc['hi']}x{sc['vi']} "
                 f"vs max {hmax}x{vmax}")
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
     if progressive:
         coeffs = prog_coeffs
     elif arithmetic:
@@ -1155,45 +1128,34 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                            dtype=np.float64) for sc in scan_order]
         br = _BitReader(data, pos)
         preds = [0] * nc
-        n_mcu = mcuy * mcux
-        done = 0
-        rst = 0
-        # interleaved MCU walk mirroring the encoder (T.81 A.2.3): each
-        # component contributes its vi x hi raster of blocks per MCU
-        for my in range(mcuy):
-            for mx in range(mcux):
-                if dri and done and done % dri == 0:
-                    br.sync_restart(rst)
-                    rst = (rst + 1) & 7
-                    preds = [0] * nc
-                done += 1
-                for ci, sc in enumerate(scan_order):
-                    dct = huff[(0, sc["dc"])]
-                    act = huff[(1, sc["ac"])]
-                    hi, vi = sc["hi"], sc["vi"]
-                    bpl = mcux * hi
-                    for by in range(vi):
-                        for bx in range(hi):
-                            b = (my * vi + by) * bpl + (mx * hi + bx)
-                            _s, diff = _read_sym_val(br, dct)
-                            preds[ci] += diff
-                            zz = coeffs[ci][b]
-                            zz[0] = preds[ci]
-                            k = 1
-                            while k < 64:
-                                rs, v = _read_sym_val(br, act)
-                                r, s = rs >> 4, rs & 15
-                                if s == 0:
-                                    if r == 15:
-                                        k += 16  # ZRL
-                                        continue
-                                    break  # EOB
-                                k += r
-                                if k > 63:
-                                    raise ValueError(
-                                        "AC coefficient index overflow")
-                                zz[k] = v
-                                k += 1
+        dcts = [huff[(0, sc["dc"])] for sc in scan_order]
+        acts = [huff[(1, sc["ac"])] for sc in scan_order]
+        scomps = [(ci, sc["hi"], sc["vi"]) for ci, sc in enumerate(scan_order)]
+        for rst, blocks in _scan_mcus(scomps, mcux, mcuy, h, w, hmax, vmax,
+                                      dri):
+            if rst >= 0:
+                br.sync_restart(rst)
+                preds = [0] * nc
+            for ci, b in blocks:
+                _s, diff = _read_sym_val(br, dcts[ci])
+                preds[ci] += diff
+                zz = coeffs[ci][b]
+                zz[0] = preds[ci]
+                act = acts[ci]
+                k = 1
+                while k < 64:
+                    rs, v = _read_sym_val(br, act)
+                    r, s = rs >> 4, rs & 15
+                    if s == 0:
+                        if r == 15:
+                            k += 16  # ZRL
+                            continue
+                        break  # EOB
+                    k += r
+                    if k > 63:
+                        raise ValueError("AC coefficient index overflow")
+                    zz[k] = v
+                    k += 1
 
     planes = []
     for ci, sc in enumerate(scan_order):

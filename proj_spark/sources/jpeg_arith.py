@@ -38,6 +38,14 @@ encoder through the QM coder (Annex G.1.3 decision models), and
 matrix baseline/progressive x huffman/arithmetic, all both ways, every
 combination decoding byte-identical pixels.
 
+Only the entropy layer lives here.  Block order and restart points
+come from ``jpeg._scan_mcus`` (T.81 Annex A.2), scan headers are
+parsed by ``jpeg._parse_sos`` and the DRI/SOS segments written by the
+same writers as the Huffman frames, so the arithmetic and Huffman
+paths walk every scan identically; the DAC segment is
+``_DAC_SEGMENT``.  Restart markers in progressive arithmetic scans are
+neither written nor read.
+
 No reference-repo counterpart exists (georust/proj is a coordinate
 library); the payload axis comes from the graft cell.
 """
@@ -49,15 +57,15 @@ import struct
 import numpy as np
 
 from .jpeg import (
-    _DCT8,
-    _Q_CHR,
-    _Q_LUM,
-    _SUBSAMPLING,
-    _ZIGZAG,
-    _downsample_box,
-    _quality_scale,
-    _rgb_to_ycbcr,
-    _to_blocks,
+    _PROG_SCRIPT,
+    _dct_scan,
+    _dri_segment,
+    _jfif_dqt_headers,
+    _parse_sos,
+    _quantized_coeffs,
+    _scan_mcus,
+    _sof_segment,
+    _sos_segment,
 )
 
 __all__ = ["encode_jpeg_arithmetic", "encode_jpeg_arithmetic_progressive",
@@ -116,6 +124,12 @@ _TAB = (
 _DC_BINS = 64
 _AC_BINS = 256
 _DEFAULT_L, _DEFAULT_U, _DEFAULT_KX = 0, 1, 5
+# DAC (B.2.4.3) for tables 0 and 1 with the T.81 default conditioning:
+# DC tables carry (U<<4)|L, AC tables carry Kx
+_DAC_SEGMENT = b"\xff\xcc" + struct.pack(
+    ">HBBBBBBBB", 10, 0x00, (_DEFAULT_U << 4) | _DEFAULT_L,
+    0x01, (_DEFAULT_U << 4) | _DEFAULT_L, 0x10, _DEFAULT_KX,
+    0x11, _DEFAULT_KX)
 
 
 class _ArithEncoder:
@@ -513,55 +527,32 @@ def encode_jpeg_arithmetic(rgb: np.ndarray, quality: int = 90,
     byte-identical to decoding the Huffman stream at the same
     quality/subsampling.  Y uses conditioning tables 0, chroma
     tables 1 (both carrying the T.81 defaults L=0, U=1, Kx=5)."""
-    from .jpeg import _jfif_dqt_headers, _quantized_coeffs, _sof_segment
-
     comp_zz, qt, samp, hmax, vmax, mcux, mcuy, h, w = \
         _quantized_coeffs(rgb, quality, subsampling)
+    ri = int(restart_interval)
+    # SOS: Td/Ta name the arithmetic conditioning tables
+    sel, scomps = _dct_scan((0, 1, 2), samp)
     out = bytearray(_jfif_dqt_headers(qt))
     # SOF9: extended sequential DCT, arithmetic coding (B.2.2)
     out += _sof_segment(0xC9, h, w, samp)
-    # DAC (B.2.4.3): DC tables carry (U<<4)|L, AC tables carry Kx
-    dac = b""
-    for tc, tb, cs in ((0, 0, (_DEFAULT_U << 4) | _DEFAULT_L),
-                       (0, 1, (_DEFAULT_U << 4) | _DEFAULT_L),
-                       (1, 0, _DEFAULT_KX), (1, 1, _DEFAULT_KX)):
-        dac += struct.pack(">BB", (tc << 4) | tb, cs)
-    out += b"\xff\xcc" + struct.pack(">H", 2 + len(dac)) + dac
-    ri = int(restart_interval)
-    if ri > 0:  # DRI
-        out += b"\xff\xdd" + struct.pack(">HH", 4, ri)
-    # SOS: Td/Ta name the arithmetic conditioning tables
-    out += b"\xff\xda" + struct.pack(">HB", 12, 3)
-    for cid, t in ((1, 0x00), (2, 0x11), (3, 0x11)):
-        out += struct.pack(">BB", cid, t)
-    out += b"\x00\x3f\x00"
-
+    out += _DAC_SEGMENT
+    out += _dri_segment(ri)
+    out += _sos_segment(sel, 0, 63, 0, 0)
     enc = _ArithEncoder()
     stats = _Stats(2, 2, 3)
     cond = (_DEFAULT_L, _DEFAULT_U)
-    n_mcu = mcuy * mcux
-    done = 0
-    rst = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            for c, (hi, vi) in enumerate(samp):
-                t = 0 if c == 0 else 1
-                bpl = mcux * hi
-                for by in range(vi):
-                    for bx in range(hi):
-                        b = (my * vi + by) * bpl + (mx * hi + bx)
-                        zz = comp_zz[c][b]
-                        _enc_dc(enc, stats, c, t, int(zz[0]), cond)
-                        _enc_ac(enc, stats, t, zz, _DEFAULT_KX)
-            done += 1
-            if ri and done % ri == 0 and done < n_mcu:
-                # restart: flush (byte-aligns), RSTm, full re-init
-                enc.flush()
-                out += enc.out
-                out += bytes([0xFF, 0xD0 + (rst & 7)])
-                rst = (rst + 1) & 7
-                enc = _ArithEncoder()
-                stats.reset()
+    for rst, blocks in _scan_mcus(scomps, mcux, mcuy, h, w, hmax, vmax, ri):
+        if rst >= 0:
+            # restart: flush (byte-aligns), RSTm, full re-init
+            enc.flush()
+            out += enc.out
+            out += bytes([0xFF, 0xD0 + rst])
+            enc = _ArithEncoder()
+            stats.reset()
+        for c, b in blocks:
+            zz = comp_zz[c][b]
+            _enc_dc(enc, stats, c, min(c, 1), int(zz[0]), cond)
+            _enc_ac(enc, stats, min(c, 1), zz, _DEFAULT_KX)
     enc.flush()
     out += enc.out
     out += b"\xff\xd9"  # EOI
@@ -574,9 +565,12 @@ def encode_jpeg_arithmetic(rgb: np.ndarray, quality: int = 90,
 def decode_arith_scan(data: bytes, pos: int, scan_order, coeffs,
                       mcux: int, mcuy: int, dri: int,
                       dc_cond, ac_cond) -> int:
-    """Decode one interleaved sequential arithmetic scan into
-    ``coeffs`` (zigzag int32 per component); returns the position of
-    the next marker.  ``dc_cond[t] = (L, U)``, ``ac_cond[t] = Kx``."""
+    """Decode one sequential arithmetic scan into ``coeffs`` (zigzag
+    int32 per component); returns the position of the next marker.
+    ``dc_cond[t] = (L, U)``, ``ac_cond[t] = Kx``.  The arguments carry
+    the MCU grid, not the frame size, so a one-component scan walks the
+    component's whole MCU-padded block grid in raster order -- its true
+    grid whenever it is the frame's only component."""
     ncomp = len(scan_order)
     for sc in scan_order:
         # T.81 B.2.3: arithmetic conditioning table ids are 0..3
@@ -587,35 +581,27 @@ def decode_arith_scan(data: bytes, pos: int, scan_order, coeffs,
     n_tables = 1 + max(max(sc["dc"], sc["ac"]) for sc in scan_order)
     stats = _Stats(n_tables, n_tables, ncomp)
     dec = _ArithDecoder(data, pos)
-    n_mcu = mcuy * mcux
-    done = 0
-    rst = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if dri and done and done % dri == 0:
-                p = dec.marker_pos if dec.marker_pos >= 0 else dec.pos
-                p = _find_marker(data, p)
-                if data[p + 1] != 0xD0 + (rst & 7):
-                    raise ValueError(
-                        f"expected RST{rst & 7} at {p}, "
-                        f"got {data[p + 1]:#x}")
-                rst = (rst + 1) & 7
-                stats.reset()
-                dec = _ArithDecoder(data, p + 2)
-            done += 1
-            for ci, sc in enumerate(scan_order):
-                tdc, tac = sc["dc"], sc["ac"]
-                hi, vi = sc["hi"], sc["vi"]
-                bpl = mcux * hi
-                for by in range(vi):
-                    for bx in range(hi):
-                        b = (my * vi + by) * bpl + (mx * hi + bx)
-                        zz = coeffs[ci][b]
-                        zz[0] = _dec_dc(dec, stats, ci, tdc,
-                                        dc_cond.get(tdc,
-                                                    (_DEFAULT_L, _DEFAULT_U)))
-                        _dec_ac(dec, stats, tac, zz,
-                                ac_cond.get(tac, _DEFAULT_KX))
+    conds = [(sc["dc"], dc_cond.get(sc["dc"], (_DEFAULT_L, _DEFAULT_U)),
+              sc["ac"], ac_cond.get(sc["ac"], _DEFAULT_KX))
+             for sc in scan_order]
+    scomps = [(ci, sc["hi"], sc["vi"]) for ci, sc in enumerate(scan_order)]
+    # an 8*mcux x 8*mcuy frame at unit sampling makes a one-component
+    # scan's true block grid its MCU-padded one
+    for rst, blocks in _scan_mcus(scomps, mcux, mcuy, 8 * mcuy, 8 * mcux,
+                                  1, 1, dri):
+        if rst >= 0:
+            p = dec.marker_pos if dec.marker_pos >= 0 else dec.pos
+            p = _find_marker(data, p)
+            if data[p + 1] != 0xD0 + rst:
+                raise ValueError(
+                    f"expected RST{rst} at {p}, got {data[p + 1]:#x}")
+            stats.reset()
+            dec = _ArithDecoder(data, p + 2)
+        for ci, b in blocks:
+            tdc, dcc, tac, kx = conds[ci]
+            zz = coeffs[ci][b]
+            zz[0] = _dec_dc(dec, stats, ci, tdc, dcc)
+            _dec_ac(dec, stats, tac, zz, kx)
     p = dec.marker_pos if dec.marker_pos >= 0 else dec.pos
     return _find_marker(data, p)
 
@@ -644,12 +630,6 @@ def _find_marker(data: bytes, pos: int) -> int:
 # band, AC refine = correction bits at st+2 / newly-nonzero at st+1).
 # Statistics areas and the coder reset at every scan start (F.1.4).
 # ---------------------------------------------------------------------------
-def _enc_dc_first_arith(enc, stats, ci, tbl, dc, al, cond):
-    """DC first scan: code diff of (dc >> Al), arithmetic shift (the
-    same point-transform convention as the Huffman progressive path)."""
-    _enc_dc(enc, stats, ci, tbl, int(dc) >> al, cond)
-
-
 def _enc_ac_first_arith(enc, stats, tbl, zz, ss, se, al, kx):
     """AC first scan over band [ss..se] with point transform
     |v| >> Al (sign-magnitude, T.81 G.1.3.2)."""
@@ -745,63 +725,33 @@ def encode_jpeg_arithmetic_progressive(rgb: np.ndarray, quality: int = 90,
     QM coder.  Coefficients are identical to every other encoder at
     the same quality/subsampling, so all four decodes (baseline /
     progressive x huffman / arithmetic) are byte-identical (pinned)."""
-    from .jpeg import (_PROG_SCRIPT, _comp_true_blocks, _jfif_dqt_headers,
-                       _quantized_coeffs, _sof_segment)
-
     comp_zz, qt, samp, hmax, vmax, mcux, mcuy, h, w = \
         _quantized_coeffs(rgb, quality, subsampling)
     out = bytearray(_jfif_dqt_headers(qt))
     # SOF10: progressive DCT, arithmetic coding (B.2.2)
     out += _sof_segment(0xCA, h, w, samp)
-    dac = b""
-    for tc, tb, cs in ((0, 0, (_DEFAULT_U << 4) | _DEFAULT_L),
-                       (0, 1, (_DEFAULT_U << 4) | _DEFAULT_L),
-                       (1, 0, _DEFAULT_KX), (1, 1, _DEFAULT_KX)):
-        dac += struct.pack(">BB", (tc << 4) | tb, cs)
-    out += b"\xff\xcc" + struct.pack(">H", 2 + len(dac)) + dac
-
+    out += _DAC_SEGMENT
     cond = (_DEFAULT_L, _DEFAULT_U)
     for comps, ss, se, ah, al in _PROG_SCRIPT:
-        out += b"\xff\xda" + struct.pack(">HB", 6 + 2 * len(comps),
-                                         len(comps))
-        for c in comps:
-            tq = 0 if c == 0 else 1
-            out += struct.pack(">BB", c + 1, (tq << 4) | tq)
-        out += struct.pack(">BBB", ss, se, (ah << 4) | al)
+        sel, scomps = _dct_scan(comps, samp)
+        out += _sos_segment(sel, ss, se, ah, al)
         enc = _ArithEncoder()
         stats = _Stats(2, 2, 3)
-        if ss == 0:
-            # interleaved DC scan (first or refine), standard MCU walk
-            for my in range(mcuy):
-                for mx in range(mcux):
-                    for c in comps:
-                        hi, vi = samp[c]
-                        t = 0 if c == 0 else 1
-                        bpl = mcux * hi
-                        for by in range(vi):
-                            for bx in range(hi):
-                                b = (my * vi + by) * bpl + (mx * hi + bx)
-                                dc = int(comp_zz[c][b][0])
-                                if ah == 0:
-                                    _enc_dc_first_arith(
-                                        enc, stats, c, t, dc, al, cond)
-                                else:
-                                    enc.encode(stats.fixed, 0,
-                                               (dc >> al) & 1)
-        else:
-            (c,) = comps
-            hi, vi = samp[c]
-            t = 0 if c == 0 else 1
-            hb, wb = _comp_true_blocks(h, w, hi, vi, hmax, vmax)
-            for by in range(hb):
-                for bx in range(wb):
-                    zz = comp_zz[c][by * mcux * hi + bx]
-                    if ah == 0:
-                        _enc_ac_first_arith(enc, stats, t, zz, ss, se,
-                                            al, _DEFAULT_KX)
-                    else:
-                        _enc_ac_refine_arith(enc, stats, t, zz, ss, se,
-                                             al)
+        for _rst, blocks in _scan_mcus(scomps, mcux, mcuy, h, w, hmax, vmax):
+            for c, b in blocks:
+                zz = comp_zz[c][b]
+                t = min(c, 1)
+                if ss and ah == 0:
+                    _enc_ac_first_arith(enc, stats, t, zz, ss, se, al,
+                                        _DEFAULT_KX)
+                elif ss:
+                    _enc_ac_refine_arith(enc, stats, t, zz, ss, se, al)
+                elif ah == 0:
+                    # DC first: diffs of (dc >> Al), the arithmetic shift
+                    # of the Huffman progressive path
+                    _enc_dc(enc, stats, c, t, int(zz[0]) >> al, cond)
+                else:
+                    enc.encode(stats.fixed, 0, (int(zz[0]) >> al) & 1)
         enc.flush()
         out += enc.out
     out += b"\xff\xd9"
@@ -820,18 +770,7 @@ def decode_arith_progressive_scan(data: bytes, pos: int, seg: bytes,
             "restart markers in progressive arithmetic scans are not "
             "supported")
     h, w, _nc = frame
-    ns = seg[0]
-    sel = []
-    for i in range(ns):
-        cid, tabs = seg[1 + 2 * i], seg[2 + 2 * i]
-        ci = next((j for j, c in enumerate(comps) if c["id"] == cid),
-                  None)
-        if ci is None:
-            raise ValueError(f"SOS names unknown component {cid}")
-        sel.append((ci, tabs >> 4, tabs & 15))
-    ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-    ahal = seg[3 + 2 * ns]
-    ah, al = ahal >> 4, ahal & 15
+    sel, ss, se, ah, al = _parse_sos(seg, comps)
     for _ci, td, ta in sel:
         tb = td if ss == 0 else ta
         if not 0 <= tb <= 3:
@@ -839,45 +778,25 @@ def decode_arith_progressive_scan(data: bytes, pos: int, seg: bytes,
     n_tables = 1 + max(max(td, ta) for _, td, ta in sel)
     stats = _Stats(n_tables, n_tables, len(comps))
     dec = _ArithDecoder(data, pos)
-    if ss == 0:
-        if se != 0:
-            raise ValueError("progressive DC scan with Se != 0")
-        for my in range(mcuy):
-            for mx in range(mcux):
-                for ci, td, _ta in sel:
-                    c = comps[ci]
-                    hi, vi = c["hi"], c["vi"]
-                    bpl = mcux * hi
-                    for by in range(vi):
-                        for bx in range(hi):
-                            b = (my * vi + by) * bpl + (mx * hi + bx)
-                            zz = coeffs[ci][b]
-                            if ah == 0:
-                                v = _dec_dc(dec, stats, ci, td,
-                                            dc_cond.get(
-                                                td, (_DEFAULT_L,
-                                                     _DEFAULT_U)))
-                                zz[0] = v << al
-                            elif dec.decode(stats.fixed, 0):
-                                zz[0] = int(zz[0]) | (1 << al)
-    else:
-        if ns != 1:
-            raise ValueError("interleaved AC scan is illegal (T.81)")
-        ci, _td, ta = sel[0]
-        c = comps[ci]
-        hi, vi = c["hi"], c["vi"]
-        from .jpeg import _comp_true_blocks
-
-        hb, wb = _comp_true_blocks(h, w, hi, vi, hmax, vmax)
-        kx = ac_cond.get(ta, _DEFAULT_KX)
-        for by in range(hb):
-            for bx in range(wb):
-                zz = coeffs[ci][by * mcux * hi + bx]
-                if ah == 0:
-                    _dec_ac_first_arith(dec, stats, ta, zz, ss, se, al,
-                                        kx)
-                else:
-                    _dec_ac_refine_arith(dec, stats, ta, zz, ss, se, al)
+    if ss == 0 and se != 0:
+        raise ValueError("progressive DC scan with Se != 0")
+    if ss and len(sel) != 1:
+        raise ValueError("interleaved AC scan is illegal (T.81)")
+    conds = {ci: (td, dc_cond.get(td, (_DEFAULT_L, _DEFAULT_U)),
+                  ta, ac_cond.get(ta, _DEFAULT_KX)) for ci, td, ta in sel}
+    scomps = [(ci, comps[ci]["hi"], comps[ci]["vi"]) for ci, _, _ in sel]
+    for _rst, blocks in _scan_mcus(scomps, mcux, mcuy, h, w, hmax, vmax):
+        for ci, b in blocks:
+            td, dcc, ta, kx = conds[ci]
+            zz = coeffs[ci][b]
+            if ss and ah == 0:
+                _dec_ac_first_arith(dec, stats, ta, zz, ss, se, al, kx)
+            elif ss:
+                _dec_ac_refine_arith(dec, stats, ta, zz, ss, se, al)
+            elif ah == 0:
+                zz[0] = _dec_dc(dec, stats, ci, td, dcc) << al
+            elif dec.decode(stats.fixed, 0):
+                zz[0] = int(zz[0]) | (1 << al)
     p = dec.marker_pos if dec.marker_pos >= 0 else dec.pos
     return _find_marker(data, p)
 

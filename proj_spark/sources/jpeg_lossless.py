@@ -38,10 +38,12 @@ from .jpeg import (
     _BitReader,
     _BitWriter,
     _build_codes,
-    _build_decode,
     _category,
+    _dht_segments,
     _extend,
+    _parse_sos,
     _read_symbol,
+    _sos_segment,
 )
 
 __all__ = ["encode_jpeg_lossless", "predict"]
@@ -71,7 +73,9 @@ def encode_jpeg_lossless(rgb: np.ndarray, predictor: int = 4) -> bytes:
     returns the exact input array (pinned: bit-identical roundtrip)."""
     if rgb.ndim == 2:
         rgb = rgb[:, :, None]
-    assert rgb.ndim == 3 and rgb.dtype == np.uint8
+    if not (rgb.ndim == 3 and rgb.dtype == np.uint8):
+        raise ValueError(f"expected a uint8 HxW or HxWxC array, got shape "
+                         f"{rgb.shape} dtype {rgb.dtype}")
     if not 1 <= int(predictor) <= 7:
         raise ValueError(f"invalid lossless predictor {predictor} (1..7)")
     h, w, nc = rgb.shape
@@ -84,17 +88,13 @@ def encode_jpeg_lossless(rgb: np.ndarray, predictor: int = 4) -> bytes:
     out += b"\xff\xc3" + struct.pack(">HBHHB", 8 + 3 * nc, 8, h, w, nc)
     for c in range(nc):
         out += struct.pack(">BBB", c + 1, 0x11, 0)  # 1x1 sampling, Tq=0
-    bits, vals = _DC_LUM
-    out += b"\xff\xc4" + struct.pack(">HB", 19 + len(vals), 0x00)
-    out += bytes(bits) + bytes(vals)
-    codes = _build_codes(bits, vals)
+    out += _dht_segments(((0, 0, _DC_LUM),))
+    codes = _build_codes(*_DC_LUM)
 
     samples = rgb.astype(np.int64)
     for c in range(nc):  # one non-interleaved scan per component
-        out += b"\xff\xda" + struct.pack(">HB", 8, 1)
-        out += struct.pack(">BB", c + 1, 0x00)
         # lossless scan header: Ss = predictor, Se = 0, Ah = 0, Al = Pt
-        out += struct.pack(">BBB", int(predictor), 0, 0)
+        out += _sos_segment([(c + 1, 0, 0)], int(predictor), 0, 0, 0)
         x = samples[:, :, c]
         # predictions per H.1.1 boundary rules, fully vectorized
         pred = np.empty_like(x)
@@ -125,22 +125,17 @@ def decode_lossless_scan(data: bytes, pos: int, seg: bytes, comps,
     """Decode one SOF3 scan into ``planes`` (int64 HxW per component);
     returns the position of the next marker."""
     h, w, _nc = frame
-    ns = seg[0]
-    if ns != 1:
+    if seg[0] != 1:
         raise NotImplementedError("interleaved lossless scans")
-    cid, tabs = seg[1], seg[2]
-    ci = next((j for j, c in enumerate(comps) if c["id"] == cid), None)
-    if ci is None:
-        raise ValueError(f"SOS names unknown component {cid}")
+    # Ss = predictor selection, Al = point transform
+    ((ci, td, _ta),), sel, _se, _ah, pt = _parse_sos(seg, comps)
     if comps[ci]["hi"] != 1 or comps[ci]["vi"] != 1:
         raise NotImplementedError("subsampled lossless components")
-    sel = seg[1 + 2 * ns]       # Ss = predictor selection
-    pt = seg[3 + 2 * ns] & 15   # Al = point transform
     if not 1 <= sel <= 7:
         raise ValueError(f"invalid lossless predictor {sel}")
     if pt != 0:
         raise NotImplementedError("lossless point transform")
-    dct = huff[(0, tabs >> 4)]
+    dct = huff[(0, td)]
     br = _BitReader(data, pos)
     x = planes[ci]
     for i in range(h):

@@ -11,7 +11,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from proj_spark.operators.joins import knn_join, pip_join
+from proj_spark.operators import textops
+from proj_spark.operators.joins import knn_join, pip_join, radius_join
 
 
 def _plan(df) -> str:
@@ -144,6 +145,61 @@ def test_pip_construct_job_budget(spark, case, level, max_bytes, budget):
         _pts(spark), polys, level=level, max_broadcast_bytes=max_bytes))
     assert jobs <= budget, f"{case}: {jobs} construct-time jobs > {budget}"
     assert out.count() > 0
+
+
+@pytest.mark.parametrize("case, broadcast_queries, budget", [
+    # the broadcast guard: one LIMIT-bounded count of the queries
+    # (2 jobs under AQE)
+    ("default_guard", None, 2),
+    # a forced broadcast runs nothing at construction
+    ("broadcast_queries", True, 0),
+])
+def test_radius_construct_job_budget(spark, case, broadcast_queries, budget):
+    # queries sit on the first 5 points; a 1 m radius finds exactly them
+    pdf = _pts(spark).limit(5).toPandas()
+    qs = spark.createDataFrame(pd.DataFrame({
+        "query_id": range(5), "lon": pdf["lon"], "lat": pdf["lat"]}))
+    pts = _pts(spark)
+    out, jobs = _construct_jobs(
+        spark, f"radius_budget_{case}", lambda: radius_join(
+            pts, qs, 1.0, broadcast_queries=broadcast_queries))
+    assert jobs <= budget, f"{case}: {jobs} construct-time jobs > {budget}"
+    assert out.count() == 5
+
+
+@pytest.mark.parametrize("case, local_max_edges, budget", [
+    # the edge count, then one Arrow pull for the numpy mirror
+    ("local", None, 3),
+    # the distributed loop: checkpoints and one change count per round
+    ("distributed", 0, 72),
+])
+def test_dedup_cc_construct_job_budget(spark, monkeypatch, case,
+                                       local_max_edges, budget):
+    # a 12-node chain and a pair: 14 nodes in 2 components
+    if local_max_edges is not None:
+        monkeypatch.setattr(textops, "_CC_LOCAL_MAX_EDGES", local_max_edges)
+    ids = np.random.default_rng(4).permutation(12)
+    edges = [(int(a), int(b)) for a, b in zip(ids[:-1], ids[1:])]
+    pairs = spark.createDataFrame(edges + [(20, 21)], "id_a long, id_b long")
+    out, jobs = _construct_jobs(
+        spark, f"cc_budget_{case}",
+        lambda: textops.dedup_connected_components(pairs))
+    assert jobs <= budget, f"{case}: {jobs} construct-time jobs > {budget}"
+    assert sorted(r["component_id"] for r in out.collect()) == \
+        [0] * 12 + [20, 20]
+
+
+def test_minhash_groups_construct_job_budget(spark):
+    docs = spark.createDataFrame(pd.DataFrame({
+        "doc_id": range(6),
+        "text": ["the quick brown fox jumps over the lazy dog"] * 3
+        + ["a completely different sentence about spark jobs",
+           "another unrelated line of text for the corpus", ""]}))
+    out, jobs = _construct_jobs(
+        spark, "minhash_groups_budget",
+        lambda: textops.minhash_lsh_groups(docs))
+    assert jobs <= 2, f"{jobs} construct-time jobs > 2"
+    assert out.count() == 6
 
 
 def test_parquet_scan_pushdown_and_pruning(spark, tmp_path):

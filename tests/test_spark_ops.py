@@ -85,6 +85,60 @@ def test_transform_udfs_share_the_worker_cache(spark):
     assert len(first) == 1 and second == first
 
 
+def test_transform_geometry_with_options_uses_the_worker_cache(
+        spark, monkeypatch):
+    # transform_geometry(**options) must build its Transform once per
+    # worker, like proj_udf, not once per Arrow batch
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from proj_spark.operators import geometry as G
+
+    bodies = []
+    real = G.pandas_udf
+
+    def spy(*args, **kwargs):
+        deco = real(*args, **kwargs)
+
+        def capture(f):
+            bodies.append(f)
+            return deco(f)
+        return capture
+
+    monkeypatch.setattr(G, "pandas_udf", spy)
+    df = spark.createDataFrame(
+        pd.DataFrame({"geom": [G.geom_point(10.0, 50.0)]}),
+        schema=f"geom struct<{G.GEOMETRY_DDL}>")
+    G.transform_geometry(df, "EPSG:4326", "EPSG:3857", allow_ballpark=True)
+    (body,) = bodies
+    script = (
+        "import sys\n"
+        "import pandas as pd\n"
+        "from pyspark import cloudpickle\n"
+        "from proj_spark.crs import Transform\n"
+        "build = Transform.new_known_crs.__func__\n"
+        "calls = []\n"
+        "def counted(cls, *a, **k):\n"
+        "    calls.append(1)\n"
+        "    return build(cls, *a, **k)\n"
+        "Transform.new_known_crs = classmethod(counted)\n"
+        "f = cloudpickle.loads(sys.stdin.buffer.read())\n"
+        "for x in (10.0, 20.0):\n"
+        "    g = pd.DataFrame({'kind': ['Point'], 'parts': [[[[x, 50.0]]]],\n"
+        "                      'offsets': [None]})\n"
+        "    out = f(g)\n"
+        "    assert out['parts'][0][0][0][0] > 1e6\n"
+        "print(len(calls))\n"
+    )
+    r = subprocess.run([sys.executable, "-c", script],
+                       input=cloudpickle.dumps(body), capture_output=True,
+                       timeout=120)
+    assert r.returncode == 0, r.stderr.decode()[-2000:]
+    assert r.stdout.decode().split()[-1] == "1"
+
+
 def test_cell_column_matches_numpy(spark):
     rng = np.random.default_rng(7)
     lon = rng.uniform(-180, 180, 500)
