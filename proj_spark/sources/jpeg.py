@@ -36,6 +36,12 @@ segments come from one writer each (``_dht_segments``,
 ``_dri_segment``, ``_sos_segment``).  Each codec keeps only its own
 per-block entropy body.
 
+:func:`decode_jpeg` is one frame decode: one coefficient buffer per
+component, filled by every scan through one scan decoder per entropy
+coder (:func:`_decode_huffman_scan`, ``jpeg_arith.decode_arith_scan``;
+a sequential scan is the band Ss=0..Se=63 of the progressive band
+decoders), then one dequantize/IDCT/upsample tail and one colour step.
+
 Tables and algorithm structure follow the published standard (ITU-T
 T.81 Annex K); no reference-repo counterpart exists (the reference is
 a coordinate-transform library).
@@ -364,7 +370,7 @@ def _parse_sos(seg: bytes, comps):
     lists the scan's components as (index into ``comps``, Td, Ta).
     Every frame type parses its scans here, so a malformed header is a
     ``ValueError`` for all of them."""
-    ns = seg[0]
+    ns = seg[0] if seg else 0
     if ns == 0 or len(seg) < 4 + 2 * ns:
         raise ValueError(f"bad SOS segment: {ns} components in "
                          f"{len(seg)} bytes")
@@ -374,6 +380,8 @@ def _parse_sos(seg: bytes, comps):
         cid, tabs = seg[1 + 2 * i], seg[2 + 2 * i]
         if cid not in ids:
             raise ValueError(f"SOS names unknown component {cid}")
+        if any(ids[ci] == cid for ci, _, _ in sel):
+            raise ValueError(f"SOS names component {cid} twice")
         sel.append((ids.index(cid), tabs >> 4, tabs & 15))
     ss, se, ahal = seg[1 + 2 * ns:4 + 2 * ns]
     return sel, ss, se, ahal >> 4, ahal & 15
@@ -845,11 +853,11 @@ def _read_sym_val(br: _BitReader, t: _HuffTable) -> tuple:
 
 
 # ---------------------------------------------------------------------------
-# progressive scan decoders (T.81 G.2 / the libjpeg decode_mcu_*
-# structure).  Coefficients accumulate in int32 zigzag arrays; bit ops
-# on two's-complement values are safe because magnitudes at scan level
-# Al are multiples of 2^(Al+1), so bit Al of the stored value is 0
-# exactly when the magnitude bit is.
+# scan decoders (T.81 F.2 sequential, G.2 progressive / the libjpeg
+# decode_mcu_* structure).  Coefficients accumulate in int32 zigzag
+# arrays; bit ops on two's-complement values are safe because
+# magnitudes at scan level Al are multiples of 2^(Al+1), so bit Al of
+# the stored value is 0 exactly when the magnitude bit is.
 # ---------------------------------------------------------------------------
 def _dec_ac_first(br: _BitReader, zz, ss: int, se: int, al: int, act,
                   state: dict):
@@ -868,7 +876,7 @@ def _dec_ac_first(br: _BitReader, zz, ss: int, se: int, al: int, act,
             return
         k += r
         if k > se:
-            raise ValueError("AC band overflow in progressive scan")
+            raise ValueError("AC band overflow")
         zz[k] = v << al
         k += 1
 
@@ -915,82 +923,127 @@ def _dec_ac_refine(br: _BitReader, zz, ss: int, se: int, al: int, act,
         state["eobrun"] -= 1
 
 
-def _run_progressive_scan(data: bytes, pos: int, seg: bytes, comps,
-                          coeffs, huff, dc_preds, frame, hmax, vmax,
-                          mcux, mcuy, dri: int = 0) -> int:
-    """Decode one progressive scan; returns the position of the next
-    marker after the scan's entropy segment."""
-    h, w, _nc = frame
+def _find_marker(data: bytes, pos: int) -> int:
+    """The position of the next marker at or after ``pos``, skipping
+    entropy bytes, 0xFF00 stuffing and 0xFF fill bytes: where the
+    marker loop resumes after a scan."""
+    n = len(data)
+    p = pos
+    while p + 1 < n:
+        if data[p] == 0xFF and data[p + 1] != 0x00:
+            while p + 1 < n and data[p + 1] == 0xFF:
+                p += 1
+            return p
+        p += 1
+    raise ValueError("unterminated scan (no marker follows it)")
+
+
+def _dct_scan_header(seg: bytes, comps, progressive: bool):
+    """:func:`_parse_sos` for a DCT frame.  A sequential frame's scan
+    codes whole blocks, the band Ss=0..Se=63 with no point transform,
+    whatever its header says (libjpeg reads it so too); a progressive
+    scan is a DC scan (Ss = Se = 0, interleaving allowed) or one
+    component's AC band 1 <= Ss <= Se <= 63."""
     sel, ss, se, ah, al = _parse_sos(seg, comps)
-    br = _BitReader(data, pos)
-    state = {"eobrun": 0}
+    if not progressive:
+        return sel, 0, 63, 0, 0
+    if se > 63 or ss > se:
+        raise ValueError(f"bad spectral selection Ss={ss} Se={se}")
     if ss == 0 and se != 0:
         raise ValueError("progressive DC scan with Se != 0")
     if ss and len(sel) != 1:
         raise ValueError("interleaved AC scan is illegal (T.81)")
+    return sel, ss, se, ah, al
+
+
+def _huff_table(huff: dict, cls: int, tid: int) -> _HuffTable:
+    t = huff.get((cls, tid))
+    if t is None:
+        raise ValueError(f"undefined Huffman table class {cls} id {tid}")
+    return t
+
+
+def _decode_huffman_scan(data: bytes, pos: int, seg: bytes, comps, buf,
+                         frame, hmax, vmax, mcux, mcuy, dri: int,
+                         huff) -> int:
+    """Decode one Huffman scan of a DCT frame into the zigzag buffers
+    ``buf``; returns the position of the marker after it.  A sequential
+    block is the DC-first read plus the AC-first band 1..63."""
+    h, w, progressive = frame
+    sel, ss, se, ah, al = _dct_scan_header(seg, comps, progressive)
     # a DC first scan codes predictor diffs, from 0 at each (re)start
-    dcts = {ci: huff[(0, td)] for ci, td, _ in sel} if ss == ah == 0 else {}
-    act = huff[(1, sel[0][2])] if ss else None
+    dcts = {ci: _huff_table(huff, 0, td) for ci, td, _ in sel} \
+        if ss == ah == 0 else {}
+    acts = {ci: _huff_table(huff, 1, ta) for ci, _, ta in sel} if se else {}
     dec = _dec_ac_first if ah == 0 else _dec_ac_refine
-    for ci in dcts:
-        dc_preds[ci] = 0
+    k0 = max(ss, 1)
+    br = _BitReader(data, pos)
+    state = {"eobrun": 0}
+    preds = dict.fromkeys(dcts, 0)
     scomps = [(ci, comps[ci]["hi"], comps[ci]["vi"]) for ci, _, _ in sel]
     for rst, blocks in _scan_mcus(scomps, mcux, mcuy, h, w, hmax, vmax, dri):
         if rst >= 0:
             br.sync_restart(rst)
             state["eobrun"] = 0
-            for ci in dcts:
-                dc_preds[ci] = 0
+            preds = dict.fromkeys(dcts, 0)
         for ci, b in blocks:
-            zz = coeffs[ci][b]
-            if ss:
-                dec(br, zz, ss, se, al, act, state)
-            elif ah == 0:
-                _s, d = _read_sym_val(br, dcts[ci])
-                dc_preds[ci] += d
-                zz[0] = dc_preds[ci] << al
-            elif br.bit():
-                zz[0] = int(zz[0]) | (1 << al)
-    # resync: skip residual padding/stuffing up to the next marker
-    p = br.pos
-    while p + 1 < len(data) and not (data[p] == 0xFF
-                                     and data[p + 1] != 0x00):
-        p += 1
-    return p
+            zz = buf[ci][b]
+            if ss == 0:
+                if ah == 0:
+                    _s, d = _read_sym_val(br, dcts[ci])
+                    preds[ci] += d
+                    zz[0] = preds[ci] << al
+                elif br.bit():
+                    zz[0] = int(zz[0]) | (1 << al)
+            if se:
+                dec(br, zz, k0, se, al, acts[ci], state)
+        if state["eobrun"] and not progressive:
+            raise ValueError("EOB run in a sequential scan")
+    return _find_marker(data, br.pos)
 
 
 def decode_jpeg(data: bytes) -> np.ndarray:
-    """Baseline OR progressive JFIF bytes -> 8-bit RGB numpy array."""
+    """JFIF bytes of any frame type -> 8-bit RGB numpy array.
+
+    Frame types: SOF0/SOF1 sequential and SOF2 progressive Huffman DCT,
+    SOF9 sequential and SOF10 progressive arithmetic DCT
+    (``jpeg_arith``), SOF3 lossless (``jpeg_lossless``).  At SOF the
+    frame gets one buffer per component (an MCU-padded int32 zigzag
+    coefficient array; a sample plane for SOF3); every scan, interleaved
+    or one component at a time, fills it through the frame's one scan
+    decoder, and the marker loop runs on to EOI.  Then one dequantize /
+    IDCT / upsample tail and one colour step: a one-component (gray)
+    frame is replicated to RGB, three components are YCbCr (RGB
+    samples for lossless), other counts raise ``NotImplementedError``.
+    A malformed stream raises ``ValueError``."""
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
     pos = 2
+    n = len(data)
     qts: dict[int, np.ndarray] = {}
-    huff: dict[tuple, dict] = {}
+    huff: dict[tuple, _HuffTable] = {}
+    cond: dict[tuple, object] = {}  # DAC: (0, Tb) -> (L, U), (1, Tb) -> Kx
     frame = None
     comps: list[dict] = []
-    scan_order: list[dict] = []
-    progressive = False
-    arithmetic = False
-    lossless = False
-    ll_planes: list[np.ndarray] | None = None
-    arith_coeffs: list[np.ndarray] | None = None
-    dc_cond: dict[int, tuple] = {}
-    ac_cond: dict[int, int] = {}
-    prog_coeffs: list[np.ndarray] | None = None
-    prog_geom = None
-    dc_preds: list[int] = []
+    buf: list[np.ndarray] = []
+    scans = 0
     dri = 0
 
-    while pos < len(data):
+    while pos < n:
         if data[pos] != 0xFF:
             raise ValueError("marker expected")
-        while pos + 1 < len(data) and data[pos + 1] == 0xFF:
+        while pos + 1 < n and data[pos + 1] == 0xFF:
             pos += 1  # FF fill bytes before a marker are legal
+        if pos + 1 >= n:
+            raise ValueError("truncated marker")
         marker = data[pos + 1]
         pos += 2
         if marker == 0xD9:  # EOI
             break
-        (seglen,) = struct.unpack(">H", data[pos:pos + 2])
+        seglen = int.from_bytes(data[pos:pos + 2], "big")
+        if seglen < 2 or pos + seglen > n:
+            raise ValueError(f"marker {marker:#04x} segment of length "
+                             f"{seglen} overruns the stream")
         seg = data[pos + 2:pos + seglen]
         if marker == 0xDB:  # DQT (possibly several tables)
             p = 0
@@ -998,6 +1051,8 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 pq, tq = seg[p] >> 4, seg[p] & 15
                 if pq != 0:
                     raise NotImplementedError("16-bit quant tables")
+                if p + 65 > len(seg):
+                    raise ValueError("truncated DQT segment")
                 t = np.frombuffer(seg[p + 1:p + 65], dtype=np.uint8)
                 qts[tq] = t.astype(np.float64)[_UNZIGZAG].reshape(8, 8)
                 p += 65
@@ -1006,164 +1061,94 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             while p < len(seg):
                 cls, tid = seg[p] >> 4, seg[p] & 15
                 bits = list(seg[p + 1:p + 17])
-                n = sum(bits)
-                vals = list(seg[p + 17:p + 17 + n])
+                nv = sum(bits)
+                if p + 17 + nv > len(seg):
+                    raise ValueError("truncated DHT segment")
+                vals = list(seg[p + 17:p + 17 + nv])
                 huff[(cls, tid)] = _build_decode(bits, vals)
-                p += 17 + n
+                p += 17 + nv
         elif marker == 0xCC:  # DAC: arithmetic conditioning (B.2.4.3)
-            p = 0
-            while p < len(seg):
+            if len(seg) % 2:
+                raise ValueError("truncated DAC segment")
+            for p in range(0, len(seg), 2):
                 tc, tb = seg[p] >> 4, seg[p] & 15
                 cs = seg[p + 1]
                 if tc == 0:
                     low, up = cs & 15, cs >> 4
                     if not (0 <= low <= up <= 15):
                         raise ValueError(f"bad DC conditioning {cs:#x}")
-                    dc_cond[tb] = (low, up)
+                    cond[(0, tb)] = (low, up)
                 else:
                     if not (1 <= cs <= 63):
                         raise ValueError(f"bad AC conditioning Kx={cs}")
-                    ac_cond[tb] = cs
-                p += 2
+                    cond[(1, tb)] = cs
         elif marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC9, 0xCA):
             # SOF0/1 sequential, SOF2 progressive, SOF3 lossless,
             # SOF9 arithmetic sequential, SOF10 arithmetic progressive
+            if len(seg) < 6:
+                raise ValueError("truncated SOF segment")
             prec, h, w, nc = struct.unpack(">BHHB", seg[:6])
             if prec != 8:
                 raise NotImplementedError("only 8-bit precision")
+            if frame is not None:
+                raise ValueError("second SOF in one JPEG stream")
+            if nc == 0 or len(seg) < 6 + 3 * nc:
+                raise ValueError(f"SOF segment of {len(seg)} bytes for "
+                                 f"{nc} components")
             for i in range(nc):
                 cid, samp, tq = seg[6 + 3 * i:9 + 3 * i]
                 hi, vi = samp >> 4, samp & 15
                 if not (1 <= hi <= 4 and 1 <= vi <= 4):
                     raise ValueError(f"invalid sampling factors {hi}x{vi}")
                 comps.append({"id": cid, "tq": tq, "hi": hi, "vi": vi})
-            frame = (h, w, nc)
-            progressive = marker in (0xC2, 0xCA)
-            arithmetic = marker in (0xC9, 0xCA)
-            lossless = marker == 0xC3
+            sof = marker
+            frame = (h, w, sof in (0xC2, 0xCA))
+            grid = _mcu_grid([(c["hi"], c["vi"]) for c in comps], h, w)
+            _hmax, _vmax, mcux, mcuy = grid
+            scan, tables = _decode_huffman_scan, huff
+            if sof == 0xC3:
+                from .jpeg_lossless import decode_lossless_scan as scan
+
+                buf = [np.zeros((h, w), dtype=np.int64) for _ in comps]
+            else:
+                buf = [np.zeros((mcuy * c["vi"] * mcux * c["hi"], 64),
+                                dtype=np.int32) for c in comps]
+            if sof in (0xC9, 0xCA):
+                from .jpeg_arith import decode_arith_scan as scan
+
+                tables = cond
         elif marker == 0xDD:  # DRI: restart interval in MCUs
-            (dri,) = struct.unpack(">H", seg[:2])
+            if len(seg) != 2:
+                raise ValueError("bad DRI segment")
+            dri = int.from_bytes(seg, "big")
         elif marker == 0xDA:  # SOS
-            if lossless:
-                from .jpeg_lossless import decode_lossless_scan
-
-                if ll_planes is None:
-                    h, w, nc = frame
-                    ll_planes = [np.zeros((h, w), dtype=np.int64)
-                                 for _ in range(nc)]
-                pos = decode_lossless_scan(data, pos + seglen, seg,
-                                           comps, ll_planes, frame,
-                                           huff)
-                continue
-            if progressive:
-                if prog_coeffs is None:
-                    h, w, nc = frame
-                    prog_geom = _mcu_grid(
-                        [(c["hi"], c["vi"]) for c in comps], h, w)
-                    _hmax, _vmax, mcux, mcuy = prog_geom
-                    prog_coeffs = [
-                        np.zeros((mcuy * c["vi"] * mcux * c["hi"], 64),
-                                 dtype=np.int32) for c in comps]
-                    dc_preds = [0] * nc
-                if arithmetic:
-                    from .jpeg_arith import decode_arith_progressive_scan
-
-                    pos = decode_arith_progressive_scan(
-                        data, pos + seglen, seg, comps, prog_coeffs,
-                        frame, *prog_geom, dri=dri, dc_cond=dc_cond,
-                        ac_cond=ac_cond)
-                else:
-                    pos = _run_progressive_scan(
-                        data, pos + seglen, seg, comps, prog_coeffs,
-                        huff, dc_preds, frame, *prog_geom, dri=dri)
-                continue
-            scan_order = [{**comps[ci], "dc": td, "ac": ta}
-                          for ci, td, ta in _parse_sos(seg, comps)[0]]
-            if arithmetic:
-                from .jpeg_arith import decode_arith_scan
-
-                h, w, nc = frame
-                _hmax, _vmax, mcux, mcuy = _mcu_grid(
-                    [(c["hi"], c["vi"]) for c in comps], h, w)
-                arith_coeffs = [
-                    np.zeros((mcuy * sc["vi"] * mcux * sc["hi"], 64),
-                             dtype=np.int32) for sc in scan_order]
-                decode_arith_scan(data, pos + seglen, scan_order,
-                                  arith_coeffs, mcux, mcuy, dri,
-                                  dc_cond, ac_cond)
-                break
-            pos += seglen
-            break
+            if frame is None:
+                raise ValueError("SOS before SOF")
+            pos = scan(data, pos + seglen, seg, comps, buf, frame, *grid,
+                       dri, tables)
+            scans += 1
+            continue
         pos += seglen
-    if lossless:
-        if ll_planes is None:
-            raise ValueError("lossless JPEG without any scan")
-        arr = np.stack(ll_planes, axis=-1)
-        arr = np.clip(arr, 0, 255).astype(np.uint8)
-        if arr.shape[2] == 1:  # grayscale: replicate to the RGB contract
-            arr = np.repeat(arr, 3, axis=2)
-        return arr
-    if progressive:
-        if prog_coeffs is None:
-            raise ValueError("progressive JPEG without any scan")
-        # reuse the shared IDCT/upsample tail: component order == SOF
-        scan_order = [dict(c) for c in comps]
-    if frame is None or not scan_order:
+    if not scans:
         raise ValueError("JPEG without SOF/SOS")
 
-    h, w, nc = frame
-    hmax, vmax, mcux, mcuy = _mcu_grid(
-        [(sc["hi"], sc["vi"]) for sc in scan_order], h, w)
-    for sc in scan_order:
-        if hmax % sc["hi"] or vmax % sc["vi"]:
+    if sof == 0xC3:
+        return _to_rgb(buf, ycbcr=False)
+    h, w, _progressive = frame
+    hmax, vmax, mcux, mcuy = grid
+    for c in comps:
+        if hmax % c["hi"] or vmax % c["vi"]:
             raise NotImplementedError(
-                f"non-integer sampling ratio {sc['hi']}x{sc['vi']} "
+                f"non-integer sampling ratio {c['hi']}x{c['vi']} "
                 f"vs max {hmax}x{vmax}")
-    if progressive:
-        coeffs = prog_coeffs
-    elif arithmetic:
-        coeffs = arith_coeffs
-    else:
-        coeffs = [np.zeros((mcuy * sc["vi"] * mcux * sc["hi"], 64),
-                           dtype=np.float64) for sc in scan_order]
-        br = _BitReader(data, pos)
-        preds = [0] * nc
-        dcts = [huff[(0, sc["dc"])] for sc in scan_order]
-        acts = [huff[(1, sc["ac"])] for sc in scan_order]
-        scomps = [(ci, sc["hi"], sc["vi"]) for ci, sc in enumerate(scan_order)]
-        for rst, blocks in _scan_mcus(scomps, mcux, mcuy, h, w, hmax, vmax,
-                                      dri):
-            if rst >= 0:
-                br.sync_restart(rst)
-                preds = [0] * nc
-            for ci, b in blocks:
-                _s, diff = _read_sym_val(br, dcts[ci])
-                preds[ci] += diff
-                zz = coeffs[ci][b]
-                zz[0] = preds[ci]
-                act = acts[ci]
-                k = 1
-                while k < 64:
-                    rs, v = _read_sym_val(br, act)
-                    r, s = rs >> 4, rs & 15
-                    if s == 0:
-                        if r == 15:
-                            k += 16  # ZRL
-                            continue
-                        break  # EOB
-                    k += r
-                    if k > 63:
-                        raise ValueError("AC coefficient index overflow")
-                    zz[k] = v
-                    k += 1
-
     planes = []
-    for ci, sc in enumerate(scan_order):
-        qt = qts[sc["tq"]]
-        hi, vi = sc["hi"], sc["vi"]
+    for c, coeffs in zip(comps, buf):
+        qt = qts.get(c["tq"])
+        if qt is None:
+            raise ValueError(f"undefined quantization table {c['tq']}")
+        hi, vi = c["hi"], c["vi"]
         hp, wp = mcuy * vi * 8, mcux * hi * 8
-        blocks = (coeffs[ci][:, _UNZIGZAG].reshape(-1, 8, 8)
-                  * qt[None])
+        blocks = coeffs[:, _UNZIGZAG].reshape(-1, 8, 8) * qt[None]
         pix = np.einsum("ji,njk,kl->nil", _DCT8, blocks, _DCT8) + 128.0
         plane = _from_blocks(pix, hp, wp)
         # crop to the component's true size, then upsample to (h, w)
@@ -1178,9 +1163,21 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             elif f != 1:  # 3x — nearest-neighbour replication
                 plane = np.repeat(plane, f, axis=axis)
         planes.append(plane[:h, :w])
-    ycc = np.stack(planes, axis=-1)
-    rgb = _ycbcr_to_rgb(ycc)
-    return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
+    return _to_rgb(planes, ycbcr=True)
+
+
+def _to_rgb(planes, ycbcr: bool) -> np.ndarray:
+    """The colour step of every frame type: one component (gray) is
+    replicated to RGB; three are YCbCr when ``ycbcr`` (DCT frames), else
+    RGB samples (lossless)."""
+    if len(planes) not in (1, 3):
+        raise NotImplementedError(
+            f"{len(planes)}-component JPEG frames (1 or 3 supported)")
+    arr = np.stack(planes, axis=-1)
+    if ycbcr and len(planes) == 3:
+        arr = _ycbcr_to_rgb(arr)
+    arr = np.clip(np.round(arr), 0, 255).astype(np.uint8)
+    return np.repeat(arr, 3, axis=2) if len(planes) == 1 else arr
 
 
 def _upsample2(plane: np.ndarray, axis: int) -> np.ndarray:

@@ -15,11 +15,13 @@ Huffman codec in ``jpeg.py``:
     L/U thresholds; AC: per-index EOB/run/size contexts with the Kx
     split and the non-adaptive 0.5 sign bin), optional DRI/RSTn
     restarts (coder flush + statistics reset, F.1.4.ial);
-  * decoder: ``decode_arith_scan`` — the mirrored Annex D decoder;
-    ``jpeg.decode_jpeg`` dispatches to it for SOF9 frames, then reuses
-    the shared dequantize/IDCT/upsample tail, so arithmetic decode of
-    an image is byte-identical to Huffman decode of the same
-    quantized coefficients (pinned in tests).
+  * decoder: ``decode_arith_scan`` — the mirrored Annex D decoder, one
+    scan per call with the signature of every scan decoder
+    ``jpeg.decode_jpeg`` calls; it fills the frame's coefficient
+    buffers, which ``decode_jpeg`` then takes through the shared
+    dequantize/IDCT/upsample tail, so arithmetic decode of an image is
+    byte-identical to Huffman decode of the same quantized coefficients
+    (pinned in tests).
 
 The probability-estimation state machine is Table D.3 of the public
 standard (the same 113-state table every T.81/T.82/JBIG QM coder
@@ -33,18 +35,22 @@ window tracks the remaining code value at the encoder's alignment).
 Round-6 also adds the PROGRESSIVE arithmetic frame (SOF10):
 ``encode_jpeg_arithmetic_progressive`` runs the same 10-scan spectral-
 selection + successive-approximation script as the Huffman progressive
-encoder through the QM coder (Annex G.1.3 decision models), and
-``decode_arith_progressive_scan`` mirrors it — completing the T.81 DCT
-matrix baseline/progressive x huffman/arithmetic, all both ways, every
-combination decoding byte-identical pixels.
+encoder through the QM coder (Annex G.1.3 decision models) —
+completing the T.81 DCT matrix baseline/progressive x
+huffman/arithmetic, all both ways, every combination decoding
+byte-identical pixels.
 
-Only the entropy layer lives here.  Block order and restart points
-come from ``jpeg._scan_mcus`` (T.81 Annex A.2), scan headers are
-parsed by ``jpeg._parse_sos`` and the DRI/SOS segments written by the
-same writers as the Huffman frames, so the arithmetic and Huffman
-paths walk every scan identically; the DAC segment is
-``_DAC_SEGMENT``.  Restart markers in progressive arithmetic scans are
-neither written nor read.
+A sequential block is the progressive models' band case Ss=0..Se=63:
+the DC model, then the AC-first band 1..63 at point transform 0
+(``_enc_ac_first_arith`` / ``_dec_ac_first_arith``), so SOF9 and SOF10
+share one pair of band coders and one scan decoder, and a one-component
+SOF9 scan walks its true block grid (T.81 A.2.2) like every other.
+Block order and restart points come from ``jpeg._scan_mcus`` (T.81
+Annex A.2), scan headers are parsed by ``jpeg._dct_scan_header`` and
+the DRI/SOS segments written by the same writers as the Huffman frames,
+so the arithmetic and Huffman paths walk every scan identically; the
+DAC segment is ``_DAC_SEGMENT``.  Restart markers in progressive
+arithmetic scans are neither written nor read.
 
 No reference-repo counterpart exists (georust/proj is a coordinate
 library); the payload axis comes from the graft cell.
@@ -59,9 +65,10 @@ import numpy as np
 from .jpeg import (
     _PROG_SCRIPT,
     _dct_scan,
+    _dct_scan_header,
     _dri_segment,
+    _find_marker,
     _jfif_dqt_headers,
-    _parse_sos,
     _quantized_coeffs,
     _scan_mcus,
     _sof_segment,
@@ -69,7 +76,7 @@ from .jpeg import (
 )
 
 __all__ = ["encode_jpeg_arithmetic", "encode_jpeg_arithmetic_progressive",
-           "decode_arith_scan", "decode_arith_progressive_scan"]
+           "decode_arith_scan"]
 
 # ---------------------------------------------------------------------------
 # Table D.3 — Qe values and probability estimation state machine.
@@ -319,7 +326,8 @@ class _ArithDecoder:
 
 
 # ---------------------------------------------------------------------------
-# Annex F.1.4 decision models (sequential DCT)
+# Annex F.1.4 decision models (sequential DCT), the AC model on a band
+# [ss..se] (G.1.3.2) so one pair serves sequential and progressive scans
 # ---------------------------------------------------------------------------
 class _Stats:
     """Statistics areas for one scan: per-table DC/AC bins + the
@@ -428,211 +436,11 @@ def _dec_dc(dec: _ArithDecoder, stats: _Stats, ci: int, tbl: int,
     return stats.last_dc[ci]
 
 
-def _enc_ac(enc: _ArithEncoder, stats: _Stats, tbl: int,
-            zz: np.ndarray, kx: int):
-    """F.1.4.2: EOB / nonzero / sign / size decisions per zigzag
-    index; the sign uses the non-adaptive 0.5 bin."""
-    st = stats.ac[tbl]
-    nz = np.nonzero(zz[1:])[0]
-    ke = int(nz[-1]) + 1 if len(nz) else 0
-    k = 1
-    while k <= ke:
-        base = 3 * (k - 1)
-        enc.encode(st, base, 0)  # not end-of-block
-        v = int(zz[k])
-        while v == 0:
-            enc.encode(st, base + 1, 0)
-            base += 3
-            k += 1
-            v = int(zz[k])
-        enc.encode(st, base + 1, 1)
-        if v > 0:
-            enc.encode(stats.fixed, 0, 0)
-        else:
-            v = -v
-            enc.encode(stats.fixed, 0, 1)
-        sp = base + 2
-        m = 0
-        v -= 1
-        if v:
-            enc.encode(st, sp, 1)
-            m = 1
-            v2 = v
-            if v2 >> 1:
-                v2 >>= 1
-                enc.encode(st, sp, 1)
-                m <<= 1
-                sp = 189 if k <= kx else 217
-                while v2 >> 1:
-                    v2 >>= 1
-                    enc.encode(st, sp, 1)
-                    m <<= 1
-                    sp += 1
-        enc.encode(st, sp, 0)
-        sp += 14
-        while m >> 1:
-            m >>= 1
-            enc.encode(st, sp, 1 if (m & v) else 0)
-        k += 1
-    if ke < 63:
-        enc.encode(st, 3 * (k - 1), 1)  # end-of-block
-
-
-def _dec_ac(dec: _ArithDecoder, stats: _Stats, tbl: int,
-            zz: np.ndarray, kx: int):
-    st = stats.ac[tbl]
-    k = 1
-    while k <= 63:
-        base = 3 * (k - 1)
-        if dec.decode(st, base):
-            return  # end-of-block
-        while dec.decode(st, base + 1) == 0:
-            base += 3
-            k += 1
-            if k > 63:
-                raise ValueError("arithmetic AC index overflow")
-        sign = dec.decode(stats.fixed, 0)
-        sp = base + 2
-        m = dec.decode(st, sp)
-        if m:
-            if dec.decode(st, sp):
-                m <<= 1
-                sp = 189 if k <= kx else 217
-                while dec.decode(st, sp):
-                    m <<= 1
-                    if m == 0x8000:
-                        raise ValueError("arithmetic AC magnitude overflow")
-                    sp += 1
-        v = m
-        sp += 14
-        while m >> 1:
-            m >>= 1
-            if dec.decode(st, sp):
-                v |= m
-        v += 1
-        zz[k] = -v if sign else v
-        k += 1
-
-
-# ---------------------------------------------------------------------------
-# public encoder
-# ---------------------------------------------------------------------------
-def encode_jpeg_arithmetic(rgb: np.ndarray, quality: int = 90,
-                           subsampling: str = "4:4:4",
-                           restart_interval: int = 0) -> bytes:
-    """8-bit RGB HxWx3 -> arithmetic-coded JFIF bytes (SOF9 + DAC).
-
-    The coefficient front end is identical to ``encode_jpeg`` — same
-    quantized coefficients, so decoding this stream yields pixels
-    byte-identical to decoding the Huffman stream at the same
-    quality/subsampling.  Y uses conditioning tables 0, chroma
-    tables 1 (both carrying the T.81 defaults L=0, U=1, Kx=5)."""
-    comp_zz, qt, samp, hmax, vmax, mcux, mcuy, h, w = \
-        _quantized_coeffs(rgb, quality, subsampling)
-    ri = int(restart_interval)
-    # SOS: Td/Ta name the arithmetic conditioning tables
-    sel, scomps = _dct_scan((0, 1, 2), samp)
-    out = bytearray(_jfif_dqt_headers(qt))
-    # SOF9: extended sequential DCT, arithmetic coding (B.2.2)
-    out += _sof_segment(0xC9, h, w, samp)
-    out += _DAC_SEGMENT
-    out += _dri_segment(ri)
-    out += _sos_segment(sel, 0, 63, 0, 0)
-    enc = _ArithEncoder()
-    stats = _Stats(2, 2, 3)
-    cond = (_DEFAULT_L, _DEFAULT_U)
-    for rst, blocks in _scan_mcus(scomps, mcux, mcuy, h, w, hmax, vmax, ri):
-        if rst >= 0:
-            # restart: flush (byte-aligns), RSTm, full re-init
-            enc.flush()
-            out += enc.out
-            out += bytes([0xFF, 0xD0 + rst])
-            enc = _ArithEncoder()
-            stats.reset()
-        for c, b in blocks:
-            zz = comp_zz[c][b]
-            _enc_dc(enc, stats, c, min(c, 1), int(zz[0]), cond)
-            _enc_ac(enc, stats, min(c, 1), zz, _DEFAULT_KX)
-    enc.flush()
-    out += enc.out
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# decoder entry used by jpeg.decode_jpeg for SOF9 frames
-# ---------------------------------------------------------------------------
-def decode_arith_scan(data: bytes, pos: int, scan_order, coeffs,
-                      mcux: int, mcuy: int, dri: int,
-                      dc_cond, ac_cond) -> int:
-    """Decode one sequential arithmetic scan into ``coeffs`` (zigzag
-    int32 per component); returns the position of the next marker.
-    ``dc_cond[t] = (L, U)``, ``ac_cond[t] = Kx``.  The arguments carry
-    the MCU grid, not the frame size, so a one-component scan walks the
-    component's whole MCU-padded block grid in raster order -- its true
-    grid whenever it is the frame's only component."""
-    ncomp = len(scan_order)
-    for sc in scan_order:
-        # T.81 B.2.3: arithmetic conditioning table ids are 0..3
-        if not (0 <= sc["dc"] <= 3 and 0 <= sc["ac"] <= 3):
-            raise ValueError(
-                f"invalid arithmetic conditioning table ids "
-                f"{sc['dc']}/{sc['ac']}")
-    n_tables = 1 + max(max(sc["dc"], sc["ac"]) for sc in scan_order)
-    stats = _Stats(n_tables, n_tables, ncomp)
-    dec = _ArithDecoder(data, pos)
-    conds = [(sc["dc"], dc_cond.get(sc["dc"], (_DEFAULT_L, _DEFAULT_U)),
-              sc["ac"], ac_cond.get(sc["ac"], _DEFAULT_KX))
-             for sc in scan_order]
-    scomps = [(ci, sc["hi"], sc["vi"]) for ci, sc in enumerate(scan_order)]
-    # an 8*mcux x 8*mcuy frame at unit sampling makes a one-component
-    # scan's true block grid its MCU-padded one
-    for rst, blocks in _scan_mcus(scomps, mcux, mcuy, 8 * mcuy, 8 * mcux,
-                                  1, 1, dri):
-        if rst >= 0:
-            p = dec.marker_pos if dec.marker_pos >= 0 else dec.pos
-            p = _find_marker(data, p)
-            if data[p + 1] != 0xD0 + rst:
-                raise ValueError(
-                    f"expected RST{rst} at {p}, got {data[p + 1]:#x}")
-            stats.reset()
-            dec = _ArithDecoder(data, p + 2)
-        for ci, b in blocks:
-            tdc, dcc, tac, kx = conds[ci]
-            zz = coeffs[ci][b]
-            zz[0] = _dec_dc(dec, stats, ci, tdc, dcc)
-            _dec_ac(dec, stats, tac, zz, kx)
-    p = dec.marker_pos if dec.marker_pos >= 0 else dec.pos
-    return _find_marker(data, p)
-
-
-def _find_marker(data: bytes, pos: int) -> int:
-    """Scan forward to the next real marker (skipping entropy bytes
-    and 0xFF00 stuffing) — the arithmetic flush may leave unread
-    trailing bytes before the marker."""
-    n = len(data)
-    p = pos
-    while p + 1 < n:
-        if data[p] == 0xFF and data[p + 1] != 0x00:
-            while p + 1 < n and data[p + 1] == 0xFF:
-                p += 1
-            return p
-        p += 1
-    raise ValueError("unterminated arithmetic scan (no marker)")
-
-
-# ---------------------------------------------------------------------------
-# PROGRESSIVE arithmetic (SOF10): spectral selection + successive
-# approximation over the same 10-scan script as encode_jpeg_progressive,
-# entropy-coded with the Annex G.1.3 decision models (DC first = the
-# sequential DC model on point-transformed values, DC refine = one
-# fixed-bin bit per block, AC first = the sequential AC model on the
-# band, AC refine = correction bits at st+2 / newly-nonzero at st+1).
-# Statistics areas and the coder reset at every scan start (F.1.4).
-# ---------------------------------------------------------------------------
 def _enc_ac_first_arith(enc, stats, tbl, zz, ss, se, al, kx):
-    """AC first scan over band [ss..se] with point transform
-    |v| >> Al (sign-magnitude, T.81 G.1.3.2)."""
+    """F.1.4.2 / G.1.3.2: EOB / nonzero / sign / size decisions per
+    zigzag index of the band [ss..se] with point transform |v| >> Al
+    (sign-magnitude); the sign uses the non-adaptive 0.5 bin.  A
+    sequential block's AC is the band 1..63 at Al = 0."""
     st = stats.ac[tbl]
     ke = 0
     for k in range(se, ss - 1, -1):
@@ -678,6 +486,97 @@ def _enc_ac_first_arith(enc, stats, tbl, zz, ss, se, al, kx):
         enc.encode(st, 3 * (k - 1), 1)  # end-of-band
 
 
+def _dec_ac_first_arith(dec, stats, tbl, zz, ss, se, al, kx):
+    st = stats.ac[tbl]
+    k = ss
+    while k <= se:
+        base = 3 * (k - 1)
+        if dec.decode(st, base):
+            return  # end-of-band
+        while dec.decode(st, base + 1) == 0:
+            base += 3
+            k += 1
+            if k > se:
+                raise ValueError("arithmetic AC band index overflow")
+        sign = dec.decode(stats.fixed, 0)
+        sp = base + 2
+        m = dec.decode(st, sp)
+        if m:
+            if dec.decode(st, sp):
+                m <<= 1
+                sp = 189 if k <= kx else 217
+                while dec.decode(st, sp):
+                    m <<= 1
+                    if m == 0x8000:
+                        raise ValueError(
+                            "arithmetic AC magnitude overflow")
+                    sp += 1
+        v = m
+        sp += 14
+        while m >> 1:
+            m >>= 1
+            if dec.decode(st, sp):
+                v |= m
+        v = (v + 1) << al
+        zz[k] = -v if sign else v
+        k += 1
+
+
+# ---------------------------------------------------------------------------
+# public encoder
+# ---------------------------------------------------------------------------
+def encode_jpeg_arithmetic(rgb: np.ndarray, quality: int = 90,
+                           subsampling: str = "4:4:4",
+                           restart_interval: int = 0) -> bytes:
+    """8-bit RGB HxWx3 -> arithmetic-coded JFIF bytes (SOF9 + DAC).
+
+    The coefficient front end is identical to ``encode_jpeg`` — same
+    quantized coefficients, so decoding this stream yields pixels
+    byte-identical to decoding the Huffman stream at the same
+    quality/subsampling.  Y uses conditioning tables 0, chroma
+    tables 1 (both carrying the T.81 defaults L=0, U=1, Kx=5)."""
+    comp_zz, qt, samp, hmax, vmax, mcux, mcuy, h, w = \
+        _quantized_coeffs(rgb, quality, subsampling)
+    ri = int(restart_interval)
+    # SOS: Td/Ta name the arithmetic conditioning tables
+    sel, scomps = _dct_scan((0, 1, 2), samp)
+    out = bytearray(_jfif_dqt_headers(qt))
+    # SOF9: extended sequential DCT, arithmetic coding (B.2.2)
+    out += _sof_segment(0xC9, h, w, samp)
+    out += _DAC_SEGMENT
+    out += _dri_segment(ri)
+    out += _sos_segment(sel, 0, 63, 0, 0)
+    enc = _ArithEncoder()
+    stats = _Stats(2, 2, 3)
+    cond = (_DEFAULT_L, _DEFAULT_U)
+    for rst, blocks in _scan_mcus(scomps, mcux, mcuy, h, w, hmax, vmax, ri):
+        if rst >= 0:
+            # restart: flush (byte-aligns), RSTm, full re-init
+            enc.flush()
+            out += enc.out
+            out += bytes([0xFF, 0xD0 + rst])
+            enc = _ArithEncoder()
+            stats.reset()
+        for c, b in blocks:
+            zz = comp_zz[c][b]
+            _enc_dc(enc, stats, c, min(c, 1), int(zz[0]), cond)
+            _enc_ac_first_arith(enc, stats, min(c, 1), zz, 1, 63, 0,
+                                _DEFAULT_KX)
+    enc.flush()
+    out += enc.out
+    out += b"\xff\xd9"  # EOI
+    return bytes(out)
+
+
+# ---------------------------------------------------------------------------
+# PROGRESSIVE arithmetic (SOF10): spectral selection + successive
+# approximation over the same 10-scan script as encode_jpeg_progressive,
+# entropy-coded with the Annex G.1.3 decision models (DC first = the
+# sequential DC model on point-transformed values, DC refine = one
+# fixed-bin bit per block, AC first = the sequential AC model on the
+# band, AC refine = correction bits at st+2 / newly-nonzero at st+1).
+# Statistics areas and the coder reset at every scan start (F.1.4).
+# ---------------------------------------------------------------------------
 def _enc_ac_refine_arith(enc, stats, tbl, zz, ss, se, al):
     """AC refinement scan (T.81 G.1.3.3 / the jcarith shape):
     correction bits for previously-nonzero coefficients at st+2,
@@ -758,85 +657,6 @@ def encode_jpeg_arithmetic_progressive(rgb: np.ndarray, quality: int = 90,
     return bytes(out)
 
 
-def decode_arith_progressive_scan(data: bytes, pos: int, seg: bytes,
-                                  comps, coeffs, frame, hmax, vmax,
-                                  mcux, mcuy, dri: int,
-                                  dc_cond, ac_cond) -> int:
-    """Decode one progressive arithmetic scan (SOF10); returns the
-    position of the next marker.  Restart markers inside progressive
-    arithmetic scans are not supported."""
-    if dri:
-        raise NotImplementedError(
-            "restart markers in progressive arithmetic scans are not "
-            "supported")
-    h, w, _nc = frame
-    sel, ss, se, ah, al = _parse_sos(seg, comps)
-    for _ci, td, ta in sel:
-        tb = td if ss == 0 else ta
-        if not 0 <= tb <= 3:
-            raise ValueError(f"invalid conditioning table id {tb}")
-    n_tables = 1 + max(max(td, ta) for _, td, ta in sel)
-    stats = _Stats(n_tables, n_tables, len(comps))
-    dec = _ArithDecoder(data, pos)
-    if ss == 0 and se != 0:
-        raise ValueError("progressive DC scan with Se != 0")
-    if ss and len(sel) != 1:
-        raise ValueError("interleaved AC scan is illegal (T.81)")
-    conds = {ci: (td, dc_cond.get(td, (_DEFAULT_L, _DEFAULT_U)),
-                  ta, ac_cond.get(ta, _DEFAULT_KX)) for ci, td, ta in sel}
-    scomps = [(ci, comps[ci]["hi"], comps[ci]["vi"]) for ci, _, _ in sel]
-    for _rst, blocks in _scan_mcus(scomps, mcux, mcuy, h, w, hmax, vmax):
-        for ci, b in blocks:
-            td, dcc, ta, kx = conds[ci]
-            zz = coeffs[ci][b]
-            if ss and ah == 0:
-                _dec_ac_first_arith(dec, stats, ta, zz, ss, se, al, kx)
-            elif ss:
-                _dec_ac_refine_arith(dec, stats, ta, zz, ss, se, al)
-            elif ah == 0:
-                zz[0] = _dec_dc(dec, stats, ci, td, dcc) << al
-            elif dec.decode(stats.fixed, 0):
-                zz[0] = int(zz[0]) | (1 << al)
-    p = dec.marker_pos if dec.marker_pos >= 0 else dec.pos
-    return _find_marker(data, p)
-
-
-def _dec_ac_first_arith(dec, stats, tbl, zz, ss, se, al, kx):
-    st = stats.ac[tbl]
-    k = ss
-    while k <= se:
-        base = 3 * (k - 1)
-        if dec.decode(st, base):
-            return  # end-of-band
-        while dec.decode(st, base + 1) == 0:
-            base += 3
-            k += 1
-            if k > se:
-                raise ValueError("arithmetic AC band index overflow")
-        sign = dec.decode(stats.fixed, 0)
-        sp = base + 2
-        m = dec.decode(st, sp)
-        if m:
-            if dec.decode(st, sp):
-                m <<= 1
-                sp = 189 if k <= kx else 217
-                while dec.decode(st, sp):
-                    m <<= 1
-                    if m == 0x8000:
-                        raise ValueError(
-                            "arithmetic AC magnitude overflow")
-                    sp += 1
-        v = m
-        sp += 14
-        while m >> 1:
-            m >>= 1
-            if dec.decode(st, sp):
-                v |= m
-        v = (v + 1) << al
-        zz[k] = -v if sign else v
-        k += 1
-
-
 def _dec_ac_refine_arith(dec, stats, tbl, zz, ss, se, al):
     st = stats.ac[tbl]
     p1 = 1 << al
@@ -864,3 +684,59 @@ def _dec_ac_refine_arith(dec, stats, tbl, zz, ss, se, al):
             if k > se:
                 raise ValueError("arithmetic AC refine index overflow")
         k += 1
+
+
+# ---------------------------------------------------------------------------
+# the scan decoder jpeg.decode_jpeg calls for SOF9 and SOF10 frames
+# ---------------------------------------------------------------------------
+def decode_arith_scan(data: bytes, pos: int, seg: bytes, comps, buf,
+                      frame, hmax, vmax, mcux, mcuy, dri: int,
+                      cond) -> int:
+    """Decode one arithmetic scan of a SOF9 or SOF10 frame into the
+    zigzag buffers ``buf``; returns the position of the marker after
+    it.  ``cond`` holds the DAC conditioning, ``(0, Tb) -> (L, U)`` and
+    ``(1, Tb) -> Kx``, the T.81 defaults where a table is absent.  A
+    sequential block is the DC model plus the AC-first band 1..63.
+    Restart markers in progressive scans are not supported."""
+    h, w, progressive = frame
+    if dri and progressive:
+        raise NotImplementedError(
+            "restart markers in progressive arithmetic scans are not "
+            "supported")
+    sel, ss, se, ah, al = _dct_scan_header(seg, comps, progressive)
+    used = ([td for _, td, _ in sel] if ss == 0 else []) \
+        + ([ta for _, _, ta in sel] if se else [])
+    # T.81 B.2.3: arithmetic conditioning table ids are 0..3
+    if not all(0 <= t <= 3 for t in used):
+        raise ValueError(f"invalid conditioning table ids {used}")
+    n_tables = 1 + max(used)
+    conds = {ci: (td, cond.get((0, td), (_DEFAULT_L, _DEFAULT_U)),
+                  ta, cond.get((1, ta), _DEFAULT_KX)) for ci, td, ta in sel}
+    k0 = max(ss, 1)
+    stats = _Stats(n_tables, n_tables, len(comps))
+    dec = _ArithDecoder(data, pos)
+    scomps = [(ci, comps[ci]["hi"], comps[ci]["vi"]) for ci, _, _ in sel]
+    for rst, blocks in _scan_mcus(scomps, mcux, mcuy, h, w, hmax, vmax, dri):
+        if rst >= 0:
+            # restart: the coder and statistics re-initialize (F.1.4)
+            p = dec.marker_pos if dec.marker_pos >= 0 else dec.pos
+            p = _find_marker(data, p)
+            if data[p + 1] != 0xD0 + rst:
+                raise ValueError(
+                    f"expected RST{rst} at {p}, got {data[p + 1]:#x}")
+            stats.reset()
+            dec = _ArithDecoder(data, p + 2)
+        for ci, b in blocks:
+            td, dcc, ta, kx = conds[ci]
+            zz = buf[ci][b]
+            if ss == 0:
+                if ah == 0:
+                    zz[0] = _dec_dc(dec, stats, ci, td, dcc) << al
+                elif dec.decode(stats.fixed, 0):
+                    zz[0] = int(zz[0]) | (1 << al)
+            if se and ah == 0:
+                _dec_ac_first_arith(dec, stats, ta, zz, k0, se, al, kx)
+            elif se:
+                _dec_ac_refine_arith(dec, stats, ta, zz, ss, se, al)
+    p = dec.marker_pos if dec.marker_pos >= 0 else dec.pos
+    return _find_marker(data, p)

@@ -41,6 +41,8 @@ from .jpeg import (
     _category,
     _dht_segments,
     _extend,
+    _find_marker,
+    _huff_table,
     _parse_sos,
     _read_symbol,
     _sos_segment,
@@ -121,11 +123,13 @@ def encode_jpeg_lossless(rgb: np.ndarray, predictor: int = 4) -> bytes:
 
 
 def decode_lossless_scan(data: bytes, pos: int, seg: bytes, comps,
-                         planes, frame, huff) -> int:
+                         planes, frame, hmax, vmax, mcux, mcuy, dri: int,
+                         huff) -> int:
     """Decode one SOF3 scan into ``planes`` (int64 HxW per component);
-    returns the position of the next marker."""
-    h, w, _nc = frame
-    if seg[0] != 1:
+    returns the position of the next marker.  The signature is every
+    scan decoder's; the MCU grid and restart interval are not read."""
+    h, w, _progressive = frame
+    if seg and seg[0] != 1:
         raise NotImplementedError("interleaved lossless scans")
     # Ss = predictor selection, Al = point transform
     ((ci, td, _ta),), sel, _se, _ah, pt = _parse_sos(seg, comps)
@@ -135,7 +139,7 @@ def decode_lossless_scan(data: bytes, pos: int, seg: bytes, comps,
         raise ValueError(f"invalid lossless predictor {sel}")
     if pt != 0:
         raise NotImplementedError("lossless point transform")
-    dct = huff[(0, td)]
+    dct = _huff_table(huff, 0, td)
     br = _BitReader(data, pos)
     x = planes[ci]
     for i in range(h):
@@ -150,6 +154,4 @@ def decode_lossless_scan(data: bytes, pos: int, seg: bytes, comps,
                 p = int(predict(int(x[i, j - 1]), int(x[i - 1, j]),
                                 int(x[i - 1, j - 1]), sel))
             x[i, j] = (p + d) & 0xFFFF  # H.1.2.1 modulo reduction
-    from .jpeg_arith import _find_marker
-
     return _find_marker(data, br.pos)

@@ -1,8 +1,11 @@
 """The shared JPEG scan layer: the T.81 Annex A.2 block walker against
 the standard's definition, the one SOS parser across every frame type,
-and the encoders' input validation."""
+the one frame decode (multi-scan and one-component sequential frames,
+malformed segments) and the encoders' input validation."""
 
 import itertools
+import os
+import sys
 
 import numpy as np
 import pytest
@@ -21,6 +24,10 @@ from proj_spark.sources.jpeg_arith import (
     encode_jpeg_arithmetic_progressive,
 )
 from proj_spark.sources.jpeg_lossless import encode_jpeg_lossless
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "tools"))
+from codec_parity import gray_raster, scan_per_component  # noqa: E402
 
 
 def _a2_spec(scomps, h, w, hmax, vmax, mcux, mcuy, ri):
@@ -122,3 +129,120 @@ def test_encoders_reject_bad_input_with_value_error(name, bad):
            else np.concatenate([_IMG, _IMG[..., :1]], axis=2))
     with pytest.raises(ValueError, match="shape"):
         _ALL_ENCODERS[name](arr)
+
+
+_INTERLEAVED = {"SOF0": encode_jpeg, "SOF9": encode_jpeg_arithmetic}
+
+
+@pytest.mark.parametrize("subsampling", sorted(_SUBSAMPLING))
+@pytest.mark.parametrize("frame", sorted(_INTERLEAVED))
+def test_scan_per_component_decodes_like_interleaved(frame, subsampling):
+    # T.81 lets a sequential frame code its components in separate
+    # scans (A.2.2); every scan fills the frame's one coefficient buffer
+    for ri in (0, 1, 3):
+        split = scan_per_component(_IMG, 90, subsampling, ri,
+                                   arithmetic=frame == "SOF9")
+        assert split.count(b"\xff\xda") == 3
+        want = decode_jpeg(_INTERLEAVED[frame](_IMG, 90, subsampling, ri))
+        assert np.array_equal(decode_jpeg(split), want), ri
+
+
+@pytest.mark.parametrize("subsampling", sorted(_SUBSAMPLING))
+@pytest.mark.parametrize("frame", sorted(_INTERLEAVED))
+def test_one_component_frame_decodes_to_gray_rgb(frame, subsampling):
+    gray = gray_raster(_IMG)
+    for ri in (0, 1, 3):
+        data = scan_per_component(gray, 90, subsampling, ri,
+                                  arithmetic=frame == "SOF9", gray=True)
+        out = decode_jpeg(data)
+        assert out.shape == _IMG.shape and out.dtype == np.uint8
+        assert np.array_equal(out[..., 1], out[..., 0])
+        assert np.array_equal(out[..., 2], out[..., 0])
+        # Y replicated: the interleaved encode of the gray raster has
+        # all-zero chroma, so it decodes to the same pixels
+        assert np.array_equal(out, decode_jpeg(encode_jpeg(gray, 90,
+                                                           subsampling, ri)))
+        err = out[..., 0].astype(np.int64) - gray[..., 0]
+        assert np.abs(err).mean() < 8, ri
+
+
+def _segment(data: bytes, marker: int, nth: int = 0):
+    """(start, end) of the nth marker segment with this marker code."""
+    pos = 2
+    while True:
+        code = data[pos + 1]
+        end = pos + 2 + int.from_bytes(data[pos + 2:pos + 4], "big")
+        if code == marker:
+            if nth == 0:
+                return pos, end
+            nth -= 1
+        pos = end
+        if code == 0xDA:  # skip the scan's entropy data
+            while not (data[pos] == 0xFF and data[pos + 1] not in (
+                    0x00, *range(0xD0, 0xD8))):
+                pos += 1
+
+
+def _with_payload(data: bytes, marker: int, edit, nth: int = 0) -> bytes:
+    """``data`` with the nth ``marker`` segment's payload replaced by
+    ``edit(payload)`` and its length field rewritten to match."""
+    a, b = _segment(data, marker, nth)
+    body = bytes(edit(bytearray(data[a + 4:b])))
+    return (data[:a + 2] + (len(body) + 2).to_bytes(2, "big") + body
+            + data[b:])
+
+
+def _set(i: int, v: int):
+    def edit(p):
+        p[i] = v
+        return p
+    return edit
+
+
+_BASE = encode_jpeg(_IMG, 90, "4:2:0")
+_PROG = encode_jpeg_progressive(_IMG, 90, "4:2:0")
+_ARITH = encode_jpeg_arithmetic(_IMG)
+_MALFORMED = {  # case: (stream, the ValueError's message)
+    "truncated_dht": (_with_payload(_BASE, 0xC4, lambda p: p[:20]),
+                      "truncated DHT"),
+    "truncated_dqt": (_with_payload(_BASE, 0xDB, lambda p: p[:30]),
+                      "truncated DQT"),
+    "truncated_sof": (_with_payload(_BASE, 0xC0, lambda p: p[:10]),
+                      "SOF segment of 10 bytes for 3 components"),
+    "truncated_dac": (_with_payload(_ARITH, 0xCC, lambda p: p[:3]),
+                      "truncated DAC"),
+    "truncated_dri": (_with_payload(encode_jpeg(_IMG, 90, "4:2:0", 2), 0xDD,
+                                    lambda p: p[:1]), "bad DRI"),
+    "empty_sos": (_with_payload(_BASE, 0xDA, lambda p: p[:0]),
+                  "bad SOS segment"),
+    "segment_overruns_stream": (_BASE[:_segment(_BASE, 0xC4)[0] + 30],
+                                "overruns the stream"),
+    "cut_after_marker": (_BASE[:_segment(_BASE, 0xC4)[0] + 2],
+                         "overruns the stream"),
+    # SOS Td of Y -> 2: no DC table 2 was defined
+    "undefined_huffman_table": (_with_payload(_BASE, 0xDA, _set(2, 0x20)),
+                                "undefined Huffman table class 0 id 2"),
+    # SOF Tq of Y -> 2: no quantization table 2 was defined
+    "undefined_quantization_table": (
+        _with_payload(_BASE, 0xC0, _set(8, 2)),
+        "undefined quantization table 2"),
+    # conditioning table ids are 0..3 (T.81 B.2.3)
+    "undefined_conditioning_table": (
+        _with_payload(_ARITH, 0xDA, _set(2, 0x50)),
+        "invalid conditioning table ids"),
+    # the last progressive scan is Y's AC refinement, Ss=1 Se=63
+    "progressive_se_64": (_with_payload(_PROG, 0xDA, _set(4, 64), nth=9),
+                          "Ss=1 Se=64"),
+    # the second one is Y's first AC band, Ss=1 Se=5
+    "progressive_ss_above_se": (
+        _with_payload(_PROG, 0xDA, _set(3, 9), nth=1), "Ss=9 Se=5"),
+    "component_twice_in_scan": (_with_payload(_BASE, 0xDA, _set(3, 1)),
+                                "names component 1 twice"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_MALFORMED))
+def test_malformed_segments_raise_value_error(case):
+    data, message = _MALFORMED[case]
+    with pytest.raises(ValueError, match=message):
+        decode_jpeg(data)

@@ -13,11 +13,18 @@ Inputs: ``encode_jpeg``, ``encode_jpeg_progressive`` and
 included), the four subsamplings, qualities 50/90/98 and restart
 intervals 0/1/3; ``encode_jpeg_arithmetic_progressive`` over the sizes
 and subsamplings; ``encode_jpeg_lossless`` with predictors 1-7, RGB and
-gray.  Each stream gets 3 random byte flips, 3 flips inside marker
+gray; and, from :func:`scan_per_component`, SOF0 and SOF9 streams
+written as one scan per component ("split/base", "split/arith"; their
+twins are the "base" and "arith" streams at q90) and one-component
+streams of a gray raster ("gray/base", "gray/arith"; twin: its
+interleaved encode, "gray/interleaved"), at every size, subsampling and
+restart interval.  Each stream gets 3 random byte flips, 3 flips inside marker
 segments, its first SOS component id set to 9, 3 random truncations and
 2 truncations inside an SOS header; the outcome of a decode is the hash
 of the decoded array or the exception type.  ``diff`` prints how many
-outcomes changed, grouped by (parent outcome, change outcome).  The
+outcomes changed, grouped by (parent outcome, change outcome) with every
+hash shown as ``array``, and per tree how many scan-per-component
+streams decode to their twin's hash.  The
 address space is capped at 4 GiB, so a corrupted frame size fails with
 ``MemoryError`` instead of exhausting the host.
 """
@@ -28,6 +35,7 @@ import collections
 import hashlib
 import json
 import resource
+import struct
 import sys
 
 import numpy as np
@@ -93,17 +101,118 @@ def _streams():
                 for ri in (0, 1, 3):
                     for name, enc in dct:
                         yield (f"{name}/{h}x{w}/{sub}/q{q}/ri{ri}",
-                               lambda e=enc, s=sub, q=q, r=ri: e(
-                                   img, quality=q, subsampling=s,
+                               lambda i=img, e=enc, s=sub, q=q, r=ri: e(
+                                   i, quality=q, subsampling=s,
                                    restart_interval=r))
             yield (f"aprog/{h}x{w}/{sub}",
-                   lambda s=sub: encode_jpeg_arithmetic_progressive(
-                       img, subsampling=s))
+                   lambda i=img, s=sub: encode_jpeg_arithmetic_progressive(
+                       i, subsampling=s))
         for p in range(1, 8):
             yield (f"lossless/{h}x{w}/p{p}/rgb",
-                   lambda p=p: encode_jpeg_lossless(img, predictor=p))
+                   lambda i=img, p=p: encode_jpeg_lossless(i, predictor=p))
             yield (f"lossless/{h}x{w}/p{p}/gray",
-                   lambda p=p: encode_jpeg_lossless(img[:, :, 0], predictor=p))
+                   lambda i=img, p=p: encode_jpeg_lossless(i[:, :, 0],
+                                                           predictor=p))
+
+
+def gray_raster(img):
+    """``img``'s first channel as an RGB raster with R = G = B, whose
+    interleaved encode decodes to the Y plane replicated to RGB."""
+    return np.repeat(img[:, :, :1], 3, axis=2)
+
+
+def scan_per_component(rgb, quality=90, subsampling="4:4:4",
+                       restart_interval=0, arithmetic=False, gray=False):
+    """A sequential stream of the DCT encoders' coefficients written as
+    one scan per component (T.81 A.2.2), in component order: SOF0 with
+    the Annex K Huffman tables, or SOF9 with the default conditioning
+    when ``arithmetic``.  ``gray`` writes the Y component alone, in a
+    one-component frame.  Decoding a stream must give the pixels of the
+    interleaved encoder's stream of the same raster; for ``gray``, of
+    :func:`gray_raster` of it."""
+    from proj_spark.sources.jpeg import (
+        _ANNEX_K_DHT, _ENC_AC, _ENC_DC, _BitWriter, _dct_scan, _dht_segments,
+        _dri_segment, _encode_block, _jfif_dqt_headers, _quantized_coeffs,
+        _scan_mcus, _sof_segment, _sos_segment)
+    from proj_spark.sources.jpeg_arith import (
+        _DAC_SEGMENT, _DEFAULT_KX, _DEFAULT_L, _DEFAULT_U, _ArithEncoder,
+        _enc_ac_first_arith, _enc_dc, _Stats)
+
+    comp_zz, qt, samp, hmax, vmax, mcux, mcuy, h, w = \
+        _quantized_coeffs(rgb, quality, subsampling)
+    ri = int(restart_interval)
+    marker = 0xC9 if arithmetic else 0xC0
+    out = bytearray(_jfif_dqt_headers(qt))
+    if gray:
+        hi, vi = samp[0]
+        out += bytes([0xFF, marker]) + struct.pack(
+            ">HBHHBBBB", 11, 8, h, w, 1, 1, (hi << 4) | vi, 0)
+    else:
+        out += _sof_segment(marker, h, w, samp)
+    out += _DAC_SEGMENT if arithmetic else _dht_segments(_ANNEX_K_DHT)
+    out += _dri_segment(ri)
+    for c in (0,) if gray else (0, 1, 2):
+        sel, scomps = _dct_scan((c,), samp)
+        out += _sos_segment(sel, 0, 63, 0, 0)
+        t = min(c, 1)
+        coder = _ArithEncoder() if arithmetic else _BitWriter()
+        stats, pred = _Stats(2, 2, 3), 0
+        for rst, blocks in _scan_mcus(scomps, mcux, mcuy, h, w, hmax, vmax,
+                                      ri):
+            if rst >= 0 and arithmetic:
+                coder.flush()
+                out += coder.out + bytes([0xFF, 0xD0 + rst])
+                coder = _ArithEncoder()
+                stats.reset()
+            elif rst >= 0:
+                coder.restart(rst)
+                pred = 0
+            for _c, b in blocks:
+                zz = comp_zz[c][b]
+                if arithmetic:
+                    _enc_dc(coder, stats, c, t, int(zz[0]),
+                            (_DEFAULT_L, _DEFAULT_U))
+                    _enc_ac_first_arith(coder, stats, t, zz, 1, 63, 0,
+                                        _DEFAULT_KX)
+                else:
+                    pred = _encode_block(coder, zz, pred, _ENC_DC[t],
+                                         _ENC_AC[t])
+        coder.flush()
+        out += coder.out
+    out += b"\xff\xd9"
+    return bytes(out)
+
+
+def _scan_per_component_streams():
+    from proj_spark.sources.jpeg import encode_jpeg
+
+    for h, w in SIZES:
+        img = _raster(h, w, h * 100 + w)
+        gray = gray_raster(img)
+        for sub in SUBSAMPLINGS:
+            for ri in (0, 1, 3):
+                tail = f"{h}x{w}/{sub}/q90/ri{ri}"
+                yield (f"gray/interleaved/{tail}",
+                       lambda g=gray, s=sub, r=ri: encode_jpeg(g, 90, s, r))
+                for name, arith in (("base", False), ("arith", True)):
+                    yield (f"split/{name}/{tail}",
+                           lambda i=img, s=sub, r=ri, a=arith:
+                           scan_per_component(i, 90, s, r, arithmetic=a))
+                    yield (f"gray/{name}/{tail}",
+                           lambda g=gray, s=sub, r=ri, a=arith:
+                           scan_per_component(g, 90, s, r, arithmetic=a,
+                                              gray=True))
+
+
+def _twin(key: str):
+    """The interleaved stream a scan-per-component stream must decode
+    like, or None."""
+    group, name, tail = key.split("/", 2)
+    if group == "split":
+        return f"{name}/{tail}"
+    if group == "gray" and name != "interleaved":
+        return f"gray/interleaved/{tail}"
+    return None
 
 
 def _corruptions(s: bytes, rng):
@@ -127,13 +236,16 @@ def dump(path: str) -> None:
 
     resource.setrlimit(resource.RLIMIT_AS, (4 << 30, 4 << 30))
     enc, dec, fuzz = {}, {}, {}
-    streams = {}
-    for key, build in _streams():
-        enc[key] = _outcome(build)
-        if not enc[key].startswith("EXC:"):
-            streams[key] = build()
-            dec[key] = _outcome(lambda s=streams[key]: decode_jpeg(s))
-    for i, (key, s) in enumerate(sorted(streams.items())):
+    corpus = []  # the scan-per-component streams after the others
+    for gen in (_streams, _scan_per_component_streams):
+        streams = {}
+        for key, build in gen():
+            enc[key] = _outcome(build)
+            if not enc[key].startswith("EXC:"):
+                streams[key] = build()
+                dec[key] = _outcome(lambda s=streams[key]: decode_jpeg(s))
+        corpus += sorted(streams.items())
+    for i, (key, s) in enumerate(corpus):
         for j, (kind, p, v) in enumerate(
                 _corruptions(s, np.random.default_rng(1000 + i))):
             b = bytearray(s)
@@ -151,21 +263,32 @@ def dump(path: str) -> None:
     print(f"{len(enc)} encodes, {len(dec)} decodes, {len(fuzz)} fuzz inputs")
 
 
+def _class(outcome: str) -> str:
+    return outcome if outcome.startswith("EXC:") else "array"
+
+
 def diff(path_a: str, path_b: str) -> int:
     with open(path_a) as fa, open(path_b) as fb:
         a, b = json.load(fa), json.load(fb)
     changed = 0
     for part in ("enc", "dec", "fuzz"):
+        pairs = [(v, b[part].get(k, "missing")) for k, v in a[part].items()]
+        pairs += [("missing", v) for k, v in b[part].items()
+                  if k not in a[part]]
         moved = collections.Counter(
-            (v, b[part].get(k, "missing")) for k, v in a[part].items()
-            if b[part].get(k, "missing") != v)
-        moved.update(("missing", v) for k, v in b[part].items()
-                     if k not in a[part])
+            (_class(va), _class(vb)) for va, vb in pairs if va != vb)
         n = sum(moved.values())
         changed += n
         print(f"{part}: {len(a[part])} inputs, {n} changed")
         for (va, vb), c in moved.most_common():
             print(f"  {va} -> {vb}: {c}")
+    for name, d in (("parent", a), ("change", b)):
+        twins = {k: _twin(k) for k in d["dec"] if k.startswith(("split/",
+                                                                "gray/"))}
+        twins = {k: t for k, t in twins.items() if t}
+        same = sum(d["dec"][k] == d["dec"].get(t) for k, t in twins.items())
+        print(f"{name}: {same} of {len(twins)} scan-per-component streams "
+              f"decode to their twin's hash")
     return changed
 
 
