@@ -81,6 +81,13 @@ UNITS_TO_M = {
 INVALID_COORD = "Invalid coordinate"
 
 
+def _check_errors(errors: str) -> None:
+    """Reject an error mode other than "strict"/"mask" (a misspelt mode
+    must not switch the strict check off)."""
+    if errors not in ("strict", "mask"):
+        raise ValueError(f"errors must be 'strict' or 'mask', got {errors!r}")
+
+
 class ProjError(Exception):
     """Conversion/projection failure (reference ProjError,
     /root/reference/src/proj.rs:96-139)."""
@@ -189,13 +196,13 @@ def parse_proj_string(definition: str) -> list[dict]:
 # pipeline steps
 # ---------------------------------------------------------------------------
 class _StepBase:
-    """One pipeline step: apply(x, y, forward) -> (x, y).  Invalid points
-    come back NaN; error text accumulates on the owning Transform.
-
-    ``apply3`` carries z through the step (the reference's PJ_COORD is
-    always x/y/z/t — z is set on every call, /root/reference/src/
-    proj.rs:951-957, 1022-1030).  Horizontal steps pass z through
-    untouched; vertical steps (vgridshift) adjust z and leave x/y."""
+    """One pipeline step.  ``Transform._run`` calls every step through
+    ``apply3(x, y, z, forward) -> (x, y, z)``: z rides along like the
+    reference's PJ_COORD, which is always x/y/z/t (reference
+    src/proj.rs:951-957, 1022-1030), and is None on a 2D run.  Horizontal
+    steps implement ``apply(x, y, forward) -> (x, y)`` and pass z
+    through untouched; vertical steps (vgridshift) override ``apply3``,
+    adjust z and leave x/y.  Invalid points come back NaN."""
 
     has_inverse = True
     inv_flag = False
@@ -206,6 +213,13 @@ class _StepBase:
     def apply3(self, x, y, z, forward=True):
         x2, y2 = self.apply(x, y, forward=forward)
         return x2, y2, z
+
+
+class _IdentityStep(_StepBase):
+    """``+proj=noop``/``pop``/``push``: coordinates pass unchanged."""
+
+    def apply(self, x, y, forward=True):
+        return x, y
 
 
 class ProjStep(_StepBase):
@@ -423,7 +437,8 @@ class VGridShiftStep(_StepBase):
     ellipsoidal ``h = H + N``.  The horizontal position is unchanged,
     so the inverse ``z' = z - multiplier * N`` is exact.  Points
     outside the grid get z=NaN — maskable, the row-wise error model.
-    Evaluated through the 2D path the step is a no-op (no z to shift).
+    On a 2D run (z is None) the step is a no-op: no z to shift, so no
+    geoid lookup.
 
     The grid loads once per Python worker (vgrids.load_geoid cache,
     the O23 pattern) and evaluates on whole numpy columns."""
@@ -441,12 +456,11 @@ class VGridShiftStep(_StepBase):
         V.load_geoid(self.grids_name)  # fail at construction, like O1
         self.params = dict(params)
 
-    def apply(self, x, y, forward=True):
-        return x, y
-
     def apply3(self, x, y, z, forward=True):
         from . import vgrids as V
 
+        if z is None:
+            return x, y, z
         forward = forward != self.inv_flag
         grid = V.load_geoid(self.grids_name)
         lon = np.degrees(np.asarray(x, dtype=np.float64))
@@ -478,9 +492,7 @@ def make_step(params: dict) -> _StepBase:
     if name == "vgridshift":
         return VGridShiftStep(params)
     if name in ("noop", "pop", "push"):
-        s = _StepBase()
-        s.apply = lambda x, y, forward=True: (x, y)  # type: ignore[assignment]
-        return s
+        return _IdentityStep()
     return ProjStep(params)
 
 
@@ -1543,6 +1555,12 @@ class Transform:
       * row-wise: ``convert_array(..., errors="mask")`` returns
         ``(x, y, err)`` with NaN outputs and an error-message object array
         — the scalable mode for 10^12-row jobs.
+      * any other ``errors`` value raises ``ValueError``.
+
+    A point is invalid when an output x or y is not finite, or, on a
+    z-carrying call (``convert_array3``/``project_array3``), its z.
+    Every conversion method is one call of ``_run``; a 2D call is its
+    ``z=None`` case.
     """
 
     def __init__(self, steps, *, definition="", src=None, dst=None,
@@ -1752,16 +1770,29 @@ class Transform:
         return cls.new(spec)
 
     # -- execution ----------------------------------------------------
-    def _run(self, x, y, forward=True, errors="strict"):
+    def _run(self, x, y, z=None, forward=True, errors="strict"):
+        """The one runner behind every conversion: x/y (and z, when
+        given) through every step, then the error model.  Returns
+        ``(x, y[, z][, err])``, unwrapped to scalars for scalar input.
+        With ``z=None`` no step sees a z and none is returned."""
+        _check_errors(errors)
         x = np.asarray(x, dtype=np.float64)
         y = np.asarray(y, dtype=np.float64)
         scalar = x.ndim == 0
         x = np.atleast_1d(x).copy()
         y = np.atleast_1d(y).copy()
-        steps = self._steps if forward else list(reversed(self._steps))
+        if z is not None:
+            z = np.asarray(z, dtype=np.float64)
+            z = np.broadcast_to(np.atleast_1d(z), x.shape).copy()
+        steps = self._steps if forward else reversed(self._steps)
         for s in steps:
-            x, y = s.apply(x, y, forward=forward)
-        bad = ~(np.isfinite(x) & np.isfinite(y))
+            x, y, z = s.apply3(x, y, z, forward=forward)
+        ok = np.isfinite(x) & np.isfinite(y)
+        out = (x, y)
+        if z is not None:
+            ok &= np.isfinite(z)
+            out += (z,)
+        bad = ~ok
         if errors == "strict" and bad.any():
             # all-or-nothing, matching reference array semantics
             # (/root/reference/src/proj.rs:1259) and scalar error text
@@ -1769,53 +1800,20 @@ class Transform:
             raise ProjError(
                 f"The conversion failed with the following error: {INVALID_COORD}"
             )
-        err = None
         if errors == "mask":
-            err = np.where(bad, INVALID_COORD, None)
+            out += (np.where(bad, INVALID_COORD, None),)
         if scalar:
-            x, y = x[0], y[0]
-            err = err[0] if err is not None else None
-        if errors == "mask":
-            return x, y, err
-        return x, y
-
-    def _run3(self, x, y, z, forward=True, errors="strict"):
-        """Like _run with z carried through every step (the reference
-        sets z on every PJ_COORD, /root/reference/src/proj.rs:951-957,
-        1022-1030); vertical steps (vgridshift) act on it."""
-        x = np.asarray(x, dtype=np.float64)
-        y = np.asarray(y, dtype=np.float64)
-        z = np.asarray(z, dtype=np.float64)
-        scalar = x.ndim == 0
-        x = np.atleast_1d(x).copy()
-        y = np.atleast_1d(y).copy()
-        z = np.broadcast_to(np.atleast_1d(z), x.shape).copy()
-        steps = self._steps if forward else list(reversed(self._steps))
-        for s in steps:
-            x, y, z = s.apply3(x, y, z, forward=forward)
-        bad = ~(np.isfinite(x) & np.isfinite(y) & np.isfinite(z))
-        if errors == "strict" and bad.any():
-            raise ProjError(
-                f"The conversion failed with the following error: {INVALID_COORD}"
-            )
-        err = None
-        if errors == "mask":
-            err = np.where(bad, INVALID_COORD, None)
-        if scalar:
-            x, y, z = x[0], y[0], z[0]
-            err = err[0] if err is not None else None
-        if errors == "mask":
-            return x, y, z, err
-        return x, y, z
+            out = tuple(v[0] for v in out)
+        return out
 
     def convert_array3(self, x, y, z, errors: str = "strict"):
         """3D conversion, pipeline-forward — the z-carrying convert
         (reference z flow: src/proj.rs:1022-1030)."""
-        return self._run3(x, y, z, forward=True, errors=errors)
+        return self._run(x, y, z, errors=errors)
 
     def project_array3(self, x, y, z, inverse: bool = False,
                        errors: str = "strict"):
-        return self._run3(x, y, z, forward=not inverse, errors=errors)
+        return self._run(x, y, z, forward=not inverse, errors=errors)
 
     def project(self, x, y, inverse: bool = False, errors: str = "strict"):
         """Forward (or inverse) projection; geodetic radians domain for
@@ -1826,13 +1824,13 @@ class Transform:
     def convert(self, x, y, errors: str = "strict"):
         """Conversion, always pipeline-forward (Proj::convert,
         /root/reference/src/proj.rs:1011-1046)."""
-        return self._run(x, y, forward=True, errors=errors)
+        return self._run(x, y, errors=errors)
 
     # batch aliases — in numpy the scalar and array paths are the same
     # vectorized kernel (reference's convert_array/project_array,
     # /root/reference/src/proj.rs:1080-1123)
     def convert_array(self, x, y, errors: str = "strict"):
-        return self._run(x, y, forward=True, errors=errors)
+        return self._run(x, y, errors=errors)
 
     def project_array(self, x, y, inverse: bool = False, errors: str = "strict"):
         return self._run(x, y, forward=not inverse, errors=errors)
@@ -1848,7 +1846,7 @@ class Transform:
         ys = np.linspace(bottom, top, n)
         ex = np.concatenate([xs, np.full(n, right), xs[::-1], np.full(n, left)])
         ey = np.concatenate([np.full(n, bottom), ys, np.full(n, top), ys[::-1]])
-        tx, ty = self._run(ex, ey, forward=True, errors="strict")
+        tx, ty = self._run(ex, ey)
         return float(np.min(tx)), float(np.min(ty)), float(np.max(tx)), float(np.max(ty))
 
     # -- metadata -----------------------------------------------------

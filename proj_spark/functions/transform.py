@@ -8,17 +8,27 @@ transforms them in a single vectorized call, and the result returns as
 an Arrow struct column.  No per-row Python ever runs (input_hint
 contract, /root/repo/BASELINE.json:15).
 
+One batch body: every transform UDF here (``proj_udf``,
+``projstring_udf``, ``projstring_udf3``) is a thin closure around
+:func:`_transform_frame`, which marshals the Series to numpy, applies
+the degree handling, runs ``Transform._run`` (the one runner; a 2D UDF
+is its ``z=None`` case) and builds the output frame.  The ``errors``
+mode is checked when a UDF is built, not per batch.
+
 Per-worker transform cache: the reference keeps one PROJ context per
 thread because context setup dominates construction cost
 (reference src/context.rs:84-89).  Our analog is
-``_TRANSFORM_CACHE``, a module-level memo keyed by the transform spec.
-The UDF closures below are pickled by value, and cloudpickle would copy
-a global dict they name into every task's command, so they reach the
-cache only through :func:`_cached_transform`, which is pickled by
-reference: in a Python worker it is this module's function and the dict
-is this module's, kept for the life of the (reused) worker.  Kernel
-setup, grid loading included, runs once per worker process, not once
-per task or batch.
+``_TRANSFORM_CACHE``, a module-level memo keyed by the transform spec
+alone (the proj string, or the CRS pair plus its options), so every
+surface naming the same transform — these UDFs, ``transform_geometry``
+and the SQL ``proj_transform`` — shares one build per worker.  The UDF
+closures are pickled by value, and cloudpickle would copy a global dict
+they name into every task's command, so they reach the cache only
+through :func:`_cached_transform`, which is pickled by reference (like
+:func:`_transform_frame`): in a Python worker it is this module's
+function and the dict is this module's, kept for the life of the
+(reused) worker.  Kernel setup, grid loading included, runs once per
+worker process, not once per task or batch.
 """
 
 from __future__ import annotations
@@ -31,7 +41,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..crs import Transform
+from ..crs import Transform, _check_errors
 
 __all__ = [
     "proj_udf",
@@ -48,11 +58,20 @@ __all__ = [
 _TRANSFORM_CACHE: dict = {}
 
 
-def _cached_transform(key, build) -> Transform:
-    """``_TRANSFORM_CACHE[key]``, built by ``build()`` on first use."""
+def _cached_transform(spec, options: tuple = ()) -> Transform:
+    """The worker's one Transform for ``spec`` — a proj string /
+    ``AUTHORITY:CODE``, or a ``(src_crs, dst_crs)`` pair built by
+    ``new_known_crs`` with the sorted ``options`` items — built on first
+    use.  Nothing else goes into the key, so every surface naming the
+    same transform shares one build."""
+    key = (spec, options)
     t = _TRANSFORM_CACHE.get(key)
     if t is None:
-        t = _TRANSFORM_CACHE[key] = build()
+        if isinstance(spec, tuple):
+            t = Transform.new_known_crs(spec[0], spec[1], **dict(options))
+        else:
+            t = Transform.new(spec)
+        _TRANSFORM_CACHE[key] = t
     return t
 
 
@@ -61,8 +80,36 @@ def get_transform(spec) -> Transform:
     "EPSG:A->EPSG:B" pair tuple, proj string, or Transform instance."""
     if isinstance(spec, Transform):
         return spec
-    key = spec if isinstance(spec, str) else tuple(spec)
-    return _cached_transform(key, lambda: Transform.from_spec(spec))
+    return _cached_transform(spec if isinstance(spec, str) else tuple(spec))
+
+
+def _transform_frame(t: Transform, x: pd.Series, y: pd.Series,
+                     z: Optional[pd.Series], inverse: bool, errors: str,
+                     input_units: str) -> pd.DataFrame:
+    """One Arrow batch through ``t``: the body of every transform UDF.
+
+    ``input_units="deg"`` feeds the kernel radians (and returns degrees
+    from an inverse run); z, when given, is in the pipeline's vertical
+    units and never rescaled.  Strict mode raises for the whole batch;
+    its ``err`` column is all null."""
+    xv = x.to_numpy(dtype=np.float64, na_value=np.nan)
+    yv = y.to_numpy(dtype=np.float64, na_value=np.nan)
+    zv = None if z is None else z.to_numpy(dtype=np.float64, na_value=np.nan)
+    deg = input_units == "deg"
+    if deg and not inverse:
+        xv = np.radians(xv)
+        yv = np.radians(yv)
+    out = t._run(xv, yv, zv, forward=not inverse, errors=errors)
+    ox, oy = out[:2]
+    if deg and inverse:
+        ox = np.degrees(ox)
+        oy = np.degrees(oy)
+    cols = {"x": ox, "y": oy}
+    if zv is not None:
+        cols["z"] = out[2]
+    cols["err"] = (out[-1] if errors == "mask"
+                   else np.full(len(xv), None, dtype=object))
+    return pd.DataFrame(cols)
 
 
 def proj_udf(src_crs: str, dst_crs: str, errors: str = "mask",
@@ -76,23 +123,16 @@ def proj_udf(src_crs: str, dst_crs: str, errors: str = "mask",
     errors="strict"-> all-or-nothing per Arrow batch, matching the
                       reference's array semantics
                       (/root/reference/src/proj.rs:1259)
+    any other value raises ``ValueError`` here, not per batch.
     """
+    _check_errors(errors)
     spec = (src_crs, dst_crs)
-    opts = dict(options)
+    opts = tuple(sorted(options.items()))
 
     @pandas_udf("x double, y double, err string")
     def _udf(x: pd.Series, y: pd.Series) -> pd.DataFrame:
-        t = _cached_transform(
-            (spec, tuple(sorted(opts.items())), inverse),
-            lambda: Transform.new_known_crs(spec[0], spec[1], **opts))
-        xv = x.to_numpy(dtype=np.float64, na_value=np.nan)
-        yv = y.to_numpy(dtype=np.float64, na_value=np.nan)
-        if errors == "strict":
-            ox, oy = t._run(xv, yv, forward=not inverse, errors="strict")
-            err = np.full(len(ox), None, dtype=object)
-        else:
-            ox, oy, err = t._run(xv, yv, forward=not inverse, errors="mask")
-        return pd.DataFrame({"x": ox, "y": oy, "err": err})
+        return _transform_frame(_cached_transform(spec, opts), x, y, None,
+                                inverse, errors, "unit")
 
     return _udf
 
@@ -105,28 +145,15 @@ def projstring_udf(definition: str, input_units: str = "deg",
 
     input_units="deg" converts degrees->radians before the kernel (for
     single-projection geodetic input); "unit" feeds the pipeline as-is.
-    Output is in the definition's CRS units.
+    Output is in the definition's CRS units.  ``errors`` as in
+    :func:`proj_udf`.
     """
+    _check_errors(errors)
 
     @pandas_udf("x double, y double, err string")
     def _udf(x: pd.Series, y: pd.Series) -> pd.DataFrame:
-        t = _cached_transform(
-            ("projstring", definition, input_units, inverse),
-            lambda: Transform.new(definition))
-        xv = x.to_numpy(dtype=np.float64, na_value=np.nan)
-        yv = y.to_numpy(dtype=np.float64, na_value=np.nan)
-        if input_units == "deg" and not inverse:
-            xv = np.radians(xv)
-            yv = np.radians(yv)
-        if errors == "strict":
-            ox, oy = t._run(xv, yv, forward=not inverse, errors="strict")
-            err = np.full(len(ox), None, dtype=object)
-        else:
-            ox, oy, err = t._run(xv, yv, forward=not inverse, errors="mask")
-        if input_units == "deg" and inverse:
-            ox = np.degrees(ox)
-            oy = np.degrees(oy)
-        return pd.DataFrame({"x": ox, "y": oy, "err": err})
+        return _transform_frame(_cached_transform(definition), x, y, None,
+                                inverse, errors, input_units)
 
     return _udf
 
@@ -137,30 +164,14 @@ def projstring_udf3(definition: str, input_units: str = "deg",
     z-carrying pipeline (vgridshift and friends; the reference sets z
     on every PJ_COORD, /root/reference/src/proj.rs:951-957, 1022-1030).
     z is in the pipeline's vertical units (meters for GTX geoids) and
-    is untouched by ``input_units``."""
+    is untouched by ``input_units``; a row whose z comes out NaN is an
+    invalid point."""
+    _check_errors(errors)
 
     @pandas_udf("x double, y double, z double, err string")
     def _udf(x: pd.Series, y: pd.Series, z: pd.Series) -> pd.DataFrame:
-        t = _cached_transform(
-            ("projstring3", definition, input_units, inverse),
-            lambda: Transform.new(definition))
-        xv = x.to_numpy(dtype=np.float64, na_value=np.nan)
-        yv = y.to_numpy(dtype=np.float64, na_value=np.nan)
-        zv = z.to_numpy(dtype=np.float64, na_value=np.nan)
-        if input_units == "deg" and not inverse:
-            xv = np.radians(xv)
-            yv = np.radians(yv)
-        if errors == "strict":
-            ox, oy, oz = t._run3(xv, yv, zv, forward=not inverse,
-                                 errors="strict")
-            err = np.full(len(ox), None, dtype=object)
-        else:
-            ox, oy, oz, err = t._run3(xv, yv, zv, forward=not inverse,
-                                      errors="mask")
-        if input_units == "deg" and inverse:
-            ox = np.degrees(ox)
-            oy = np.degrees(oy)
-        return pd.DataFrame({"x": ox, "y": oy, "z": oz, "err": err})
+        return _transform_frame(_cached_transform(definition), x, y, z,
+                                inverse, errors, input_units)
 
     return _udf
 

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..crs import Transform
+from ..crs import Transform, _check_errors
 from ..functions.transform import _cached_transform
 
 __all__ = [
@@ -140,10 +140,10 @@ def geom_triangle(p1, p2, p3) -> dict:
 
 
 # -- vectorized transform ---------------------------------------------------
-def _transform_geom_batch(kind: pd.Series, parts: pd.Series,
-                          offsets: pd.Series, t: Transform,
-                          errors: str) -> pd.DataFrame:
-    # flatten: one numpy array for the whole Arrow batch
+def _flatten_parts(parts: pd.Series):
+    """Every coordinate of a batch of geometries as two flat float64
+    arrays (one numpy array for the whole Arrow batch), plus each
+    geometry's list of part lengths in points."""
     flat_x, flat_y, shapes = [], [], []
     for geom_parts in parts:
         part_lens = []
@@ -154,23 +154,25 @@ def _transform_geom_batch(kind: pd.Series, parts: pd.Series,
                 flat_y.append(arr[:, 1])
             part_lens.append(len(part))
         shapes.append(part_lens)
-    if flat_x:
-        X = np.concatenate(flat_x)
-        Y = np.concatenate(flat_y)
-        if errors == "strict":
-            TX, TY = t.convert_array(X, Y)  # all-or-nothing, like the
-            # reference's array path (src/proj.rs:1259)
-        else:
-            TX, TY, _ = t.convert_array(X, Y, errors="mask")
-    else:
-        TX = TY = np.array([])
-    # reshape back
+    if not flat_x:
+        return np.array([]), np.array([]), shapes
+    return np.concatenate(flat_x), np.concatenate(flat_y), shapes
+
+
+def _transform_geom_batch(kind: pd.Series, parts: pd.Series,
+                          offsets: pd.Series, t: Transform,
+                          errors: str) -> pd.DataFrame:
+    X, Y, shapes = _flatten_parts(parts)
+    # one runner call for the batch; strict is all-or-nothing, like the
+    # reference's array path (src/proj.rs:1259)
+    TX, TY = t._run(X, Y, errors=errors)[:2] if len(X) else (X, Y)
+    XY = np.column_stack([TX, TY])
     out_parts = []
     pos = 0
     for part_lens in shapes:
         g = []
         for ln in part_lens:
-            g.append([[float(TX[pos + i]), float(TY[pos + i])] for i in range(ln)])
+            g.append(XY[pos:pos + ln].tolist())
             pos += ln
         out_parts.append(g)
     return pd.DataFrame({
@@ -196,17 +198,15 @@ def transform_geometry(
     (src/geo_types.rs:279-285) — which falls out naturally since a Rect
     stores only its corners.
     """
+    _check_errors(errors)
     spec = (src_crs, dst_crs)
-    opts = dict(options)
+    opts = tuple(sorted(options.items()))
 
     @pandas_udf(GEOMETRY_DDL)
     def _udf(g: pd.DataFrame) -> pd.DataFrame:
         # proj_udf's cache key: a worker builds each transform once
-        t = _cached_transform(
-            (spec, tuple(sorted(opts.items())), False),
-            lambda: Transform.new_known_crs(spec[0], spec[1], **opts))
         return _transform_geom_batch(g["kind"], g["parts"], g["offsets"],
-                                     t, errors)
+                                     _cached_transform(spec, opts), errors)
 
     return df.withColumn(geom_col, _udf(F.col(geom_col)))
 
@@ -217,22 +217,17 @@ def geom_bounds_udf():
 
     @pandas_udf("minx double, miny double, maxx double, maxy double")
     def _bounds(g: pd.DataFrame) -> pd.DataFrame:
-        from .. import _pyworker  # noqa: F401  (installs the worker patch)
-
+        X, Y, shapes = _flatten_parts(g["parts"])
         rows = []
-        for geom_parts in g["parts"]:
-            xs, ys = [], []
-            for part in geom_parts:
-                arr = np.array([np.asarray(p, dtype=np.float64) for p in part])
-                if arr.size:
-                    xs.append(arr[:, 0])
-                    ys.append(arr[:, 1])
-            if xs:
-                X = np.concatenate(xs)
-                Y = np.concatenate(ys)
-                rows.append((X.min(), Y.min(), X.max(), Y.max()))
+        pos = 0
+        for part_lens in shapes:
+            n = sum(part_lens)
+            if n:
+                x, y = X[pos:pos + n], Y[pos:pos + n]
+                rows.append((x.min(), y.min(), x.max(), y.max()))
             else:
                 rows.append((np.nan, np.nan, np.nan, np.nan))
+            pos += n
         return pd.DataFrame(rows, columns=["minx", "miny", "maxx", "maxy"])
 
     return _bounds

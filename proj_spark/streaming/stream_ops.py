@@ -11,6 +11,8 @@ point of keeping them declarative.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -54,6 +56,43 @@ def stream_tile_counts(
     )
 
 
+def _first_seen(key, pdfs, state, *, id_col, ts_col, state_ttl_ms,
+                key_col, key_cast, id_cast):
+    """``applyInPandasWithState`` body of the first-seen dedup streams:
+    per key, state (canonical_id = min id seen, n = running count),
+    updated from every micro-batch that touches the key and emitted as
+    one ``key_col, canonical_id, n_dups`` row.  The event-time timeout
+    sits ``state_ttl_ms`` past the key's last event, and strictly past
+    the current watermark."""
+    import pandas as pd
+
+    if state.hasTimedOut:
+        state.remove()
+        return
+    if state.exists:
+        min_id, n = state.get
+    else:
+        min_id, n = None, 0
+    last_ts_ms = None
+    for pdf in pdfs:
+        if len(pdf):
+            m = id_cast(pdf[id_col].min())
+            min_id = m if min_id is None else min(min_id, m)
+            n += len(pdf)
+            ts_ms = int(pdf[ts_col].max().value // 1_000_000)
+            last_ts_ms = ts_ms if last_ts_ms is None else max(last_ts_ms, ts_ms)
+    if min_id is None:
+        return
+    state.update((id_cast(min_id), int(n)))
+    state.setTimeoutTimestamp(
+        max(last_ts_ms + state_ttl_ms, state.getCurrentWatermarkMs() + 1)
+    )
+    yield pd.DataFrame(
+        [{key_col: key_cast(key[0]), "canonical_id": id_cast(min_id),
+          "n_dups": int(n)}]
+    )
+
+
 def stream_dedup_first_seen(
     stream_df: DataFrame,
     text_col: str = "text",
@@ -90,41 +129,11 @@ def stream_dedup_first_seen(
     )
     out_ddl = "text_hash string, canonical_id long, n_dups long"
     state_ddl = "canonical_id long, n long"
-
-    def _update(key, pdfs, state):
-        import pandas as pd
-
-        from .. import _pyworker  # noqa: F401  (installs the worker patch)
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            min_id, n = state.get
-        else:
-            min_id, n = None, 0
-        last_ts_ms = None
-        for pdf in pdfs:
-            if len(pdf):
-                m = int(pdf[id_col].min())
-                min_id = m if min_id is None else min(min_id, m)
-                n += len(pdf)
-                ts_ms = int(pdf[ts_col].max().value // 1_000_000)
-                last_ts_ms = ts_ms if last_ts_ms is None else max(last_ts_ms, ts_ms)
-        if min_id is None:
-            return
-        state.update((int(min_id), int(n)))
-        # timeout must be strictly beyond the current watermark
-        state.setTimeoutTimestamp(
-            max(last_ts_ms + state_ttl_ms,
-                state.getCurrentWatermarkMs() + 1)
-        )
-        yield pd.DataFrame(
-            [{"text_hash": key[0], "canonical_id": int(min_id), "n_dups": int(n)}]
-        )
-
+    update = functools.partial(
+        _first_seen, id_col=id_col, ts_col=ts_col, state_ttl_ms=state_ttl_ms,
+        key_col="text_hash", key_cast=str, id_cast=int)
     return hashed.groupBy("__h").applyInPandasWithState(
-        _update, out_ddl, state_ddl, "update", GroupStateTimeout.EventTimeTimeout
+        update, out_ddl, state_ddl, "update", GroupStateTimeout.EventTimeTimeout
     )
 
 
@@ -173,41 +182,11 @@ def stream_image_dedup_first_seen(
     )
     out_ddl = "phash long, canonical_id string, n_dups long"
     state_ddl = "canonical_id string, n long"
-
-    def _update(key, pdfs, state):
-        import pandas as pd
-
-        from .. import _pyworker  # noqa: F401  (installs the worker patch)
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            min_id, n = state.get
-        else:
-            min_id, n = None, 0
-        last_ts_ms = None
-        for pdf in pdfs:
-            if len(pdf):
-                m = str(pdf[id_col].min())
-                min_id = m if min_id is None else min(min_id, m)
-                n += len(pdf)
-                ts_ms = int(pdf[ts_col].max().value // 1_000_000)
-                last_ts_ms = ts_ms if last_ts_ms is None else max(last_ts_ms, ts_ms)
-        if min_id is None:
-            return
-        state.update((str(min_id), int(n)))
-        state.setTimeoutTimestamp(
-            max(last_ts_ms + state_ttl_ms,
-                state.getCurrentWatermarkMs() + 1)
-        )
-        yield pd.DataFrame(
-            [{"phash": int(key[0]), "canonical_id": str(min_id),
-              "n_dups": int(n)}]
-        )
-
+    update = functools.partial(
+        _first_seen, id_col=id_col, ts_col=ts_col, state_ttl_ms=state_ttl_ms,
+        key_col="phash", key_cast=int, id_cast=str)
     return keyed.groupBy("__ph").applyInPandasWithState(
-        _update, out_ddl, state_ddl, "update", GroupStateTimeout.EventTimeTimeout
+        update, out_ddl, state_ddl, "update", GroupStateTimeout.EventTimeTimeout
     )
 
 

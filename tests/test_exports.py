@@ -269,7 +269,8 @@ def test_vertical_and_compound_crs_round6():
     th = Transform.new("EPSG:27700")
     lam, phi = np.radians(-2.0), np.radians(53.0)
     assert t.project(lam, phi) == th.project(lam, phi)
-    x, y, z = t._run3(np.array([lam]), np.array([phi]), np.array([42.0]))
+    x, y, z = t.convert_array3(np.array([lam]), np.array([phi]),
+                               np.array([42.0]))
     assert z[0] == 42.0  # ballpark vertical: z carried, not invented
     tv = Transform.new("EPSG:5701")
     assert tv.convert(1.5, 2.5) == (1.5, 2.5)

@@ -195,6 +195,58 @@ def test_k15_rowwise_error_mode():
     assert np.isnan(x[1]) and err[1] == "Invalid coordinate"
 
 
+def test_misspelt_error_mode_raises():
+    # a mode other than "strict"/"mask" used to run unchecked: no raise,
+    # no error column
+    t = Transform.new_known_crs("EPSG:4326", "EPSG:3857")
+    x, y = np.array([10.0, 10.0]), np.array([50.0, 95.0])
+    for bad in ("Mask", "Strict", "raise", None):
+        with pytest.raises(ValueError, match="errors must be"):
+            t.convert_array(x, y, errors=bad)
+        with pytest.raises(ValueError, match="errors must be"):
+            t.convert_array3(x, y, 0.0, errors=bad)
+        with pytest.raises(ValueError, match="errors must be"):
+            t.convert(10.0, 50.0, errors=bad)
+
+
+_HORIZONTAL = {
+    "webmerc": ("EPSG:4326", "EPSG:3857"),
+    "utm": ("EPSG:4326", "EPSG:32632"),
+    "lcc": ("EPSG:2230", "EPSG:26946"),
+    "osgb": ("EPSG:27700", "EPSG:4326"),
+    "merc_ts": "+proj=merc +lat_ts=56.5 +ellps=GRS80",
+    "aeqd": "+proj=aeqd +lat_0=48.8566 +lon_0=2.3522 +ellps=WGS84 +units=m",
+    "hgrid": "+proj=pipeline +step +proj=hgridshift +grids=synthetic_shift.gsb",
+}
+
+
+@pytest.mark.parametrize("name", sorted(_HORIZONTAL))
+def test_3d_run_equals_2d_run_on_horizontal_pipelines(name):
+    """z rides along: on a pipeline with no vertical step the z-carrying
+    call gives the 2D call's x, y and errors, forward and inverse, and
+    keeps z."""
+    spec = _HORIZONTAL[name]
+    t = Transform.from_spec(spec)
+    rng = np.random.default_rng(7)
+    x = np.concatenate([rng.uniform(-3.5, 3.5, 200),
+                        [np.nan, np.inf, 0.0, np.pi, -np.pi, 2.0]])
+    y = np.concatenate([rng.uniform(-1.7, 1.7, 200),
+                        [0.5, 0.5, np.nan, np.pi / 2, -np.pi / 2, -np.inf]])
+    if isinstance(spec, tuple):  # CRS units in: degrees or metres
+        x, y = np.degrees(x), np.degrees(y)
+        if not spec[0].endswith("4326"):
+            x, y = x * 1e4, y * 1e4
+    for inverse in (False, True):
+        two = t.project_array(x, y, inverse=inverse, errors="mask")
+        three = t.project_array3(x, y, 0.0, inverse=inverse, errors="mask")
+        for a, b in zip(two, three[:2]):
+            np.testing.assert_array_equal(a, b)
+        np.testing.assert_array_equal(two[2], three[3])
+        assert not three[2].any()
+    np.testing.assert_array_equal(t.convert_array(x, y, errors="mask")[0],
+                                  t.convert_array3(x, y, 0, errors="mask")[0])
+
+
 def test_k17_def_normalization():
     # /root/reference/src/proj.rs:1641-1649
     t = Transform.new("+proj=longlat +datum=WGS84 +no_defs")

@@ -64,8 +64,15 @@ def test_transform_udfs_share_the_worker_cache(spark):
 
     from pyspark import cloudpickle
 
-    blob = cloudpickle.dumps([proj_udf("EPSG:4326", "EPSG:3857").func
-                              for _ in range(2)])
+    from proj_spark.functions.transform import (projstring_udf,
+                                                 projstring_udf3)
+
+    merc = "+proj=merc +lat_ts=56.5 +ellps=GRS80"
+    blob = cloudpickle.dumps(
+        [proj_udf("EPSG:4326", "EPSG:3857").func for _ in range(2)]
+        + [projstring_udf(merc).func,
+           projstring_udf(merc, input_units="unit", inverse=True).func,
+           projstring_udf3(merc).func])
     script = (
         "import sys\n"
         "import pandas as pd\n"
@@ -74,15 +81,45 @@ def test_transform_udfs_share_the_worker_cache(spark):
         "from proj_spark.functions import transform\n"
         "built = []\n"
         "for f in udfs:\n"
-        "    f(pd.Series([10.0]), pd.Series([50.0]))\n"
+        "    cols = [pd.Series([0.1])] * (f.__code__.co_argcount)\n"
+        "    f(*cols)\n"
         "    built.append([id(t) for t in transform._TRANSFORM_CACHE.values()])\n"
+        "transform.get_transform(('EPSG:4326', 'EPSG:3857'))\n"
+        "built.append([id(t) for t in transform._TRANSFORM_CACHE.values()])\n"
         "print(built)\n"
     )
     r = subprocess.run([sys.executable, "-c", script], input=blob,
                        capture_output=True, timeout=120)
     assert r.returncode == 0, r.stderr.decode()[-2000:]
-    first, second = ast.literal_eval(r.stdout.decode().splitlines()[-1])
+    first, second, *merc_udfs, sql = ast.literal_eval(
+        r.stdout.decode().splitlines()[-1])
     assert len(first) == 1 and second == first
+    # one Transform per definition, whatever the UDF's units, direction
+    # or z; the SQL proj_transform path shares proj_udf's
+    assert len(merc_udfs[0]) == 2 and merc_udfs[1:] == merc_udfs[:1] * 2
+    assert sql == merc_udfs[0]
+
+
+def test_transform_udfs_reject_a_misspelt_error_mode(spark):
+    from proj_spark.functions.transform import (projstring_udf,
+                                                 projstring_udf3)
+    from proj_spark.operators.geometry import (GEOMETRY_DDL, geom_point,
+                                               transform_geometry)
+
+    df = spark.createDataFrame(
+        pd.DataFrame({"geom": [geom_point(10.0, 50.0)]}),
+        schema=f"geom struct<{GEOMETRY_DDL}>")
+    merc = "+proj=merc +lat_ts=56.5 +ellps=GRS80"
+    builds = [lambda e: proj_udf("EPSG:4326", "EPSG:3857", errors=e),
+              lambda e: projstring_udf(merc, errors=e),
+              lambda e: projstring_udf3(merc, errors=e),
+              lambda e: with_transformed(df, "EPSG:4326", "EPSG:3857",
+                                         errors=e),
+              lambda e: transform_geometry(df, "EPSG:4326", "EPSG:3857",
+                                           errors=e)]
+    for build in builds:
+        with pytest.raises(ValueError, match="errors must be"):
+            build("Strict")
 
 
 def test_transform_geometry_with_options_uses_the_worker_cache(

@@ -85,14 +85,20 @@ def test_vgridshift_fwd_inv_and_multiplier():
     assert abs(z3[0] - (H - 0.5 * N)) < 1e-12
 
 
-def test_vgridshift_requires_grids_and_2d_noop():
+def test_vgridshift_requires_grids_and_2d_noop(monkeypatch):
     with pytest.raises(ProjCreateError, match="grids"):
         Transform.new("+proj=pipeline +step +proj=vgridshift")
     t = Transform.new(
         "+proj=pipeline +step +proj=vgridshift +grids=synthetic_geoid.gtx")
-    # 2D evaluation: no z to shift -> identity
+
+    def no_lookup(name):
+        raise AssertionError("2D run loaded the geoid")
+
+    # 2D evaluation: no z to shift -> identity, no geoid lookup
+    monkeypatch.setattr(V, "load_geoid", no_lookup)
     x, y = t.convert_array(np.array([0.1]), np.array([0.6]))
     assert x[0] == 0.1 and y[0] == 0.6
+    assert t.convert(0.1, 0.6) == (0.1, 0.6)
 
 
 def test_z_error_model_strict_and_mask():
@@ -103,11 +109,15 @@ def test_z_error_model_strict_and_mask():
     lon = np.radians([-117.5, 10.0])
     lat = np.radians([34.0, 50.0])
     z = np.array([100.0, 100.0])
-    ox, oy, oz, err = t._run3(lon.copy(), lat.copy(), z, errors="mask")
+    ox, oy, oz, err = t.convert_array3(lon.copy(), lat.copy(), z,
+                                       errors="mask")
     assert err[0] is None and err[1] is not None
     assert np.isnan(oz[1]) and not np.isnan(oz[0])
     with pytest.raises(ProjError):
         t.convert_array3(lon.copy(), lat.copy(), z, errors="strict")
+    # only z is invalid: the same points pass a 2D strict run
+    ox, oy = t.convert_array(lon.copy(), lat.copy(), errors="strict")
+    assert np.array_equal(ox, lon) and np.array_equal(oy, lat)
 
 
 def test_h_plus_v_pipeline_order():

@@ -1,0 +1,277 @@
+"""Transform parity between two trees: the outputs and error outcomes of
+the coordinate-transform surface, hashed per input.
+
+Run ``dump`` once per tree (the tree on ``PYTHONPATH`` is the one
+measured), then ``diff`` the two files:
+
+    PYTHONPATH=<parent tree> python tools/transform_parity.py dump parent.json
+    PYTHONPATH=<change tree> python tools/transform_parity.py dump change.json
+    python tools/transform_parity.py diff parent.json change.json
+
+Transforms: every registry code -> EPSG:4326 and EPSG:4326 -> every
+code (``new_known_crs``); the ``__spark_entry__`` proj strings
+``_MERC_TS`` and ``_AEQD_PARIS``; and the hgridshift, vgridshift and
+h+v pipelines over the grids in ``proj_spark/data``.  Each transform
+runs ``convert_array`` and ``project_array`` forward and inverse,
+strict and mask, ``convert_array3`` with z, three scalar ``convert``
+calls, ``transform_bounds`` and a misspelt ``errors`` mode.  The UDF
+batch bodies (``proj_udf``, ``projstring_udf`` in degrees and units,
+forward and inverse, ``projstring_udf3``, the geometry batch and
+``geom_bounds_udf``) are called directly on pandas Series, with no
+Spark session.
+
+Inputs are seeded points over the globe and over each CRS's area, plus
+NaN, +-Inf, |lat| > 90, both poles, the antimeridian, longitudes past
++-180 and points off every grid; a CRS->4326 run is fed the outputs of
+its 4326->CRS run.  An outcome is the sha256 of the float64 outputs
+(and the error column), or ``EXC:<class>: <message>``.  ``diff``
+prints how many outcomes changed, grouped by (parent, change) outcome
+class, with every hash shown as ``array``.
+"""
+
+from __future__ import annotations
+
+import collections
+import hashlib
+import json
+import sys
+
+import numpy as np
+
+GRIDS = {
+    "hgrid": "+proj=pipeline +step +proj=hgridshift +grids=synthetic_shift.gsb",
+    "hgrid2": ("+proj=pipeline +step +proj=hgridshift "
+               "+grids=synthetic_shift2.gsb"),
+    "vgrid": ("+proj=pipeline +step +proj=vgridshift "
+              "+grids=synthetic_geoid.gtx"),
+    "vgrid_half_inv": ("+proj=pipeline +step +proj=vgridshift "
+                       "+grids=synthetic_geoid.gtx +multiplier=0.5 +inv"),
+    "h+v": ("+proj=pipeline +step +proj=hgridshift +grids=synthetic_shift2.gsb"
+            " +step +proj=vgridshift +grids=synthetic_geoid.gtx"),
+}
+
+# lon, lat in degrees: NaN/Inf, past the poles, the poles, the
+# antimeridian and beyond, and the origin
+EDGES = np.array([
+    (np.nan, 0.0), (0.0, np.nan), (np.inf, 10.0), (-np.inf, 10.0),
+    (10.0, np.inf), (0.0, 90.0), (0.0, -90.0), (45.0, 91.0),
+    (45.0, -95.0), (180.0, 0.0), (-180.0, 0.0), (180.0000001, 45.0),
+    (-179.9999999, -45.0), (540.0, 10.0), (-720.0, 10.0), (0.0, 0.0),
+]).T
+
+
+def _hash_arrays(arrays) -> str:
+    h = hashlib.sha256()
+    for a in arrays:
+        a = np.asarray(a)
+        if a.dtype.kind not in "biuf":  # error messages, rows of lists
+            h.update(repr(a.tolist()).encode())
+        else:
+            h.update(repr(a.shape).encode() + a.astype(np.float64).tobytes())
+    return h.hexdigest()[:16]
+
+
+def _outcome(fn) -> str:
+    try:
+        r = fn()
+    except Exception as e:  # noqa: BLE001  (the class IS the outcome)
+        return f"EXC:{type(e).__name__}: {e}"
+    if hasattr(r, "columns"):  # a UDF's output frame
+        return _hash_arrays(
+            [np.asarray(list(r.columns), dtype=object)]
+            + [np.asarray(r[c].tolist(), dtype=object) for c in r.columns])
+    return _hash_arrays(r if isinstance(r, tuple) else (r,))
+
+
+def _points(seed, area=None):
+    rng = np.random.default_rng(seed)
+    lon = [rng.uniform(-180.0, 180.0, 64), EDGES[0]]
+    lat = [rng.uniform(-90.0, 90.0, 64), EDGES[1]]
+    if area is not None:
+        east = area.east + (360.0 if area.east < area.west else 0.0)
+        lon.append((rng.uniform(area.west, east, 64) + 180.0) % 360.0 - 180.0)
+        lat.append(rng.uniform(area.south, area.north, 64))
+    return np.concatenate(lon), np.concatenate(lat)
+
+
+def _record(out, name, build, x, y, z):
+    """Every runner entry point of one transform on one input set."""
+    try:
+        t = build()
+    except Exception as e:  # noqa: BLE001
+        out[name] = f"EXC:{type(e).__name__}: {e}"
+        return None
+    for errors in ("strict", "mask"):
+        out[f"{name}|convert_array|{errors}"] = _outcome(
+            lambda: t.convert_array(x.copy(), y.copy(), errors=errors))
+        out[f"{name}|project_array_inv|{errors}"] = _outcome(
+            lambda: t.project_array(x.copy(), y.copy(), inverse=True,
+                                    errors=errors))
+        out[f"{name}|convert_array3|{errors}"] = _outcome(
+            lambda: t.convert_array3(x.copy(), y.copy(), z.copy(),
+                                     errors=errors))
+        out[f"{name}|project_array3_inv|{errors}"] = _outcome(
+            lambda: t.project_array3(x.copy(), y.copy(), z.copy(),
+                                     inverse=True, errors=errors))
+        for i in (0, 64, len(x) - 1):
+            out[f"{name}|convert[{i}]|{errors}"] = _outcome(
+                lambda: t.convert(float(x[i]), float(y[i]), errors=errors))
+    out[f"{name}|convert_array|Mask"] = _outcome(
+        lambda: t.convert_array(x.copy(), y.copy(), errors="Mask"))
+    fin = np.isfinite(x) & np.isfinite(y)
+    if fin.any():
+        b = (float(np.min(x[fin])), float(np.min(y[fin])),
+             float(np.max(x[fin])), float(np.max(y[fin])))
+        out[f"{name}|transform_bounds"] = _outcome(
+            lambda: t.transform_bounds(*b))
+    return t
+
+
+def _registry(out):
+    from proj_spark.crs import Transform, registry_codes, resolve_crs
+
+    for i, code in enumerate(registry_codes()):
+        try:
+            area = resolve_crs(code).area
+        except Exception:  # noqa: BLE001
+            area = None
+        lon, lat = _points(i, area)
+        z = np.linspace(-50.0, 50.0, len(lon))
+        t = _record(out, f"4326->{code}",
+                    lambda: Transform.new_known_crs("EPSG:4326", code),
+                    lon, lat, z)
+        if t is None:
+            continue
+        try:
+            x, y, _ = t.convert_array(lon, lat, errors="mask")
+        except Exception:  # noqa: BLE001
+            x, y = lon, lat
+        _record(out, f"{code}->4326",
+                lambda: Transform.new_known_crs(code, "EPSG:4326"), x, y, z)
+
+
+def _pipelines(out):
+    import __spark_entry__ as E
+    from proj_spark.crs import Transform
+
+    defs = dict(GRIDS, merc_ts=E._MERC_TS, aeqd_paris=E._AEQD_PARIS)
+    rng = np.random.default_rng(99)
+    # the grids cover lon -120..-112, lat 31..36: most of the first 64
+    # points fall on them, the rest (and the edges) off them
+    lon = np.concatenate([rng.uniform(-121.0, -111.0, 64),
+                          rng.uniform(-180.0, 180.0, 64), EDGES[0]])
+    lat = np.concatenate([rng.uniform(30.5, 36.5, 64),
+                          rng.uniform(-90.0, 90.0, 64), EDGES[1]])
+    z = rng.uniform(-100.0, 100.0, len(lon))
+    for name, d in sorted(defs.items()):
+        t = _record(out, name, lambda: Transform.new(d),
+                    np.radians(lon), np.radians(lat), z)
+        if t is not None:
+            x, y, _ = t.convert_array(np.radians(lon), np.radians(lat),
+                                      errors="mask")
+            _record(out, f"{name}|inv_in", lambda: t, x, y, z)
+
+
+def _udfs(out):
+    import pandas as pd
+
+    import __spark_entry__ as E
+    from proj_spark.crs import Transform
+    from proj_spark.functions import transform as T
+    from proj_spark.operators import geometry as G
+
+    # a UDF's return DDL is parsed by the JVM; the bodies need none, so
+    # the factories here get a decorator that keeps the body as .func
+    def plain_udf(_ddl):
+        def wrap(f):
+            f.func = f
+            return f
+        return wrap
+
+    T.pandas_udf = G.pandas_udf = plain_udf
+    proj_udf, projstring_udf = T.proj_udf, T.projstring_udf
+    projstring_udf3 = T.projstring_udf3
+    rng = np.random.default_rng(7)
+    lon = np.concatenate([rng.uniform(-121.0, -111.0, 32),
+                          rng.uniform(-180.0, 180.0, 32), EDGES[0]])
+    lat = np.concatenate([rng.uniform(30.5, 36.5, 32),
+                          rng.uniform(-90.0, 90.0, 32), EDGES[1]])
+    xs, ys = pd.Series(lon), pd.Series(lat)
+    zs = pd.Series(rng.uniform(-100.0, 100.0, len(lon)))
+    for errors in ("mask", "strict", "Strict"):
+        for dst in ("EPSG:3857", "EPSG:32611", "EPSG:26946"):
+            for inverse in (False, True):
+                out[f"proj_udf|{dst}|{inverse}|{errors}"] = _outcome(
+                    lambda: proj_udf("EPSG:4326", dst, errors=errors,
+                                     inverse=inverse).func(xs, ys))
+        for name in ("merc_ts", "aeqd_paris", "hgrid2", "vgrid", "h+v"):
+            d = (GRIDS[name] if name in GRIDS
+                 else getattr(E, "_" + name.upper()))
+            for units in ("deg", "unit"):
+                for inverse in (False, True):
+                    key = f"{name}|{units}|{inverse}|{errors}"
+                    out[f"projstring_udf|{key}"] = _outcome(
+                        lambda: projstring_udf(
+                            d, input_units=units, inverse=inverse,
+                            errors=errors).func(xs, ys))
+                    out[f"projstring_udf3|{key}"] = _outcome(
+                        lambda: projstring_udf3(
+                            d, input_units=units, inverse=inverse,
+                            errors=errors).func(xs, ys, zs))
+    geoms = [G.geom_point(lon[0], lat[0]),
+             G.geom_linestring(list(zip(lon[:8], lat[:8]))),
+             G.geom_polygon([list(zip(lon[8:14], lat[8:14])),
+                             list(zip(lon[14:18], lat[14:18]))]),
+             G.geom_multipolygon([[list(zip(lon[20:24], lat[20:24]))],
+                                  [list(zip(lon[24:30], lat[24:30]))]]),
+             G.geom_rect((lon[30], lat[30]), (lon[31], lat[31])),
+             G.geom_multipoint(list(zip(lon[64:], lat[64:]))),
+             {"kind": "LineString", "parts": [[]], "offsets": None}]
+    frame = pd.DataFrame(geoms)
+    t = Transform.new_known_crs("EPSG:4326", "EPSG:3857")
+    for errors in ("mask", "strict"):
+        for lo, hi in ((0, 5), (0, 7), (5, 7), (6, 7)):
+            g = frame.iloc[lo:hi].reset_index(drop=True)
+            out[f"geom_batch|{lo}:{hi}|{errors}"] = _outcome(
+                lambda: G._transform_geom_batch(g["kind"], g["parts"],
+                                                g["offsets"], t, errors))
+    out["geom_bounds"] = _outcome(lambda: G.geom_bounds_udf().func(frame))
+
+
+def dump(path: str) -> None:
+    out: dict = {}
+    for part in (_registry, _pipelines, _udfs):
+        part(out)
+    with open(path, "w") as f:
+        json.dump(out, f, indent=0, sort_keys=True)
+    n_exc = sum(v.startswith("EXC:") for v in out.values())
+    print(f"{len(out)} outcomes, {n_exc} exceptions")
+
+
+def _class(outcome: str) -> str:
+    return outcome if outcome.startswith("EXC:") else "array"
+
+
+def diff(path_a: str, path_b: str) -> int:
+    with open(path_a) as fa, open(path_b) as fb:
+        a, b = json.load(fa), json.load(fb)
+    pairs = [(k, v, b.get(k, "missing")) for k, v in a.items()]
+    pairs += [(k, "missing", v) for k, v in b.items() if k not in a]
+    changed = [(k, va, vb) for k, va, vb in pairs if va != vb]
+    print(f"{len(a)} inputs, {len(changed)} changed")
+    moved = collections.Counter((_class(va), _class(vb))
+                                for _, va, vb in changed)
+    for (va, vb), c in moved.most_common():
+        example = next(k for k, x, y in changed
+                       if (_class(x), _class(y)) == (va, vb))
+        print(f"  {va} -> {vb}: {c}  (e.g. {example})")
+    return len(changed)
+
+
+if __name__ == "__main__":
+    if sys.argv[1:2] == ["dump"] and len(sys.argv) == 3:
+        dump(sys.argv[2])
+    elif sys.argv[1:2] == ["diff"] and len(sys.argv) == 4:
+        diff(sys.argv[2], sys.argv[3])
+    else:
+        sys.exit(__doc__)
