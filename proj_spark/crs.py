@@ -202,7 +202,17 @@ class _StepBase:
     src/proj.rs:951-957, 1022-1030), and is None on a 2D run.  Horizontal
     steps implement ``apply(x, y, forward) -> (x, y)`` and pass z
     through untouched; vertical steps (vgridshift) override ``apply3``,
-    adjust z and leave x/y.  Invalid points come back NaN."""
+    adjust z and leave x/y.  Invalid points come back NaN.
+
+    Non-finite rule: a step whose math reads a coordinate (a projection,
+    a datum shift) runs it only on the lanes in its domain, through
+    ``_on_lanes``, and writes NaN to every other lane; so does
+    ``DegRadStep`` for degrees entering from a geographic CRS.
+    Geodetic input is in the domain when lam and phi are finite and
+    |phi| <= 90 deg (+``LAT_EPS``, PROJ's forward-prepare check);
+    projected input when x and y are finite.  So no kernel sees a NaN,
+    an Inf or a latitude past a pole, and a bad row comes out NaN,
+    i.e. ``INVALID_COORD``."""
 
     has_inverse = True
     inv_flag = False
@@ -213,6 +223,24 @@ class _StepBase:
     def apply3(self, x, y, z, forward=True):
         x2, y2 = self.apply(x, y, forward=forward)
         return x2, y2, z
+
+
+def _geodetic_lanes(lam, phi):
+    """The geodetic lanes a step may compute on (``_StepBase``'s rule)."""
+    return (np.isfinite(lam) & np.isfinite(phi)
+            & (np.abs(phi) <= K.HALFPI + K.LAT_EPS))
+
+
+def _on_lanes(fn, ok, x, y):
+    """``fn(x, y)`` on the lanes where ``ok`` and NaN on the others;
+    ``fn`` is not called when no lane is ok."""
+    if ok.all():
+        return fn(x, y)
+    ox = np.full(x.shape, np.nan)
+    oy = np.full(x.shape, np.nan)
+    if ok.any():
+        ox[ok], oy[ok] = fn(x[ok], y[ok])
+    return ox, oy
 
 
 class _IdentityStep(_StepBase):
@@ -259,32 +287,37 @@ class ProjStep(_StepBase):
         self.has_inverse = True
 
     def apply(self, x, y, forward=True):
+        """The one gate in front of the kernels (``_StepBase``'s
+        non-finite rule): ``_fwd`` sees only finite lam/phi with
+        |phi| <= HALFPI + LAT_EPS, which is what makes the reference's
+        test_conversion_error raise "Invalid coordinate" (reference
+        src/proj.rs:1905-1918); ``_inv`` sees only
+        finite X/Y.  Every other lane comes back NaN."""
         forward = forward != self.inv_flag
+        x = np.asarray(x, dtype=np.float64)
+        y = np.asarray(y, dtype=np.float64)
         if self.is_angular:
             return x, y
         if forward:
-            lam = np.asarray(x, dtype=np.float64)
-            phi = np.asarray(y, dtype=np.float64)
-            # generic lat-range check, like PROJ's forward prepare; this is
-            # what makes the reference's test_conversion_error raise
-            # "Invalid coordinate" (/root/reference/src/proj.rs:1905-1918)
-            bad = np.abs(phi) > (K.HALFPI + K.LAT_EPS)
-            lam = lam - self.lam0
-            if not self.over:
-                lam = K.adjlon(lam)
             with np.errstate(invalid="ignore", divide="ignore", over="ignore"):
-                px, py = self._fwd(lam, phi, self.P)
-            X = (self.a * px + self.x0) / self.to_meter
-            Y = (self.a * py + self.y0) / self.to_meter
-            X = np.where(bad, np.nan, X)
-            Y = np.where(bad, np.nan, Y)
-            return X, Y
+                px, py = _on_lanes(self._fwd_lanes, _geodetic_lanes(x, y), x, y)
+            return ((self.a * px + self.x0) / self.to_meter,
+                    (self.a * py + self.y0) / self.to_meter)
         if not self.has_inverse:
             raise ProjError(f"projection {self.name} has no inverse")
-        X = (np.asarray(x, dtype=np.float64) * self.to_meter - self.x0) / self.a
-        Y = (np.asarray(y, dtype=np.float64) * self.to_meter - self.y0) / self.a
+        X = (x * self.to_meter - self.x0) / self.a
+        Y = (y * self.to_meter - self.y0) / self.a
         with np.errstate(invalid="ignore", divide="ignore", over="ignore"):
-            lam, phi = self._inv(X, Y, self.P)
+            return _on_lanes(self._inv_lanes, np.isfinite(X) & np.isfinite(Y), X, Y)
+
+    def _fwd_lanes(self, lam, phi):
+        lam = lam - self.lam0
+        if not self.over:
+            lam = K.adjlon(lam)
+        return self._fwd(lam, phi, self.P)
+
+    def _inv_lanes(self, X, Y):
+        lam, phi = self._inv(X, Y, self.P)
         lam = lam + self.lam0
         if not self.over:
             lam = K.adjlon(lam)
@@ -359,15 +392,18 @@ class DatumShiftStep(_StepBase):
         else:
             src_a, src_es, dst_a, dst_es = self.dst_a, self.dst_es, self.src_a, self.src_es
             first, second = self.dst_h, self.src_h
+
+        def shift(lam, phi):
+            X, Y, Z = K.geodetic_to_ecef(lam, phi, src_a, src_es)
+            if first is not None:
+                X, Y, Z = K.helmert_fwd(X, Y, Z, first)
+            if second is not None:
+                X, Y, Z = K.helmert_inv(X, Y, Z, second)
+            return K.ecef_to_geodetic(X, Y, Z, dst_a, dst_es)
+
         lam = np.asarray(x, dtype=np.float64)
         phi = np.asarray(y, dtype=np.float64)
-        X, Y, Z = K.geodetic_to_ecef(lam, phi, src_a, src_es)
-        if first is not None:
-            X, Y, Z = K.helmert_fwd(X, Y, Z, first)
-        if second is not None:
-            X, Y, Z = K.helmert_inv(X, Y, Z, second)
-        lam2, phi2 = K.ecef_to_geodetic(X, Y, Z, dst_a, dst_es)
-        return lam2, phi2
+        return _on_lanes(shift, _geodetic_lanes(lam, phi), lam, phi)
 
 
 class HGridShiftStep(_StepBase):
@@ -474,11 +510,18 @@ class VGridShiftStep(_StepBase):
 class DegRadStep(_StepBase):
     """Boundary degrees<->radians conversion added by CRS normalization
     (the analog of proj_normalize_for_visualization's unitconvert,
-    /root/reference/src/proj.rs:259-264)."""
+    reference src/proj.rs:259-264).  Forward, degrees enter from a
+    geographic CRS, so the geodetic rule applies: a latitude past a
+    pole is masked even when no projection follows (a datum shift
+    through ECEF would otherwise reflect it into a valid point)."""
 
     def apply(self, x, y, forward=True):
         f = math.pi / 180.0 if forward else 180.0 / math.pi
-        return np.asarray(x, dtype=np.float64) * f, np.asarray(y, dtype=np.float64) * f
+        x = np.asarray(x, dtype=np.float64) * f
+        y = np.asarray(y, dtype=np.float64) * f
+        if not forward:
+            return x, y
+        return _on_lanes(lambda lam, phi: (lam, phi), _geodetic_lanes(x, y), x, y)
 
 
 def make_step(params: dict) -> _StepBase:

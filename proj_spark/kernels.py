@@ -25,10 +25,10 @@ Every kernel is a triple ``(setup, fwd, inv)`` registered in
 ``PROJECTIONS``; ``setup(params) -> dict`` precomputes constants on the
 driver, ``fwd(lam, phi, P)`` / ``inv(x, y, P)`` run on executors inside
 Arrow-batched UDFs.  ``lam``/``phi`` are radians with ``lam`` already
-reduced by ``lon_0``; x/y are in units of the semi-major axis *a* (the
-generic wrapper in :mod:`proj_spark.crs` applies ``a``, false
-easting/northing and axis units, matching PROJ's generic fwd/inv
-pre/post steps).
+reduced by ``lon_0``; x/y are in units of the semi-major axis *a*.  The
+generic wrapper ``crs.ProjStep.apply`` applies ``a``, false
+easting/northing and axis units (PROJ's generic fwd/inv pre/post
+steps) and hands a kernel only finite, in-domain lanes.
 """
 
 from __future__ import annotations
@@ -192,18 +192,26 @@ def _msfn(sinphi, cosphi, es):
     return cosphi / np.sqrt(1.0 - es * sinphi * sinphi)
 
 
-def _phi2(ts, e, iterations=15, tol=1.0e-13):
+def _advance(x, x_new, step, live, tol):
+    """The one convergence rule of the tolerance loops: live lanes move
+    to ``x_new`` and a lane retires after its first ``|step| < tol``, so
+    a lane runs exactly the steps it would run alone."""
+    return np.where(live, x_new, x), live & ~(np.abs(step) < tol)
+
+
+def _phi2(ts, e):
     """Inverse of _tsfn: latitude from t (Snyder 7-9), fixed-point."""
     phi = HALFPI - 2.0 * np.arctan(ts)
-    for _ in range(iterations):
+    live = np.ones(np.shape(phi), dtype=bool)
+    for _ in range(15):
         con = e * fsin(phi)
         dphi = (
             HALFPI
             - 2.0 * np.arctan(ts * np.power((1.0 - con) / (1.0 + con), 0.5 * e))
             - phi
         )
-        phi = phi + dphi
-        if np.all(np.abs(dphi) < tol):
+        phi, live = _advance(phi, phi + dphi, dphi, live, 1.0e-13)
+        if not live.any():
             break
     return phi
 
@@ -218,28 +226,27 @@ def _qsfn(sinphi, e, one_es):
     )
 
 
-def _authlat_inv(q, e, one_es, qp, iterations=12):
+def _authlat_inv(q, e, one_es):
     """Latitude from authalic q (Snyder 3-16), Newton iteration."""
     phi = farcsin(np.clip(0.5 * q, -1.0, 1.0))
     if e < 1e-7:
         return phi
-    for _ in range(iterations):
+    for _ in range(12):
         sinphi = fsin(phi)
         cosphi = fcos(phi)
         con = e * sinphi
         com = 1.0 - con * con
-        with np.errstate(divide="ignore", invalid="ignore"):
-            dphi = (
-                0.5
-                * com
-                * com
-                / np.maximum(cosphi, 1e-300)
-                * (
-                    q / one_es
-                    - sinphi / com
-                    + (0.5 / e) * np.log((1.0 - con) / (1.0 + con))
-                )
+        dphi = (
+            0.5
+            * com
+            * com
+            / np.maximum(cosphi, 1e-300)
+            * (
+                q / one_es
+                - sinphi / com
+                + (0.5 / e) * np.log((1.0 - con) / (1.0 + con))
             )
+        )
         dphi = np.where(np.abs(cosphi) < 1e-12, 0.0, dphi)
         phi = phi + dphi
     return phi
@@ -385,12 +392,12 @@ def _conformal_lat_tan(phi, e):
     return tau * np.hypot(1.0, sigma) - sigma * np.hypot(1.0, tau)
 
 
-def _conformal_lat_tan_inv(taup, e, iterations=8):
+def _conformal_lat_tan_inv(taup, e):
     """tau from tau' by Newton (Karney 2011 eq. 19-21)."""
     # initial guess
     e2m = 1.0 - e * e
     tau = taup / e2m
-    for _ in range(iterations):
+    for _ in range(8):
         sigma = np.sinh(e * np.arctanh(e * tau / np.hypot(1.0, tau)))
         taupa = tau * np.hypot(1.0, sigma) - sigma * np.hypot(1.0, tau)
         dtau = (
@@ -530,15 +537,16 @@ def _mlfn(phi, sphi, cphi, en):
     return en[0] * phi - cphi * (en[1] + sphi * (en[2] + sphi * (en[3] + sphi * en[4])))
 
 
-def _inv_mlfn(arg, es, en, iterations=10, tol=1e-11):
+def _inv_mlfn(arg, es, en):
     k = 1.0 / (1.0 - es)
     phi = np.array(arg, copy=True, dtype=np.float64)
-    for _ in range(iterations):
+    live = np.ones(phi.shape, dtype=bool)
+    for _ in range(10):
         s = fsin(phi)
         t = 1.0 - es * s * s
         t = (_mlfn(phi, s, fcos(phi), en) - arg) * (t * np.sqrt(t)) * k
-        phi = phi - t
-        if np.all(np.abs(t) < tol):
+        phi, live = _advance(phi, phi - t, t, live, 1e-11)
+        if not live.any():
             break
     return phi
 
@@ -547,8 +555,7 @@ def _tmerc_approx_fwd(lam, phi, P):
     es, esp, k0, en = P["es"], P["esp"], P["k0"], P["en"]
     sinphi = fsin(phi)
     cosphi = fcos(phi)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = np.where(np.abs(cosphi) > 1e-10, sinphi / cosphi, 0.0)
+    t = np.where(np.abs(cosphi) > 1e-10, sinphi / cosphi, 0.0)
     t = t * t
     al = cosphi * lam
     als = al * al
@@ -586,8 +593,7 @@ def _tmerc_approx_inv(x, y, P):
     phi = _inv_mlfn(P["ml0"] + np.asarray(y) / k0, es, en)
     sinphi = fsin(phi)
     cosphi = fcos(phi)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = np.where(np.abs(cosphi) > 1e-10, sinphi / cosphi, 0.0)
+    t = np.where(np.abs(cosphi) > 1e-10, sinphi / cosphi, 0.0)
     n = esp * cosphi * cosphi
     con = 1.0 - es * sinphi * sinphi
     d = np.asarray(x) * np.sqrt(con) / k0
@@ -604,17 +610,16 @@ def _tmerc_approx_inv(x, y, P):
             )
         )
     )
-    with np.errstate(divide="ignore", invalid="ignore"):
-        lam = d * (
-            _FC1
-            - ds * _FC3 * (
-                1.0 + 2.0 * t + n
-                - ds * _FC5 * (
-                    5.0 + t * (28.0 + 24.0 * t + 8.0 * n) + 6.0 * n
-                    - ds * _FC7 * (61.0 + t * (662.0 + t * (1320.0 + 720.0 * t)))
-                )
+    lam = d * (
+        _FC1
+        - ds * _FC3 * (
+            1.0 + 2.0 * t + n
+            - ds * _FC5 * (
+                5.0 + t * (28.0 + 24.0 * t + 8.0 * n) + 6.0 * n
+                - ds * _FC7 * (61.0 + t * (662.0 + t * (1320.0 + 720.0 * t)))
             )
-        ) / cosphi
+        )
+    ) / cosphi
     at_pole = np.abs(phi) >= HALFPI
     phi_out = np.where(at_pole, np.sign(np.asarray(y)) * HALFPI, phi_out)
     lam = np.where(at_pole, 0.0, lam)
@@ -703,12 +708,10 @@ def lcc_inv(x, y, P):
         x = -x
         y = -y
     lam = np.arctan2(x, y) / n
-    with np.errstate(divide="ignore", invalid="ignore"):
-        if P["es"] > 0.0:
-            ts = np.power(rho / c, 1.0 / n)
-            phi = _phi2(ts, e)
-        else:
-            phi = 2.0 * np.arctan(np.power(c / rho, 1.0 / n)) - HALFPI
+    if P["es"] > 0.0:
+        phi = _phi2(np.power(rho / c, 1.0 / n), e)
+    else:
+        phi = 2.0 * np.arctan(np.power(c / rho, 1.0 / n)) - HALFPI
     phi = np.where(rho == 0.0, np.sign(n) * HALFPI, phi)
     return lam, phi
 
@@ -759,22 +762,22 @@ def _gauss_fwd(lam, phi, P):
     return P["C"] * lam, chi
 
 
-def _gauss_inv(lam, chi, P, iterations=20, tol=1e-14):
+def _gauss_inv(lam, chi, P):
     e = P["e"]
     lam_out = lam / P["C"]
     num = np.power(ftan(0.5 * chi + np.pi / 4.0) / P["K"], 1.0 / P["C"])
     phi = chi
-    for _ in range(iterations):
+    live = np.ones(np.shape(phi), dtype=bool)
+    for _ in range(20):
         con = e * fsin(phi)
         new = (
             2.0
             * np.arctan(num * np.power((1.0 + con) / (1.0 - con), 0.5 * e))
             - HALFPI
         )
-        if np.all(np.abs(new - phi) < tol):
-            phi = new
+        phi, live = _advance(phi, new, new - phi, live, 1e-14)
+        if not live.any():
             break
-        phi = new
     return lam_out, phi
 
 
@@ -797,17 +800,16 @@ def sterea_inv(x, y, P):
     c = 2.0 * np.arctan2(rho, R2)
     sinc = fsin(c)
     cosc = fcos(c)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        chi = np.where(
-            rho == 0.0,
-            P["chi0"],
-            farcsin(np.clip(cosc * P["sinc0"] + y * sinc * P["cosc0"] / np.where(rho == 0, 1, rho), -1, 1)),
-        )
-        lamc = np.where(
-            rho == 0.0,
-            0.0,
-            np.arctan2(x * sinc, rho * P["cosc0"] * cosc - y * P["sinc0"] * sinc),
-        )
+    chi = np.where(
+        rho == 0.0,
+        P["chi0"],
+        farcsin(np.clip(cosc * P["sinc0"] + y * sinc * P["cosc0"] / np.where(rho == 0, 1, rho), -1, 1)),
+    )
+    lamc = np.where(
+        rho == 0.0,
+        0.0,
+        np.arctan2(x * sinc, rho * P["cosc0"] * cosc - y * P["sinc0"] * sinc),
+    )
     return _gauss_inv(lamc, chi, P)
 
 
@@ -851,21 +853,22 @@ def eqearth_fwd(lam, phi, P):
     return x, P["rqda"] * y
 
 
-def eqearth_inv(x, y, P, iterations=12, tol=1e-14):
+def eqearth_inv(x, y, P):
     yr = np.asarray(y, dtype=np.float64) / P["rqda"]
     theta = np.array(yr, copy=True)
-    for _ in range(iterations):
+    live = np.ones(theta.shape, dtype=bool)
+    for _ in range(12):
         f, df = _eqearth_theta_poly(theta)
         dtheta = (yr - f) / df
-        theta = theta + dtheta
-        if np.all(np.abs(dtheta) < tol):
+        theta, live = _advance(theta, theta + dtheta, dtheta, live, 1e-14)
+        if not live.any():
             break
     _, dy = _eqearth_theta_poly(theta)
     lam = _EQE_M * np.asarray(x) * dy / (P["rqda"] * fcos(theta))
     beta = farcsin(np.clip(fsin(theta) / _EQE_M, -1.0, 1.0))
     if P["es"] > 0:
         q = P["qp"] * fsin(beta)
-        phi = _authlat_inv(q, P["e"], P["one_es"], P["qp"])
+        phi = _authlat_inv(q, P["e"], P["one_es"])
     else:
         phi = beta
     return lam, phi
@@ -939,7 +942,7 @@ def aea_inv(x, y, P):
     rr = rho / P["dd"]
     if P["es"] > 0:
         q = (P["c"] - rr * rr) / n
-        phi = _authlat_inv(q, P["e"], P["one_es"], float(_qsfn(1.0, P["e"], P["one_es"])))
+        phi = _authlat_inv(q, P["e"], P["one_es"])
     else:
         phi = farcsin(np.clip((P["c"] - rr * rr) / (2.0 * n), -1.0, 1.0))
     return lam, phi
@@ -987,8 +990,7 @@ def laea_fwd(lam, phi, P):
     cosb = np.sqrt(1.0 - sinb * sinb)
     coslam = fcos(lam)
     b = 1.0 + P["sinb1"] * sinb + P["cosb1"] * cosb * coslam
-    with np.errstate(divide="ignore", invalid="ignore"):
-        b = np.sqrt(2.0 / np.maximum(b, 1e-300))
+    b = np.sqrt(2.0 / np.maximum(b, 1e-300))
     x = P["xmf"] * b * cosb * fsin(lam)
     y = P["ymf"] * b * (P["cosb1"] * sinb - P["sinb1"] * cosb * coslam)
     return x, y
@@ -1001,19 +1003,18 @@ def laea_inv(x, y, P):
     ce = 2.0 * farcsin(np.clip(0.5 * rho / P["rq"], -1.0, 1.0))
     sce = fsin(ce)
     cce = fcos(ce)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        sinb = np.where(
-            rho == 0.0,
-            P["sinb1"],
-            cce * P["sinb1"] + y * sce * P["cosb1"] / np.where(rho == 0, 1, rho),
-        )
-        lam = np.where(
-            rho == 0.0,
-            0.0,
-            np.arctan2(x * sce, rho * P["cosb1"] * cce - y * P["sinb1"] * sce),
-        )
+    sinb = np.where(
+        rho == 0.0,
+        P["sinb1"],
+        cce * P["sinb1"] + y * sce * P["cosb1"] / np.where(rho == 0, 1, rho),
+    )
+    lam = np.where(
+        rho == 0.0,
+        0.0,
+        np.arctan2(x * sce, rho * P["cosb1"] * cce - y * P["sinb1"] * sce),
+    )
     if P["es"] > 0:
-        phi = _authlat_inv(P["qp"] * sinb, P["e"], P["one_es"], P["qp"])
+        phi = _authlat_inv(P["qp"] * sinb, P["e"], P["one_es"])
     else:
         phi = farcsin(np.clip(sinb, -1.0, 1.0))
     return lam, phi
@@ -1025,14 +1026,11 @@ def laea_inv(x, y, P):
 # visibility check is what raises "Invalid coordinate").
 # ---------------------------------------------------------------------------
 def geos_setup(params, a, es):
-    h = float(params["h"])
-    radius_g_1 = h / 1.0  # normalized by a at the step layer
-    return {"es": es, "h": h, "one_es": 1.0 - es}
+    return {"es": es, "h": float(params["h"]), "one_es": 1.0 - es}
 
 
-def geos_fwd(lam, phi, P, a=None):
+def geos_fwd(lam, phi, P):
     # normalized: radii in units of a
-    es = P["es"]
     radius_p = np.sqrt(P["one_es"])
     radius_p2 = P["one_es"]
     radius_g_1 = P["_h_over_a"]
@@ -1044,9 +1042,8 @@ def geos_fwd(lam, phi, P, a=None):
     vz = r * fsin(phi_c)
     vis = ((radius_g - vx) * vx - vy * vy - vz * vz / radius_p2) >= 0.0
     tmp = radius_g - vx
-    with np.errstate(invalid="ignore", divide="ignore"):
-        x = radius_g_1 * np.arctan(vy / np.hypot(vz, tmp))
-        y = radius_g_1 * np.arctan(vz / tmp)
+    x = radius_g_1 * np.arctan(vy / np.hypot(vz, tmp))
+    y = radius_g_1 * np.arctan(vz / tmp)
     x = np.where(vis, x, np.nan)
     y = np.where(vis, y, np.nan)
     return x, y
@@ -1067,13 +1064,12 @@ def geos_inv(x, y, P):
     Vy = ftan(np.asarray(x, dtype=np.float64) / radius_g_1) * np.hypot(1.0, Vz)
     qa = 1.0 + Vy * Vy + (Vz * Vz) / radius_p2
     det = radius_g * radius_g - qa * (radius_g * radius_g - 1.0)
-    with np.errstate(invalid="ignore", divide="ignore"):
-        k = (radius_g - np.sqrt(det)) / qa  # nearer root = visible side
-        vx = radius_g - k
-        vy = k * Vy
-        vz = k * Vz
-        lam = np.arctan2(vy, vx)
-        phi = np.arctan((vz / np.hypot(vx, vy)) / radius_p2)
+    k = (radius_g - np.sqrt(det)) / qa  # nearer root = visible side
+    vx = radius_g - k
+    vy = k * Vy
+    vz = k * Vz
+    lam = np.arctan2(vy, vx)
+    phi = np.arctan((vz / np.hypot(vx, vy)) / radius_p2)
     bad = ~(det >= 0.0)
     lam = np.where(bad, np.nan, lam)
     phi = np.where(bad, np.nan, phi)
@@ -1098,11 +1094,11 @@ def geodetic_to_ecef(lam, phi, a, es, h=0.0):
     return X, Y, Z
 
 
-def ecef_to_geodetic(X, Y, Z, a, es, iterations=10):
+def ecef_to_geodetic(X, Y, Z, a, es):
     lam = np.arctan2(Y, X)
     p = np.hypot(X, Y)
     phi = np.arctan2(Z, p * (1.0 - es))
-    for _ in range(iterations):
+    for _ in range(10):
         sinphi = fsin(phi)
         N = a / np.sqrt(1.0 - es * sinphi * sinphi)
         phi = np.arctan2(Z + es * N * sinphi, p)
@@ -1217,7 +1213,7 @@ def cea_inv(x, y, P):
     lam = x / P["k0"]
     if P["es"] > 0.0:
         q = 2.0 * np.asarray(y, dtype=np.float64) * P["k0"]
-        phi = _authlat_inv(q, P["e"], P["one_es"], P["qp"])
+        phi = _authlat_inv(q, P["e"], P["one_es"])
     else:
         phi = farcsin(np.clip(np.asarray(y, dtype=np.float64) * P["k0"], -1.0, 1.0))
     return lam, phi
@@ -1237,10 +1233,11 @@ def moll_setup(params, a, es):
     return {}
 
 
-def _moll_theta(phi, iterations=12, tol=1e-14):
+def _moll_theta(phi):
     k = np.pi * fsin(phi)
     theta = np.asarray(phi, dtype=np.float64).copy()
-    for _ in range(iterations):
+    live = np.ones(theta.shape, dtype=bool)
+    for _ in range(12):
         denom = 2.0 + 2.0 * fcos(2.0 * theta)
         # at the poles denom -> 0 and theta -> phi = +-pi/2 exactly
         step = np.where(
@@ -1248,8 +1245,8 @@ def _moll_theta(phi, iterations=12, tol=1e-14):
             (2.0 * theta + fsin(2.0 * theta) - k) / np.maximum(denom, 1e-14),
             0.0,
         )
-        theta = theta - step
-        if np.all(np.abs(step) < tol):
+        theta, live = _advance(theta, theta - step, step, live, 1e-14)
+        if not live.any():
             break
     return theta
 
@@ -1441,16 +1438,16 @@ def krovak_inv(x, y, P):
     # invert the gauss latitude by fixed point on phi
     e, B = P["e"], P["B"]
     inner = np.power(np.tan(0.5 * U + 0.25 * np.pi) / P["t0"], 1.0 / B)
-    phi = U.copy() if hasattr(U, "copy") else np.asarray(U, dtype=np.float64)
+    phi = U
+    live = np.ones(np.shape(phi), dtype=bool)
     for _ in range(15):
         esp = e * fsin(phi)
         phi_new = 2.0 * (np.arctan(
             inner * np.power((1.0 + esp) / (1.0 - esp), 0.5 * e)
         ) - 0.25 * np.pi)
-        if np.all(np.abs(phi_new - phi) < 1e-14):
-            phi = phi_new
+        phi, live = _advance(phi, phi_new, phi_new - phi, live, 1e-14)
+        if not live.any():
             break
-        phi = phi_new
     return lam, phi
 
 
@@ -1537,7 +1534,7 @@ def ortho_fwd(lam, phi, P):
     return np.where(far, np.nan, x), np.where(far, np.nan, y)
 
 
-def ortho_inv(x, y, P, iters: int = 8):
+def ortho_inv(x, y, P):
     x = np.asarray(x, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
     sp0, cp0 = P["sp0"], P["cp0"]
@@ -1556,7 +1553,7 @@ def ortho_inv(x, y, P, iters: int = 8):
         0.0)
     # fixed-count 2D Newton against the ellipsoidal forward
     h = 1e-8
-    for _ in range(iters):
+    for _ in range(8):
         fx, fy = ortho_fwd(lam, phi, P)
         rx, ry = fx - x, fy - y
         fxl, fyl = ortho_fwd(lam + h, phi, P)
@@ -1905,12 +1902,12 @@ def robin_fwd(lam, phi, P):
     return x, y
 
 
-def robin_inv(x, y, P, iters: int = 12):
+def robin_inv(x, y, P):
     x = np.asarray(x, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
     target = np.clip(np.abs(y) / _ROBIN_FYC, 0.0, 1.0)
     latd = np.clip(target * 90.0, 0.0, 90.0)  # near-linear init
-    for _ in range(iters):  # Newton on the monotone PDFE spline
+    for _ in range(12):  # Newton on the monotone PDFE spline
         f = _robin_eval(P["py"], latd) - target
         fp = np.maximum(_robin_eval_deriv(P["py"], latd), 1e-8)
         latd = np.clip(latd - f / fp, 0.0, 90.0)
@@ -1964,11 +1961,11 @@ def natearth_fwd(lam, phi, P):
     return x, _natearth_y(phi)
 
 
-def natearth_inv(x, y, P, iters: int = 10):
+def natearth_inv(x, y, P):
     x = np.asarray(x, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
     phi = y.copy()
-    for _ in range(iters):
+    for _ in range(10):
         phi = phi - (_natearth_y(phi) - y) / _natearth_dy(phi)
     lam = x / np.maximum(_natearth_xfac(phi * phi), 1e-12)
     return lam, phi
@@ -2110,14 +2107,14 @@ def wintri_fwd(lam, phi, P):
     return x, y
 
 
-def wintri_inv(x, y, P, iters: int = 20):
+def wintri_inv(x, y, P):
     x = np.atleast_1d(np.asarray(x, dtype=np.float64))
     y = np.atleast_1d(np.asarray(y, dtype=np.float64))
     # seed from the equidistant-cylindrical half of the average
     lam = x / ((P["cosphi1"] + 1.0) / 2.0)
     phi = y.copy()
     h = 1e-7
-    for _ in range(iters):
+    for _ in range(20):
         fx, fy = wintri_fwd(lam, phi, P)
         fx, fy = fx - x, fy - y
         dxdl = (wintri_fwd(lam + h, phi, P)[0] - (fx + x)) / h
@@ -2202,10 +2199,10 @@ def eck6_setup(params, a, es):
     return {}
 
 
-def _eck6_theta(phi, iters: int = 12):
+def _eck6_theta(phi):
     rhs = (1.0 + 0.5 * np.pi) * fsin(phi)
     theta = np.asarray(phi, dtype=np.float64).copy()
-    for _ in range(iters):
+    for _ in range(12):
         s, c = _fsincos(theta)
         theta = np.clip(theta - (theta + s - rhs)
                         / np.maximum(1.0 + c, 1e-9), -HALFPI, HALFPI)
@@ -2297,11 +2294,11 @@ def eck4_setup(params, a, es):
     return {}
 
 
-def _eck4_theta(phi, iters: int = 12):
+def _eck4_theta(phi):
     sphi = fsin(phi)
     rhs = _ECK4_CP * sphi
     theta = np.asarray(phi, dtype=np.float64) / 2.0
-    for _ in range(iters):
+    for _ in range(12):
         s, c = _fsincos(theta)
         f = theta + s * c + 2.0 * s - rhs
         fp = np.maximum(2.0 * c * (1.0 + c), 1e-9)
@@ -2704,13 +2701,13 @@ def nzmg_fwd(lam, phi, P):
     return w.imag, w.real
 
 
-def nzmg_inv(x, y, P, iters: int = 10):
+def nzmg_inv(x, y, P):
     x = np.atleast_1d(np.asarray(x, dtype=np.float64))
     y = np.atleast_1d(np.asarray(y, dtype=np.float64))
     w = y + 1j * x
     # published inverse-start polynomial, then Newton on the forward
     z = _zpoly1(w, _NZMG_CF)
-    for _ in range(iters):
+    for _ in range(10):
         f = _zpoly1(z, _NZMG_BF) - w
         # d/dz of sum B_k z^k = sum k B_k z^(k-1)
         d = np.zeros_like(z)

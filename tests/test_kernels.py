@@ -1783,3 +1783,82 @@ def test_round6_registry_longtail():
     t9 = Transform.new_known_crs("EPSG:4326", "EPSG:6677")
     x, y = t9.convert(139.767125, 35.681236)
     assert -6100 < x < -5900 and -35500 < y < -35200
+
+
+# -- one lane rule over the whole registry ---------------------------------
+# Every registry code, both directions against EPSG:4326: seeded lon/lat
+# over the globe and the code's area (the inverse is fed their forward
+# outputs) with bad lanes at seeded positions.  Forward bad lanes are NaN,
+# +-Inf and |lat| > 90; inverse bad lanes are NaN and +-Inf.
+_FWD_BAD = np.array([(np.nan, 10.0), (10.0, np.nan), (np.inf, 10.0),
+                     (-np.inf, 10.0), (10.0, np.inf), (10.0, -np.inf),
+                     (10.0, 91.0), (-20.0, -95.0)]).T
+_INV_BAD = np.array([(np.nan, 0.0), (0.0, np.nan), (np.inf, 0.0),
+                     (-np.inf, 0.0), (0.0, np.inf), (0.0, -np.inf),
+                     (np.inf, -np.inf), (np.nan, np.inf)]).T
+
+
+def _lane_cases():
+    """Yield ``(name, transform, x, y, bad)`` for every registry code and
+    direction; ``bad`` marks the lanes whose input no kernel may see."""
+    from proj_spark.crs import registry_codes, resolve_crs
+
+    for i, code in enumerate(registry_codes()):
+        rng = np.random.default_rng(i)
+        area = resolve_crs(code).area
+        east = area.east + (360.0 if area.east < area.west else 0.0)
+        lon = np.concatenate([rng.uniform(-180.0, 180.0, 8),
+                              (rng.uniform(area.west, east, 15) + 180.0)
+                              % 360.0 - 180.0])
+        lat = np.concatenate([rng.uniform(-90.0, 90.0, 8),
+                              rng.uniform(area.south, area.north, 15)])
+        # seeded final positions of the 8 bad lanes, shifted because
+        # np.insert takes indices into the array before insertion
+        at = np.sort(rng.choice(len(lon) + 8, 8, replace=False)) - np.arange(8)
+        fwd = Transform.new_known_crs("EPSG:4326", code)
+        x, y, _ = fwd.convert_array(lon, lat, errors="mask")
+        lon = np.insert(lon, at, _FWD_BAD[0])
+        lat = np.insert(lat, at, _FWD_BAD[1])
+        yield (f"4326->{code}", fwd, lon, lat,
+               ~(np.isfinite(lon) & np.isfinite(lat)) | (np.abs(lat) > 90.0))
+        # the inverse's bad lanes keep a real coordinate on the good
+        # axis; a masked forward row is a bad inverse lane too
+        good = np.flatnonzero(np.isfinite(x) & np.isfinite(y))[0]
+        x = np.insert(x, at, _INV_BAD[0] + x[good])
+        y = np.insert(y, at, _INV_BAD[1] + y[good])
+        yield (f"{code}->4326", Transform.new_known_crs(code, "EPSG:4326"),
+               x, y, ~(np.isfinite(x) & np.isfinite(y)))
+
+
+def test_nonfinite_lanes_are_masked_for_every_registry_code():
+    """The reference's per-point error model (proj_trans_array): a NaN,
+    +-Inf or out-of-range input is an invalid row in mask mode — never an
+    exception and never a finite point — and a ProjError in strict
+    mode."""
+    from proj_spark.crs import INVALID_COORD
+
+    for name, t, x, y, bad in _lane_cases():
+        try:
+            _, _, err = t.convert_array(x, y, errors="mask")
+        except Exception as e:  # noqa: BLE001
+            pytest.fail(f"{name}: mask mode raised {type(e).__name__}: {e}")
+        missed = np.flatnonzero(bad & (err != INVALID_COORD))
+        assert missed.size == 0, (name, list(zip(x[missed], y[missed])))
+        with pytest.raises(ProjError):
+            t.convert_array(x, y)
+
+
+def test_batch_equals_its_points_for_every_registry_code():
+    """A lane's result does not depend on its neighbours: a batch with
+    bad lanes interleaved equals its points converted one at a time,
+    bit for bit (NaN equal to NaN)."""
+    for name, t, x, y, _ in _lane_cases():
+        bx, by, berr = t.convert_array(x, y, errors="mask")
+        for i in range(len(x)):
+            px, py, perr = t.convert(float(x[i]), float(y[i]), errors="mask")
+            for b, p in ((bx[i], px), (by[i], py)):
+                same = (np.float64(b).view(np.int64)
+                        == np.float64(p).view(np.int64))
+                assert same or (np.isnan(b) and np.isnan(p)), (
+                    name, i, x[i], y[i], b, p)
+            assert berr[i] == perr, (name, i)

@@ -8,6 +8,16 @@ measured), then ``diff`` the two files:
     PYTHONPATH=<change tree> python tools/transform_parity.py dump change.json
     python tools/transform_parity.py diff parent.json change.json
 
+A changed hash cannot tell a fix from a regression.  ``rows`` and
+``rowdiff`` check row by row instead, over the registry cases only:
+``rows`` pickles each mask-mode batch row and the same point run alone,
+and ``rowdiff`` sorts every changed batch row into a known class (see
+``rowdiff``) and exits 1 when one is unexplained:
+
+    PYTHONPATH=<parent tree> python tools/transform_parity.py rows parent.pkl
+    PYTHONPATH=<change tree> python tools/transform_parity.py rows change.pkl
+    python tools/transform_parity.py rowdiff parent.pkl change.pkl
+
 Transforms: every registry code -> EPSG:4326 and EPSG:4326 -> every
 code (``new_known_crs``); the ``__spark_entry__`` proj strings
 ``_MERC_TS`` and ``_AEQD_PARIS``; and the hgridshift, vgridshift and
@@ -32,8 +42,10 @@ class, with every hash shown as ``array``.
 from __future__ import annotations
 
 import collections
+import functools
 import hashlib
 import json
+import pickle
 import sys
 
 import numpy as np
@@ -127,7 +139,10 @@ def _record(out, name, build, x, y, z):
     return t
 
 
-def _registry(out):
+def _registry_cases():
+    """``(name, build, x, y, z)`` for every registry code -> EPSG:4326
+    and back; a CRS->4326 case is fed the outputs of its 4326->CRS case
+    and is left out when that one cannot be built."""
     from proj_spark.crs import Transform, registry_codes, resolve_crs
 
     for i, code in enumerate(registry_codes()):
@@ -137,17 +152,24 @@ def _registry(out):
             area = None
         lon, lat = _points(i, area)
         z = np.linspace(-50.0, 50.0, len(lon))
-        t = _record(out, f"4326->{code}",
-                    lambda: Transform.new_known_crs("EPSG:4326", code),
-                    lon, lat, z)
-        if t is None:
+        fwd = functools.partial(Transform.new_known_crs, "EPSG:4326", code)
+        yield f"4326->{code}", fwd, lon, lat, z
+        try:
+            t = fwd()
+        except Exception:  # noqa: BLE001
             continue
         try:
             x, y, _ = t.convert_array(lon, lat, errors="mask")
         except Exception:  # noqa: BLE001
             x, y = lon, lat
-        _record(out, f"{code}->4326",
-                lambda: Transform.new_known_crs(code, "EPSG:4326"), x, y, z)
+        yield (f"{code}->4326",
+               functools.partial(Transform.new_known_crs, code, "EPSG:4326"),
+               x, y, z)
+
+
+def _registry(out):
+    for name, build, x, y, z in _registry_cases():
+        _record(out, name, build, x, y, z)
 
 
 def _pipelines(out):
@@ -268,10 +290,125 @@ def diff(path_a: str, path_b: str) -> int:
     return len(changed)
 
 
+def _row_run(fn):
+    """``(3, n)`` rows of x, y and a flag (0 valid, 1 masked) from a
+    mask-mode run, or the exception it raised."""
+    try:
+        x, y, err = fn()
+    except Exception as e:  # noqa: BLE001
+        return f"{type(e).__name__}: {e}"
+    return np.stack([np.atleast_1d(x), np.atleast_1d(y),
+                     np.atleast_1d(err != None)])  # noqa: E711
+
+
+def rows(path: str) -> None:
+    """Per-row outputs of the registry cases in mask mode: the batch
+    (``convert_array``, ``project_array`` inverse) and every point run
+    alone (``convert``, ``project`` inverse)."""
+    out = {}
+    for name, build, x, y, _ in _registry_cases():
+        try:
+            t = build()
+        except Exception:  # noqa: BLE001
+            continue
+        for entry, batch, one, units_in in (
+                ("convert", t.convert_array, t.convert, t._angular_io[0]),
+                ("project_inv",
+                 functools.partial(t.project_array, inverse=True),
+                 functools.partial(t.project, inverse=True),
+                 t._angular_io[1])):
+            points = [_row_run(lambda: one(float(x[i]), float(y[i]),
+                                           errors="mask"))
+                      for i in range(len(x))]
+            out[f"{name}|{entry}"] = {
+                "in": np.stack([x, y]),
+                "geographic_in": units_in == "deg",
+                "batch": _row_run(lambda: batch(x, y, errors="mask")),
+                "point": np.concatenate(
+                    [p if not isinstance(p, str) else
+                     np.array([[np.nan], [np.nan], [2.0]]) for p in points],
+                    axis=1),
+            }
+    with open(path, "wb") as f:
+        pickle.dump(out, f)
+    print(f"{len(out)} runs, {sum(len(v['in'][0]) for v in out.values())} rows")
+
+
+def _same(a, b):
+    """Bit-equal rows, NaN equal to NaN."""
+    return ((a.view(np.int64) == b.view(np.int64))
+            | (np.isnan(a) & np.isnan(b))).all(axis=0)
+
+
+def rowdiff(path_a: str, path_b: str) -> int:
+    """Classify every batch row that changed from tree A to tree B.  A
+    change is explained when A's batch raised; when both trees mask the
+    row; when the input is non-finite (or a latitude past a pole
+    entering from a geographic CRS) and B masks a row A returned valid;
+    when a CRS->4326 row is fed a 4326->CRS row that B changed (it is
+    classified in its own run); or when B's row equals A's per-point
+    run bit for bit, i.e. A's batch result depended on its neighbours.
+    Every other change is printed and counted as unexplained.  Reads
+    only pickles written by ``rows``."""
+    with open(path_a, "rb") as fa, open(path_b, "rb") as fb:
+        a, b = pickle.load(fa), pickle.load(fb)
+    moved = collections.Counter()
+    other = []
+    for key, ra in a.items():
+        rb = b[key]
+        x, y = ra["in"]
+        if isinstance(rb["batch"], str):
+            other.append((key, "all rows", rb["batch"]))
+            continue
+        if isinstance(ra["batch"], str):
+            moved[f"A raised {ra['batch'].split(':')[0]}"] += len(x)
+            continue
+        changed = ~_same(ra["batch"], rb["batch"])
+        masked_now = (ra["batch"][2] == 0) & (rb["batch"][2] == 1)
+        for i in np.flatnonzero(changed):
+            if ra["batch"][2, i] == 1 and rb["batch"][2, i] == 1:
+                moved["masked in both"] += 1
+                continue
+            if not _same(ra["in"][:, i:i + 1], rb["in"][:, i:i + 1])[0]:
+                if rb["batch"][2, i] == 0:  # the upstream row is checked
+                    moved["fed a row B changed upstream, valid in both"] += 1
+                    continue
+                cls = "fed a row B masks upstream, valid -> masked"
+            elif not (np.isfinite(x[i]) and np.isfinite(y[i])):
+                cls = "non-finite input, valid -> masked"
+            elif ra["geographic_in"] and abs(y[i]) > 90.0:
+                cls = "|lat| > 90 input, valid -> masked"
+            elif _same(rb["batch"][:, i:i + 1], ra["point"][:, i:i + 1])[0]:
+                moved["finite input, B batch == A per-point"] += 1
+                continue
+            else:
+                other.append((key, i, (x[i], y[i], ra["batch"][:, i],
+                                       rb["batch"][:, i])))
+                continue
+            if masked_now[i]:
+                moved[cls] += 1
+            else:
+                other.append((key, i, (cls, ra["batch"][:, i],
+                                       rb["batch"][:, i])))
+    n = sum(len(v["in"][0]) for v in a.values())
+    print(f"{len(a)} runs, {n} rows, "
+          f"{sum(moved.values()) + len(other)} changed")
+    for cls, c in moved.most_common():
+        print(f"  {cls}: {c}")
+    print(f"  unexplained: {len(other)}")
+    for o in other[:20]:
+        print("   ", o)
+    return len(other)
+
+
 if __name__ == "__main__":
     if sys.argv[1:2] == ["dump"] and len(sys.argv) == 3:
         dump(sys.argv[2])
     elif sys.argv[1:2] == ["diff"] and len(sys.argv) == 4:
         diff(sys.argv[2], sys.argv[3])
+    elif sys.argv[1:2] == ["rows"] and len(sys.argv) == 3:
+        rows(sys.argv[2])
+    elif sys.argv[1:2] == ["rowdiff"] and len(sys.argv) == 4:
+        sys.exit(1 if rowdiff(sys.argv[2], sys.argv[3]) else 0)
     else:
         sys.exit(__doc__)
