@@ -317,11 +317,15 @@ class ProjStep(_StepBase):
         return self._fwd(lam, phi, self.P)
 
     def _inv_lanes(self, X, Y):
+        """The inverse kernel, bounded like the forward's input: a lane
+        whose latitude comes out past a pole (projected input beyond the
+        map's edge) is NaN, i.e. ``INVALID_COORD``."""
         lam, phi = self._inv(X, Y, self.P)
         lam = lam + self.lam0
         if not self.over:
             lam = K.adjlon(lam)
-        return lam, phi
+        past = np.abs(phi) > K.HALFPI + K.LAT_EPS
+        return np.where(past, np.nan, lam), np.where(past, np.nan, phi)
 
 
 class UnitConvertStep(_StepBase):

@@ -26,19 +26,15 @@ from pyspark.sql.functions import pandas_udf
 
 __all__ = ["register_sql_functions"]
 
-_MASKS = [
-    (16, 0x0000FFFF0000FFFF),
-    (8, 0x00FF00FF00FF00FF),
-    (4, 0x0F0F0F0F0F0F0F0F),
-    (2, 0x3333333333333333),
-    (1, 0x5555555555555555),
-]
-
-
 def _sql_spread(v: str) -> str:
-    for shift, mask in _MASKS:
-        v = f"(({v} | shiftleft({v}, {shift})) & {mask}L)"
-    return v
+    """Morton spread of the 30-bit index ``v``: ``cells._col_spread``'s
+    6-bit multiply chunks (see the ``cells`` docstring), five of them,
+    since ``cell_id``'s level is a runtime argument (<= 26 bits) and the
+    geohash index is 30 bits; each chunk names ``v`` once."""
+    return "(" + " | ".join(
+        f"shiftleft(shiftright(((shiftright({v}, {k}) & 63L) * 1090785345L"
+        f" & 34630287489L) * 34636833L, 25) & 1365L, {2 * k})"
+        for k in range(0, 30, 6)) + ")"
 
 
 def _sql_ij(coord: str, off: float, span: float) -> str:

@@ -2442,7 +2442,10 @@ def vandg_inv(x, y, P):
             phi = np.where(general,
                            np.clip(phi - (fy * dxdl - fx * dydl) / det,
                                    -HALFPI, HALFPI), phi)
-    return lam, phi
+    # the map is the disc X^2 + Y^2 <= 1; outside it the polish
+    # diverges (|lam| ~ 1e22 rad), so those lanes are off the map
+    off = X2 + Y2 > 1.0 + _VANDG_EPS
+    return np.where(off, np.nan, lam), np.where(off, np.nan, phi)
 
 
 # ---------------------------------------------------------------------------

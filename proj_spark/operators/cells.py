@@ -13,7 +13,7 @@ properties the distributed layer needs (BASELINE.json north_rule):
     ``repartitionByRange`` on the cell column co-locates spatial
     neighborhoods.
 
-Everything here is expressed TWICE with identical bit logic:
+Everything here is expressed TWICE, with identical bits:
 
   * as Spark ``Column`` expressions (pure JVM, whole-stage codegen —
     the hot path; no Python worker involved).  This is the ONE
@@ -26,6 +26,26 @@ Everything here is expressed TWICE with identical bit logic:
     UDTF and the DuckDB oracle builder use.
 
 Tests assert the two agree bit-for-bit.
+
+The Morton spread (bit i -> bit 2i) differs between the two sides.
+numpy runs the classic five mask-and-shift steps ``v = (v | v << s) &
+mask``.  As a Column expression each of those steps names ``v`` twice,
+so the tree doubles per step and one axis index is copied 32 times.
+:func:`_col_spread` instead spreads 6 bits at a time by multiplication.
+For a chunk ``b = (c >> k) & 0x3F``:
+
+  * ``b * 0x41041041`` lays six copies of ``b`` 6 bits apart;
+  * ``& 0x810204081`` keeps bit j of copy j, at bit 7j;
+  * ``* 0x2108421`` adds six copies of those bits, 5 bits apart, so
+    bit j lands at 7j + 5i for i = 0..5; these 36 positions are all
+    distinct, so no addition carries, and i = 5 - j puts bit j at
+    25 + 2j;
+  * ``>> 25 & 0x555`` keeps exactly those, and ``<< 2k`` places the
+    chunk.
+
+Each chunk names ``c`` once, so a ``bits``-bit spread copies ``c``
+ceil(bits/6) times, and every product stays below 2^62: nothing can
+overflow a long under ANSI mode.
 """
 
 from __future__ import annotations
@@ -140,10 +160,19 @@ def np_cell_ring(cell, r: int) -> np.ndarray:
 # ---------------------------------------------------------------------------
 # Spark Column side (pure JVM bit math — stays inside WholeStageCodegen)
 # ---------------------------------------------------------------------------
-def _col_spread(c: Column) -> Column:
-    for shift, mask in _MASKS:
-        c = (c.bitwiseOR(F.shiftleft(c, shift))).bitwiseAND(F.lit(mask))
-    return c
+def _col_spread(c: Column, bits: int = 32) -> Column:
+    """Morton spread (bit i -> bit 2i) of the low ``bits`` bits of the
+    non-negative long ``c``, 6 bits per chunk (module docstring); at
+    least one chunk, so ``bits=0`` reads bit 0."""
+    out = None
+    for k in range(0, max(bits, 1), 6):
+        b = (F.shiftright(c, k) if k else c).bitwiseAND(0x3F)
+        s = F.shiftright(
+            (b * 0x41041041).bitwiseAND(0x810204081) * 0x2108421,
+            25).bitwiseAND(0x555)
+        s = F.shiftleft(s, 2 * k) if k else s
+        out = s if out is None else out.bitwiseOR(s)
+    return out
 
 
 def _col_compact(c: Column) -> Column:
@@ -160,7 +189,7 @@ def _col_index(v: Column, off: float, span: float, bits: int) -> Column:
     ``[0, 2^bits - 1]`` — one axis of every Column-side grid (cells,
     geohash, slippy-map tile x)."""
     n = 1 << bits
-    i = F.floor((v + F.lit(off)) / F.lit(span) * F.lit(float(n)))
+    i = F.floor((v + off) / span * float(n))
     return F.greatest(F.lit(0), F.least(F.lit(n - 1), i)).cast("long")
 
 
@@ -172,27 +201,31 @@ def _col_cell(ix: Column, iy: Column, level: int) -> Column:
     """Cell id ``(morton(ix, iy) << 5) | level`` of grid-index Columns."""
     if not 0 <= level <= MAX_LEVEL:
         raise ValueError(f"cell level must be in [0, {MAX_LEVEL}], got {level}")
-    morton = _col_spread(ix).bitwiseOR(F.shiftleft(_col_spread(iy), 1))
-    return F.shiftleft(morton, 5).bitwiseOR(F.lit(level))
+    morton = _col_spread(ix, level).bitwiseOR(
+        F.shiftleft(_col_spread(iy, level), 1))
+    return F.shiftleft(morton, 5).bitwiseOR(level)
 
 
 def _block_cells(df: DataFrame, ix: Column, iy: Column, dx, dy, level: int,
                  out: str) -> DataFrame:
     """One row per ``df`` row and per cell ``(ix+i mod 2^level, iy+j)``
     for ``i`` in ``dx`` and ``j`` in ``dy`` (inclusive ``(lo, hi)``
-    Column bounds), cell id in column ``out``.  Longitude wraps; rows
-    past a pole are dropped.  Relational — explode(dx) x explode(dy),
-    then ONE Morton spread per exploded row — so it stays pure JVM;
-    blocks wider than the globe repeat cells (callers dedup)."""
+    Column bounds), cell id in column ``out``: the columns of ``df``,
+    then ``out``.  ``ix``/``iy`` and the bounds are Columns over
+    ``df``.  Longitude wraps; rows past a pole are dropped.
+    Relational — explode(dx) x explode(dy) (one generator per select),
+    one ``where``, then ONE Morton encode per exploded row — so it
+    stays pure JVM in four plan nodes; blocks wider than the globe
+    repeat cells (callers dedup)."""
     n = 1 << level
+    jx = F.pmod(ix + F.col("__dx"), F.lit(n))
+    jy = iy + F.col("__dy")
+    keep = [F.col("`" + c.replace("`", "``") + "`") for c in df.columns]
     return (
-        df.withColumn("__dx", F.explode(F.sequence(*dx)))
-        .withColumn("__dy", F.explode(F.sequence(*dy)))
-        .withColumn("__jx", F.pmod(ix + F.col("__dx"), F.lit(n)))
-        .withColumn("__jy", iy + F.col("__dy"))
-        .where((F.col("__jy") >= 0) & (F.col("__jy") < n))
-        .withColumn(out, _col_cell(F.col("__jx"), F.col("__jy"), level))
-        .drop("__dx", "__dy", "__jx", "__jy")
+        df.select("*", F.explode(F.sequence(*dx)).alias("__dx"))
+        .select("*", F.explode(F.sequence(*dy)).alias("__dy"))
+        .where((jy >= 0) & (jy < n))
+        .select(*keep, _col_cell(jx, jy, level).alias(out))
     )
 
 

@@ -89,34 +89,23 @@ def _poly_covering_cells_df(polys: DataFrame, level: int,
                             rings_col: str, poly_id_col: str) -> DataFrame:
     """Executor-side bbox-covering cells per polygon: min/max over the
     exterior ring (JVM array ops) -> the grid block from the bbox's
-    lower-left cell to its upper-right one (:func:`cells._block_cells`).
+    lower-left cell to its upper-right one (:func:`cells._block_cells`),
+    as ``poly_id, bb_minx, bb_maxx, bb_miny, bb_maxy, cell`` rows.
     Pure Column math, so a million-polygon layer expands in parallel on
     executors — the driver never materializes it (it only flows through
     the driver once more if the result is broadcast)."""
     ext = F.col(rings_col)[0]
     lons = F.transform(ext, lambda p: p[0])
     lats = F.transform(ext, lambda p: p[1])
-    ix0, iy0 = _col_ij(F.col("__minx"), F.col("__miny"), level)
-    ix1, iy1 = _col_ij(F.col("__maxx"), F.col("__maxy"), level)
-    bb = (
-        polys.select(poly_id_col, rings_col)
-        .withColumn("__minx", F.array_min(lons))
-        .withColumn("__maxx", F.array_max(lons))
-        .withColumn("__miny", F.array_min(lats))
-        .withColumn("__maxy", F.array_max(lats))
-        .withColumn("__ix0", ix0)
-        .withColumn("__iy0", iy0)
-        .withColumn("__nx", ix1 - F.col("__ix0"))
-        .withColumn("__ny", iy1 - F.col("__iy0"))
+    bb = polys.select(
+        poly_id_col,
+        F.array_min(lons).alias("bb_minx"), F.array_max(lons).alias("bb_maxx"),
+        F.array_min(lats).alias("bb_miny"), F.array_max(lats).alias("bb_maxy"),
     )
-    cov = _block_cells(bb, F.col("__ix0"), F.col("__iy0"),
-                       (F.lit(0), F.col("__nx")), (F.lit(0), F.col("__ny")),
-                       level, "cell")
-    return cov.select(
-        poly_id_col, rings_col, "cell",
-        F.col("__minx").alias("bb_minx"), F.col("__maxx").alias("bb_maxx"),
-        F.col("__miny").alias("bb_miny"), F.col("__maxy").alias("bb_maxy"),
-    )
+    ix0, iy0 = _col_ij(F.col("bb_minx"), F.col("bb_miny"), level)
+    ix1, iy1 = _col_ij(F.col("bb_maxx"), F.col("bb_maxy"), level)
+    return _block_cells(bb, ix0, iy0, (F.lit(0), ix1 - ix0),
+                        (F.lit(0), iy1 - iy0), level, "cell")
 
 
 def _pack_edges_sdf(polys: DataFrame, poly_id_col: str,
@@ -375,7 +364,7 @@ def _pip_inner(points, polys, level, lon_col, lat_col,
     edges_bc = spark.sparkContext.broadcast(_assemble_edges(pack_rows))
 
     pts = points.withColumn("cell", cell_col(F.col(lon_col), F.col(lat_col), level))
-    cand = pts.join(F.broadcast(cov_sdf.drop(rings_col)), "cell", "inner")
+    cand = pts.join(F.broadcast(cov_sdf), "cell", "inner")
     # JVM-side bbox pre-filter (whole-stage codegen): a polygon's bbox is
     # a superset of the polygon, so this only removes certain non-hits —
     # and it removes MOST candidates before they pay the Arrow transfer
@@ -474,7 +463,6 @@ def radius_join(
 
     pts = points.withColumn(
         "cell", cell_col(F.col(lon_col), F.col(lat_col), level))
-    qix, qiy = _col_ij(F.col(lon_col), F.col(lat_col), level)
     # chord-exact longitude span at the band's worst-case latitude; a
     # band reaching past the 89.99-deg clamp must saturate to the FULL
     # longitude circle (the clamp otherwise SHRINKS the ring and drops
@@ -491,11 +479,9 @@ def radius_join(
         F.col(query_id_col),
         F.col(lon_col).alias("q_lon"),
         F.col(lat_col).alias("q_lat"),
-        qix.alias("__qix"),
-        qiy.alias("__qiy"),
         rx.alias("__rx"),
     )
-    q = _block_cells(q, F.col("__qix"), F.col("__qiy"),
+    q = _block_cells(q, *_col_ij(F.col("q_lon"), F.col("q_lat"), level),
                      (-F.col("__rx"), F.col("__rx")), (F.lit(-ry), F.lit(ry)),
                      level, "cand_cell")
     q = q.select(query_id_col, "q_lon", "q_lat", "cand_cell").dropDuplicates(
@@ -680,17 +666,14 @@ def _ring_topk(
     ``dist_m`` ordered after every real distance, NaN included): a query
     with fewer than k candidates keeps its sentinel, so the round's
     output holds every query."""
-    qix, qiy = _col_ij(F.col(lon_col), F.col(lat_col), level)
     q = queries.select(
         F.col(query_id_col),
         F.col(lon_col).alias("q_lon"),
         F.col(lat_col).alias("q_lat"),
-        qix.alias("__qix"),
-        qiy.alias("__qiy"),
     )
     ring = (F.lit(-r), F.lit(r))
-    q = _block_cells(q, F.col("__qix"), F.col("__qiy"), ring, ring, level,
-                     "cand_cell").select(query_id_col, "q_lon", "q_lat", "cand_cell")
+    q = _block_cells(q, *_col_ij(F.col("q_lon"), F.col("q_lat"), level),
+                     ring, ring, level, "cand_cell")
     if 2 * r + 1 >= 1 << level:
         # the ring wraps the whole globe in longitude: pmod collides and
         # would duplicate candidates (and thus top-k rows) — dedup the

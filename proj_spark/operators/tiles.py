@@ -55,11 +55,11 @@ def tile_y_col(lat: Column, zoom: int) -> Column:
 def with_tiles(df: DataFrame, zoom: int, lon_col: str = "lon",
                lat_col: str = "lat") -> DataFrame:
     """Append zoom/tile_x/tile_y columns (raster<->vector assignment)."""
-    return (
-        df.withColumn("zoom", F.lit(zoom))
-        .withColumn("tile_x", tile_x_col(F.col(lon_col), zoom))
-        .withColumn("tile_y", tile_y_col(F.col(lat_col), zoom))
-    )
+    return df.withColumns({
+        "zoom": F.lit(zoom),
+        "tile_x": tile_x_col(F.col(lon_col), zoom),
+        "tile_y": tile_y_col(F.col(lat_col), zoom),
+    })
 
 
 def np_tile(lon, lat, zoom: int):

@@ -1862,3 +1862,24 @@ def test_batch_equals_its_points_for_every_registry_code():
                 assert same or (np.isnan(b) and np.isnan(p)), (
                     name, i, x[i], y[i], b, p)
             assert berr[i] == perr, (name, i)
+
+
+def test_inverse_output_stays_on_the_globe_for_every_projected_code():
+    """Projected input beyond a map's edge is an invalid row, never a
+    latitude past a pole or a longitude off the globe: every projected
+    registry code -> EPSG:4326 over points uniform in +-4e7 (metres or
+    the CRS's unit), in mask mode."""
+    from proj_spark.crs import registry_codes, resolve_crs
+
+    rng = np.random.default_rng(40)
+    x = rng.uniform(-4e7, 4e7, 400)
+    y = rng.uniform(-4e7, 4e7, 400)
+    for code in registry_codes():
+        if resolve_crs(code).kind != "projected":
+            continue
+        lon, lat, err = Transform.new_known_crs(code, "EPSG:4326").convert_array(
+            x, y, errors="mask")
+        valid = np.array([e is None for e in err])
+        off = valid & ~((np.abs(lon) <= 180.0 + 1e-9)
+                        & (np.abs(lat) <= 90.0 + 1e-9))
+        assert not off.any(), (code, list(zip(x[off], y[off], lon[off], lat[off]))[:3])

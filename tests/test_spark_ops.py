@@ -176,19 +176,43 @@ def test_transform_geometry_with_options_uses_the_worker_cache(
     assert r.stdout.decode().split()[-1] == "1"
 
 
+# grid edges, out-of-range (clamped) coordinates and -0.0 next to
+# uniform points
+_EDGE_LON = np.array([-180.0, 180.0, -0.0, 0.0, 179.9999999, -180.0000001,
+                      181.0, -181.0, 1e9, -1e9, 0.0, 12.5])
+_EDGE_LAT = np.array([-90.0, 90.0, -0.0, 0.0, 89.9999999, -90.0000001,
+                      91.0, -91.0, -1e9, 1e9, -0.0, 90.0])
+
+
+def _cell_inputs(seed, n=500):
+    rng = np.random.default_rng(seed)
+    return (np.concatenate([rng.uniform(-180, 180, n), _EDGE_LON]),
+            np.concatenate([rng.uniform(-90, 90, n), _EDGE_LAT]))
+
+
 def test_cell_column_matches_numpy(spark):
-    rng = np.random.default_rng(7)
-    lon = rng.uniform(-180, 180, 500)
-    lat = rng.uniform(-89.9, 89.9, 500)
-    pdf = pd.DataFrame({"lon": lon, "lat": lat})
-    df = spark.createDataFrame(pdf)
-    for level in (2, 8, 15, 26):
-        got = np.array(
-            df.select(C.cell_col(F.col("lon"), F.col("lat"), level).alias("c"))
-            .toPandas()["c"]
-        )
+    lon, lat = _cell_inputs(7)
+    df = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat}))
+    got = df.select(*[
+        C.cell_col(F.col("lon"), F.col("lat"), level).alias(f"c{level}")
+        for level in range(C.MAX_LEVEL + 1)]).toPandas()
+    for level in range(C.MAX_LEVEL + 1):
         want = C.np_cell(lon, lat, level)
-        assert (got == want).all(), f"level {level}"
+        assert (got[f"c{level}"].to_numpy() == want).all(), f"level {level}"
+
+
+def test_cell_column_is_linear_in_the_level():
+    # the Morton spread reads each axis index once per 6-bit chunk: a
+    # level-L cell id names lon and lat ceil(L/6) times each (a tree
+    # that doubles per spread step would name them 32 times)
+    import re
+
+    for level in range(C.MAX_LEVEL + 1):
+        text = C.cell_col(F.col("lon"), F.col("lat"), level)._jc.toString()
+        bound = -(-max(level, 1) // 6)
+        for name in ("lon", "lat"):
+            reads = len(re.findall(rf"\b{name}\b", text))
+            assert 1 <= reads <= bound, (level, name, reads)
 
 
 def test_cell_parent_and_decode_roundtrip(spark):

@@ -41,6 +41,24 @@ def test_sql_cell_and_tile_match_column_api(spark):
         assert (got[c].values == want[c].values).all(), c
 
 
+def test_sql_cell_id_matches_cell_col_at_every_level(spark):
+    from tests.test_spark_ops import _cell_inputs
+
+    register_sql_functions(spark)
+    lon, lat = _cell_inputs(32)
+    df = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat}))
+    df.createOrReplaceTempView("sql_cell_pts")
+    levels = range(C.MAX_LEVEL + 1)
+    got = spark.sql("SELECT " + ", ".join(
+        f"cell_id(lon, lat, {lv}) AS c{lv}" for lv in levels)
+        + " FROM sql_cell_pts").toPandas()
+    want = df.select(*[C.cell_col(F.col("lon"), F.col("lat"), lv).alias(f"c{lv}")
+                       for lv in levels]).toPandas()
+    for lv in levels:
+        assert (got[f"c{lv}"].to_numpy() == want[f"c{lv}"].to_numpy()).all(), lv
+        assert (want[f"c{lv}"].to_numpy() == C.np_cell(lon, lat, lv)).all(), lv
+
+
 def test_sql_functions_stay_in_codegen(spark):
     register_sql_functions(spark)
     _pts_view(spark)
