@@ -2,7 +2,7 @@
 
 Reimplements the query/data-processing capabilities of georust/proj
 (coordinate transforms; see /root/repo/SURVEY.md) Spark-first: numpy
-kernels wrapped in Arrow-batched pandas UDFs, plus the distributed
+kernels wrapped in Arrow-batched UDFs (``arrow_udf``), plus the distributed
 layer the reference leaves to callers — spatial cell indexing,
 point-in-polygon joins, kNN joins, raster<->vector tile assignment,
 dedup/similarity operators for training-data pipelines.

@@ -21,8 +21,18 @@ what imports see does not change.
 
 ``proj_spark/__init__.py`` installs it, so it is in place in every
 worker that has imported the package.  A UDF body that cloudpickle
-ships by value and that names no module-level proj_spark function
-therefore imports the package itself (``from .. import _pyworker``).
+ships by value imports the package when it names a module-level
+proj_spark function, which cloudpickle pickles by reference.
+
+Every Python stage in ``functions/`` and ``operators/`` reads its
+``arrow_udf``/``mapInArrow`` batches (the column's own buffers)
+through the reader here: :func:`_floats` (float64, NaN for null) and
+:func:`_coords` (a ``list<list<list<double>>>`` column as flat x/y
+plus part and geometry offsets, so no body walks per-point Python
+objects); :func:`_nested` and :func:`_doubles` write the output
+(NaN as null).  Naming them imports the package, and with it this
+patch, in every worker.  ``pyarrow`` loads on first use, not on
+``import proj_spark``.
 """
 
 from __future__ import annotations
@@ -30,6 +40,9 @@ from __future__ import annotations
 import os
 import sys
 import zipimport
+from typing import NamedTuple
+
+import numpy as np
 
 # archive path -> stat signature taken just before its last directory read
 _SIGNATURES: dict = {}
@@ -80,3 +93,93 @@ def install() -> None:
     zipimport._read_directory = _read_directory
     zipimport.zipimporter.invalidate_caches = invalidate_caches
 
+
+# -- the Arrow reader and writer of every Python stage ---------------------
+class Coords(NamedTuple):
+    """Every point of a batch of nested coordinate lists.  Part ``i``
+    holds points ``part_off[i]:part_off[i + 1]`` and geometry ``g``
+    parts ``geom_off[g]:geom_off[g + 1]``; a null list counts as
+    empty."""
+
+    x: np.ndarray
+    y: np.ndarray
+    part_off: np.ndarray
+    geom_off: np.ndarray
+
+
+def _floats(arr) -> np.ndarray:
+    """A numeric Arrow column as float64 numpy, NaN where null.  A
+    float64 column without nulls comes back zero-copy and read-only."""
+    import pyarrow as pa
+
+    if arr.type != pa.float64():
+        arr = arr.cast(pa.float64(), safe=False)
+    return arr.to_numpy(zero_copy_only=False)
+
+
+def _level(arr):
+    """One list level: int64 offsets from 0 into the flattened child,
+    with a null list as an empty one (whatever its slot spans)."""
+    import pyarrow.compute as pc
+
+    lens = pc.fill_null(pc.list_value_length(arr), 0)
+    return _offsets(lens.to_numpy(zero_copy_only=False)), pc.list_flatten(arr)
+
+
+def _coords(parts) -> Coords:
+    """Flat ``x``/``y`` of a ``list<list<list<double>>>`` column (a
+    point is ``[x, y]`` or ``[x, y, z]``; z is not read) plus its
+    offsets; a null coordinate reads NaN."""
+    geom_off, rings = _level(parts)
+    part_off, points = _level(rings)
+    point_off, values = _level(points)
+    start = point_off[:-1]
+    if len(start) and np.diff(point_off).min() < 2:
+        raise ValueError("every point needs an x and a y coordinate")
+    v = _floats(values)
+    return Coords(v[start], v[start + 1], part_off, geom_off)
+
+
+def _offsets(lens) -> np.ndarray:
+    """The int64 offsets ``0, lens[0], lens[0] + lens[1], ...`` of runs
+    of lengths ``lens``."""
+    return np.concatenate([[0], np.cumsum(lens, dtype=np.int64)])
+
+
+def _ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """The indices ``starts[i] .. starts[i] + lens[i] - 1`` for every
+    i, concatenated: the rows an offsets run selects."""
+    return np.repeat(starts - np.cumsum(lens) + lens, lens) \
+        + np.arange(lens.sum())
+
+
+def _doubles(v):
+    """A float64 Arrow column of ``v``, NaN as null."""
+    import pyarrow as pa
+
+    return pa.array(np.asarray(v, dtype=np.float64), from_pandas=True)
+
+
+def _nested(x, y, part_off, geom_off, valid=None):
+    """The ``list<list<list<double>>>`` column of the 2D points
+    ``(x, y)`` grouped by :class:`Coords` offsets, NaN as null; rows
+    where ``valid`` is False are null."""
+    import pyarrow as pa
+
+    n = len(x)
+    xy = np.empty(2 * n, dtype=np.float64)
+    xy[0::2] = x
+    xy[1::2] = y
+    points = pa.ListArray.from_arrays(
+        pa.array(np.arange(0, 2 * n + 1, 2, dtype=np.int32)), _doubles(xy))
+    parts = pa.ListArray.from_arrays(
+        pa.array(part_off.astype(np.int32)), points)
+    mask = None if valid is None else pa.array(~np.asarray(valid))
+    return pa.ListArray.from_arrays(
+        pa.array(geom_off.astype(np.int32)), parts, mask=mask)
+
+
+def _fields(struct) -> dict:
+    """A struct column's fields by name, each null where the struct
+    is."""
+    return dict(zip([f.name for f in struct.type], struct.flatten()))

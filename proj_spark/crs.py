@@ -4,7 +4,7 @@
 
 Driver-side only: a ``Transform`` is a small parameter object (plain
 floats + numpy coefficient arrays) that is captured by closure into
-Arrow-batched pandas UDFs (see :mod:`proj_spark.functions.transform`).
+Arrow-batched UDFs (see :mod:`proj_spark.functions.transform`).
 It is cheap to pickle and is cached per Python worker, the analog of the
 reference's per-thread shared context (/root/reference/src/context.rs:84-89).
 
@@ -1702,6 +1702,13 @@ class Transform:
         """
         src = _resolve_any(from_crs)
         dst = _resolve_any(to_crs)
+        for entry in (src, dst):
+            # a vertical CRS has no horizontal axes: as a 2D endpoint
+            # it would pass degrees through as radians
+            if entry.kind == "vertical":
+                raise ProjCreateError(
+                    f"{entry.code} ({entry.name}) is a vertical CRS: it "
+                    "cannot be the source or target of a 2D transform")
         allow_ballpark = bool(options.get("allow_ballpark", True))
         only_best = bool(options.get("only_best", False))
         force_over = bool(options.get("force_over", False))

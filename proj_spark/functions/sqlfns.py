@@ -8,11 +8,13 @@ Two registration classes:
     into the caller's plan, so these stay inside whole-stage codegen
     exactly like their Column-API twins (cells.cell_col etc.) — no
     Python worker, no UDF call overhead.
-  * **Python UDF** — ``proj_transform(x, y, src, dst)`` needs the
-    numpy kernels, so it registers as an Arrow-batched pandas UDF
-    returning ``struct<x,y,err>``; rows are grouped by (src, dst)
-    within each batch and run through the per-worker transform cache
-    (one kernel call per CRS pair per batch).
+  * **Python UDFs** — ``proj_transform(x, y, src, dst)`` and
+    ``geodesic_m`` need the numpy kernels, so they register as
+    ``arrow_udf``s reading their columns through the worker reader
+    (``_pyworker._floats``); ``proj_transform`` returns
+    ``struct<x,y,err>``, its rows grouped by (src, dst) within each
+    batch and run through the per-worker transform cache (one kernel
+    call per CRS pair per batch).
 """
 
 from __future__ import annotations
@@ -20,9 +22,12 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import SparkSession
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
+
+from .._pyworker import _doubles, _floats
 
 __all__ = ["register_sql_functions"]
 
@@ -111,32 +116,35 @@ RETURNS STRING
 RETURN substr({gh_chars}, 1, precision)
 """)
 
-    @pandas_udf("double")
-    def _geodesic_m(lon1: pd.Series, lat1: pd.Series,
-                    lon2: pd.Series, lat2: pd.Series) -> pd.Series:
+    @arrow_udf("double")
+    def _geodesic_m(lon1: pa.Array, lat1: pa.Array,
+                    lon2: pa.Array, lat2: pa.Array) -> pa.Array:
         from ..operators.geodesic import vincenty_inverse
 
-        return pd.Series(vincenty_inverse(
-            lon1.to_numpy(), lat1.to_numpy(),
-            lon2.to_numpy(), lat2.to_numpy()))
+        return _doubles(vincenty_inverse(
+            _floats(lon1), _floats(lat1), _floats(lon2), _floats(lat2)))
 
     spark.udf.register("geodesic_m", _geodesic_m)
 
-    @pandas_udf("x double, y double, err string")
-    def _proj_transform(x: pd.Series, y: pd.Series, src: pd.Series,
-                        dst: pd.Series) -> pd.DataFrame:
+    @arrow_udf("x double, y double, err string")
+    def _proj_transform(x: pa.Array, y: pa.Array, src: pa.Array,
+                        dst: pa.Array) -> pa.Array:
         from .transform import get_transform
 
         n = len(x)
         ox = np.full(n, np.nan)
         oy = np.full(n, np.nan)
         oe = np.full(n, None, dtype=object)
-        xs = x.to_numpy(dtype=np.float64)
-        ys = y.to_numpy(dtype=np.float64)
-        groups = pd.Series(range(n)).groupby(
-            [src.values, dst.values], sort=False).groups
-        for (s, d), idx in groups.items():
-            ii = np.asarray(idx)
+        xs = _floats(x)
+        ys = _floats(y)
+        # one group per (src, dst) pair (a CRS text holds no NUL); a
+        # row naming a null CRS keeps a null output
+        pairs = pc.dictionary_encode(
+            pc.binary_join_element_wise(src, dst, "\0"))
+        group = pc.fill_null(pairs.indices, -1).to_numpy()
+        for k, pair in enumerate(pairs.dictionary.to_pylist()):
+            ii = np.flatnonzero(group == k)
+            s, d = pair.split("\0", 1)
             try:
                 t = get_transform((s, d))
             except Exception as ex:  # unknown CRS -> per-row error
@@ -146,7 +154,9 @@ RETURN substr({gh_chars}, 1, precision)
             ox[ii] = tx
             oy[ii] = ty
             oe[ii] = te
-        return pd.DataFrame({"x": ox, "y": oy, "err": oe})
+        return pa.StructArray.from_arrays(
+            [_doubles(ox), _doubles(oy), pa.array(oe, type=pa.string())],
+            ["x", "y", "err"])
 
     spark.udf.register("proj_transform", _proj_transform)
 

@@ -2,18 +2,20 @@
 
 The reference's batch path — marshal N points, one FFI call
 (``proj_trans_array``, /root/reference/src/proj.rs:1210-1274) — maps
-here to ONE Arrow batch per pandas-UDF invocation: Spark ships whole
-column chunks to the Python worker as Arrow arrays, the numpy kernel
+here to ONE Arrow batch per ``arrow_udf`` invocation: Spark hands the
+Python worker each column chunk's own Arrow buffers, the numpy kernel
 transforms them in a single vectorized call, and the result returns as
 an Arrow struct column.  No per-row Python ever runs (input_hint
 contract, /root/repo/BASELINE.json:15).
 
 One batch body: every transform UDF here (``proj_udf``,
 ``projstring_udf``, ``projstring_udf3``) is a thin closure around
-:func:`_transform_frame`, which marshals the Series to numpy, applies
-the degree handling, runs ``Transform._run`` (the one runner; a 2D UDF
-is its ``z=None`` case) and builds the output frame.  The ``errors``
-mode is checked when a UDF is built, not per batch.
+:func:`_transform_frame`, which reads the columns through the worker
+reader (``_pyworker._floats``: float64, NaN for null), applies the
+degree handling, runs ``Transform._run`` (the one runner; a 2D UDF is
+its ``z=None`` case) and builds the output struct (an invalid or NaN
+coordinate leaves as null).  The ``errors`` mode is checked when a UDF
+is built, not per batch.
 
 Per-worker transform cache: the reference keeps one PROJ context per
 thread because context setup dominates construction cost
@@ -36,11 +38,12 @@ from __future__ import annotations
 from typing import Optional, Union
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
+from .._pyworker import _doubles, _floats
 from ..crs import Transform, _check_errors
 
 __all__ = [
@@ -83,18 +86,18 @@ def get_transform(spec) -> Transform:
     return _cached_transform(spec if isinstance(spec, str) else tuple(spec))
 
 
-def _transform_frame(t: Transform, x: pd.Series, y: pd.Series,
-                     z: Optional[pd.Series], inverse: bool, errors: str,
-                     input_units: str) -> pd.DataFrame:
+def _transform_frame(t: Transform, x: pa.Array, y: pa.Array,
+                     z: Optional[pa.Array], inverse: bool, errors: str,
+                     input_units: str) -> pa.StructArray:
     """One Arrow batch through ``t``: the body of every transform UDF.
 
     ``input_units="deg"`` feeds the kernel radians (and returns degrees
     from an inverse run); z, when given, is in the pipeline's vertical
     units and never rescaled.  Strict mode raises for the whole batch;
     its ``err`` column is all null."""
-    xv = x.to_numpy(dtype=np.float64, na_value=np.nan)
-    yv = y.to_numpy(dtype=np.float64, na_value=np.nan)
-    zv = None if z is None else z.to_numpy(dtype=np.float64, na_value=np.nan)
+    xv = _floats(x)
+    yv = _floats(y)
+    zv = None if z is None else _floats(z)
     deg = input_units == "deg"
     if deg and not inverse:
         xv = np.radians(xv)
@@ -104,17 +107,17 @@ def _transform_frame(t: Transform, x: pd.Series, y: pd.Series,
     if deg and inverse:
         ox = np.degrees(ox)
         oy = np.degrees(oy)
-    cols = {"x": ox, "y": oy}
+    cols = {"x": _doubles(ox), "y": _doubles(oy)}
     if zv is not None:
-        cols["z"] = out[2]
-    cols["err"] = (out[-1] if errors == "mask"
-                   else np.full(len(xv), None, dtype=object))
-    return pd.DataFrame(cols)
+        cols["z"] = _doubles(out[2])
+    cols["err"] = (pa.array(out[-1], type=pa.string()) if errors == "mask"
+                   else pa.nulls(len(xv), pa.string()))
+    return pa.StructArray.from_arrays(list(cols.values()), list(cols))
 
 
 def proj_udf(src_crs: str, dst_crs: str, errors: str = "mask",
              inverse: bool = False, **options):
-    """Build an Arrow-batched pandas UDF ``(x, y) -> struct<x,y,err>``
+    """Build an Arrow-batched UDF ``(x, y) -> struct<x,y,err>``
     for a CRS->CRS transform (the Spark surface of reference operators
     O5-O8, /root/reference/src/proj.rs:932-1123).
 
@@ -129,8 +132,8 @@ def proj_udf(src_crs: str, dst_crs: str, errors: str = "mask",
     spec = (src_crs, dst_crs)
     opts = tuple(sorted(options.items()))
 
-    @pandas_udf("x double, y double, err string")
-    def _udf(x: pd.Series, y: pd.Series) -> pd.DataFrame:
+    @arrow_udf("x double, y double, err string")
+    def _udf(x: pa.Array, y: pa.Array) -> pa.Array:
         return _transform_frame(_cached_transform(spec, opts), x, y, None,
                                 inverse, errors, "unit")
 
@@ -150,8 +153,8 @@ def projstring_udf(definition: str, input_units: str = "deg",
     """
     _check_errors(errors)
 
-    @pandas_udf("x double, y double, err string")
-    def _udf(x: pd.Series, y: pd.Series) -> pd.DataFrame:
+    @arrow_udf("x double, y double, err string")
+    def _udf(x: pa.Array, y: pa.Array) -> pa.Array:
         return _transform_frame(_cached_transform(definition), x, y, None,
                                 inverse, errors, input_units)
 
@@ -168,8 +171,8 @@ def projstring_udf3(definition: str, input_units: str = "deg",
     invalid point."""
     _check_errors(errors)
 
-    @pandas_udf("x double, y double, z double, err string")
-    def _udf(x: pd.Series, y: pd.Series, z: pd.Series) -> pd.DataFrame:
+    @arrow_udf("x double, y double, z double, err string")
+    def _udf(x: pa.Array, y: pa.Array, z: pa.Array) -> pa.Array:
         return _transform_frame(_cached_transform(definition), x, y, z,
                                 inverse, errors, input_units)
 

@@ -46,6 +46,13 @@ For a chunk ``b = (c >> k) & 0x3F``:
 Each chunk names ``c`` once, so a ``bits``-bit spread copies ``c``
 ceil(bits/6) times, and every product stays below 2^62: nothing can
 overflow a long under ANSI mode.
+
+:func:`_col_compact` (bit 2i -> bit i) runs the same steps backwards,
+5 bits per chunk ``b = (c >> 2k) & 0x155``: ``* 0x108421`` lays five
+copies 5 bits apart (same-parity copies 10 apart, so none overlap),
+``& 0x10204081`` keeps bit 2j of copy j at 7j, and ``* 0x1041041``
+moves it to 24 + j (every other product bit falls outside 24..28, at
+a distinct position, so nothing carries); products stay below 2^54.
 """
 
 from __future__ import annotations
@@ -95,13 +102,17 @@ def _np_compact(v: np.ndarray) -> np.ndarray:
     return v
 
 
+def _np_index(f, n: int) -> np.ndarray:
+    """``floor(f)`` clamped to ``[0, n - 1]`` in the float domain, NaN
+    to 0: the numpy twin of :func:`_col_index`'s clamp of Spark's
+    ``floor`` (which maps +inf past ``n - 1`` and NaN to 0)."""
+    return np.clip(np.nan_to_num(np.floor(f), nan=0.0), 0, n - 1).astype(np.int64)
+
+
 def _np_ij(lon, lat, level):
-    n = np.int64(1) << level
-    ix = np.floor((np.asarray(lon, dtype=np.float64) + 180.0) / 360.0 * n).astype(np.int64)
-    iy = np.floor((np.asarray(lat, dtype=np.float64) + 90.0) / 180.0 * n).astype(np.int64)
-    ix = np.clip(ix, 0, n - 1)
-    iy = np.clip(iy, 0, n - 1)
-    return ix, iy
+    n = 1 << level
+    return (_np_index((np.asarray(lon, dtype=np.float64) + 180.0) / 360.0 * n, n),
+            _np_index((np.asarray(lat, dtype=np.float64) + 90.0) / 180.0 * n, n))
 
 
 def np_cell(lon, lat, level: int) -> np.ndarray:
@@ -175,13 +186,20 @@ def _col_spread(c: Column, bits: int = 32) -> Column:
     return out
 
 
-def _col_compact(c: Column) -> Column:
-    c = c.bitwiseAND(F.lit(0x5555555555555555))
-    for shift, mask in [(1, 0x3333333333333333), (2, 0x0F0F0F0F0F0F0F0F),
-                        (4, 0x00FF00FF00FF00FF), (8, 0x0000FFFF0000FFFF),
-                        (16, 0x00000000FFFFFFFF)]:
-        c = (c.bitwiseOR(F.shiftrightunsigned(c, shift))).bitwiseAND(F.lit(mask))
-    return c
+def _col_compact(c: Column, bits: int) -> Column:
+    """Morton compaction (bit 2i -> bit i), the inverse of
+    :func:`_col_spread`: the low ``bits`` output bits from the
+    non-negative long ``c``, 5 bits per chunk (module docstring), so
+    ``c`` is named ceil(bits/5) times."""
+    out = None
+    for k in range(0, bits, 5):
+        b = (F.shiftright(c, 2 * k) if k else c).bitwiseAND(0x155)
+        s = F.shiftright(
+            (b * 0x108421).bitwiseAND(0x10204081) * 0x1041041,
+            24).bitwiseAND(0x1F)
+        s = F.shiftleft(s, k) if k else s
+        out = s if out is None else out.bitwiseOR(s)
+    return out
 
 
 def _col_index(v: Column, off: float, span: float, bits: int) -> Column:

@@ -8,7 +8,9 @@ odd/even split when the bit count 5*precision is odd).
 
 Everything is whole-stage-codegen Column bit math reusing the cell
 grid's index and Morton spread/compact kernels (`cells._col_index`,
-`cells._col_spread/_col_compact`) — no UDF, no Python — so geohash
+`cells._col_spread/_col_compact`; decoding compacts one character at
+a time, so a decoded column names the string once per character and
+axis) — no UDF, no Python — so geohash
 columns cost the same as cell ids and push through shuffles/joins as
 plain strings.  DuckDB twin: `oracle.sql_geohash`.
 """
@@ -57,18 +59,22 @@ def geohash_decode_cols(gh: Column, precision: int) -> tuple[Column, Column]:
     bits = 5 * precision
     n_lon = (bits + 1) // 2
     n_lat = bits // 2
-    v = None
+    # character i holds bits base..base+4 of the interleaved word; its
+    # bits at d's even and odd positions compact into the axis of
+    # their word bit's parity, so each axis names each character once
+    axes = [None, None]  # the word's even bits, its odd bits
     for i in range(precision):
         d = (F.instr(F.lit(GEOHASH32), F.substring(gh, i + 1, 1)) - 1
              ).cast("long")
-        term = F.shiftleft(d, 5 * (precision - 1 - i))
-        v = term if v is None else v.bitwiseOR(term)
-    if bits % 2 == 0:
-        iy = _col_compact(v)
-        ix = _col_compact(F.shiftrightunsigned(v, 1))
-    else:
-        ix = _col_compact(v)
-        iy = _col_compact(F.shiftrightunsigned(v, 1))
+        base = 5 * (precision - 1 - i)
+        for t in (0, 1):
+            q = base + t  # word bit q -> bit q // 2 of axis q % 2
+            part = F.shiftleft(
+                _col_compact(F.shiftright(d, t) if t else d, 3), q // 2)
+            a = axes[q % 2]
+            axes[q % 2] = part if a is None else a.bitwiseOR(part)
+    # the word's LSB is a latitude bit when the bit count is even
+    ix, iy = axes[::-1] if bits % 2 == 0 else axes
     lon = (ix.cast("double") + 0.5) / F.lit(float(1 << n_lon)) * 360.0 - 180.0
     lat = (iy.cast("double") + 0.5) / F.lit(float(1 << n_lat)) * 180.0 - 90.0
     return lon, lat

@@ -26,11 +26,14 @@ per kind:
                        src/geo_types.rs:58-84)
 
 Transforming a geometry column is ONE Arrow stage (E3 in SURVEY.md §3):
-flatten every coordinate in the batch into a single numpy array, run
-the kernel once (the analog of the reference's single
+the worker reader (``_pyworker._coords``) turns the batch's ``parts``
+buffers into flat x/y arrays plus part and geometry offsets, the
+kernel runs once (the analog of the reference's single
 ``proj_trans_array`` FFI call for a LineString,
-src/geo_types.rs:152-155), reshape back.  No shuffle, no per-row
-Python.
+src/geo_types.rs:152-155), and ``_pyworker._nested`` rebuilds the
+column from the same offsets.  No shuffle, no per-row or per-point
+Python.  A null geometry (or null ``parts``) reads as one with no
+points: it stays null through a transform and has null bounds.
 """
 
 from __future__ import annotations
@@ -38,11 +41,12 @@ from __future__ import annotations
 from typing import Iterable, Optional
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
+from .._pyworker import _coords, _doubles, _fields, _nested
 from ..crs import Transform, _check_errors
 from ..functions.transform import _cached_transform
 
@@ -64,47 +68,51 @@ __all__ = [
 GEOMETRY_DDL = (
     "kind string, parts array<array<array<double>>>, offsets array<int>"
 )
+# the same layout as an Arrow type, for batches built in Python
+_GEOMETRY_ARROW = pa.struct([
+    ("kind", pa.string()),
+    ("parts", pa.list_(pa.list_(pa.list_(pa.float64())))),
+    ("offsets", pa.list_(pa.int32())),
+])
 
 
 # -- constructors (driver-side row values) ---------------------------------
+def _xy(pts) -> list:
+    """A point sequence as a list of ``[x, y]`` floats."""
+    a = np.asarray(list(pts), dtype=np.float64)
+    return a.reshape(len(a), 2).tolist()
+
+
 def geom_point(x: float, y: float) -> dict:
-    return {"kind": "Point", "parts": [[[float(x), float(y)]]], "offsets": None}
+    return {"kind": "Point", "parts": [_xy([(x, y)])], "offsets": None}
 
 
 def geom_multipoint(pts) -> dict:
-    return {"kind": "MultiPoint",
-            "parts": [[[float(x), float(y)] for x, y in pts]], "offsets": None}
+    return {"kind": "MultiPoint", "parts": [_xy(pts)], "offsets": None}
 
 
 def geom_linestring(pts) -> dict:
-    return {"kind": "LineString",
-            "parts": [[[float(x), float(y)] for x, y in pts]], "offsets": None}
+    return {"kind": "LineString", "parts": [_xy(pts)], "offsets": None}
 
 
 def geom_polygon(rings) -> dict:
-    return {
-        "kind": "Polygon",
-        "parts": [[[float(x), float(y)] for x, y in ring] for ring in rings],
-        "offsets": None,
-    }
+    return {"kind": "Polygon", "parts": [_xy(r) for r in rings],
+            "offsets": None}
 
 
 def geom_multipolygon(polygons) -> dict:
     parts, offsets = [], []
     for rings in polygons:
         offsets.append(len(parts))
-        parts.extend([[[float(x), float(y)] for x, y in ring] for ring in rings])
+        parts.extend(_xy(r) for r in rings)
     return {"kind": "MultiPolygon", "parts": parts, "offsets": offsets}
 
 
 def geom_multilinestring(lines) -> dict:
     """One part per line (dispatch analog of the reference's
     MultiLineString arm, /root/reference/src/geo_types.rs:58-84)."""
-    return {
-        "kind": "MultiLineString",
-        "parts": [[[float(x), float(y)] for x, y in line] for line in lines],
-        "offsets": None,
-    }
+    return {"kind": "MultiLineString", "parts": [_xy(ln) for ln in lines],
+            "offsets": None}
 
 
 def geom_collection_rows(geoms: Iterable[dict]) -> list[dict]:
@@ -123,63 +131,28 @@ def geom_collection_rows(geoms: Iterable[dict]) -> list[dict]:
 
 
 def geom_rect(min_xy, max_xy) -> dict:
-    return {
-        "kind": "Rect",
-        "parts": [[[float(min_xy[0]), float(min_xy[1])],
-                   [float(max_xy[0]), float(max_xy[1])]]],
-        "offsets": None,
-    }
+    return {"kind": "Rect", "parts": [_xy([min_xy, max_xy])],
+            "offsets": None}
 
 
 def geom_triangle(p1, p2, p3) -> dict:
-    return {
-        "kind": "Triangle",
-        "parts": [[[float(p[0]), float(p[1])] for p in (p1, p2, p3)]],
-        "offsets": None,
-    }
+    return {"kind": "Triangle", "parts": [_xy([p1, p2, p3])],
+            "offsets": None}
 
 
 # -- vectorized transform ---------------------------------------------------
-def _flatten_parts(parts: pd.Series):
-    """Every coordinate of a batch of geometries as two flat float64
-    arrays (one numpy array for the whole Arrow batch), plus each
-    geometry's list of part lengths in points."""
-    flat_x, flat_y, shapes = [], [], []
-    for geom_parts in parts:
-        part_lens = []
-        for part in geom_parts:
-            arr = np.array([np.asarray(p, dtype=np.float64) for p in part])
-            if arr.size:
-                flat_x.append(arr[:, 0])
-                flat_y.append(arr[:, 1])
-            part_lens.append(len(part))
-        shapes.append(part_lens)
-    if not flat_x:
-        return np.array([]), np.array([]), shapes
-    return np.concatenate(flat_x), np.concatenate(flat_y), shapes
-
-
-def _transform_geom_batch(kind: pd.Series, parts: pd.Series,
-                          offsets: pd.Series, t: Transform,
-                          errors: str) -> pd.DataFrame:
-    X, Y, shapes = _flatten_parts(parts)
-    # one runner call for the batch; strict is all-or-nothing, like the
-    # reference's array path (src/proj.rs:1259)
-    TX, TY = t._run(X, Y, errors=errors)[:2] if len(X) else (X, Y)
-    XY = np.column_stack([TX, TY])
-    out_parts = []
-    pos = 0
-    for part_lens in shapes:
-        g = []
-        for ln in part_lens:
-            g.append(XY[pos:pos + ln].tolist())
-            pos += ln
-        out_parts.append(g)
-    return pd.DataFrame({
-        "kind": kind.values,
-        "parts": out_parts,
-        "offsets": offsets.values,
-    })
+def _transform_geom_batch(g: pa.StructArray, t: Transform,
+                          errors: str) -> pa.StructArray:
+    """One Arrow batch of geometries through ``t``: every coordinate in
+    one runner call; strict is all-or-nothing, like the reference's
+    array path (src/proj.rs:1259)."""
+    f = _fields(g)
+    c = _coords(f["parts"])
+    tx, ty = t._run(c.x, c.y, errors=errors)[:2] if len(c.x) else (c.x, c.y)
+    parts = _nested(tx, ty, c.part_off, c.geom_off, f["parts"].is_valid())
+    return pa.StructArray.from_arrays(
+        [f["kind"], parts, f["offsets"]], ["kind", "parts", "offsets"],
+        mask=g.is_null())
 
 
 def transform_geometry(
@@ -202,32 +175,36 @@ def transform_geometry(
     spec = (src_crs, dst_crs)
     opts = tuple(sorted(options.items()))
 
-    @pandas_udf(GEOMETRY_DDL)
-    def _udf(g: pd.DataFrame) -> pd.DataFrame:
+    @arrow_udf(GEOMETRY_DDL)
+    def _udf(g: pa.Array) -> pa.Array:
         # proj_udf's cache key: a worker builds each transform once
-        return _transform_geom_batch(g["kind"], g["parts"], g["offsets"],
-                                     _cached_transform(spec, opts), errors)
+        return _transform_geom_batch(g, _cached_transform(spec, opts),
+                                     errors)
 
     return df.withColumn(geom_col, _udf(F.col(geom_col)))
 
 
+def _bounds_batch(g: pa.StructArray) -> pa.StructArray:
+    """Per-geometry min/max of x and y over all its points; NaN (null)
+    for a geometry without points, NaN when any coordinate is."""
+    c = _coords(_fields(g)["parts"])
+    first = c.part_off[c.geom_off]  # each geometry's first point
+    has = np.diff(first) > 0
+    cols = []
+    for v, fn in ((c.x, np.minimum), (c.y, np.minimum),
+                  (c.x, np.maximum), (c.y, np.maximum)):
+        out = np.full(len(has), np.nan)
+        out[has] = fn.reduceat(v, first[:-1][has]) if len(v) else v
+        cols.append(_doubles(out))
+    return pa.StructArray.from_arrays(cols, ["minx", "miny", "maxx", "maxy"])
+
+
 def geom_bounds_udf():
-    """pandas UDF: geometry -> struct<minx,miny,maxx,maxy> (feeds the
+    """Arrow UDF: geometry -> struct<minx,miny,maxx,maxy> (feeds the
     same pruning path as transform_bounds, O9)."""
 
-    @pandas_udf("minx double, miny double, maxx double, maxy double")
-    def _bounds(g: pd.DataFrame) -> pd.DataFrame:
-        X, Y, shapes = _flatten_parts(g["parts"])
-        rows = []
-        pos = 0
-        for part_lens in shapes:
-            n = sum(part_lens)
-            if n:
-                x, y = X[pos:pos + n], Y[pos:pos + n]
-                rows.append((x.min(), y.min(), x.max(), y.max()))
-            else:
-                rows.append((np.nan, np.nan, np.nan, np.nan))
-            pos += n
-        return pd.DataFrame(rows, columns=["minx", "miny", "maxx", "maxy"])
+    @arrow_udf("minx double, miny double, maxx double, maxy double")
+    def _bounds(g: pa.Array) -> pa.Array:
+        return _bounds_batch(g)
 
     return _bounds

@@ -5,8 +5,9 @@ fixed-size tiles (web-map convention: level z is the source downscaled
 by 2^z, then sliced into tile*tile blocks, edge tiles ragged).  One
 input row fans out to sum_z ceil(w_z/T)*ceil(h_z/T) rows — total
 output pixels are bounded by (4/3)*w*h, so the operator is linear in
-input bytes and embarrassingly partition-parallel: mapInPandas Arrow
-batches, no shuffle, no driver involvement.
+input bytes and embarrassingly partition-parallel: ``mapInArrow``
+batches, no shuffle, no driver involvement; the body reads and
+writes Arrow record batches, no pandas frames.
 
 Dimension conventions (mirrored bit-exactly by the q63 SQL oracle):
   w_z = ceil(w / 2^z)      (integer, (w + 2^z - 1) // 2^z)
@@ -18,7 +19,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 __all__ = ["tile_pyramid", "TILE_PYRAMID_SCHEMA"]
@@ -41,14 +42,16 @@ def tile_pyramid(images: DataFrame, zooms: tuple[int, ...] = (0, 1, 2),
     if any(z < 0 for z in zooms):
         raise ValueError(f"zooms must be >= 0, got {zooms}")
     zs = tuple(sorted(set(int(z) for z in zooms)))
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
 
-    def _tiles(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    schema = to_arrow_schema(_parse_datatype_string(TILE_PYRAMID_SCHEMA))
 
+    def _tiles(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from ..sources.images import decode_image, encode_png, phash64_batch
         from ..sources.media import np_resize_bilinear
 
-        for pdf in batches:
+        for batch in batches:
             # column lists, not per-row dicts (pandas row-dict assembly
             # was the old hot spot alongside per-tile phash calls)
             ids, zoom_c, tx_c, ty_c = [], [], [], []
@@ -58,8 +61,9 @@ def tile_pyramid(images: DataFrame, zooms: tuple[int, ...] = (0, 1, 2),
             # phash64_batch call per shape instead of one per tile
             by_shape: dict[tuple, list] = {}
             slot_by_shape: dict[tuple, list] = {}
-            for image_id, data, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                           pdf["fmt"]):
+            for image_id, data, fmt in zip(
+                    *(batch.column(c).to_pylist()
+                      for c in ("image_id", "bytes", "fmt"))):
                 arr = decode_image(data, fmt)
                 h, w = arr.shape[:2]
                 for z in zs:
@@ -84,15 +88,10 @@ def tile_pyramid(images: DataFrame, zooms: tuple[int, ...] = (0, 1, 2),
             phash_c = np.zeros(len(ids), dtype=np.int64)
             for sh, blks in by_shape.items():
                 phash_c[slot_by_shape[sh]] = phash64_batch(np.stack(blks))
-            yield pd.DataFrame({
-                "image_id": ids,
-                "zoom": pd.array(zoom_c, dtype="int32"),
-                "tile_x": pd.array(tx_c, dtype="int32"),
-                "tile_y": pd.array(ty_c, dtype="int32"),
-                "tile_w": pd.array(tw_c, dtype="int32"),
-                "tile_h": pd.array(th_c, dtype="int32"),
-                "tile_bytes": bytes_c,
-                "tile_phash": phash_c,
-            })
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(col, field.type) for col, field in zip(
+                    (ids, zoom_c, tx_c, ty_c, tw_c, th_c, bytes_c, phash_c),
+                    schema)],
+                schema=schema)
 
-    return images.mapInPandas(_tiles, TILE_PYRAMID_SCHEMA)
+    return images.mapInArrow(_tiles, TILE_PYRAMID_SCHEMA)

@@ -18,7 +18,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .cells import _col_index
+from .cells import _col_index, _np_index
 
 __all__ = [
     "MAX_MERC_LAT",
@@ -67,10 +67,10 @@ def np_tile(lon, lat, zoom: int):
     n = 1 << zoom
     lon = np.asarray(lon, dtype=np.float64)
     lat = np.clip(np.asarray(lat, dtype=np.float64), -MAX_MERC_LAT, MAX_MERC_LAT)
-    tx = np.floor((lon + 180.0) / 360.0 * n).astype(np.int64)
+    tx = _np_index((lon + 180.0) / 360.0 * n, n)
     merc = np.log(np.tan(np.pi / 4.0 + np.radians(lat) / 2.0))
-    ty = np.floor((1.0 - merc / np.pi) / 2.0 * n).astype(np.int64)
-    return np.clip(tx, 0, n - 1).astype(np.int32), np.clip(ty, 0, n - 1).astype(np.int32)
+    ty = _np_index((1.0 - merc / np.pi) / 2.0 * n, n)
+    return tx.astype(np.int32), ty.astype(np.int32)
 
 
 def tile_bounds(zoom: int, tx: int, ty: int) -> tuple[float, float, float, float]:

@@ -170,9 +170,12 @@ def test_registry_at_least_100_codes_with_area():
 
 def test_registry_every_code_roundtrips():
     # every registry code constructs and roundtrips its area centroid
-    # through 4326 to <1e-7 deg
+    # through 4326 to <1e-7 deg; a vertical CRS is no 2D endpoint
+    # (tests/test_kernels.py::test_vertical_crs_is_no_2d_endpoint)
     for c in registry_codes():
         e = resolve_crs(c)
+        if e.kind == "vertical":
+            continue
         w, s, east, n = e.area.west, e.area.south, e.area.east, e.area.north
         lon = (w + east) / 2 if w < east else ((w + east + 360) / 2 + 180) % 360 - 180
         lat = (s + n) / 2

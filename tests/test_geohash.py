@@ -95,3 +95,40 @@ def test_geohash_validation_and_plan(spark):
     df = spark.createDataFrame(pd.DataFrame({"lon": [1.0], "lat": [2.0]}))
     plan = with_geohash(df)._jdf.queryExecution().toString()
     assert "PythonUDF" not in plan and "mapInPandas" not in plan.lower()
+
+
+def test_geohash_decode_matches_numpy_compact(spark):
+    # random words at every precision, decoded by the Column path and
+    # by the numpy Morton compaction: bit for bit
+    from proj_spark.operators.cells import _np_compact
+
+    rng = np.random.default_rng(12)
+    for precision in range(1, 13):
+        bits = 5 * precision
+        v = rng.integers(0, 1 << bits, 200, dtype=np.int64)
+        v[:2] = (0, (1 << bits) - 1)
+        gh = ["".join(GEOHASH32[(int(w) >> (5 * (precision - 1 - i))) & 31]
+                      for i in range(precision)) for w in v]
+        lon, lat = geohash_decode_cols(F.col("gh"), precision)
+        got = spark.createDataFrame([(g,) for g in gh], "gh string").select(
+            lon.alias("lon"), lat.alias("lat")).toPandas()
+        n_lon, n_lat = (bits + 1) // 2, bits // 2
+        even, odd = _np_compact(v), _np_compact(v >> 1)
+        ix, iy = (odd, even) if bits % 2 == 0 else (even, odd)
+        want_lon = (ix + 0.5) / float(1 << n_lon) * 360.0 - 180.0
+        want_lat = (iy + 0.5) / float(1 << n_lat) * 180.0 - 90.0
+        assert (got["lon"].to_numpy() == want_lon).all(), precision
+        assert (got["lat"].to_numpy() == want_lat).all(), precision
+
+
+def test_geohash_decode_is_linear_in_the_precision(spark):
+    # each decoded axis names the string once per character (the old
+    # mask-and-shift compaction named it twice per step: 42,641
+    # characters for the precision-12 longitude)
+    import re
+
+    for precision in range(1, 13):
+        for col in geohash_decode_cols(F.col("gh"), precision):
+            text = col._jc.toString()
+            assert len(re.findall(r"\bgh\b", text)) == precision, text
+            assert len(text) < 250 * precision, (precision, len(text))

@@ -1805,6 +1805,8 @@ def _lane_cases():
 
     for i, code in enumerate(registry_codes()):
         rng = np.random.default_rng(i)
+        if resolve_crs(code).kind == "vertical":
+            continue  # no 2D endpoint (test_vertical_crs_is_no_2d_endpoint)
         area = resolve_crs(code).area
         east = area.east + (360.0 if area.east < area.west else 0.0)
         lon = np.concatenate([rng.uniform(-180.0, 180.0, 8),
@@ -1883,3 +1885,23 @@ def test_inverse_output_stays_on_the_globe_for_every_projected_code():
         off = valid & ~((np.abs(lon) <= 180.0 + 1e-9)
                         & (np.abs(lat) <= 90.0 + 1e-9))
         assert not off.any(), (code, list(zip(x[off], y[off], lon[off], lat[off]))[:3])
+
+
+def test_vertical_crs_is_no_2d_endpoint():
+    """A vertical CRS (a height axis only) is rejected as either end of
+    a CRS->CRS transform: before, EPSG:4326 -> EPSG:5701 returned the
+    input degrees in radians as a valid point.  A compound CRS with a
+    vertical member still transforms through its horizontal member."""
+    from proj_spark.crs import ProjCreateError, registry_codes, resolve_crs
+
+    vertical = [c for c in registry_codes()
+                if resolve_crs(c).kind == "vertical"]
+    assert {"EPSG:5701", "EPSG:5714", "EPSG:5773"} <= set(vertical)
+    for code in vertical:
+        for src, dst in (("EPSG:4326", code), (code, "EPSG:4326"),
+                         (code, code)):
+            with pytest.raises(ProjCreateError, match="vertical CRS"):
+                Transform.new_known_crs(src, dst)
+    compound = Transform.new_known_crs("EPSG:4326", "EPSG:7405")
+    plain = Transform.new_known_crs("EPSG:4326", "EPSG:27700")
+    assert compound.convert(-2.0, 53.0) == plain.convert(-2.0, 53.0)

@@ -279,16 +279,16 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
 def test_knn_pinned_level_defaults_two_phase(spark):
     # round-2 verdict hole: a PINNED level with unknown n_points used to
     # silently disable the two-phase pre-reduce (est_cand = 0.0); it
-    # must now default SAFE — the plan carries the mapInPandas stage
+    # must now default SAFE — the plan carries the mapInArrow stage
     qs = spark.createDataFrame(pd.DataFrame({
         "query_id": [0, 1], "lon": [1.0, 2.0], "lat": [1.0, 2.0]}))
     pinned = knn_join(_pts(spark), qs, k=3, level=2, exact_fallback=False)
-    assert "MapInPandas" in _plan(pinned)
+    assert "MapInArrow" in _plan(pinned)
     # with a known (small) point count the estimate applies and the
     # Python pre-reduce stage is skipped
     sized = knn_join(_pts(spark), qs, k=3, level=2, exact_fallback=False,
                      n_points=2000)
-    assert "MapInPandas" not in _plan(sized)
+    assert "MapInArrow" not in _plan(sized)
 
 
 def test_pip_join_chunked_plan_unions_broadcasts(spark):
@@ -403,7 +403,7 @@ def test_aeqd_transform_plan_single_arrow_stage(spark):
 
 
 def test_tile_pyramid_plan_no_shuffle(spark):
-    """tile_pyramid is mapInPandas over the scan — fan-out happens
+    """tile_pyramid is mapInArrow over the scan — fan-out happens
     inside the Python stage, never through a shuffle."""
     from proj_spark.operators.raster import tile_pyramid
     from proj_spark.sources.datagen import synthesize_images

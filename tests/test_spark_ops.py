@@ -75,13 +75,13 @@ def test_transform_udfs_share_the_worker_cache(spark):
            projstring_udf3(merc).func])
     script = (
         "import sys\n"
-        "import pandas as pd\n"
+        "import pyarrow as pa\n"
         "from pyspark import cloudpickle\n"
         "udfs = cloudpickle.loads(sys.stdin.buffer.read())\n"
         "from proj_spark.functions import transform\n"
         "built = []\n"
         "for f in udfs:\n"
-        "    cols = [pd.Series([0.1])] * (f.__code__.co_argcount)\n"
+        "    cols = [pa.array([0.1])] * (f.__code__.co_argcount)\n"
         "    f(*cols)\n"
         "    built.append([id(t) for t in transform._TRANSFORM_CACHE.values()])\n"
         "transform.get_transform(('EPSG:4326', 'EPSG:3857'))\n"
@@ -134,7 +134,7 @@ def test_transform_geometry_with_options_uses_the_worker_cache(
     from proj_spark.operators import geometry as G
 
     bodies = []
-    real = G.pandas_udf
+    real = G.arrow_udf
 
     def spy(*args, **kwargs):
         deco = real(*args, **kwargs)
@@ -144,7 +144,7 @@ def test_transform_geometry_with_options_uses_the_worker_cache(
             return deco(f)
         return capture
 
-    monkeypatch.setattr(G, "pandas_udf", spy)
+    monkeypatch.setattr(G, "arrow_udf", spy)
     df = spark.createDataFrame(
         pd.DataFrame({"geom": [G.geom_point(10.0, 50.0)]}),
         schema=f"geom struct<{G.GEOMETRY_DDL}>")
@@ -152,9 +152,10 @@ def test_transform_geometry_with_options_uses_the_worker_cache(
     (body,) = bodies
     script = (
         "import sys\n"
-        "import pandas as pd\n"
+        "import pyarrow as pa\n"
         "from pyspark import cloudpickle\n"
         "from proj_spark.crs import Transform\n"
+
         "build = Transform.new_known_crs.__func__\n"
         "calls = []\n"
         "def counted(cls, *a, **k):\n"
@@ -163,10 +164,10 @@ def test_transform_geometry_with_options_uses_the_worker_cache(
         "Transform.new_known_crs = classmethod(counted)\n"
         "f = cloudpickle.loads(sys.stdin.buffer.read())\n"
         "for x in (10.0, 20.0):\n"
-        "    g = pd.DataFrame({'kind': ['Point'], 'parts': [[[[x, 50.0]]]],\n"
-        "                      'offsets': [None]})\n"
-        "    out = f(g)\n"
-        "    assert out['parts'][0][0][0][0] > 1e6\n"
+        "    g = pa.array([{'kind': 'Point', 'parts': [[[x, 50.0]]],\n"
+        "                   'offsets': None}])\n"
+        "    out = f(g).to_pylist()\n"
+        "    assert out[0]['parts'][0][0][0] > 1e6\n"
         "print(len(calls))\n"
     )
     r = subprocess.run([sys.executable, "-c", script],
@@ -190,9 +191,24 @@ def _cell_inputs(seed, n=500):
             np.concatenate([rng.uniform(-90, 90, n), _EDGE_LAT]))
 
 
+# NaN and +-inf lon/lat: both sides clamp +inf to the last index and
+# map NaN to index 0
+_NONFINITE = np.array([(np.nan, 0.0), (0.0, np.nan), (np.inf, 0.0),
+                       (-np.inf, 0.0), (0.0, np.inf), (0.0, -np.inf),
+                       (np.inf, np.inf), (np.nan, np.nan),
+                       (-np.inf, np.nan), (np.inf, -np.inf)]).T
+
+
+def _lonlat_df(spark, lon, lat):
+    # built from Python floats: a pandas frame would turn NaN into null
+    return spark.createDataFrame(
+        [(float(a), float(b)) for a, b in zip(lon, lat)],
+        "lon double, lat double")
+
+
 def test_cell_column_matches_numpy(spark):
-    lon, lat = _cell_inputs(7)
-    df = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat}))
+    lon, lat = (np.concatenate(v) for v in zip(_cell_inputs(7), _NONFINITE))
+    df = _lonlat_df(spark, lon, lat)
     got = df.select(*[
         C.cell_col(F.col("lon"), F.col("lat"), level).alias(f"c{level}")
         for level in range(C.MAX_LEVEL + 1)]).toPandas()
@@ -307,11 +323,14 @@ def test_tiles_match_numpy_and_bounds(spark):
     rng = np.random.default_rng(10)
     lon = rng.uniform(-180, 180, 300)
     lat = rng.uniform(-85, 85, 300)
-    df = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat}))
-    out = T.with_tiles(df, zoom=7).toPandas()
+    for zoom in (0, 7, 20):
+        x = np.concatenate([lon, _EDGE_LON, _NONFINITE[0]])
+        y = np.concatenate([lat, _EDGE_LAT, _NONFINITE[1]])
+        out = T.with_tiles(_lonlat_df(spark, x, y), zoom=zoom).toPandas()
+        tx, ty = T.np_tile(x, y, zoom)
+        assert (out["tile_x"].to_numpy() == tx).all(), zoom
+        assert (out["tile_y"].to_numpy() == ty).all(), zoom
     tx, ty = T.np_tile(lon, lat, 7)
-    assert (out["tile_x"].to_numpy() == tx).all()
-    assert (out["tile_y"].to_numpy() == ty).all()
     # every point falls inside its tile's bounds
     for i in range(0, 300, 37):
         w, s, e, n = T.tile_bounds(7, int(tx[i]), int(ty[i]))

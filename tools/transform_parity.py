@@ -83,15 +83,43 @@ def _hash_arrays(arrays) -> str:
     return h.hexdigest()[:16]
 
 
+def _columns(r):
+    """A UDF body's output, pandas or Arrow, as ``{column: list}`` with
+    NaN as None (Spark receives a float NaN from a pandas UDF as null),
+    or None when ``r`` is no UDF output."""
+    import pandas as pd
+    import pyarrow as pa
+
+    def canon(v):
+        if isinstance(v, float) and v != v:
+            return None
+        if isinstance(v, (list, tuple, np.ndarray)):
+            return [canon(x) for x in list(v)]
+        return v
+
+    if isinstance(r, pd.Series):
+        r = r.to_frame("")
+    if isinstance(r, pd.DataFrame):
+        cols = {c: r[c].tolist() for c in r.columns}
+    elif isinstance(r, pa.RecordBatch):
+        cols = r.to_pydict()
+    elif isinstance(r, pa.StructArray):
+        cols = {f.name: a.to_pylist() for f, a in zip(r.type, r.flatten())}
+    elif isinstance(r, pa.Array):
+        cols = {"": r.to_pylist()}
+    else:
+        return None
+    return {c: canon(v) for c, v in cols.items()}
+
+
 def _outcome(fn) -> str:
     try:
         r = fn()
     except Exception as e:  # noqa: BLE001  (the class IS the outcome)
         return f"EXC:{type(e).__name__}: {e}"
-    if hasattr(r, "columns"):  # a UDF's output frame
-        return _hash_arrays(
-            [np.asarray(list(r.columns), dtype=object)]
-            + [np.asarray(r[c].tolist(), dtype=object) for c in r.columns])
+    cols = _columns(r)
+    if cols is not None:  # a UDF's output
+        return hashlib.sha256(repr(cols).encode()).hexdigest()[:16]
     return _hash_arrays(r if isinstance(r, tuple) else (r,))
 
 
@@ -194,23 +222,88 @@ def _pipelines(out):
             _record(out, f"{name}|inv_in", lambda: t, x, y, z)
 
 
+class _NoSpark:
+    """What a UDF factory touches of Spark, without a session: a
+    decorator that keeps the body (as ``.func`` of the returned stub
+    and in ``bodies``), a DataFrame whose ``withColumn``/``select``
+    return itself and whose ``mapInPandas``/``mapInArrow`` keep the
+    function, and a ``functions`` module whose ``col`` is a stub."""
+
+    def __init__(self):
+        self.bodies = []
+
+    def udf(self, *_args, **_kwargs):
+        def wrap(f):
+            def column(*_cols):
+                return None
+            column.func = f
+            self.bodies.append(f)
+            return column
+        return wrap
+
+    def frame(self, **schema):
+        from types import SimpleNamespace
+
+        bodies = self.bodies
+
+        class Frame:
+            def __getattr__(self, name):
+                if name in ("mapInPandas", "mapInArrow"):
+                    return lambda f, _schema: bodies.append(f) or self
+                if name == "schema":
+                    return {k: SimpleNamespace(dataType=t)
+                            for k, t in schema.items()}
+                return lambda *_a, **_k: self
+        return Frame()
+
+    @staticmethod
+    def functions():
+        from types import SimpleNamespace
+
+        class Col:
+            def __getitem__(self, _key):
+                return self
+        return SimpleNamespace(col=lambda _name: Col())
+
+
 def _udfs(out):
     import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.types import StringType
 
     import __spark_entry__ as E
     from proj_spark.crs import Transform
     from proj_spark.functions import transform as T
+    from proj_spark.operators import geodesic as D
     from proj_spark.operators import geometry as G
+    from proj_spark.operators import joins as J
 
-    # a UDF's return DDL is parsed by the JVM; the bodies need none, so
-    # the factories here get a decorator that keeps the body as .func
-    def plain_udf(_ddl):
-        def wrap(f):
-            f.func = f
-            return f
-        return wrap
+    # the bodies take the batch type of the decorator their module
+    # imports: pyarrow arrays for arrow_udf/mapInArrow, pandas for
+    # pandas_udf/mapInPandas
+    arrow = hasattr(T, "arrow_udf")
+    spark = _NoSpark()
+    for mod in (T, G, D, J):
+        setattr(mod, "arrow_udf" if arrow else "pandas_udf", spark.udf)
+    D.F = spark.functions()
 
-    T.pandas_udf = G.pandas_udf = plain_udf
+    def col(v):
+        return pa.array(v) if arrow else pd.Series(v)
+
+    geom_type = pa.struct([
+        ("kind", pa.string()),
+        ("parts", pa.list_(pa.list_(pa.list_(pa.float64())))),
+        ("offsets", pa.list_(pa.int32()))])
+
+    def geom_batch(geoms, lo, hi):
+        if arrow:  # a slice: the batch starts at a non-zero offset
+            return pa.array(geoms, type=geom_type).slice(lo, hi - lo)
+        return pd.DataFrame(geoms).iloc[lo:hi].reset_index(drop=True)
+
+    def geom_call(body, g):
+        return body(g) if arrow else body(g["kind"], g["parts"],
+                                          g["offsets"])
+
     proj_udf, projstring_udf = T.proj_udf, T.projstring_udf
     projstring_udf3 = T.projstring_udf3
     rng = np.random.default_rng(7)
@@ -218,8 +311,8 @@ def _udfs(out):
                           rng.uniform(-180.0, 180.0, 32), EDGES[0]])
     lat = np.concatenate([rng.uniform(30.5, 36.5, 32),
                           rng.uniform(-90.0, 90.0, 32), EDGES[1]])
-    xs, ys = pd.Series(lon), pd.Series(lat)
-    zs = pd.Series(rng.uniform(-100.0, 100.0, len(lon)))
+    xs, ys = col(lon), col(lat)
+    zs = col(rng.uniform(-100.0, 100.0, len(lon)))
     for errors in ("mask", "strict", "Strict"):
         for dst in ("EPSG:3857", "EPSG:32611", "EPSG:26946"):
             for inverse in (False, True):
@@ -249,15 +342,94 @@ def _udfs(out):
              G.geom_rect((lon[30], lat[30]), (lon[31], lat[31])),
              G.geom_multipoint(list(zip(lon[64:], lat[64:]))),
              {"kind": "LineString", "parts": [[]], "offsets": None}]
-    frame = pd.DataFrame(geoms)
     t = Transform.new_known_crs("EPSG:4326", "EPSG:3857")
     for errors in ("mask", "strict"):
         for lo, hi in ((0, 5), (0, 7), (5, 7), (6, 7)):
-            g = frame.iloc[lo:hi].reset_index(drop=True)
+            g = geom_batch(geoms, lo, hi)
             out[f"geom_batch|{lo}:{hi}|{errors}"] = _outcome(
-                lambda: G._transform_geom_batch(g["kind"], g["parts"],
-                                                g["offsets"], t, errors))
-    out["geom_bounds"] = _outcome(lambda: G.geom_bounds_udf().func(frame))
+                lambda: G._transform_geom_batch(g, t, errors) if arrow
+                else G._transform_geom_batch(g["kind"], g["parts"],
+                                             g["offsets"], t, errors))
+    out["geom_bounds"] = _outcome(
+        lambda: G.geom_bounds_udf().func(geom_batch(geoms, 0, 7)))
+
+    # geodesic area and length bodies over polygons with holes, pole
+    # rings, MultiPolygons, Rects, lines and points
+    def ring(cx, cy, r, n, closed):
+        a = np.sort(rng.uniform(0.0, 2.0 * np.pi, n))
+        pts = [[cx + r * np.cos(v), cy + r * np.sin(v)] for v in a]
+        return pts + pts[:1] if closed else pts
+
+    shapes = []
+    for i in range(24):
+        cx, cy = rng.uniform(-170.0, 170.0), rng.uniform(-80.0, 80.0)
+        r = rng.uniform(0.01, 8.0)
+        outer = ring(cx, cy, r, int(rng.integers(3, 200)), i % 2 == 0)
+        holes = [ring(cx, cy, r / 4, int(rng.integers(3, 12)), i % 3 == 0)
+                 for _ in range(i % 3)]
+        shapes += [G.geom_polygon([outer] + holes),
+                   G.geom_multipolygon([[outer] + holes,
+                                        [ring(cx + 1, cy, r / 3, 9, False)]]),
+                   G.geom_rect((cx - r, cy - r / 2), (cx + r, cy + r / 2))]
+        if i % 4 == 0:
+            shapes.append(G.geom_triangle(*outer[:3]))
+    lines = [G.geom_linestring(list(zip(lon[:8], lat[:8]))),
+             G.geom_multilinestring([list(zip(lon[8:14], lat[8:14])),
+                                     list(zip(lon[14:15], lat[14:15]))]),
+             G.geom_multipoint(list(zip(lon[64:], lat[64:]))),
+             G.geom_point(lon[1], lat[1])]
+    lons = np.linspace(-180.0, 179.0, 360)
+    shapes += [G.geom_polygon([[[v, 80.0] for v in lons]]),
+               G.geom_polygon([[[v, -80.0] for v in lons[::-1]]])]
+    D.with_geodesic_area(spark.frame())
+    D.with_geodesic_length(spark.frame())
+    area, length = spark.bodies[-2:]
+    n = len(shapes)
+    for lo, hi in ((0, n), (3, n - 5), (n - 1, n)):
+        out[f"geodesic_area|{lo}:{hi}"] = _outcome(
+            lambda: geom_call(area, geom_batch(shapes, lo, hi)))
+        out[f"geodesic_length|{lo}:{hi}"] = _outcome(
+            lambda: geom_call(length, geom_batch(shapes + lines, lo, hi)))
+    out["geodesic_area|line"] = _outcome(
+        lambda: geom_call(area, geom_batch(lines, 0, 1)))
+    out["geodesic_area|scalar"] = _outcome(lambda: np.array(
+        [D.geom_area_m2(**g) for g in shapes]))
+    out["geodesic_length|scalar"] = _outcome(lambda: np.array(
+        [D.geom_length_m(**g) for g in shapes + lines]))
+
+    # PIP: the edge pack over two batches, its driver assembly, and the
+    # ray-cast test of seeded points against the broadcast edges
+    polys = [{"poly_id": f"p{i}", "rings": g["parts"]}
+             for i, g in enumerate(shapes) if g["kind"] == "Polygon"]
+    polys.append({"poly_id": "z", "rings": [
+        [[0.0, 0.0, 5.0], [10.0, 0.0, 5.0], [0.0, 10.0, 5.0],
+         [0.0, 0.0, 5.0]], [[1.0, 1.0], [2.0, 2.0]]]})
+
+    def pack_batches():
+        for lo, hi in ((0, 5), (5, len(polys))):
+            part = polys[lo:hi]
+            yield (pa.RecordBatch.from_pylist(part, schema=pa.schema([
+                ("poly_id", pa.string()),
+                ("rings", geom_type.field("parts").type)]))
+                   if arrow else pd.DataFrame(part))
+
+    J._pack_edges_sdf(spark.frame(poly_id=StringType()), "poly_id", "rings")
+    pack = spark.bodies[-1]
+    out["pip_pack"] = _outcome(lambda: next(iter(pack(pack_batches()))))
+    packed = _columns(next(iter(pack(pack_batches()))))
+    edges = J._assemble_edges([dict(zip(packed, v))
+                               for v in zip(*packed.values())])
+    test = J._make_pip_test_udf_bc(type("Bc", (), {"value": edges})).func
+    px = np.concatenate([rng.uniform(-180.0, 180.0, 400),
+                         [v for p in polys for r in p["rings"]
+                          for v in np.asarray(r)[:, 0]], [np.nan, 5.0]])
+    py = np.concatenate([rng.uniform(-90.0, 90.0, 400),
+                         [v for p in polys for r in p["rings"]
+                          for v in np.asarray(r)[:, 1]], [5.0, np.nan]])
+    ids = [polys[i % len(polys)]["poly_id"] for i in range(len(px))]
+    out["pip_test"] = _outcome(lambda: test(col(px), col(py), col(ids)))
+    out["pip_test|unknown"] = _outcome(
+        lambda: test(col(px[:3]), col(py[:3]), col(["p0", "nope", "z"])))
 
 
 def dump(path: str) -> None:
