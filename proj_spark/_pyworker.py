@@ -120,8 +120,13 @@ def _floats(arr) -> np.ndarray:
 def _level(arr):
     """One list level: int64 offsets from 0 into the flattened child,
     with a null list as an empty one (whatever its slot spans)."""
+    import pyarrow as pa
     import pyarrow.compute as pc
 
+    if not len(arr):
+        # the JVM may send an empty list array without its one offset,
+        # which pyarrow's flatten reads (a segfault)
+        return np.zeros(1, dtype=np.int64), pa.array([], arr.type.value_type)
     lens = pc.fill_null(pc.list_value_length(arr), 0)
     return _offsets(lens.to_numpy(zero_copy_only=False)), pc.list_flatten(arr)
 

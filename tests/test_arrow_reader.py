@@ -101,19 +101,58 @@ def test_transform_body_reads_read_only_buffers(spark):
     assert out[2]["y"] is None and out[2]["err"] is not None
 
 
-def test_pip_test_rejects_an_unknown_poly_id(spark):
+def test_pip_test_chunks_split_at_rows(spark):
+    # candidates carry their polygon's position in the edge payload; a
+    # chunk_pairs so small that nearly every row is its own chunk gives
+    # the same booleans as one chunk for the whole batch
     from proj_spark.operators import joins as J
 
-    ring = [[0.0, 0.0], [4.0, 0.0], [4.0, 4.0], [0.0, 4.0], [0.0, 0.0]]
-    x1, y1, x2, y2, cnts = J._ring_edges(pa.array([[ring]], type=PARTS))
-    edges = J._assemble_edges([{
-        "pids": ["a"], "cnts": cnts.tobytes(), "x1": x1.tobytes(),
-        "y1": y1.tobytes(), "x2": x2.tobytes(), "y2": y2.tobytes()}])
-    test = J._make_pip_test_udf_bc(type("Bc", (), {"value": edges})).func
-    lon, lat = pa.array([1.0, 5.0]), pa.array([1.0, 1.0])
-    assert test(lon, lat, pa.array(["a", "a"])).to_pylist() == [True, False]
-    with pytest.raises(KeyError, match="unknown poly_id"):
-        test(lon, lat, pa.array(["a", "b"]))
+    rng = np.random.default_rng(5)
+    rings = []
+    for k in range(6):
+        a = np.sort(rng.uniform(0.0, 2.0 * np.pi, 5 + k))
+        ring = np.column_stack([3.0 * np.cos(a), 2.0 * np.sin(a)]).tolist()
+        rings.append([ring + ring[:1]])
+    rings.append([[[0.0, 0.0], [1.0, 1.0]]])  # no edges
+    x1, y1, x2, y2, cnts = J._ring_edges(_coords(pa.array(rings, type=PARTS)))
+    edges = (x1, y1, x2, y2, np.concatenate([[0], np.cumsum(cnts)[:-1]]), cnts)
+    bc = type("Bc", (), {"value": edges})
+    n = 400
+    lon, lat = pa.array(rng.uniform(-4, 4, n)), pa.array(rng.uniform(-3, 3, n))
+    pos = pa.array(rng.integers(0, len(rings), n), pa.int32())
+    one = J._make_pip_test_udf_bc(bc).func(lon, lat, pos).to_pylist()
+    for chunk_pairs in (1, 7, 40):
+        many = J._make_pip_test_udf_bc(bc, chunk_pairs).func(lon, lat, pos)
+        assert many.to_pylist() == one, chunk_pairs
+    want = [bool(J._np_point_in_rings(np.array([x]), np.array([y]),
+                                      [np.array(r) for r in rings[p]])[0])
+            for x, y, p in zip(lon.to_pylist(), lat.to_pylist(),
+                               pos.to_pylist())]
+    assert one == want and 0 < sum(one) < n
+
+
+def test_exterior_bbox_follows_spark_nan_rule():
+    # the pack's bbox reads the first ring only, with array_min (skips
+    # NaN) and array_max (NaN if any vertex is) semantics; a polygon with
+    # no exterior point gets the empty box, which covers no cell
+    from proj_spark.operators import joins as J
+
+    nan, inf = float("nan"), float("inf")
+    polys = pa.array([
+        [[[1.0, 2.0], [3.0, -1.0], [1.0, 2.0]], [[9.0, 9.0], [8.0, 8.0]]],
+        [[[5.0, 5.0], [nan, 6.0], [8.0, 9.0]]],
+        [[[nan, nan], [nan, nan]]],
+        [[], [[0.0, 0.0], [1.0, 1.0]]],
+        [],
+        None,
+    ], type=PARTS)
+    bbox = J._exterior_bbox(_coords(polys))
+    assert _same(bbox, [[1.0, 3.0, -1.0, 2.0], [5.0, nan, 5.0, 9.0],
+                        [nan, nan, nan, nan], [inf, -inf, inf, -inf],
+                        [inf, -inf, inf, -inf], [inf, -inf, inf, -inf]])
+    assert J._has_box(bbox).tolist() == [True, True, True, False, False, False]
+    cover = J._cover(pa.array(list("abcdef")), bbox, 3, "poly_id")
+    assert set(cover.column("poly_id").to_pylist()) == {"a", "b", "c"}
 
 
 def test_running_head_carries_a_query_across_batches():

@@ -6,6 +6,8 @@ Asserts on the executed/physical plan text, not just results:
   * parquet scans get predicate pushdown + column pruning.
 """
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -40,16 +42,25 @@ def _squares(spark, n=40, seed=33):
     return spark.createDataFrame(pd.DataFrame(rows))
 
 
-def test_pip_join_plan_broadcasts_polygons(spark):
-    polys = spark.createDataFrame(pd.DataFrame([{
+def test_pip_join_plan_broadcasts_polygons(spark, tmp_path):
+    # the cover is built on the driver and enters the plan as a local
+    # relation: the executed plan never reads the polygon layer, and the
+    # points side is never shuffled
+    layer = str(tmp_path / "polys")
+    spark.createDataFrame(pd.DataFrame([{
         "poly_id": "p0",
         "rings": [[[0.0, 0.0], [10.0, 0.0], [10.0, 10.0], [0.0, 10.0],
                    [0.0, 0.0]]],
-    }]))
-    plan = _plan(pip_join(_pts(spark), polys, level=6))
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
+    }])).write.parquet(layer)
+    polys = spark.read.parquet(layer)
+    out = pip_join(_pts(spark), polys, level=6)
+    out.count()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "LocalTableScan" in plan
+    assert "polys" not in plan and "rings" not in plan
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan  # the big table is never shuffled
+    assert re.search(r"(?<!Broadcast)Exchange", plan) is None, plan
 
 
 def test_knn_fastpath_plan_broadcasts_queries(spark):
@@ -130,14 +141,13 @@ def test_knn_construct_job_budget(spark, case, n_points, budget):
 
 
 @pytest.mark.parametrize("case, level, max_bytes, budget", [
-    # adaptive level: one span + edge-count aggregate (2 jobs under
-    # AQE) and one packing collect
-    ("single_chunk", None, 256 << 20, 3),
-    # pinned level: the edge-count aggregate alone, then the packing
-    ("pinned_level", 6, 256 << 20, 3),
-    # 3 hash chunks: the aggregate, then one packing collect per chunk
-    # and none of the whole layer
-    ("chunked", None, 2048, 5),
+    # one polygon pass gives the level, the edge count, the edges and
+    # the bboxes of the driver-side cover
+    ("single_chunk", None, 256 << 20, 1),
+    ("pinned_level", 6, 256 << 20, 1),
+    # 3 hash chunks: the polygon pass (its partitions over their share
+    # send only counts), then one pass per chunk, none of the whole layer
+    ("chunked", None, 2048, 4),
 ])
 def test_pip_construct_job_budget(spark, case, level, max_bytes, budget):
     polys = _squares(spark)

@@ -279,29 +279,92 @@ def test_block_cells_matches_np_cell_ring(spark):
             assert set(cs) == want, (level, r, c)
 
 
-def test_pip_covering_cells_match_numpy_bbox_cover(spark):
-    from proj_spark.operators.joins import _poly_covering_cells_df
+_BOXES = {"mid": (-10.0, -10.0, 20.0, 15.0), "east": (170.0, -5.0, 180.0, 5.0),
+          "west": (-180.0, 10.0, -170.0, 20.0), "north": (-40.0, 80.0, 40.0, 90.0),
+          "south": (100.0, -90.0, 140.0, -70.0), "world": (-180.0, -90.0, 180.0, 90.0),
+          "tiny": (3.3, 4.4, 3.31, 4.41)}
 
-    def box(x0, y0, x1, y1):
-        return [[[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]]
 
-    boxes = {"mid": (-10.0, -10.0, 20.0, 15.0), "east": (170.0, -5.0, 180.0, 5.0),
-             "west": (-180.0, 10.0, -170.0, 20.0), "north": (-40.0, 80.0, 40.0, 90.0),
-             "south": (100.0, -90.0, 140.0, -70.0), "world": (-180.0, -90.0, 180.0, 90.0),
-             "tiny": (3.3, 4.4, 3.31, 4.41)}
+def _box_ring(x0, y0, x1, y1):
+    return [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]
+
+
+def _cover_cells(spark, rings, level):
+    """The driver-side cover of a layer ``{poly_id: rings}``: cells per
+    polygon position, after the real executor pass."""
+    from proj_spark.operators import joins as J
+
     polys = spark.createDataFrame(pd.DataFrame(
-        {"poly_id": list(boxes), "rings": [box(*b) for b in boxes.values()]}))
+        {"poly_id": list(rings), "rings": list(rings.values())}))
+    pack = J._collect_pack(polys, "poly_id", "rings")
+    t = J._cover(pack.pids, pack.bbox, level, "poly_id")
+    got = {}
+    for pos, cell in zip(t.column("__pip_pos").to_pylist(),
+                         t.column("cell").to_pylist()):
+        got.setdefault(pack.pids[pos].as_py(), []).append(cell)
+    return got
+
+
+def test_pip_covering_cells_match_numpy_bbox_cover(spark):
+    rings = {k: [_box_ring(*b)] for k, b in _BOXES.items()}
     for level in (0, 3, 7):
-        rows = _poly_covering_cells_df(polys, level, "rings", "poly_id").collect()
-        got = {}
-        for r in rows:
-            got.setdefault(r["poly_id"], []).append(r["cell"])
-        for pid, (x0, y0, x1, y1) in boxes.items():
+        got = _cover_cells(spark, rings, level)
+        for pid, (x0, y0, x1, y1) in _BOXES.items():
             (ix0, ix1), (iy0, iy1) = C._np_ij([x0, x1], [y0, y1], level)
             gx, gy = np.meshgrid(np.arange(ix0, ix1 + 1), np.arange(iy0, iy1 + 1))
             morton = C._np_spread(gx.ravel()) | (C._np_spread(gy.ravel()) << 1)
             want = (morton << 5) | level
             assert sorted(got[pid]) == sorted(want.tolist()), (level, pid)
+
+
+def test_pip_cover_holds_the_cell_col_of_every_bbox_point(spark):
+    # the driver-side cover is numpy; points get their cell from the JVM
+    # cell_col: a point inside a polygon's bbox must meet that polygon
+    rng = np.random.default_rng(41)
+    rings = {k: [_box_ring(*b)] for k, b in _BOXES.items()}
+    for i in range(6):
+        rings[f"star{i}"] = [_random_convex_polygon(
+            rng, rng.uniform(-170, 170), rng.uniform(-80, 80), rng.uniform(0.01, 9.0))]
+    rows = []
+    for pid, r in rings.items():
+        ext = np.array(r[0])
+        lo, hi = ext.min(axis=0), ext.max(axis=0)
+        for x, y in rng.uniform(lo, hi, (60, 2)).tolist() + [lo.tolist(), hi.tolist()]:
+            rows.append((pid, x, y))
+    pts = spark.createDataFrame(pd.DataFrame(rows, columns=["poly_id", "lon", "lat"]))
+    for level in (0, 4, 8, 11):
+        if level == 11:  # the world box alone is 2^22 cells at 11
+            for big in ("world", "north", "south", "mid"):
+                rings.pop(big)
+        cover = {k: set(v) for k, v in _cover_cells(spark, rings, level).items()}
+        got = pts.where(F.col("poly_id").isin(list(rings))).select(
+            "poly_id", C.cell_col(F.col("lon"), F.col("lat"), level)).collect()
+        assert len(got) == 62 * len(rings)
+        for pid, cell in got:
+            assert cell in cover[pid], (level, pid)
+
+
+def test_pip_join_repeated_poly_id_tests_each_polygon(spark):
+    # two unit squares both named "a": each candidate carries its own
+    # polygon's position, so both points are hits, as the even-odd brute
+    # force says
+    polys = spark.createDataFrame(pd.DataFrame({
+        "poly_id": ["a", "a"],
+        "rings": [[_box_ring(0.0, 0.0, 1.0, 1.0)], [_box_ring(10.0, 0.0, 11.0, 1.0)]]}))
+    pts = spark.createDataFrame(pd.DataFrame({
+        "point_id": [0, 1, 2], "lon": [0.5, 10.5, 5.0], "lat": [0.5, 0.5, 0.5]}))
+    from proj_spark.operators.joins import _np_point_in_rings
+
+    want = set()
+    for ring in ([_box_ring(0.0, 0.0, 1.0, 1.0)], [_box_ring(10.0, 0.0, 11.0, 1.0)]):
+        inside = _np_point_in_rings(np.array([0.5, 10.5, 5.0]),
+                                    np.array([0.5, 0.5, 0.5]), ring)
+        want |= {(int(i), "a") for i in np.flatnonzero(inside)}
+    assert want == {(0, "a"), (1, "a")}
+    for level, max_bytes in ((None, 256 << 20), (6, 256 << 20), (6, 64)):
+        got = pip_join(pts, polys, level=level, max_broadcast_bytes=max_bytes)
+        assert {(int(r[0]), r[1]) for r in
+                got.select("point_id", "poly_id").collect()} == want, level
 
 
 def test_cell_level_out_of_range_raises(spark):
@@ -795,6 +858,13 @@ def test_pip_join_left_and_empty_edges(spark):
     assert pip_join(pts, empty, level=6).count() == 0
     l2 = pip_join(pts, empty, level=6, how="left").toPandas()
     assert len(l2) == 2 and l2["poly_id"].isna().all()
+    # a polygon with no rings has no cover and no hit (its exterior
+    # ring used to be read as rings[0], out of bounds under ANSI)
+    ringless = polys.unionByName(spark.createDataFrame(
+        pd.DataFrame([{"poly_id": "none", "rings": []}]), polys.schema))
+    for level in (None, 6):
+        got = pip_join(pts, ringless, level=level).select("point_id", "poly_id")
+        assert [tuple(r) for r in got.collect()] == [(0, "box")]
 
 
 def test_knn_join_empty_queries(spark):
@@ -843,8 +913,9 @@ def test_pip_join_chunked_matches_unchunked(spark):
 
 
 def test_pip_join_chunked_never_collects_whole_layer(spark, monkeypatch):
-    # the chunking decision counts edges in the JVM; each chunk packs,
-    # collects and assembles only its own polygons' edges
+    # the first job brings at most max_broadcast_bytes of edges to the
+    # driver (a partition over its share sends only its counts); then
+    # each chunk packs only its own polygons
     from proj_spark.operators import joins as J
 
     rng = np.random.default_rng(37)
@@ -860,36 +931,35 @@ def test_pip_join_chunked_never_collects_whole_layer(spark, monkeypatch):
         "lon": rng.uniform(-55, 55, 1200),
         "lat": rng.uniform(-55, 55, 1200),
     }))
-    packed, assembled = [], []
-    pack, assemble = J._pack_edges_sdf, J._assemble_edges
+    packs = []
+    assemble = J._assemble_pack
 
-    def _edges(rows_):
-        return sum(int(np.frombuffer(r["cnts"], dtype=np.int64).sum())
-                   for r in rows_)
-
-    def pack_spy(*args):
-        out = pack(*args)
-        packed.append(_edges(out.collect()))
+    def assemble_spy(table):
+        edge_bytes = sum(len(b) for k in ("x1", "y1", "x2", "y2")
+                         for b in table.column(k).to_pylist() if b is not None)
+        out = assemble(table)
+        packs.append((edge_bytes, out.n_edges,
+                      None if out.pids is None else set(out.pids.to_pylist())))
         return out
-
-    def assemble_spy(rows_):
-        rows_ = list(rows_)
-        assembled.append(_edges(rows_))
-        return assemble(rows_)
 
     def _set(df):
         return {(int(r["point_id"]), r["poly_id"])
                 for r in df.select("point_id", "poly_id").collect()}
 
-    monkeypatch.setattr(J, "_pack_edges_sdf", pack_spy)
-    monkeypatch.setattr(J, "_assemble_edges", assemble_spy)
+    monkeypatch.setattr(J, "_assemble_pack", assemble_spy)
     one = _set(pip_join(pts, polys, level=6))
-    assert packed == assembled == [layer_edges]
-    del packed[:], assembled[:]
+    assert packs == [(layer_edges * 32, layer_edges,
+                      {r["poly_id"] for r in rows})]
+    del packs[:]
     # 40 polys x 8 edges x 32 B ~ 10 kB -> a 2 kB cap forces 5 chunks
     many = _set(pip_join(pts, polys, level=6, max_broadcast_bytes=2048))
-    assert len(assembled) == 5 and sum(assembled) == layer_edges
-    assert max(packed) < layer_edges and max(assembled) < layer_edges
+    first, chunks = packs[0], packs[1:]
+    assert first[0] <= 2048 and first[1] == layer_edges
+    assert len(chunks) == 5 and sum(c[1] for c in chunks) == layer_edges
+    assert max(c[1] for c in chunks) < layer_edges
+    ids = [c[2] for c in chunks]
+    assert set().union(*ids) == {r["poly_id"] for r in rows}
+    assert sum(map(len, ids)) == len(rows)  # disjoint chunks
     assert one == many and len(one) > 0
 
 

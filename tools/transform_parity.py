@@ -397,8 +397,10 @@ def _udfs(out):
     out["geodesic_length|scalar"] = _outcome(lambda: np.array(
         [D.geom_length_m(**g) for g in shapes + lines]))
 
-    # PIP: the edge pack over two batches, its driver assembly, and the
-    # ray-cast test of seeded points against the broadcast edges
+    # PIP: the polygon pack over two batches, its driver assembly, and
+    # the ray-cast test of seeded points against the broadcast edges (a
+    # tree whose pack row carries bboxes takes polygon positions, an
+    # older one poly ids)
     polys = [{"poly_id": f"p{i}", "rings": g["parts"]}
              for i, g in enumerate(shapes) if g["kind"] == "Polygon"]
     polys.append({"poly_id": "z", "rings": [
@@ -416,20 +418,25 @@ def _udfs(out):
     J._pack_edges_sdf(spark.frame(poly_id=StringType()), "poly_id", "rings")
     pack = spark.bodies[-1]
     out["pip_pack"] = _outcome(lambda: next(iter(pack(pack_batches()))))
-    packed = _columns(next(iter(pack(pack_batches()))))
-    edges = J._assemble_edges([dict(zip(packed, v))
-                               for v in zip(*packed.values())])
-    test = J._make_pip_test_udf_bc(type("Bc", (), {"value": edges})).func
+    packed = next(iter(pack(pack_batches())))
     px = np.concatenate([rng.uniform(-180.0, 180.0, 400),
                          [v for p in polys for r in p["rings"]
                           for v in np.asarray(r)[:, 0]], [np.nan, 5.0]])
     py = np.concatenate([rng.uniform(-90.0, 90.0, 400),
                          [v for p in polys for r in p["rings"]
                           for v in np.asarray(r)[:, 1]], [5.0, np.nan]])
-    ids = [polys[i % len(polys)]["poly_id"] for i in range(len(px))]
-    out["pip_test"] = _outcome(lambda: test(col(px), col(py), col(ids)))
-    out["pip_test|unknown"] = _outcome(
-        lambda: test(col(px[:3]), col(py[:3]), col(["p0", "nope", "z"])))
+    if hasattr(J, "_assemble_pack"):
+        edges = J._assemble_pack(pa.Table.from_batches([packed])).edges
+        keys = pa.array([i % len(polys) for i in range(len(px))], pa.int32())
+    else:
+        packed = _columns(packed)
+        edges = J._assemble_edges([dict(zip(packed, v))
+                                   for v in zip(*packed.values())])
+        keys = col([polys[i % len(polys)]["poly_id"] for i in range(len(px))])
+    for name, chunk_pairs in (("pip_test", 4_000_000), ("pip_test|chunked", 64)):
+        test = J._make_pip_test_udf_bc(type("Bc", (), {"value": edges}),
+                                       chunk_pairs).func
+        out[name] = _outcome(lambda: test(col(px), col(py), keys))
 
 
 def dump(path: str) -> None:
