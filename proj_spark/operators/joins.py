@@ -42,7 +42,7 @@ from pyspark.sql.window import Window
 
 from .._pyworker import Coords, _coords, _floats, _offsets, _ranges
 from .cells import (MAX_LEVEL, _block_cells, _col_ij, _np_ij, _np_spread,
-                    cell_col)
+                    cell_col, np_cell, np_cell_ring)
 
 __all__ = [
     "EARTH_RADIUS_M",
@@ -142,10 +142,11 @@ def _pack_edges_sdf(polys: DataFrame, poly_id_col: str, rings_col: str,
     ring edges as packed float64 buffers (``x1 y1 x2 y2``), exterior-ring
     bboxes (``bbox``, n x 4 float64), the partition's edge count
     (``n_edges``) and its bbox span sums (``spans``: width, height,
-    polygons with a box).  What transits the driver is K rows (K =
-    partitions) of raw buffers, no per-point Python objects.  A
-    partition whose edges take more than ``share`` bytes (32 per edge)
-    sends only ``n_edges`` and ``spans``, the rest null."""
+    polygons with a box of finite width and height).  What transits the
+    driver is K rows (K = partitions) of raw buffers, no per-point
+    Python objects.  A partition whose edges take more than ``share``
+    bytes (32 per edge) sends only ``n_edges`` and ``spans``, the rest
+    null."""
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import (ArrayType, BinaryType, DoubleType,
                                    LongType, StructField, StructType)
@@ -169,9 +170,11 @@ def _pack_edges_sdf(polys: DataFrame, poly_id_col: str, rings_col: str,
             return
         x1, y1, x2, y2, cnts, bbox = (np.concatenate(p) for p in zip(*parts))
         n_edges = int(cnts.sum())
-        box = bbox[_has_box(bbox)]
-        spans = [float((box[:, 1] - box[:, 0]).sum()),
-                 float((box[:, 3] - box[:, 2]).sum()), float(len(box))]
+        # a box with a non-finite width or height (a NaN or infinite
+        # vertex) has no span to average
+        w, h = bbox[:, 1] - bbox[:, 0], bbox[:, 3] - bbox[:, 2]
+        fin = _has_box(bbox) & np.isfinite(w) & np.isfinite(h)
+        spans = [float(w[fin].sum()), float(h[fin].sum()), float(fin.sum())]
         full = share is None or n_edges * 32 <= share
         yield pa.RecordBatch.from_arrays(
             [pa.ListArray.from_arrays([0, len(cnts)], pa.concat_arrays(pids),
@@ -524,33 +527,34 @@ def radius_join(
     q = _block_cells(q, *_col_ij(F.col("q_lon"), F.col("q_lat"), level),
                      (-F.col("__rx"), F.col("__rx")), (F.lit(-ry), F.lit(ry)),
                      level, "cand_cell")
-    q = q.select(query_id_col, "q_lon", "q_lat", "cand_cell").dropDuplicates(
-        [query_id_col, "cand_cell"])  # polar wrap collisions
+    q = q.select(query_id_col, "q_lon", "q_lat", "cand_cell")
     # decide broadcast vs shuffle.  Caller override first (True = no
-    # plan-time action at all); else prove safety with the static
-    # worst-case ring size and a LIMIT-bounded count; else fall back
-    # to the refined per-row estimate (sum of (2rx+1)(2ry+1), an upper
-    # bound on exploded rows — the lat clamp and wrap-dedup shrink it)
+    # plan-time action at all); else the exploded rows, the sum of each
+    # query's ring size (2rx+1)(2ry+1) — an upper bound: the lat clamp
+    # and wrap-dedup only shrink it — must fit max_broadcast_rows.  A
+    # ring holds at least 2ry+1 rows, so past ``cap`` queries the sum
+    # cannot fit, and one collect of at most cap+1 ring sizes decides
     if broadcast_queries is None:
-        worst_per_query = (2 * (n // 2 + 1) + 1) * (2 * ry + 1)
-        threshold = max_broadcast_rows // worst_per_query
-        probe = queries.limit(threshold + 1).count() if threshold > 0 else 1
-        if probe <= threshold:
-            too_big = False
-        else:
-            est = queries.select(
-                ((F.lit(2) * rx + F.lit(1)) * F.lit(2 * ry + 1)).alias("__c")
-            ).agg(F.sum("__c")).first()[0]
-            too_big = est is not None and est > max_broadcast_rows
+        cap = max_broadcast_rows // (2 * ry + 1)
+        sizes = queries.select(
+            ((F.lit(2) * rx + F.lit(1)) * F.lit(2 * ry + 1)).alias("__c")
+        ).limit(cap + 1).toArrow().column("__c")
+        est = pc.sum(sizes).as_py() or 0
+        too_big = len(sizes) > cap or est > max_broadcast_rows
+        # a ring wider than the globe (2rx+1 > n) repeats cells
+        wraps = too_big or (pc.max(sizes).as_py() or 0) > n * (2 * ry + 1)
     else:
-        too_big = not broadcast_queries
+        too_big, wraps = not broadcast_queries, True
+    if wraps:
+        q = q.dropDuplicates([query_id_col, "cand_cell"])  # polar wrap collisions
     if too_big:
         if broadcast_queries is None:
             import warnings
 
             warnings.warn(
-                f"radius_join: exploded query rings estimated at {est} "
-                f"rows (> max_broadcast_rows={max_broadcast_rows}); "
+                f"radius_join: the exploded query rings exceed "
+                f"max_broadcast_rows={max_broadcast_rows} ({est} rows "
+                f"estimated from {len(sizes)} queries); "
                 f"falling back to a shuffle join — the points table "
                 f"WILL be shuffled on cell.  Reduce the radius, the "
                 f"query count, or pass a larger max_broadcast_rows to "
@@ -578,10 +582,11 @@ _BIG_M = 4.0e7  # > any great-circle distance on Earth (half circumference ~2e7)
 _BRUTE_PAIRS = 4_000_000
 
 
-def _block_guard_col(q_lon: Column, q_lat: Column, level: int, ring: int) -> Column:
+def _np_block_guard(q_lon: np.ndarray, q_lat: np.ndarray, level: int,
+                    ring: int) -> np.ndarray:
     """Conservative LOWER bound (meters) of the great-circle distance
-    from a query point to ANY point outside its ring-``ring`` candidate
-    block at ``level`` — derived on the SAME sphere as
+    from each query point to ANY point outside its ring-``ring``
+    candidate block at ``level`` — derived on the SAME sphere as
     :func:`haversine_col` (R = EARTH_RADIUS_M), so the bound can never
     exceed a true haversine distance:
 
@@ -597,55 +602,50 @@ def _block_guard_col(q_lon: Column, q_lat: Column, level: int, ring: int) -> Col
     full globe in longitude) contribute +inf.  Wrapped-longitude blocks
     (query near the antimeridian) stay correct because west/east are
     kept in the query's unwrapped frame and candidate cells wrap with
-    the same modulo as np_cell_ring.
+    the same modulo as np_cell_ring.  A NaN coordinate gives a NaN
+    bound, which proves nothing.
     """
+    q_lon = np.asarray(q_lon, dtype=np.float64)
+    q_lat = np.asarray(q_lat, dtype=np.float64)
     n = 1 << level
     cw, ch = 360.0 / n, 180.0 / n
-    ix, iy = _col_ij(q_lon, q_lat, level)
-    west = (ix - F.lit(ring)) * F.lit(cw) - F.lit(180.0)
-    east = (ix + F.lit(ring + 1)) * F.lit(cw) - F.lit(180.0)
-    south = (iy - F.lit(ring)) * F.lit(ch) - F.lit(90.0)
-    north = (iy + F.lit(ring + 1)) * F.lit(ch) - F.lit(90.0)
-
-    big = F.lit(_BIG_M)
-    g_s = F.when(south > F.lit(-90.0),
-                 F.radians(q_lat - south) * F.lit(EARTH_RADIUS_M)).otherwise(big)
-    g_n = F.when(north < F.lit(90.0),
-                 F.radians(north - q_lat) * F.lit(EARTH_RADIUS_M)).otherwise(big)
-    if (2 * ring + 1) * cw >= 360.0:
-        g_lon = big
-    else:
-        max_abs_lat = F.greatest(
-            F.abs(F.greatest(south, F.lit(-90.0))),
-            F.abs(F.least(north, F.lit(90.0))),
-        )
-        dlon = F.least(q_lon - west, east - q_lon, F.lit(180.0))
-        g_lon = (
-            F.lit(2.0 * EARTH_RADIUS_M)
-            * F.asin(F.cos(F.radians(max_abs_lat)) * F.sin(F.radians(dlon) / F.lit(2.0)))
-        )
-        # Latitude-split refinement for pole-reaching blocks: when the
-        # band touches a pole, cos(max|lat|) -> 0 and the chord bound
-        # above degenerates to ~0 m, leaving every polar query
-        # unprovable (measured: the two southernmost bench queries
-        # forced a full expansion round + brute pass on every call).
-        # For ANY split latitude t >= |lat_q|, an in-band point beyond
-        # the longitude wall either has |lat| <= t — then
-        # h >= cos(lat_q) cos(lat_p) sin^2(dlon/2) >= cos^2(t)
-        # sin^2(dl/2), i.e. d >= 2R asin(cos t sin(dl/2)) — or
-        # |lat| > t — then |dlat| >= t - |lat_q| and d >= R * dphi.
-        # min() of the two is a valid lower bound for every t, so the
-        # max over a fixed t-grid is too; it stays nonzero at the
-        # poles.  Pure Column math over the (small) query side.
-        absq = F.abs(q_lat)
-        half = F.sin(F.radians(dlon) / F.lit(2.0))
-        for j in range(1, 8):
-            t = absq + (F.lit(90.0) - absq) * F.lit(j / 8.0)
-            b1 = (F.lit(2.0 * EARTH_RADIUS_M)
-                  * F.asin(F.cos(F.radians(t)) * half))
-            b2 = F.radians(t - absq) * F.lit(EARTH_RADIUS_M)
-            g_lon = F.greatest(g_lon, F.least(b1, b2))
-    return F.least(g_s, g_n, g_lon)
+    ix, iy = _np_ij(q_lon, q_lat, level)
+    west = (ix - ring) * cw - 180.0
+    east = (ix + ring + 1) * cw - 180.0
+    south = (iy - ring) * ch - 90.0
+    north = (iy + ring + 1) * ch - 90.0
+    R = EARTH_RADIUS_M
+    with np.errstate(invalid="ignore"):
+        g_s = np.where(south > -90.0, np.radians(q_lat - south) * R, _BIG_M)
+        g_n = np.where(north < 90.0, np.radians(north - q_lat) * R, _BIG_M)
+        if (2 * ring + 1) * cw >= 360.0:
+            g_lon = np.full_like(q_lat, _BIG_M)
+        else:
+            max_abs_lat = np.maximum(np.abs(np.maximum(south, -90.0)),
+                                     np.abs(np.minimum(north, 90.0)))
+            dlon = np.minimum(np.minimum(q_lon - west, east - q_lon), 180.0)
+            half = np.sin(np.radians(dlon) / 2.0)
+            g_lon = 2.0 * R * np.arcsin(np.cos(np.radians(max_abs_lat)) * half)
+            # Latitude-split refinement for pole-reaching blocks: when the
+            # band touches a pole, cos(max|lat|) -> 0 and the chord bound
+            # above degenerates to ~0 m, leaving every polar query
+            # unprovable (measured: the two southernmost bench queries
+            # forced a full expansion round + brute pass on every call).
+            # For ANY split latitude t >= |lat_q|, an in-band point beyond
+            # the longitude wall either has |lat| <= t — then
+            # h >= cos(lat_q) cos(lat_p) sin^2(dlon/2) >= cos^2(t)
+            # sin^2(dl/2), i.e. d >= 2R asin(cos t sin(dl/2)) — or
+            # |lat| > t — then |dlat| >= t - |lat_q| and d >= R * dphi.
+            # min() of the two is a valid lower bound for every t, so the
+            # max over a fixed t-grid is too; it stays nonzero at the
+            # poles.
+            absq = np.abs(q_lat)
+            for j in range(1, 8):
+                t = absq + (90.0 - absq) * (j / 8.0)
+                b1 = 2.0 * R * np.arcsin(np.cos(np.radians(t)) * half)
+                b2 = np.radians(t - absq) * R
+                g_lon = np.maximum(g_lon, np.minimum(b1, b2))
+        return np.minimum(np.minimum(g_s, g_n), g_lon)
 
 
 def _running_head(q: pa.Array, carry: tuple, k: int):
@@ -693,67 +693,73 @@ def _prereduce_topk(cand: DataFrame, k: int, query_id_col: str,
     return sorted_.mapInArrow(_head, cand.schema)
 
 
-def _ring_topk(
-    pts: DataFrame,
-    queries: DataFrame,
-    r: int,
-    k: int,
-    level: int,
-    lon_col: str,
-    lat_col: str,
-    point_id_col: str,
-    query_id_col: str,
-    two_phase: bool,
-) -> DataFrame:
-    """One candidate-generation round: queries explode their ring-``r``
-    cells RELATIONALLY through :func:`cells._block_cells`, so the whole
-    q-side stays pure JVM (an array-expression ring duplicated the
-    compact->re-spread tree (2r+1)^2 times and blew up Catalyst
-    analysis; a numpy UDF avoids that but puts a Python worker launch
-    inside every broadcast build — both measured slower).  Then
-    BROADCAST, equi-join on the big table's cell column, per-query
-    top-k.
+# the kNN candidate frames carry each query's position in the driver's
+# query table, and the window ranks per position
+_QPOS = "__qpos"
 
-    Every query also gets one SENTINEL row (NULL ``point_id``, NULL
-    ``dist_m`` ordered after every real distance, NaN included): a query
-    with fewer than k candidates keeps its sentinel, so the round's
-    output holds every query."""
-    q = queries.select(
-        F.col(query_id_col),
-        F.col(lon_col).alias("q_lon"),
-        F.col(lat_col).alias("q_lat"),
-    )
-    ring = (F.lit(-r), F.lit(r))
-    q = _block_cells(q, *_col_ij(F.col("q_lon"), F.col("q_lat"), level),
-                     ring, ring, level, "cand_cell")
-    if 2 * r + 1 >= 1 << level:
-        # the ring wraps the whole globe in longitude: pmod collides and
-        # would duplicate candidates (and thus top-k rows) — dedup the
-        # (small) q side before the join
-        q = q.dropDuplicates([query_id_col, "cand_cell"])
-    cand = pts.join(F.broadcast(q), pts["cell"] == q["cand_cell"], "inner")
+
+def _top_k(cand: DataFrame, k: int, point_id_col: str) -> DataFrame:
+    """Each query's first ``k`` candidate rows by ``(dist_m,
+    point_id)``, numbered ``rank`` 1..k.  A ``row_number`` window alone,
+    so Spark limits each partition to its first ``k`` rows per query
+    before the shuffle.  The ring rounds and the brute pass both rank
+    here."""
+    w = Window.partitionBy(_QPOS).orderBy(F.col("dist_m").asc(),
+                                          F.col(point_id_col).asc())
+    return cand.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+
+
+def _candidates(cand: DataFrame, k: int, lon_col: str, lat_col: str,
+                point_id_col: str, query_id_col: str,
+                two_phase: bool) -> DataFrame:
+    """Candidate (query, point) rows as ``__qpos, query_id, q_lon,
+    q_lat, point_id, dist_m`` from a join of points and a query table;
+    with ``two_phase``, only each partition's per-query head(k)."""
     cand = cand.select(
-        query_id_col, "q_lon", "q_lat", point_id_col,
+        _QPOS, query_id_col, "q_lon", "q_lat", point_id_col,
         haversine_col(F.col(lon_col), F.col(lat_col),
                       F.col("q_lon"), F.col("q_lat")).alias("dist_m"),
     )
     if two_phase:
-        cand = _prereduce_topk(cand, k, query_id_col, point_id_col)
-    sentinel = queries.select(
-        F.col(query_id_col),
-        F.col(lon_col).alias("q_lon"),
-        F.col(lat_col).alias("q_lat"),
-        F.lit(None).cast(pts.schema[point_id_col].dataType).alias(point_id_col),
-        F.lit(None).cast("double").alias("dist_m"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("dist_m").asc_nulls_last(),
-                                                 F.col(point_id_col).asc())
-    return (
-        cand.unionByName(sentinel)
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, "q_lon", "q_lat", point_id_col, "dist_m", "rank")
-    )
+        cand = _prereduce_topk(cand, k, _QPOS, point_id_col)
+    return cand
+
+
+def _ring_cells(q: pa.Table, r: int, level: int) -> pa.Table:
+    """Driver-side candidate cells of a query table (``__qpos``,
+    ``query_id``, ``q_lon``, ``q_lat``): one row per query and per cell
+    of its ring-``r`` block (:func:`cells.np_cell_ring`: longitude
+    wraps, rows past a pole are dropped) in column ``cand_cell``, each
+    equal to ``cell_col`` of a point in it.  A query with a NULL
+    coordinate has no cell.  A block that wraps the whole globe in
+    longitude repeats cells; each is kept once per query."""
+    lon, lat = (q.column(c).combine_chunks() for c in ("q_lon", "q_lat"))
+    valid = np.flatnonzero(
+        pc.and_(lon.is_valid(), lat.is_valid()).to_numpy(zero_copy_only=False))
+    ring = np_cell_ring(np_cell(_floats(lon)[valid], _floats(lat)[valid], level), r)
+    if 2 * r + 1 >= 1 << level:
+        srt = np.sort(ring, axis=1)
+        ring = np.where(np.diff(srt, axis=1, prepend=-1) != 0, srt, -1)
+    row, col = np.nonzero(ring >= 0)
+    # a non-null cell column: no NULL filter to plan on the local side
+    return q.take(valid[row]).append_column(
+        pa.field("cand_cell", pa.int64(), nullable=False),
+        pa.array(ring[row, col], pa.int64()))
+
+
+def _ring_round(pts: DataFrame, q: pa.Table, r: int, k: int, level: int,
+                lon_col: str, lat_col: str, point_id_col: str,
+                query_id_col: str, two_phase: bool) -> DataFrame:
+    """One candidate-generation round: the queries' ring-``r`` cells
+    come from the driver (:func:`_ring_cells`, numpy, like the PIP
+    cover) as a local relation, BROADCAST into an equi-join on the big
+    table's JVM cell column, then per-query top-k (:func:`_top_k`).
+    Every round and every call plans the same query: the ring and the
+    queries live in the local relation's rows, not in its code."""
+    cells = pts.sparkSession.createDataFrame(_ring_cells(q, r, level))
+    cand = pts.join(F.broadcast(cells), pts["cell"] == cells["cand_cell"], "inner")
+    return _top_k(_candidates(cand, k, lon_col, lat_col, point_id_col,
+                              query_id_col, two_phase), k, point_id_col)
 
 
 def knn_join(
@@ -784,26 +790,27 @@ def knn_join(
          ~log4(100) finer grid instead of 100x the candidates per
          query.  Pass ``n_points`` to skip the count job (or ``level``
          to pin it).
-      2. **Fast path**: queries (the small/broadcast side by contract)
-         explode ring-``ring`` candidate cells; equi-join on the big
-         table's JVM cell column; per-query top-k.  With
-         ``two_phase`` (default: on when the point table is large) a
-         shuffle-free per-partition head(k) runs first so the final
-         window shuffles O(k x partitions), not O(candidates).
-      3. **One status frame per round, no extra shuffle**: every query
-         carries a sentinel row (NULL point_id, ordered after every real
-         candidate), so the round's rank<=k rows hold EVERY query.  Over
-         them, count/max window functions reuse the query_id
-         partitioning; a query is proven exact iff it has k non-null
-         hits and its kth distance <= the spherical chord lower bound
-         to its block boundary (:func:`_block_guard_col`).  The flagged
-         frame is checkpointed once per round: its proven rows are
-         output, and the next round's queries are a NARROW filter over
-         it (unproven, rank 1) — no anti-join against the input.
-      4. **Pair-budget gate, then ring expansion**: each round ends in
-         one bounded probe, ``remaining.limit(T + 1).count()`` with
+      2. **Fast path**: the queries (the small/broadcast side by
+         contract) come to the driver once, as Arrow; numpy expands
+         each into its ring-``ring`` candidate cells
+         (:func:`_ring_cells`), which a local relation BROADCASTs into
+         an equi-join on the big table's JVM cell column; per-query
+         top-k by one ``row_number`` window, which Spark pre-limits to
+         k rows per query before the shuffle.  With ``two_phase``
+         (default: on when the point table is large) a shuffle-free
+         per-partition head(k) runs first as well.
+      3. **The driver proves each round**: the round's top-k rows come
+         back through Arrow (at most k per query); a query is proven
+         exact iff it has a k-th candidate and that distance is <= the
+         spherical chord lower bound to its block boundary
+         (:func:`_np_block_guard`).  Proven rows are kept as they are;
+         a query with fewer than k candidates, none included, is not.
+         Every round plans the same query (the cells, the ring and the
+         queries are rows of the local relation), so warm calls reuse
+         Spark's generated code.
+      4. **Pair-budget gate, then ring expansion**: with
          ``T = _BRUTE_PAIRS // n_points`` (0 when ``n_points`` is
-         unknown, i.e. a pinned ``level``).  An empty remainder returns
+         unknown, i.e. a pinned ``level``), an empty remainder returns
          at once.  A remainder of at most T queries goes straight to
          the exact brute-force pass (a broadcast of those queries
          only): its <= _BRUTE_PAIRS pairs cost no more than the full
@@ -812,15 +819,14 @@ def knn_join(
          never a full scan — for ``expansion_rounds`` rounds; whatever
          is still unproven then takes the brute-force pass.
 
-    Construction is EAGER: each round's checkpoint runs its candidate
-    join (AQE materializes the broadcast and the window exchange when
-    the checkpoint is planned) and its probe materializes the rest, so
-    the call returns after every ring round it needed has executed;
-    only the union of proven rows (and the brute pass, if any) runs
-    when the result is consumed.  With ``exact_fallback=False`` the
-    call runs no ring job and returns round 1's top-k rows as they are,
-    proven or not (sentinels dropped).  Point ids must be non-null: a
-    NULL ``point_id`` reads as a sentinel.
+    Construction is EAGER: one job collects the queries, and every ring
+    round it needs runs before the call returns.  The proven rows come
+    back as a local relation; only the brute pass, if any, runs when
+    the result is consumed.  With ``exact_fallback=False`` the call
+    collects the queries, runs no ring job and returns round 1's
+    top-k rows as they are, proven or not.  The driver reads a round's
+    rows back by query id, so a query whose id is NULL or repeats is
+    never proven in a round and takes the brute pass.
 
     Output: query_id, q_lon, q_lat, point_id, dist_m, rank (1..k).
     """
@@ -857,71 +863,56 @@ def knn_join(
             two_phase = est_cand > 5000.0
 
     pts = points.withColumn("cell", cell_col(F.col(lon_col), F.col(lat_col), level))
-    if not exact_fallback:
-        return _ring_topk(pts, queries, ring, k, level, lon_col, lat_col,
-                          point_id_col, query_id_col, two_phase
-                          ).where(F.col(point_id_col).isNotNull())
-
+    spark = points.sparkSession
+    qt = queries.select(F.col(query_id_col), F.col(lon_col).alias("q_lon"),
+                        F.col(lat_col).alias("q_lat")).toArrow()
+    qt = qt.add_column(0, _QPOS, pa.array(np.arange(qt.num_rows), pa.int64()))
     out_cols = [query_id_col, "q_lon", "q_lat", point_id_col, "dist_m", "rank"]
-    wq = Window.partitionBy(query_id_col)  # reuses topk's partitioning: no exchange
-
-    def _flag(tk: DataFrame, r: int) -> DataFrame:
-        # count/max skip the sentinel's NULLs
-        ok = (F.count(point_id_col).over(wq) >= k) & (
-            F.max("dist_m").over(wq)
-            <= _block_guard_col(F.col("q_lon"), F.col("q_lat"), level, r)
-        )
-        # the status frame of the round: proven rows, and the rank-1 row
-        # (real or sentinel) of every unproven query, read by two
-        # consumers — checkpoint so the candidate join runs once
-        return tk.withColumn("__ok", ok).localCheckpoint(eager=False)
+    if not exact_fallback:
+        return _ring_round(pts, qt, ring, k, level, lon_col, lat_col, point_id_col,
+                           query_id_col, two_phase).select(*out_cols)
 
     # a remainder this small costs the brute pass at most _BRUTE_PAIRS
     # pairs — no more than the full points scan of one ring round
     brute_max = _BRUTE_PAIRS // n_points if n_points else 0
-    remaining, r, proven = queries, ring, []
+    q_lon, q_lat = (_floats(qt.column(c).combine_chunks()) for c in ("q_lon", "q_lat"))
+    # a round's rows find their query by id, so a query whose id is
+    # NULL or repeats is never proven in a round: the brute pass ranks
+    # every query on its own
+    ids = qt.column(query_id_col).combine_chunks()
+    first = pc.index_in(ids, value_set=ids).to_numpy(zero_copy_only=False)
+    provable = (np.bincount(first, minlength=qt.num_rows)[first] == 1) \
+        & ids.is_valid().to_numpy(zero_copy_only=False)
+    remaining, r, proven = np.arange(qt.num_rows), ring, []
     for rnd in range(max(expansion_rounds, 0) + 1):
         if rnd:
             # unproven queries (sparse neighborhoods) retry a wider ring
             r = expansion_factor * r + 1
-        flagged = _flag(_ring_topk(pts, remaining, r, k, level, lon_col, lat_col,
-                                   point_id_col, query_id_col, two_phase), r)
-        proven.append(flagged.where(F.col("__ok")).select(*out_cols))
-        # narrow: one row per unproven query, zero-candidate ones included
-        remaining = flagged.where(~F.col("__ok") & (F.col("rank") == 1)).select(
-            F.col(query_id_col),
-            F.col("q_lon").alias(lon_col),
-            F.col("q_lat").alias(lat_col),
-        )
-        # one bounded probe per round; an empty remainder (the designed
-        # common case at adaptive level) skips constructing the later
-        # rounds and the brute-force subplan
-        n_left = remaining.limit(brute_max + 1).count()
-        if n_left == 0:
-            return functools.reduce(DataFrame.unionByName, proven)
-        if n_left <= brute_max:
+        tk = _ring_round(pts, qt.take(remaining), r, k, level, lon_col, lat_col,
+                         point_id_col, query_id_col, two_phase
+                         ).select(*out_cols).toArrow()
+        # a query is proven when it has a k-th candidate within the
+        # guard (a NaN k-th distance, from fewer than k, never is)
+        pos = pc.index_in(tk.column(query_id_col), value_set=ids).to_numpy(
+            zero_copy_only=False)
+        at_k = tk.column("rank").to_numpy() == k
+        kth = np.full(qt.num_rows, np.nan)
+        kth[pos[at_k]] = tk.column("dist_m").to_numpy()[at_k]
+        ok = np.zeros(qt.num_rows, dtype=bool)
+        ok[remaining] = provable[remaining] & (kth[remaining] <= _np_block_guard(
+            q_lon[remaining], q_lat[remaining], level, r))
+        proven.append(tk.filter(pa.array(ok[pos])))
+        remaining = remaining[~ok[remaining]]
+        if not len(remaining):
+            return spark.createDataFrame(pa.concat_tables(proven))
+        if len(remaining) <= brute_max:
             break
 
     # exact brute-force pass for whatever survives expansion (rare:
-    # pole-adjacent queries, k > population) — broadcast those queries
-    bad = remaining.select(
-        F.col(query_id_col),
-        F.col(lon_col).alias("q_lon"),
-        F.col(lat_col).alias("q_lat"),
-    )
-    brute = points.crossJoin(F.broadcast(bad)).select(
-        query_id_col, "q_lon", "q_lat", point_id_col,
-        haversine_col(F.col(lon_col), F.col(lat_col),
-                      F.col("q_lon"), F.col("q_lat")).alias("dist_m"),
-    )
-    if two_phase:
-        brute = _prereduce_topk(brute, k, query_id_col, point_id_col)
-    w = Window.partitionBy(query_id_col).orderBy(F.col("dist_m").asc(),
-                                                 F.col(point_id_col).asc())
-    brute_topk = (
-        brute.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(*out_cols)
-    )
-    proven.append(brute_topk)
-    return functools.reduce(DataFrame.unionByName, proven)
+    # pole-adjacent queries, k > population) — broadcast those queries;
+    # it runs when the result is consumed
+    bad = spark.createDataFrame(qt.take(remaining))
+    brute = _candidates(points.crossJoin(F.broadcast(bad)), k, lon_col, lat_col,
+                        point_id_col, query_id_col, two_phase)
+    return spark.createDataFrame(pa.concat_tables(proven)).unionByName(
+        _top_k(brute, k, point_id_col).select(*out_cols))

@@ -145,7 +145,11 @@ def _hamming_pairs(df: DataFrame, id_col: str, hash_col: str,
     ``max_hamming + 1`` bands of ``bits // (max_hamming + 1)`` bits,
     the last one widened by the remainder, so every bit is in exactly
     one band and a pair within the budget agrees on at least one band.
-    Verified by the JVM ``bit_count`` of the masked XOR."""
+    Verified by the JVM ``bit_count`` of the masked XOR.
+
+    Both self-join sides read ``df``: a stored hash column costs one
+    more scan, which is cheaper than a checkpoint; a caller whose hash
+    is computed materializes it first (:func:`simhash_dedup_pairs`)."""
     if max_hamming < 0:
         raise ValueError(f"max_hamming must be >= 0, got {max_hamming}")
     nb = max_hamming + 1
@@ -153,8 +157,6 @@ def _hamming_pairs(df: DataFrame, id_col: str, hash_col: str,
     bands = _bit_bands(F.col("__h"),
                        [chunk] * (nb - 1) + [bits - chunk * (nb - 1)])
     base = df.select(id_col, F.col(hash_col).alias("__h"), *keep_cols)
-    # consumed by both self-join sides: one computation, not two
-    base = base.localCheckpoint(eager=False)
     x = F.col("__h_a").bitwiseXOR(F.col("__h_b"))
     if bits < 64:
         x = x.bitwiseAND(F.lit((1 << bits) - 1))
@@ -411,39 +413,34 @@ def minhash_lsh_groups(
         .groupBy(id_col)
         .agg(F.min("bmin").alias("cand_canon"))
     )
-    # consumed by BOTH output branches (trivial filter + verify join):
-    # without the checkpoint each union branch replans and re-executes
-    # the signature/explode/bucket subtree (plan-audited duplication)
-    cand = cand.localCheckpoint(eager=False)
-    trivial = cand.where(F.col("cand_canon") == F.col(id_col)).select(
-        F.col(id_col), F.col(id_col).alias("canonical_id")
-    )
     # verify against the precomputed hashed-shingle sets (see
-    # minhash_lsh_pairs: same Jaccard, no per-candidate re-shingling)
+    # minhash_lsh_pairs: same Jaccard, no per-candidate re-shingling).
+    # Every doc takes both lookups: a doc that is its own candidate
+    # compares with itself and keeps its id either way, so one branch
+    # serves all docs.  Both lookups join the same ``shsets`` frame on
+    # ``id_col`` (the second one with the candidate canonical renamed
+    # to it), so the plan reads and broadcasts it once
     shsets = sig.select(id_col, "__shset")
-    need = (
-        cand.where(F.col("cand_canon") < F.col(id_col))
+    pairs = (
+        cand.join(shsets, id_col)
+        .select(F.col(id_col).alias("__doc"),
+                F.col("__shset").alias("__dshset"),
+                F.col("cand_canon").alias(id_col))
         .join(shsets, id_col)
-        .join(
-            shsets.select(F.col(id_col).alias("cand_canon"),
-                          F.col("__shset").alias("__cshset")),
-            "cand_canon",
-        )
     )
-    sa, sb = F.col("__shset"), F.col("__cshset")
+    sa, sb = F.col("__dshset"), F.col("__shset")
     inter = F.size(F.array_intersect(sa, sb)).cast("double")
     union = (F.size(sa) + F.size(sb)).cast("double") - inter
     # docs shorter than one shingle share the empty-signature bucket;
     # their union is 0 — a NULL jaccard that never verifies (no
     # divide-by-zero under ANSI mode), so they stay singletons
     jac = F.when(union > 0, inter / union)
-    verified = need.select(
-        F.col(id_col),
-        F.when(jac >= jaccard_threshold, F.col("cand_canon"))
-        .otherwise(F.col(id_col))
+    return pairs.select(
+        F.col("__doc").alias(id_col),
+        F.when(jac >= jaccard_threshold, F.col(id_col))
+        .otherwise(F.col("__doc"))
         .alias("canonical_id"),
     )
-    return trivial.unionByName(verified)
 
 
 def dedup_full(
@@ -576,17 +573,22 @@ def dedup_connected_components(
     silently hit ``max_iters`` (a 60-node path needs 59 propagate-only
     rounds but 7 with doubling).
 
-    The convergence test rides the same action that materializes the
-    round's labels (a ``chg`` flag counted on the checkpointed frame) —
-    no separate old-vs-new compare join.  Each round localCheckpoints
-    the label frame (iterative algorithms otherwise grow an unbounded
-    lineage); the driver sees one scalar count per round, the data
-    never collects.  ``stats["rounds"]`` reports the executed round
-    count when a dict is passed (pinned by pytest).  A graph that has
-    not converged after ``max_iters`` rounds raises ``RuntimeError``
-    naming the round count, on both paths, instead of returning labels
-    that are not component minima (a 60-node chain with shuffled ids
-    can need more than 12 rounds).
+    Small graphs close on the driver: one Arrow collect of at most
+    ``_CC_LOCAL_MAX_EDGES + 1`` edges (its LIMIT is the plan's root)
+    both decides the path and carries the edge list to a numpy mirror
+    of the same rounds.  A longer list takes the distributed loop.
+
+    In the loop, the convergence test rides the same action that
+    materializes the round's labels (a ``chg`` flag counted on the
+    checkpointed frame) — no separate old-vs-new compare join.  Each
+    round localCheckpoints the label frame (iterative algorithms
+    otherwise grow an unbounded lineage); the driver sees one scalar
+    count per round, the data never collects.  ``stats["rounds"]``
+    reports the executed round count when a dict is passed (pinned by
+    pytest).  A graph that has not converged after ``max_iters`` rounds
+    raises ``RuntimeError`` naming the round count, on both paths,
+    instead of returning labels that are not component minima (a
+    60-node chain with shuffled ids can need more than 12 rounds).
 
     No SQL oracle by design (iterative/recursive); pytest-verified
     against a union-find reference.  Output: (node, component_id).
@@ -595,31 +597,34 @@ def dedup_connected_components(
     # Bounded driver-local fast path (round 7): each DISTRIBUTED round
     # costs three shuffles plus a count action — ~1.5 s of fixed cost
     # per round at any data size — while a verified near-dup edge list
-    # is usually tiny relative to the corpus.  When the pair count is
-    # at most ``_CC_LOCAL_MAX_EDGES``, pull the edges once through
-    # Arrow and run the numpy mirror of the SAME algorithm; identical
-    # labels, identical stats, and the result comes back as a
-    # LocalRelation the planner can broadcast into the caller's final
-    # join.  Long ids
-    # only (the dedup callers' shape); anything else — or a bigger
-    # graph — takes the distributed loop unchanged.
+    # is usually tiny relative to the corpus.  One bounded collect of
+    # at most ``_CC_LOCAL_MAX_EDGES + 1`` edges through Arrow decides
+    # the path and, when the list fits, carries it: the numpy mirror of
+    # the SAME algorithm gives identical labels and stats, and the
+    # result comes back as a LocalRelation the planner can broadcast
+    # into the caller's final join.  The LIMIT is the plan's root, so
+    # it generates no code.  Long ids only (the dedup callers' shape);
+    # anything else — or a bigger graph, whose edges the loop below
+    # then computes once more — takes the distributed loop unchanged.
     from pyspark.sql.types import LongType
 
     if (_CC_LOCAL_MAX_EDGES > 0
             and isinstance(pairs.schema[id_col_a].dataType, LongType)
             and isinstance(pairs.schema[id_col_b].dataType, LongType)):
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
-        e = e.localCheckpoint(eager=False)  # materialized once, reused
-        if e.count() <= _CC_LOCAL_MAX_EDGES:
-            pdf = e.toPandas()
+        got = e.limit(_CC_LOCAL_MAX_EDGES + 1).toArrow()
+        if got.num_rows <= _CC_LOCAL_MAX_EDGES:
             nodes, comp = _cc_local(
-                pdf["u"].to_numpy(np.int64), pdf["v"].to_numpy(np.int64),
+                got.column("u").to_numpy().astype(np.int64, copy=False),
+                got.column("v").to_numpy().astype(np.int64, copy=False),
                 max_iters, stats)
-            out = pd.DataFrame({"node": nodes, "component_id": comp})
-            return pairs.sparkSession.createDataFrame(
-                out, schema="node long, component_id long")
+            # non-null columns: no NULL filter to plan on a join over them
+            return pairs.sparkSession.createDataFrame(pa.table(
+                [nodes, comp], schema=pa.schema(
+                    [pa.field(c, pa.int64(), nullable=False)
+                     for c in ("node", "component_id")])))
     edges = e.unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).localCheckpoint(eager=False)
@@ -790,6 +795,8 @@ def simhash_dedup_pairs(df: DataFrame, text_col: str = "text",
         .select(F.col(id_col),
                 simhash_from_hashes_col(F.col("__thash"), bits).alias("simhash"))
     )
+    # read by both self-join sides: one tokenization, not two
+    sh = sh.localCheckpoint(eager=False)
     return _hamming_pairs(sh, id_col, "simhash", max_hamming, bits)
 
 

@@ -116,18 +116,20 @@ def _construct_jobs(spark, group, build):
 
 
 @pytest.mark.parametrize("case, n_points, budget", [
-    # every query proven in round 1: checkpoint + one probe
+    # every query proven in round 1: the queries' collect, then the
+    # round's collect
     ("proven", None, 4),
     # one query with no ring-1 candidates and a known point count: the
     # pair-budget gate sends it straight to the (lazy) brute pass
     ("brute_gate", 2000, 4),
     # the same query with a pinned level and no point count: one
     # expansion round, then the brute pass
-    ("expansion", None, 8),
+    ("expansion", None, 7),
 ])
 def test_knn_construct_job_budget(spark, case, n_points, budget):
-    # eager construct-time jobs are pinned like plan shapes: each round
-    # is one checkpoint and one bounded probe over its status frame
+    # eager construct-time jobs are pinned like plan shapes: one collect
+    # of the queries, then one collect of each round's top-k rows (AQE
+    # runs its stages as jobs of their own)
     lon, lat = [1.0, 2.0], [1.0, 2.0]
     if case != "proven":
         lon, lat = lon + [120.0], lat + [0.0]  # outside the points' extent
@@ -158,9 +160,9 @@ def test_pip_construct_job_budget(spark, case, level, max_bytes, budget):
 
 
 @pytest.mark.parametrize("case, broadcast_queries, budget", [
-    # the broadcast guard: one LIMIT-bounded count of the queries
-    # (2 jobs under AQE)
-    ("default_guard", None, 2),
+    # the broadcast guard: one collect of at most cap+1 ring sizes,
+    # whose LIMIT is the plan's root
+    ("default_guard", None, 1),
     # a forced broadcast runs nothing at construction
     ("broadcast_queries", True, 0),
 ])
@@ -178,8 +180,8 @@ def test_radius_construct_job_budget(spark, case, broadcast_queries, budget):
 
 
 @pytest.mark.parametrize("case, local_max_edges, budget", [
-    # the edge count, then one Arrow pull for the numpy mirror
-    ("local", None, 3),
+    # one bounded Arrow pull decides the path and feeds the numpy mirror
+    ("local", None, 1),
     # the distributed loop: checkpoints and one change count per round
     ("distributed", 0, 72),
 ])
@@ -205,11 +207,61 @@ def test_minhash_groups_construct_job_budget(spark):
         "text": ["the quick brown fox jumps over the lazy dog"] * 3
         + ["a completely different sentence about spark jobs",
            "another unrelated line of text for the corpus", ""]}))
+    # lazy: the signature and the candidates are computed when the
+    # result is consumed
     out, jobs = _construct_jobs(
         spark, "minhash_groups_budget",
         lambda: textops.minhash_lsh_groups(docs))
-    assert jobs <= 2, f"{jobs} construct-time jobs > 2"
+    assert jobs == 0, f"{jobs} construct-time jobs > 0"
     assert out.count() == 6
+
+
+def _warm_call_ops(spark, tmp_path):
+    """Small inputs for each match operator, built once per call.  The
+    point and query sides are parquet tables, as in a real job: a local
+    relation would fold a LIMIT away before it reaches generated code."""
+    from proj_spark.operators.imagedup import phash_dedup_groups
+
+    _pts(spark).write.parquet(str(tmp_path / "pts"))
+    pd.DataFrame({"query_id": range(4), "lon": [1.0, 2.0, -30.0, 120.0],
+                  "lat": [1.0, 2.0, 15.0, 0.0]}).to_parquet(
+        tmp_path / "qs.parquet")  # the last query has no ring-1 point
+    pts = spark.read.parquet(str(tmp_path / "pts"))
+    qs = spark.read.parquet(str(tmp_path / "qs.parquet"))
+    docs = spark.createDataFrame(pd.DataFrame({
+        "doc_id": range(6),
+        "text": ["the quick brown fox jumps over the lazy dog"] * 3
+        + ["a completely different sentence about spark jobs",
+           "another unrelated line of text for the corpus", ""]}))
+    hashes = spark.createDataFrame(
+        [(10, 0b000000), (11, 0b000111), (12, 0b111111), (99, 0x0F0F0F0F0F0F)],
+        "image_id long, phash long")
+    return {
+        "knn_join": lambda: knn_join(pts, qs, k=3, level=6, n_points=2000),
+        "radius_join": lambda: radius_join(pts, qs, 500_000.0),
+        "minhash_lsh_groups": lambda: textops.minhash_lsh_groups(docs),
+        "phash_dedup_groups": lambda: phash_dedup_groups(
+            hashes, max_hamming=3, bits=48),
+    }
+
+
+@pytest.mark.parametrize("op", ["knn_join", "radius_join",
+                                "minhash_lsh_groups", "phash_dedup_groups"])
+def test_warm_call_compiles_no_class(spark, tmp_path, op):
+    # a warm call plans the same code as the first one, so Spark's
+    # codegen cache serves every class: a per-call literal in generated
+    # code (a LIMIT's counter inside a probe stage, a ring bound) would
+    # compile again on every call
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    build = _warm_call_ops(spark, tmp_path)[op]
+
+    def compiles():
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        build().write.mode("overwrite").format("noop").save()
+        return metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+    compiles()
+    assert compiles() == 0
 
 
 def test_parquet_scan_pushdown_and_pruning(spark, tmp_path):

@@ -367,6 +367,34 @@ def test_pip_join_repeated_poly_id_tests_each_polygon(spark):
                 got.select("point_id", "poly_id").collect()} == want, level
 
 
+def test_pip_join_adaptive_level_skips_nan_boxes(spark, tmp_path):
+    # a NaN x vertex gives its polygon a NaN box width: the adaptive
+    # level must come from the measurable boxes (it raised on the NaN
+    # mean before), the square's hits must equal the even-odd brute
+    # force, and the NaN polygon must gain no hit the brute force lacks.
+    # Its ring is not closed (the brute force counts one crossing for
+    # points left of it) and its box has a NaN max, so pip_join keeps
+    # only some of the brute-force hits
+    rings = {"nan": [[[5.0, 5.0], [np.nan, 6.0], [8.0, 9.0], [5.0, 5.0]]],
+             "sq": [_box_ring(0.0, 0.0, 2.0, 2.0)]}
+    pd.DataFrame({"poly_id": list(rings), "rings": list(rings.values())}
+                 ).to_parquet(tmp_path / "polys.parquet")
+    polys = spark.read.parquet(str(tmp_path / "polys.parquet"))
+    g = np.linspace(-1.0, 10.0, 45)
+    lon, lat = (a.ravel() for a in np.meshgrid(g, g))
+    pts = spark.createDataFrame(pd.DataFrame(
+        {"point_id": np.arange(len(lon)), "lon": lon, "lat": lat}))
+    from proj_spark.operators.joins import _np_point_in_rings
+
+    want = {pid: {int(i) for i in np.flatnonzero(_np_point_in_rings(lon, lat, r))}
+            for pid, r in rings.items()}
+    got = {"nan": set(), "sq": set()}
+    for r in pip_join(pts, polys).select("point_id", "poly_id").collect():
+        got[r[1]].add(int(r[0]))
+    assert got["sq"] == want["sq"] and len(want["sq"]) > 0
+    assert got["nan"] <= want["nan"]
+
+
 def test_cell_level_out_of_range_raises(spark):
     # a real error, not an assert: level 27 would overflow the morton bits
     for level in (-1, C.MAX_LEVEL + 1):
@@ -580,7 +608,7 @@ def test_knn_guard_is_conservative_adversarial(spark):
     point outside the ring block — probed at cell edges, high latitude,
     and across the antimeridian (the round-1 guard used a flat 111320
     m/deg and could overstate by ~0.1%)."""
-    from proj_spark.operators.joins import _block_guard_col
+    from proj_spark.operators.joins import _np_block_guard
 
     cases = [  # (lon, lat, level, ring)
         (179.999999, 0.000001, 16, 1),
@@ -592,10 +620,7 @@ def test_knn_guard_is_conservative_adversarial(spark):
         (45.0, -89.5, 10, 1),
     ]
     for lon, lat, level, ring in cases:
-        df = spark.createDataFrame([(lon, lat)], "lon double, lat double")
-        guard = df.select(
-            _block_guard_col(F.col("lon"), F.col("lat"), level, ring).alias("g")
-        ).collect()[0]["g"]
+        guard = _np_block_guard(np.array([lon]), np.array([lat]), level, ring)[0]
         # reconstruct the block and sample just-outside points densely
         n = 1 << level
         ix = min(max(math.floor((lon + 180.0) / 360.0 * n), 0), n - 1)
@@ -744,6 +769,25 @@ def test_knn_zero_candidate_query_exact(spark, n_points):
     got = _knn_rows(knn_join(pts, qs, k=5, level=6, n_points=n_points))
     assert len(got) == 5 * len(qlon)
     _assert_knn_exact(got, 5, lon, lat, qlon, qlat, range(len(qlon)))
+
+
+def test_knn_repeated_and_null_query_ids_rank_each_query(spark):
+    # the driver reads a round's rows back by query id: a repeated or
+    # NULL id cannot be told apart there, so those queries take the
+    # brute pass, which ranks every query row on its own
+    pts, _, lon, lat, qlon, qlat = _knn_sparse_inputs(spark)
+    ids = [7, 7, None, 3]
+    qs = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, x, y in zip(ids, qlon, qlat)],
+        "query_id long, lon double, lat double")
+    got = knn_join(pts, qs, k=5, level=6, n_points=1502).select(
+        "query_id", "q_lon", "point_id", "rank").toPandas()
+    d = _np_haversine(qlon[:, None], qlat[:, None], lon[None, :], lat[None, :])
+    for qi in range(len(qlon)):
+        g = got[got["q_lon"] == qlon[qi]].sort_values("rank")
+        want = np.lexsort((np.arange(len(lon)), d[qi]))[:5]
+        assert list(g["point_id"]) == list(want), f"query {qi}"
+        assert list(g["rank"]) == [1, 2, 3, 4, 5], f"query {qi}"
 
 
 def test_knn_no_fallback_is_ring_topk_without_sentinels(spark):

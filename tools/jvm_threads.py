@@ -25,8 +25,11 @@ JVM thread from ``/proc/<jvm>/task/*/stat`` and sorts the delta into:
     schedulers, netty, listeners).
 
 Beside them: ``jvm`` (their sum), ``jit_ms`` (HotSpot's own
-compilation-time counter, ``CompilationMXBean``), ``driver`` (this
-Python process) and ``workers`` (the JVM's Python worker processes).
+compilation-time counter, ``CompilationMXBean``), ``janino`` (classes
+Spark's code generator compiled, ``CodegenMetrics``: a warm call that
+hits Spark's codegen cache compiles none), ``classes`` (classes the JVM
+loaded, ``ClassLoadingMXBean``), ``driver`` (this Python process) and
+``workers`` (the JVM's Python worker processes).
 The tables give each operator phase of each pass, each pass's total,
 and the median per operator phase over the warm passes (1 and later).
 CPU is read from ``/proc`` in clock ticks, so a figure is good to about
@@ -53,7 +56,8 @@ from tracing import tree_cpu_s  # noqa: E402
 from workloads import BUILDERS  # noqa: E402
 
 CATEGORIES = ("compiler", "py4j", "executor", "gc", "other")
-COLUMNS = CATEGORIES + ("jvm", "jit_ms", "driver", "workers")
+COLUMNS = CATEGORIES + ("jvm", "jit_ms", "janino", "classes", "driver", "workers")
+_COUNTS = ("jit_ms", "janino", "classes")
 _TICK = os.sysconf("SC_CLK_TCK")
 
 
@@ -78,8 +82,10 @@ def _stat(path: str) -> list:
 
 def snapshot(jvm_pid: int, jvm) -> dict:
     """CPU ticks of every live JVM thread, keyed by (tid, start time),
-    and of the whole process, plus the JIT counter and the CPU seconds
-    of the driver and of the process tree."""
+    and of the whole process, plus the JIT, codegen and class-loading
+    counters and the CPU seconds of the driver and of the process
+    tree."""
+    mgmt = jvm.java.lang.management.ManagementFactory
     threads = {}
     task_dir = f"/proc/{jvm_pid}/task"
     for tid in os.listdir(task_dir):
@@ -95,8 +101,10 @@ def snapshot(jvm_pid: int, jvm) -> dict:
     return {
         "threads": threads,
         "proc": int(proc[11]) + int(proc[12]),
-        "jit_ms": jvm.java.lang.management.ManagementFactory
-        .getCompilationMXBean().getTotalCompilationTime(),
+        "jit_ms": mgmt.getCompilationMXBean().getTotalCompilationTime(),
+        "janino": jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME().getCount(),
+        "classes": mgmt.getClassLoadingMXBean().getTotalLoadedClassCount(),
         "tree_s": tree_cpu_s(jvm_pid),
         "driver_s": t.user + t.system,
     }
@@ -113,7 +121,7 @@ def split(a: dict, b: dict) -> dict:
     # threads gone by ``b`` (HotSpot's on-demand compiler threads)
     out["compiler"] += (b["proc"] - a["proc"] - live) / _TICK
     jvm = (b["proc"] - a["proc"]) / _TICK
-    out.update(jvm=jvm, jit_ms=float(b["jit_ms"] - a["jit_ms"]),
+    out.update(jvm=jvm, **{c: float(b[c] - a[c]) for c in _COUNTS},
                driver=b["driver_s"] - a["driver_s"],
                workers=b["tree_s"] - a["tree_s"] - jvm)
     return out
@@ -160,7 +168,7 @@ def print_table(title: str, rows: list) -> None:
     print(f"{'pass':>4} {'op':<28} {'phase':<9} "
           + " ".join(f"{c:>8}" for c in COLUMNS))
     for r in rows:
-        cells = " ".join(f"{r[c]:8.0f}" if c == "jit_ms" else f"{r[c]:8.3f}"
+        cells = " ".join(f"{r[c]:8.0f}" if c in _COUNTS else f"{r[c]:8.3f}"
                          for c in COLUMNS)
         print(f"{str(r.get('pass', 'med')):>4} {r['op']:<28} {r['phase']:<9} {cells}")
 
