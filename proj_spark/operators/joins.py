@@ -109,27 +109,27 @@ def _ring_edges(c: Coords):
 
 def _exterior_bbox(c: Coords) -> np.ndarray:
     """Each polygon's exterior-ring (first ring) bbox as rows ``minx,
-    maxx, miny, maxy``, with Spark's ``array_min``/``array_max`` NaN
-    rule: the min skips NaN vertices, the max is NaN if any vertex is.
-    A polygon without an exterior point gets the empty box ``(+inf,
-    -inf, +inf, -inf)``."""
+    maxx, miny, maxy``.  A polygon without an exterior point, or with a
+    NaN or infinite coordinate on its exterior ring, gets the empty box
+    ``(+inf, -inf, +inf, -inf)``: a non-finite vertex takes part in no
+    pair."""
     first = c.geom_off[:-1]
     n_pts = np.append(np.diff(c.part_off), 0)[first] * (np.diff(c.geom_off) > 0)
     has = n_pts > 0
     idx = _ranges(c.part_off[first[has]], n_pts[has])
     at = _offsets(n_pts[has])[:-1]
     x, y = c.x[idx], c.y[idx]
-    bbox = np.tile([np.inf, -np.inf, np.inf, -np.inf], (len(first), 1))
+    bbox = np.full((len(first), 4), np.nan)
     bbox[has] = np.column_stack([
-        np.fmin.reduceat(x, at), np.maximum.reduceat(x, at),
-        np.fmin.reduceat(y, at), np.maximum.reduceat(y, at)])
+        np.minimum.reduceat(x, at), np.maximum.reduceat(x, at),
+        np.minimum.reduceat(y, at), np.maximum.reduceat(y, at)])
+    bbox[~np.isfinite(bbox).all(axis=1)] = [np.inf, -np.inf, np.inf, -np.inf]
     return bbox
 
 
 def _has_box(bbox: np.ndarray) -> np.ndarray:
-    """The polygons whose box is not the empty one (a NaN max keeps its
-    polygon, as Spark orders NaN above every number)."""
-    return ~(bbox[:, 0] > bbox[:, 1])
+    """The polygons whose box is not the empty one."""
+    return bbox[:, 0] <= bbox[:, 1]
 
 
 _PACK_COLS = ("cnts", "x1", "y1", "x2", "y2", "bbox")
@@ -142,9 +142,8 @@ def _pack_edges_sdf(polys: DataFrame, poly_id_col: str, rings_col: str,
     ring edges as packed float64 buffers (``x1 y1 x2 y2``), exterior-ring
     bboxes (``bbox``, n x 4 float64), the partition's edge count
     (``n_edges``) and its bbox span sums (``spans``: width, height,
-    polygons with a box of finite width and height).  What transits the
-    driver is K rows (K = partitions) of raw buffers, no per-point
-    Python objects.  A partition whose edges take more than ``share``
+    polygons with a non-empty box).  What transits the driver is K
+    rows (K = partitions) of raw buffers, no per-point Python objects.  A partition whose edges take more than ``share``
     bytes (32 per edge) sends only ``n_edges`` and ``spans``, the rest
     null."""
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -170,11 +169,9 @@ def _pack_edges_sdf(polys: DataFrame, poly_id_col: str, rings_col: str,
             return
         x1, y1, x2, y2, cnts, bbox = (np.concatenate(p) for p in zip(*parts))
         n_edges = int(cnts.sum())
-        # a box with a non-finite width or height (a NaN or infinite
-        # vertex) has no span to average
-        w, h = bbox[:, 1] - bbox[:, 0], bbox[:, 3] - bbox[:, 2]
-        fin = _has_box(bbox) & np.isfinite(w) & np.isfinite(h)
-        spans = [float(w[fin].sum()), float(h[fin].sum()), float(fin.sum())]
+        box = bbox[_has_box(bbox)]
+        spans = [float((box[:, 1] - box[:, 0]).sum()),
+                 float((box[:, 3] - box[:, 2]).sum()), float(len(box))]
         full = share is None or n_edges * 32 <= share
         yield pa.RecordBatch.from_arrays(
             [pa.ListArray.from_arrays([0, len(cnts)], pa.concat_arrays(pids),
@@ -233,14 +230,12 @@ def _cover(pids: pa.Array, bbox: np.ndarray, level: int,
     (``__pip_pos`` is the polygon's position in the edge payload).  Grid
     indices come from :func:`cells._np_ij`, ids are encoded like
     :func:`cells.np_cell`, so each cell equals ``cell_col`` of a point
-    in it.  A bound whose max lies below its min (a NaN max indexes 0)
-    spans the same cells in reverse, as Spark's ``sequence`` does."""
+    in it."""
     pos = np.flatnonzero(_has_box(bbox))
     box = bbox[pos]
     ix, iy = _np_ij(box[:, :2], box[:, 2:], level)
-    x0, y0 = ix.min(axis=1), iy.min(axis=1)
-    nx = np.abs(ix[:, 1] - ix[:, 0]) + 1
-    ny = np.abs(iy[:, 1] - iy[:, 0]) + 1
+    x0, y0 = ix[:, 0], iy[:, 0]
+    nx, ny = ix[:, 1] - x0 + 1, iy[:, 1] - y0 + 1
     rep = np.repeat(np.arange(len(pos)), nx * ny)
     k = np.arange(len(rep)) - np.repeat(_offsets(nx * ny)[:-1], nx * ny)
     gx, gy = x0[rep] + k % nx[rep], y0[rep] + k // nx[rep]
@@ -356,8 +351,9 @@ def pip_join(
     hits across disjoint polygon subsets are disjoint), the cost is one
     scan of the big table per chunk.
 
-    A polygon without an exterior-ring point has no covering cell and
-    no hit; a null coordinate reads NaN in the edges and the bbox.
+    A polygon whose exterior ring has no point, or a NaN, null or
+    infinite coordinate, has no covering cell and no hit; a null
+    coordinate reads NaN in the edges.
 
     ``how``: "inner" (default) or "left" (unmatched points kept with
     null poly_id).
@@ -696,6 +692,9 @@ def _prereduce_topk(cand: DataFrame, k: int, query_id_col: str,
 # the kNN candidate frames carry each query's position in the driver's
 # query table, and the window ranks per position
 _QPOS = "__qpos"
+# the most queries knn_join collects to the driver (radius_join's
+# default max_broadcast_rows)
+_KNN_MAX_QUERIES = 4_000_000
 
 
 def _top_k(cand: DataFrame, k: int, point_id_col: str) -> DataFrame:
@@ -819,10 +818,12 @@ def knn_join(
          never a full scan — for ``expansion_rounds`` rounds; whatever
          is still unproven then takes the brute-force pass.
 
-    Construction is EAGER: one job collects the queries, and every ring
-    round it needs runs before the call returns.  The proven rows come
-    back as a local relation; only the brute pass, if any, runs when
-    the result is consumed.  With ``exact_fallback=False`` the call
+    Construction is EAGER: one job collects the queries (at most
+    ``_KNN_MAX_QUERIES``, 4M, else a ``ValueError`` before any ring
+    job), and every ring round it needs runs before the call returns.
+    The proven rows come back as a local relation; only the brute pass,
+    if any, runs when the result is consumed.  With
+    ``exact_fallback=False`` the call
     collects the queries, runs no ring job and returns round 1's
     top-k rows as they are, proven or not.  The driver reads a round's
     rows back by query id, so a query whose id is NULL or repeats is
@@ -865,7 +866,12 @@ def knn_join(
     pts = points.withColumn("cell", cell_col(F.col(lon_col), F.col(lat_col), level))
     spark = points.sparkSession
     qt = queries.select(F.col(query_id_col), F.col(lon_col).alias("q_lon"),
-                        F.col(lat_col).alias("q_lat")).toArrow()
+                        F.col(lat_col).alias("q_lat")
+                        ).limit(_KNN_MAX_QUERIES + 1).toArrow()
+    if qt.num_rows > _KNN_MAX_QUERIES:
+        raise ValueError(
+            f"knn_join collects its queries to the driver and takes at most "
+            f"{_KNN_MAX_QUERIES} of them; split the query table")
     qt = qt.add_column(0, _QPOS, pa.array(np.arange(qt.num_rows), pa.int64()))
     out_cols = [query_id_col, "q_lon", "q_lat", point_id_col, "dist_m", "rank"]
     if not exact_fallback:

@@ -132,9 +132,9 @@ def test_pip_test_chunks_split_at_rows(spark):
 
 
 def test_exterior_bbox_follows_spark_nan_rule():
-    # the pack's bbox reads the first ring only, with array_min (skips
-    # NaN) and array_max (NaN if any vertex is) semantics; a polygon with
-    # no exterior point gets the empty box, which covers no cell
+    # the pack's bbox reads the first ring only; a polygon with a NaN or
+    # infinite exterior vertex, or no exterior point, gets the empty
+    # box, which covers no cell
     from proj_spark.operators import joins as J
 
     nan, inf = float("nan"), float("inf")
@@ -145,14 +145,16 @@ def test_exterior_bbox_follows_spark_nan_rule():
         [[], [[0.0, 0.0], [1.0, 1.0]]],
         [],
         None,
+        [[[0.0, 0.0], [1.0, -inf], [2.0, 2.0]], [[nan, 1.0], [1.0, 1.0]]],
+        [[[0.0, 0.0], [2.0, 1.0]], [[nan, 1.0], [inf, 1.0]]],
     ], type=PARTS)
     bbox = J._exterior_bbox(_coords(polys))
-    assert _same(bbox, [[1.0, 3.0, -1.0, 2.0], [5.0, nan, 5.0, 9.0],
-                        [nan, nan, nan, nan], [inf, -inf, inf, -inf],
-                        [inf, -inf, inf, -inf], [inf, -inf, inf, -inf]])
-    assert J._has_box(bbox).tolist() == [True, True, True, False, False, False]
-    cover = J._cover(pa.array(list("abcdef")), bbox, 3, "poly_id")
-    assert set(cover.column("poly_id").to_pylist()) == {"a", "b", "c"}
+    empty = [inf, -inf, inf, -inf]
+    assert _same(bbox, [[1.0, 3.0, -1.0, 2.0]] + [empty] * 6
+                 + [[0.0, 2.0, 0.0, 1.0]])
+    assert J._has_box(bbox).tolist() == [True] + [False] * 6 + [True]
+    cover = J._cover(pa.array(list("abcdefgh")), bbox, 3, "poly_id")
+    assert set(cover.column("poly_id").to_pylist()) == {"a", "h"}
 
 
 def test_running_head_carries_a_query_across_batches():

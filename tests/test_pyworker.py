@@ -1,8 +1,10 @@
-"""The zip-directory patch that ``proj_spark`` installs in every process
-(``proj_spark/_pyworker.py``): an unchanged archive is not re-read by
-``importlib.invalidate_caches()``, a changed one is, a missing one
-still falls through, and Spark's Python workers have it once they have
-run a proj_spark task."""
+"""What ``proj_spark/_pyworker.py``'s ``install()`` does in every process
+that imports the package.  The zip-directory patch: an unchanged
+archive is not re-read by ``importlib.invalidate_caches()``, a changed
+one is, a missing one still falls through.  The heap freeze: a worker
+that PySpark's daemon forked freezes its heap once, the driver never
+does, and task garbage is still collected.  Spark's Python workers
+have both once they have run a proj_spark task."""
 
 import importlib
 import json
@@ -17,7 +19,7 @@ import pytest
 import proj_spark  # noqa: F401  (installs the patch)
 from proj_spark import _pyworker
 
-pytestmark = pytest.mark.skipif(
+zip_patch = pytest.mark.skipif(
     sys.version_info >= (3, 13),
     reason="CPython >= 3.13 re-reads zip directories lazily; no patch")
 
@@ -63,6 +65,7 @@ def archive(tmp_path, monkeypatch):
         zipimport._zip_directory_cache.pop(path, None)
 
 
+@zip_patch
 def test_unchanged_archive_is_not_reread(archive):
     path, reads = archive
     importlib.invalidate_caches()
@@ -70,6 +73,7 @@ def test_unchanged_archive_is_not_reread(archive):
     assert reads == []
 
 
+@zip_patch
 def test_changed_archive_is_reread_once(archive):
     path, reads = archive
     _write_zip(path, {"zipmod_a": 1, "zipmod_b": 2})
@@ -83,6 +87,7 @@ def test_changed_archive_is_reread_once(archive):
     assert reads == [path]
 
 
+@zip_patch
 def test_missing_archive_falls_through(archive):
     path, reads = archive
     assert path in _pyworker._SIGNATURES  # saved at the import's read
@@ -93,6 +98,7 @@ def test_missing_archive_falls_through(archive):
     assert reads and set(reads) == {path}
 
 
+@zip_patch
 def test_install_is_idempotent():
     patched = zipimport.zipimporter.invalidate_caches
     read = zipimport._read_directory
@@ -124,44 +130,115 @@ polys = spark.createDataFrame(pd.DataFrame([{
                [-5.0, -5.0]]]}]))
 
 
-def probe():
+def probe(task):
+    # pickled by value: the probe body imports no proj_spark module
+    # unless ``task`` does
     def _probe(batches):
+        import gc
         import zipimport
 
-        active = (zipimport.zipimporter.invalidate_caches.__module__
-                  == "proj_spark._pyworker")
+        state = {"frozen": gc.get_freeze_count(),
+                 "active": (zipimport.zipimporter.invalidate_caches.__module__
+                            == "proj_spark._pyworker")}
+        state.update(task())
         for pdf in batches:
-            yield pdf.assign(active=active)
+            yield pdf.assign(state=json.dumps(state))
 
     rows = spark.range(4, numPartitions=4).mapInPandas(
-        _probe, "id long, active boolean").collect()
-    return [bool(r["active"]) for r in rows]
+        _probe, "id long, state string").collect()
+    return [json.loads(r["state"]) for r in rows]
 
 
+def nothing():
+    return {}
+
+
+def install_again():
+    import gc
+
+    from proj_spark import _pyworker
+
+    before = gc.get_freeze_count()
+    _pyworker.install()
+    return {"refrozen": gc.get_freeze_count() - before}
+
+
+def make_cycle():
+    # a cycle with a finalizer, garbage when the task ends; only the
+    # daemon's collect after the task can free it
+    import os
+    import weakref
+
+    class Node:
+        pass
+
+    node = Node()
+    node.self = node
+    os.environ.pop("PROBE_CYCLE_FREED", None)
+    weakref.finalize(node, os.environ.__setitem__, "PROBE_CYCLE_FREED", "1")
+    return {}
+
+
+def cycle_freed():
+    import os
+
+    return {"freed": os.environ.get("PROBE_CYCLE_FREED") == "1"}
+
+
+before = probe(nothing)
 # pip_join first: nothing else has imported proj_spark in the worker
 hits = pip_join(pts, polys).count()
-after_pip = probe()
+after_pip = probe(nothing)
 # a sum, not a count: Catalyst prunes a UDF whose output nobody reads
 with_transformed(pts, "EPSG:4326", "EPSG:3857").agg(F.sum("x")).collect()
-after_transform = probe()
-print("RESULT " + json.dumps({"hits": hits, "after_pip": after_pip,
-                              "after_transform": after_transform}))
+after_transform = probe(install_again)
+probe(make_cycle)
+next_task = probe(cycle_freed)
+print("RESULT " + json.dumps({
+    "hits": hits, "before": before, "after_pip": after_pip,
+    "after_transform": after_transform, "next_task": next_task}))
 spark.stop()
 '''
 
 
-def test_spark_workers_have_the_patch(tmp_path):
-    # a fresh Spark session, so no earlier test's worker answers the
-    # probe; the probe itself is pickled by value and imports only
-    # zipimport
+def _run_script(script, tmp_path):
     env = dict(os.environ, PYTHONPATH=os.pathsep.join(
         p for p in (REPO, os.environ.get("PYTHONPATH")) if p))
-    r = subprocess.run([sys.executable, "-c", _WORKER_SCRIPT], cwd=str(tmp_path),
+    r = subprocess.run([sys.executable, "-c", script], cwd=str(tmp_path),
                        env=env, capture_output=True, text=True, timeout=300)
     assert r.returncode == 0, r.stderr[-3000:]
     line = [ln for ln in r.stdout.splitlines() if ln.startswith("RESULT ")]
     assert line, r.stdout[-2000:]
-    res = json.loads(line[0][len("RESULT "):])
+    return json.loads(line[0][len("RESULT "):])
+
+
+def test_spark_workers_have_the_patch(tmp_path):
+    # a fresh Spark session, so no earlier test's worker answers the
+    # probe
+    res = _run_script(_WORKER_SCRIPT, tmp_path)
     assert res["hits"] > 0
-    assert res["after_pip"] == [True] * 4
-    assert res["after_transform"] == [True] * 4
+    patched = sys.version_info < (3, 13)
+    # a worker that has not imported proj_spark has neither the patch
+    # nor a freeze
+    assert [(t["active"], t["frozen"]) for t in res["before"]] == [(False, 0)] * 4
+    for key in ("after_pip", "after_transform", "next_task"):
+        tasks = res[key]
+        assert [t["active"] for t in tasks] == [patched] * 4, key
+        assert all(t["frozen"] > 0 for t in tasks), key
+    # a second install() freezes nothing new
+    assert all(t["refrozen"] <= 0 for t in res["after_transform"])
+    # a cycle made in one task is collected after it, so the next task
+    # in the same worker sees its finalizer ran
+    assert [t["freed"] for t in res["next_task"]] == [True] * 4
+
+
+def test_import_outside_a_worker_freezes_nothing(tmp_path):
+    # a plain import (here and in any driver or test process) is not a
+    # daemon-forked worker
+    res = _run_script("import gc, json, proj_spark\n"
+                      "print('RESULT ' + json.dumps(gc.get_freeze_count()))",
+                      tmp_path)
+    assert res == 0
+    import gc
+
+    assert gc.get_freeze_count() == 0

@@ -368,13 +368,10 @@ def test_pip_join_repeated_poly_id_tests_each_polygon(spark):
 
 
 def test_pip_join_adaptive_level_skips_nan_boxes(spark, tmp_path):
-    # a NaN x vertex gives its polygon a NaN box width: the adaptive
-    # level must come from the measurable boxes (it raised on the NaN
-    # mean before), the square's hits must equal the even-odd brute
-    # force, and the NaN polygon must gain no hit the brute force lacks.
-    # Its ring is not closed (the brute force counts one crossing for
-    # points left of it) and its box has a NaN max, so pip_join keeps
-    # only some of the brute-force hits
+    # a NaN x vertex on a polygon's exterior ring takes part in no pair:
+    # that polygon has no box, no span and no hit at any level, and the
+    # adaptive level comes from the other boxes (it raised on the NaN
+    # mean once, and the NaN polygon's hits once depended on the level)
     rings = {"nan": [[[5.0, 5.0], [np.nan, 6.0], [8.0, 9.0], [5.0, 5.0]]],
              "sq": [_box_ring(0.0, 0.0, 2.0, 2.0)]}
     pd.DataFrame({"poly_id": list(rings), "rings": list(rings.values())}
@@ -386,13 +383,15 @@ def test_pip_join_adaptive_level_skips_nan_boxes(spark, tmp_path):
         {"point_id": np.arange(len(lon)), "lon": lon, "lat": lat}))
     from proj_spark.operators.joins import _np_point_in_rings
 
-    want = {pid: {int(i) for i in np.flatnonzero(_np_point_in_rings(lon, lat, r))}
-            for pid, r in rings.items()}
-    got = {"nan": set(), "sq": set()}
-    for r in pip_join(pts, polys).select("point_id", "poly_id").collect():
-        got[r[1]].add(int(r[0]))
-    assert got["sq"] == want["sq"] and len(want["sq"]) > 0
-    assert got["nan"] <= want["nan"]
+    want = {int(i) for i in
+            np.flatnonzero(_np_point_in_rings(lon, lat, rings["sq"]))}
+    assert want
+    for level in (None, 4, 8):
+        got = {"nan": set(), "sq": set()}
+        for r in pip_join(pts, polys, level=level).select(
+                "point_id", "poly_id").collect():
+            got[r[1]].add(int(r[0]))
+        assert got == {"nan": set(), "sq": want}, level
 
 
 def test_cell_level_out_of_range_raises(spark):
@@ -918,6 +917,29 @@ def test_knn_join_empty_queries(spark):
         pd.DataFrame({"query_id": [], "lon": [], "lat": []}),
         schema="query_id long, lon double, lat double")
     assert knn_join(pts, qs, k=2, level=6).count() == 0
+
+
+def test_knn_join_query_collect_is_bounded(spark, monkeypatch):
+    # the queries' collect stops at the bound plus one row; past the
+    # bound the call raises, naming it, before any ring job runs
+    from proj_spark.operators import joins as J
+
+    monkeypatch.setattr(J, "_KNN_MAX_QUERIES", 2)
+    pts = spark.createDataFrame(pd.DataFrame({
+        "point_id": [0, 1], "lon": [5.0, 50.0], "lat": [5.0, 5.0]}))
+    qs = spark.createDataFrame(pd.DataFrame({
+        "query_id": [0, 1, 2], "lon": [5.0, 6.0, 7.0], "lat": [5.0] * 3}))
+    sc = spark.sparkContext
+    sc.setJobGroup("knn_query_bound", "knn_query_bound")
+    try:
+        with pytest.raises(ValueError, match="at most 2 "):
+            knn_join(pts, qs, k=1, level=6, n_points=2)
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("knn_query_bound")
+    assert 1 <= len(jobs) <= 2  # the collect (AQE may run its stage first)
+    assert knn_join(pts, qs.limit(2), k=1, level=6, n_points=2).count() == 2
 
 
 def test_pip_join_chunked_matches_unchunked(spark):

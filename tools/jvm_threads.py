@@ -28,8 +28,13 @@ Beside them: ``jvm`` (their sum), ``jit_ms`` (HotSpot's own
 compilation-time counter, ``CompilationMXBean``), ``janino`` (classes
 Spark's code generator compiled, ``CodegenMetrics``: a warm call that
 hits Spark's codegen cache compiles none), ``classes`` (classes the JVM
-loaded, ``ClassLoadingMXBean``), ``driver`` (this Python process) and
-``workers`` (the JVM's Python worker processes).
+loaded, ``ClassLoadingMXBean``), ``driver`` (this Python process),
+``workers`` (the JVM's Python worker processes) and ``tasks`` (the
+Spark tasks the phase ran: each phase runs in a job group of its own,
+and once the listener bus is drained the status tracker gives its jobs'
+stages; a stage counts its completed tasks once, in the first phase
+that lists it, as a later job lists a reused shuffle stage as skipped).
+``workers / tasks`` reads as Python worker CPU per task.
 The tables give each operator phase of each pass, each pass's total,
 and the median per operator phase over the warm passes (1 and later).
 CPU is read from ``/proc`` in clock ticks, so a figure is good to about
@@ -56,7 +61,8 @@ from tracing import tree_cpu_s  # noqa: E402
 from workloads import BUILDERS  # noqa: E402
 
 CATEGORIES = ("compiler", "py4j", "executor", "gc", "other")
-COLUMNS = CATEGORIES + ("jvm", "jit_ms", "janino", "classes", "driver", "workers")
+COLUMNS = CATEGORIES + ("jvm", "jit_ms", "janino", "classes", "driver", "workers",
+                        "tasks")
 _COUNTS = ("jit_ms", "janino", "classes")
 _TICK = os.sysconf("SC_CLK_TCK")
 
@@ -127,21 +133,41 @@ def split(a: dict, b: dict) -> dict:
     return out
 
 
+def count_tasks(sc, group: str, seen: set) -> int:
+    """Completed tasks of the stages of job group ``group``'s jobs that
+    are not in ``seen``, which gains them."""
+    tracker = sc.statusTracker()
+    jobs = (tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group))
+    stages = {s for job in jobs if job is not None for s in job.stageIds} - seen
+    seen |= stages
+    infos = (tracker.getStageInfo(s) for s in stages)
+    return sum(info.numCompletedTasks for info in infos if info is not None)
+
+
 def run_passes(spark, wl, passes: int) -> list:
     """Rows ``{"pass", "op", "phase", <COLUMNS>}``, two per operator call."""
-    jvm = spark.sparkContext._jvm
+    sc = spark.sparkContext
+    jvm = sc._jvm
     jvm_pid = jvm.java.lang.ProcessHandle.current().pid()
-    rows = []
+    rows, seen = [], set()
     for i in range(passes):
-        perfbench_run.release_checkpoints(spark.sparkContext)
+        perfbench_run.release_checkpoints(sc)
         for op in wl.ops:
+            groups = [f"jvm_threads {i} {op.name} {phase}"
+                      for phase in ("construct", "execute")]
             s0 = snapshot(jvm_pid, jvm)
+            sc.setJobGroup(groups[0], groups[0])
             b = op.build()
             s1 = snapshot(jvm_pid, jvm)
+            sc.setJobGroup(groups[1], groups[1])
             b.sink.write.mode("overwrite").format("noop").save()
             s2 = snapshot(jvm_pid, jvm)
-            for phase, (a, z) in (("construct", (s0, s1)), ("execute", (s1, s2))):
-                rows.append({"pass": i, "op": op.name, "phase": phase, **split(a, z)})
+            sc.setJobGroup(None, None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            for phase, (a, z), g in zip(("construct", "execute"),
+                                        ((s0, s1), (s1, s2)), groups):
+                rows.append({"pass": i, "op": op.name, "phase": phase, **split(a, z),
+                             "tasks": float(count_tasks(sc, g, seen))})
     return rows
 
 
@@ -168,7 +194,7 @@ def print_table(title: str, rows: list) -> None:
     print(f"{'pass':>4} {'op':<28} {'phase':<9} "
           + " ".join(f"{c:>8}" for c in COLUMNS))
     for r in rows:
-        cells = " ".join(f"{r[c]:8.0f}" if c in _COUNTS else f"{r[c]:8.3f}"
+        cells = " ".join(f"{r[c]:8.0f}" if c in _COUNTS + ("tasks",) else f"{r[c]:8.3f}"
                          for c in COLUMNS)
         print(f"{str(r.get('pass', 'med')):>4} {r['op']:<28} {r['phase']:<9} {cells}")
 
