@@ -85,11 +85,13 @@ RETURN CAST(greatest(0L, least(shiftleft(1L, zoom) - 1L,
        / {math.pi!r}d) / 2.0d
        * CAST(shiftleft(1L, zoom) AS DOUBLE)) AS BIGINT))) AS INT)
 """)
+    # -greatest(-1, -sqrt(h)) is min(1, sqrt(h)) keeping a NaN, as in
+    # joins.haversine_col: least(1, NaN) would be 1 (half the circumference)
     spark.sql("""
 CREATE OR REPLACE TEMPORARY FUNCTION haversine_m(
     lon1 DOUBLE, lat1 DOUBLE, lon2 DOUBLE, lat2 DOUBLE)
 RETURNS DOUBLE
-RETURN 2.0d * 6371008.8d * asin(least(1.0d, sqrt(
+RETURN 2.0d * 6371008.8d * asin(-greatest(-1.0d, -sqrt(
   pow(sin((radians(lat2) - radians(lat1)) / 2.0d), 2)
   + cos(radians(lat1)) * cos(radians(lat2))
     * pow(sin((radians(lon2) - radians(lon1)) / 2.0d), 2))))
@@ -162,9 +164,9 @@ RETURN substr({gh_chars}, 1, precision)
 
     # UDTF surface (the table-function leg of the §2.2 UDF/UDAF/UDTF
     # row): ring_cells(cell, r) expands a cell id to its ring-r
-    # neighbourhood — the SQL-surface twin of cells.np_cell_ring (the
-    # Column-side rings come from cells._block_cells), usable in
-    # LATERAL joins for candidate generation:
+    # neighbourhood, each cell once — a batch of one through
+    # cells._np_block, the builder behind the kNN and radius rings —
+    # usable in LATERAL joins for candidate generation:
     #   SELECT p.*, rc.cand_cell
     #   FROM points p, LATERAL ring_cells(p.cell, 1) rc
     from pyspark.sql.functions import udtf
@@ -172,14 +174,12 @@ RETURN substr({gh_chars}, 1, precision)
     @udtf(returnType="cand_cell bigint")
     class _RingCells:
         def eval(self, cell, r):
-            import numpy as np
+            from ..operators.cells import _np_block, np_cell_decode
 
-            from ..operators.cells import np_cell_ring
-
-            if cell is None or r is None:
+            if cell is None or r is None or r < 0:
                 return
-            for c in np_cell_ring(np.array([cell], dtype=np.int64),
-                                  int(r)).ravel():
+            ix, iy, level = np_cell_decode([cell])
+            for c in _np_block(ix, iy, r, r, int(level[0]))[1]:
                 yield (int(c),)
 
     spark.udtf.register("ring_cells", _RingCells)

@@ -13,17 +13,17 @@ properties the distributed layer needs (BASELINE.json north_rule):
     ``repartitionByRange`` on the cell column co-locates spatial
     neighborhoods.
 
-Everything here is expressed TWICE, with identical bits:
+Cell ids are computed on two sides, with identical bits:
 
   * as Spark ``Column`` expressions (pure JVM, whole-stage codegen —
     the hot path; no Python worker involved).  This is the ONE
-    Column-side grid: :func:`_col_index` (clamped grid index),
-    :func:`_col_cell` (cell-id encoder) and :func:`_block_cells`
-    (wrapped, pole-clipped cell blocks) sit behind ``cell_col``, the
-    geohash and tile-x columns, the PIP covering cells and the
-    radius/kNN candidate rings;
-  * as numpy functions — the reference the tests, the ``ring_cells``
-    UDTF and the DuckDB oracle builder use.
+    Column-side grid: :func:`_col_index` (clamped grid index) and
+    :func:`_col_cell` (cell-id encoder) sit behind ``cell_col``, the
+    geohash and tile-x columns;
+  * as numpy functions.  Every candidate ring (the kNN and radius
+    rings, the ``ring_cells`` UDTF) comes from one of them,
+    :func:`_np_block`; the PIP cover, the tests and the DuckDB oracle
+    builder use the rest.
 
 Tests assert the two agree bit-for-bit.
 
@@ -58,7 +58,7 @@ a distinct position, so nothing carries); products stay below 2^54.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -168,6 +168,32 @@ def np_cell_ring(cell, r: int) -> np.ndarray:
     return out
 
 
+def _np_block(ix, iy, rx, ry, level: int, max_rows: int | None = None):
+    """Cell blocks at ``level`` around grid indices ``ix``/``iy``: for
+    row i, the cells ``(ix + dx mod 2^level, iy + dy)`` with ``|dx| <=
+    rx[i]`` and ``|dy| <= ry[i]`` (``rx``/``ry`` per row or scalar,
+    >= 0).  Returns ``(row, cell)``, one entry per cell, ragged and
+    grouped by row.  Longitude wraps, and a block as wide as the globe
+    takes each column once; rows past a pole are dropped; so no cell
+    repeats within a row.  ``None`` when the blocks hold more than
+    ``max_rows`` cells, counted before any is built."""
+    n = 1 << level
+    ix, iy = np.asarray(ix, dtype=np.int64), np.asarray(iy, dtype=np.int64)
+    rx, ry = (np.broadcast_to(np.asarray(v, dtype=np.int64), ix.shape)
+              for v in (rx, ry))
+    wx = np.minimum(2 * rx + 1, n)
+    y0 = np.maximum(iy - ry, 0)
+    wy = np.minimum(iy + ry, n - 1) - y0 + 1
+    size = wx * wy
+    if max_rows is not None and size.sum() > max_rows:
+        return None
+    row = np.repeat(np.arange(len(ix)), size)
+    t = np.arange(len(row)) - np.repeat(np.cumsum(size) - size, size)
+    jx = ((ix - rx)[row] + t // wy[row]) % n
+    jy = y0[row] + t % wy[row]
+    return row, ((_np_spread(jx) | (_np_spread(jy) << 1)) << 5) | np.int64(level)
+
+
 # ---------------------------------------------------------------------------
 # Spark Column side (pure JVM bit math — stays inside WholeStageCodegen)
 # ---------------------------------------------------------------------------
@@ -222,29 +248,6 @@ def _col_cell(ix: Column, iy: Column, level: int) -> Column:
     morton = _col_spread(ix, level).bitwiseOR(
         F.shiftleft(_col_spread(iy, level), 1))
     return F.shiftleft(morton, 5).bitwiseOR(level)
-
-
-def _block_cells(df: DataFrame, ix: Column, iy: Column, dx, dy, level: int,
-                 out: str) -> DataFrame:
-    """One row per ``df`` row and per cell ``(ix+i mod 2^level, iy+j)``
-    for ``i`` in ``dx`` and ``j`` in ``dy`` (inclusive ``(lo, hi)``
-    Column bounds), cell id in column ``out``: the columns of ``df``,
-    then ``out``.  ``ix``/``iy`` and the bounds are Columns over
-    ``df``.  Longitude wraps; rows past a pole are dropped.
-    Relational — explode(dx) x explode(dy) (one generator per select),
-    one ``where``, then ONE Morton encode per exploded row — so it
-    stays pure JVM in four plan nodes; blocks wider than the globe
-    repeat cells (callers dedup)."""
-    n = 1 << level
-    jx = F.pmod(ix + F.col("__dx"), F.lit(n))
-    jy = iy + F.col("__dy")
-    keep = [F.col("`" + c.replace("`", "``") + "`") for c in df.columns]
-    return (
-        df.select("*", F.explode(F.sequence(*dx)).alias("__dx"))
-        .select("*", F.explode(F.sequence(*dy)).alias("__dy"))
-        .where((jy >= 0) & (jy < n))
-        .select(*keep, _col_cell(jx, jy, level).alias(out))
-    )
 
 
 def cell_col(lon: Column, lat: Column, level: int) -> Column:

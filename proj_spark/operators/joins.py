@@ -41,8 +41,7 @@ from pyspark.sql.functions import arrow_udf
 from pyspark.sql.window import Window
 
 from .._pyworker import Coords, _coords, _floats, _offsets, _ranges
-from .cells import (MAX_LEVEL, _block_cells, _col_ij, _np_ij, _np_spread,
-                    cell_col, np_cell, np_cell_ring)
+from .cells import MAX_LEVEL, _np_block, _np_ij, _np_spread, cell_col
 
 __all__ = [
     "EARTH_RADIUS_M",
@@ -59,12 +58,17 @@ EARTH_RADIUS_M = 6371008.8  # mean Earth radius (IUGG)
 
 def haversine_col(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Column:
     """Great-circle distance in meters — pure JVM Column math so the
-    kNN hot path stays in whole-stage codegen."""
+    kNN hot path stays in whole-stage codegen.  NaN when a coordinate
+    is NaN or +-Inf."""
     p1, p2 = F.radians(lat1), F.radians(lat2)
     dphi = (p2 - p1) / F.lit(2.0)
     dlam = (F.radians(lon2) - F.radians(lon1)) / F.lit(2.0)
     h = F.sin(dphi) * F.sin(dphi) + F.cos(p1) * F.cos(p2) * F.sin(dlam) * F.sin(dlam)
-    return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.least(F.lit(1.0), F.sqrt(h)))
+    # min(1, sqrt(h)) that keeps a NaN: Spark orders NaN above every
+    # double, so least(1, NaN) is 1 (half the circumference) while
+    # greatest(-1, NaN) is NaN; negation is exact, so finite bits match
+    return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(
+        -F.greatest(F.lit(-1.0), -F.sqrt(h)))
 
 
 # ---------------------------------------------------------------------------
@@ -453,40 +457,30 @@ def radius_join(
     broadcast_queries: bool | None = None,
 ) -> DataFrame:
     """RANGE (distance-within) join: every (query, point) pair with
-    great-circle distance <= ``radius_m`` — the task brief's "range
-    join" as a first-class operator (kNN's sibling: fixed radius,
-    unbounded k).
+    great-circle distance <= ``radius_m`` — kNN's sibling: fixed
+    radius, unbounded k.  Output: (query_id, point_id, dist_m).
 
     EXACT at any latitude: the grid level is chosen so one cell's
-    latitude height covers the radius (dy in -ry..ry with ry from
-    ceil), and the per-query LONGITUDE ring count comes from the chord
-    inequality (for candidate latitudes inside the band,
-    dist >= 2R asin(cos(max|lat|) sin(dlon/2)), the same bound the kNN
-    exactness guard uses) — so no in-radius point can sit outside the
-    exploded cells.  Near the poles the ring widens up to the full
-    longitude circle (the query's lat band is scanned; correct, and
-    those rows are few).
+    latitude height covers the radius (``ry`` rows, from ceil), and
+    each query's longitude span ``rx`` comes from the chord inequality
+    at its band's worst-case latitude (dist >= 2R asin(cos(max|lat|)
+    sin(dlon/2)), the bound the kNN guard uses); near the poles it
+    widens to the full circle.  The rings come from numpy
+    (:func:`_ring_cells`, as kNN's), each cell once, and join the big
+    table's JVM cell column; one codegen haversine filter follows.  A
+    query with a NULL, NaN or +-Inf coordinate, or a point with a NaN
+    or +-Inf one, takes part in no pair.
 
-    Scale shape: queries explode their rings RELATIONALLY (pure JVM),
-    broadcast, equi-join against the big table's cell column — the
-    points table is never shuffled — then one codegen haversine
-    filter.  Output: (query_id, point_id, dist_m).
-
-    Broadcast guard (round-4 ADVICE, tightened round 6): near the
-    poles ``rx`` saturates to the full longitude circle, so a large
-    queries table or a large radius at high latitude can explode past
-    what a driver can broadcast.  ``broadcast_queries`` controls the
-    plan: True forces the broadcast (NO action at plan-construction
-    time — fully lazy, the caller vouches for the size), False forces
-    the shuffle fallback, and None (default) guards cheaply: a
-    LIMIT-bounded count (stops scanning past the threshold) combined
-    with the static per-query worst-case ring size
-    ``(2*(n//2+1)+1) * (2*ry+1)`` proves most real queries sides safe
-    without evaluating the ring lineage; only when that bound is
-    inconclusive does the refined per-row ring estimate run.  Past
-    ``max_broadcast_rows`` the join falls back to a shuffle hash join
-    with a warning instead of dying in the broadcast with an opaque
-    OOM.  The fallback shuffles the points table once on ``cell``.
+    ``broadcast_queries`` picks the plan.  None (default) collects the
+    queries once, at most ``max_broadcast_rows // (2*ry + 1) + 1`` of
+    them through a root LIMIT, counts their exact ring rows and, when
+    they fit ``max_broadcast_rows``, broadcasts the rings as a local
+    relation: the points table is never shuffled.  Otherwise it warns
+    and falls back to the shuffle plan: a ``mapInArrow`` over the
+    queries builds the same rings on the executors, and the points are
+    shuffled on ``cell``.  False takes the shuffle plan and True
+    broadcasts its rings; both run nothing at construction (with True
+    the caller vouches for the size).
     """
     if radius_m <= 0:
         raise ValueError(f"radius_m must be > 0, got {radius_m}")
@@ -499,69 +493,60 @@ def radius_join(
     n = 1 << level
     ch, cw = 180.0 / n, 360.0 / n
     ry = min(int(math.ceil(rad_deg / ch)), n)
+    half_sin = math.sin(radius_m / (2.0 * EARTH_RADIUS_M))
+
+    def rx(lat):
+        # chord-exact longitude span at the band's worst-case latitude; a
+        # band reaching past the 89.99-deg clamp must saturate to the FULL
+        # longitude circle (the clamp otherwise SHRINKS the ring and drops
+        # in-radius pairs for small radii near the poles)
+        top = np.abs(lat) + rad_deg
+        ratio = np.where(top >= 89.99, 1.0,
+                         np.minimum(1.0, half_sin / np.cos(np.radians(top))))
+        span = np.degrees(2.0 * np.arcsin(ratio))
+        return np.minimum(np.ceil(span / cw), n // 2 + 1).astype(np.int64)
 
     pts = points.withColumn(
         "cell", cell_col(F.col(lon_col), F.col(lat_col), level))
-    # chord-exact longitude span at the band's worst-case latitude; a
-    # band reaching past the 89.99-deg clamp must saturate to the FULL
-    # longitude circle (the clamp otherwise SHRINKS the ring and drops
-    # in-radius pairs for small radii near the poles)
-    half_sin = math.sin(radius_m / (2.0 * EARTH_RADIUS_M))
-    band_top = F.abs(F.col(lat_col)) + F.lit(rad_deg)
-    ratio = F.when(band_top >= F.lit(89.99), F.lit(1.0)).otherwise(
-        F.least(F.lit(1.0),
-                F.lit(half_sin) / F.cos(F.radians(band_top))))
-    lon_span_deg = F.degrees(F.lit(2.0) * F.asin(ratio))
-    rx = F.least(F.ceil(lon_span_deg / F.lit(cw)).cast("int"),
-                 F.lit(n // 2 + 1))
-    q = queries.select(
-        F.col(query_id_col),
-        F.col(lon_col).alias("q_lon"),
-        F.col(lat_col).alias("q_lat"),
-        rx.alias("__rx"),
-    )
-    q = _block_cells(q, *_col_ij(F.col("q_lon"), F.col("q_lat"), level),
-                     (-F.col("__rx"), F.col("__rx")), (F.lit(-ry), F.lit(ry)),
-                     level, "cand_cell")
-    q = q.select(query_id_col, "q_lon", "q_lat", "cand_cell")
-    # decide broadcast vs shuffle.  Caller override first (True = no
-    # plan-time action at all); else the exploded rows, the sum of each
-    # query's ring size (2rx+1)(2ry+1) — an upper bound: the lat clamp
-    # and wrap-dedup only shrink it — must fit max_broadcast_rows.  A
-    # ring holds at least 2ry+1 rows, so past ``cap`` queries the sum
-    # cannot fit, and one collect of at most cap+1 ring sizes decides
+    q = queries.select(F.col(query_id_col), F.col(lon_col).alias("q_lon"),
+                       F.col(lat_col).alias("q_lat"))
+    rings = None
     if broadcast_queries is None:
+        # a finite query's ring spans 2ry+1 rows away from the poles:
+        # past ``cap`` queries the rings cannot fit, so the collect stops
+        # there and the exact count runs before any ring is built
         cap = max_broadcast_rows // (2 * ry + 1)
-        sizes = queries.select(
-            ((F.lit(2) * rx + F.lit(1)) * F.lit(2 * ry + 1)).alias("__c")
-        ).limit(cap + 1).toArrow().column("__c")
-        est = pc.sum(sizes).as_py() or 0
-        too_big = len(sizes) > cap or est > max_broadcast_rows
-        # a ring wider than the globe (2rx+1 > n) repeats cells
-        wraps = too_big or (pc.max(sizes).as_py() or 0) > n * (2 * ry + 1)
-    else:
-        too_big, wraps = not broadcast_queries, True
-    if wraps:
-        q = q.dropDuplicates([query_id_col, "cand_cell"])  # polar wrap collisions
-    if too_big:
-        if broadcast_queries is None:
+        qt = q.limit(cap + 1).toArrow()
+        if qt.num_rows <= cap:
+            rings = _ring_cells(qt, level, rx, ry, max_broadcast_rows)
+        if rings is None:
             import warnings
 
             warnings.warn(
-                f"radius_join: the exploded query rings exceed "
-                f"max_broadcast_rows={max_broadcast_rows} ({est} rows "
-                f"estimated from {len(sizes)} queries); "
-                f"falling back to a shuffle join — the points table "
-                f"WILL be shuffled on cell.  Reduce the radius, the "
-                f"query count, or pass a larger max_broadcast_rows to "
-                f"restore the broadcast plan.",
+                f"radius_join: the query rings exceed "
+                f"max_broadcast_rows={max_broadcast_rows}; falling back to "
+                f"a shuffle join — the points table WILL be shuffled on "
+                f"cell.  Reduce the radius, the query count, or pass a "
+                f"larger max_broadcast_rows to restore the broadcast plan.",
                 stacklevel=2,
             )
-        cand = pts.join(q, pts["cell"] == q["cand_cell"], "inner")
+    if rings is not None:
+        cells = F.broadcast(points.sparkSession.createDataFrame(rings))
     else:
-        cand = pts.join(F.broadcast(q), pts["cell"] == q["cand_cell"], "inner")
+        from pyspark.sql.types import LongType, StructField, StructType
+
+        def _rings(batches):
+            for b in batches:
+                yield from _ring_cells(pa.Table.from_batches([b]), level,
+                                       rx, ry).to_batches()
+
+        cells = q.mapInArrow(_rings, StructType(
+            q.schema.fields + [StructField("cand_cell", LongType(), False)]))
+        if broadcast_queries:
+            cells = F.broadcast(cells)
     return (
-        cand.select(
+        pts.join(cells, pts["cell"] == cells["cand_cell"], "inner")
+        .select(
             query_id_col, point_id_col,
             haversine_col(F.col(lon_col), F.col(lat_col),
                           F.col("q_lon"), F.col("q_lat")).alias("dist_m"),
@@ -598,7 +583,7 @@ def _np_block_guard(q_lon: np.ndarray, q_lat: np.ndarray, level: int,
     full globe in longitude) contribute +inf.  Wrapped-longitude blocks
     (query near the antimeridian) stay correct because west/east are
     kept in the query's unwrapped frame and candidate cells wrap with
-    the same modulo as np_cell_ring.  A NaN coordinate gives a NaN
+    the same modulo as ``cells._np_block``.  A NaN coordinate gives a NaN
     bound, which proves nothing.
     """
     q_lon = np.asarray(q_lon, dtype=np.float64)
@@ -713,37 +698,39 @@ def _candidates(cand: DataFrame, k: int, lon_col: str, lat_col: str,
                 two_phase: bool) -> DataFrame:
     """Candidate (query, point) rows as ``__qpos, query_id, q_lon,
     q_lat, point_id, dist_m`` from a join of points and a query table;
-    with ``two_phase``, only each partition's per-query head(k)."""
+    with ``two_phase``, only each partition's per-query head(k).  A
+    pair with no distance (a NaN or +-Inf coordinate) is dropped."""
     cand = cand.select(
         _QPOS, query_id_col, "q_lon", "q_lat", point_id_col,
         haversine_col(F.col(lon_col), F.col(lat_col),
                       F.col("q_lon"), F.col("q_lat")).alias("dist_m"),
-    )
+    ).where(F.col("dist_m") < F.lit(_BIG_M))  # NaN orders above it
     if two_phase:
         cand = _prereduce_topk(cand, k, _QPOS, point_id_col)
     return cand
 
 
-def _ring_cells(q: pa.Table, r: int, level: int) -> pa.Table:
-    """Driver-side candidate cells of a query table (``__qpos``,
-    ``query_id``, ``q_lon``, ``q_lat``): one row per query and per cell
-    of its ring-``r`` block (:func:`cells.np_cell_ring`: longitude
-    wraps, rows past a pole are dropped) in column ``cand_cell``, each
-    equal to ``cell_col`` of a point in it.  A query with a NULL
-    coordinate has no cell.  A block that wraps the whole globe in
-    longitude repeats cells; each is kept once per query."""
-    lon, lat = (q.column(c).combine_chunks() for c in ("q_lon", "q_lat"))
-    valid = np.flatnonzero(
-        pc.and_(lon.is_valid(), lat.is_valid()).to_numpy(zero_copy_only=False))
-    ring = np_cell_ring(np_cell(_floats(lon)[valid], _floats(lat)[valid], level), r)
-    if 2 * r + 1 >= 1 << level:
-        srt = np.sort(ring, axis=1)
-        ring = np.where(np.diff(srt, axis=1, prepend=-1) != 0, srt, -1)
-    row, col = np.nonzero(ring >= 0)
-    # a non-null cell column: no NULL filter to plan on the local side
+def _ring_cells(q: pa.Table, level: int, rx, ry: int,
+                max_rows: int | None = None) -> Optional[pa.Table]:
+    """The one candidate-ring builder: one row of the query table ``q``
+    (``q_lon``, ``q_lat`` and any other columns) per cell of its block
+    (:func:`cells._np_block`: ``|dx| <= rx``, ``|dy| <= ry``,
+    longitude wraps, rows past a pole dropped, each cell once), in a
+    non-null column ``cand_cell`` equal to ``cell_col`` of a point in
+    it.  ``rx`` is an int or a function of the queries' latitudes.  A
+    query with a NULL, NaN or +-Inf coordinate has no cell.  ``None``
+    when the rings hold more than ``max_rows`` rows, counted before
+    any is built."""
+    lon, lat = (_floats(q.column(c).combine_chunks()) for c in ("q_lon", "q_lat"))
+    valid = np.flatnonzero(np.isfinite(lon) & np.isfinite(lat))
+    lon, lat = lon[valid], lat[valid]
+    block = _np_block(*_np_ij(lon, lat, level), rx(lat) if callable(rx) else rx,
+                      ry, level, max_rows)
+    if block is None:
+        return None
+    row, cell = block
     return q.take(valid[row]).append_column(
-        pa.field("cand_cell", pa.int64(), nullable=False),
-        pa.array(ring[row, col], pa.int64()))
+        pa.field("cand_cell", pa.int64(), nullable=False), pa.array(cell, pa.int64()))
 
 
 def _ring_round(pts: DataFrame, q: pa.Table, r: int, k: int, level: int,
@@ -755,7 +742,7 @@ def _ring_round(pts: DataFrame, q: pa.Table, r: int, k: int, level: int,
     table's JVM cell column, then per-query top-k (:func:`_top_k`).
     Every round and every call plans the same query: the ring and the
     queries live in the local relation's rows, not in its code."""
-    cells = pts.sparkSession.createDataFrame(_ring_cells(q, r, level))
+    cells = pts.sparkSession.createDataFrame(_ring_cells(q, level, r, r))
     cand = pts.join(F.broadcast(cells), pts["cell"] == cells["cand_cell"], "inner")
     return _top_k(_candidates(cand, k, lon_col, lat_col, point_id_col,
                               query_id_col, two_phase), k, point_id_col)
@@ -827,7 +814,10 @@ def knn_join(
     collects the queries, runs no ring job and returns round 1's
     top-k rows as they are, proven or not.  The driver reads a round's
     rows back by query id, so a query whose id is NULL or repeats is
-    never proven in a round and takes the brute pass.
+    never proven in a round and takes the brute pass.  A query with a
+    NULL, NaN or +-Inf coordinate, or a point with a NaN or +-Inf one,
+    takes part in no pair: such a query gets no row, and a finite
+    query with fewer than k finite points gets fewer than k.
 
     Output: query_id, q_lon, q_lat, point_id, dist_m, rank (1..k).
     """
@@ -889,7 +879,9 @@ def knn_join(
     first = pc.index_in(ids, value_set=ids).to_numpy(zero_copy_only=False)
     provable = (np.bincount(first, minlength=qt.num_rows)[first] == 1) \
         & ids.is_valid().to_numpy(zero_copy_only=False)
-    remaining, r, proven = np.arange(qt.num_rows), ring, []
+    # a query with a non-finite coordinate has no cell and no distance
+    remaining = np.flatnonzero(np.isfinite(q_lon) & np.isfinite(q_lat))
+    r, proven = ring, []
     for rnd in range(max(expansion_rounds, 0) + 1):
         if rnd:
             # unproven queries (sparse neighborhoods) retry a wider ring

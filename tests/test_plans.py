@@ -160,22 +160,37 @@ def test_pip_construct_job_budget(spark, case, level, max_bytes, budget):
 
 
 @pytest.mark.parametrize("case, broadcast_queries, budget", [
-    # the broadcast guard: one collect of at most cap+1 ring sizes,
-    # whose LIMIT is the plan's root
+    # the broadcast guard: one collect of at most cap+1 queries, whose
+    # LIMIT is the plan's root; the rings are counted and built on the
+    # driver
     ("default_guard", None, 1),
-    # a forced broadcast runs nothing at construction
+    # the same collect finds the rings past max_broadcast_rows: the
+    # shuffle plan builds them lazily in a mapInArrow
+    ("shuffle_fallback", None, 1),
+    # a forced plan runs nothing at construction
     ("broadcast_queries", True, 0),
+    ("shuffle_queries", False, 0),
 ])
 def test_radius_construct_job_budget(spark, case, broadcast_queries, budget):
+    import warnings
+
     # queries sit on the first 5 points; a 1 m radius finds exactly them
     pdf = _pts(spark).limit(5).toPandas()
     qs = spark.createDataFrame(pd.DataFrame({
         "query_id": range(5), "lon": pdf["lon"], "lat": pdf["lat"]}))
     pts = _pts(spark)
-    out, jobs = _construct_jobs(
-        spark, f"radius_budget_{case}", lambda: radius_join(
-            pts, qs, 1.0, broadcast_queries=broadcast_queries))
+    # 20 rows: cap = 20 // 3 = 6 collects all 5 queries, whose 3x3
+    # rings hold 45 rows
+    max_rows = 20 if case == "shuffle_fallback" else 4_000_000
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        out, jobs = _construct_jobs(
+            spark, f"radius_budget_{case}", lambda: radius_join(
+                pts, qs, 1.0, max_broadcast_rows=max_rows,
+                broadcast_queries=broadcast_queries))
     assert jobs <= budget, f"{case}: {jobs} construct-time jobs > {budget}"
+    assert any("max_broadcast_rows" in str(w.message) for w in caught) \
+        == (case == "shuffle_fallback")
     assert out.count() == 5
 
 

@@ -251,32 +251,57 @@ def test_cell_parent_and_decode_roundtrip(spark):
     assert (C.np_cell(clon, clat, 12) == cell).all()
 
 
-def test_block_cells_matches_np_cell_ring(spark):
-    # the Column-side block enumerator against the numpy ring, compared
-    # as sets: antimeridian cells, pole rows, and full-wrap rings
-    # (2r+1 >= 2^level, levels 2 and 3) whose wrapped columns repeat
+def _block_ref(ix, iy, rx, ry, level):
+    """The cells of one (2rx+1) x (2ry+1) block, enumerated one by one:
+    longitude wraps, rows past a pole are dropped."""
+    n = 1 << level
+    out = set()
+    for dx in range(-rx, rx + 1):
+        for dy in range(-ry, ry + 1):
+            if 0 <= iy + dy < n:
+                m = C._np_spread(np.array([(ix + dx) % n])) \
+                    | (C._np_spread(np.array([iy + dy])) << 1)
+                out.add(int((m[0] << 5) | level))
+    return out
+
+
+def test_np_block_matches_np_cell_ring():
+    # the one ring builder against the dense numpy ring, compared as
+    # sets: antimeridian cells, pole rows, full-wrap rings (2r+1 >=
+    # 2^level, levels 0, 2 and 3) whose wrapped columns np_cell_ring
+    # repeats; _np_block lists each cell once
     rng = np.random.default_rng(9)
     lon = np.concatenate([rng.uniform(-180, 180, 40),
                           [-180.0, 180.0, 179.99, -179.99, 0.0, 0.0, 179.99]])
     lat = np.concatenate([rng.uniform(-90, 90, 40),
                           [0.0, 0.0, 45.0, -45.0, 90.0, -90.0, 89.99]])
-    for level, rs in [(3, (0, 1, 3)), (7, (0, 1, 3)), (12, (0, 1, 3)),
-                      (2, (3,)), (3, (4,))]:
+    for level, rs in [(0, (0, 1, 2)), (3, (0, 1, 3)), (7, (0, 1, 3)),
+                      (12, (0, 1, 3)), (2, (3,)), (3, (4,))]:
         cell = C.np_cell(lon, lat, level)
         ix, iy, _ = C.np_cell_decode(cell)
-        pdf = pd.concat([pd.DataFrame({"cell": cell, "ix": ix, "iy": iy, "r": r})
-                         for r in rs])
-        df = spark.createDataFrame(pdf)
-        ring = (-F.col("r"), F.col("r"))
-        got = (
-            C._block_cells(df, F.col("ix"), F.col("iy"), ring, ring, level, "c")
-            .groupBy("cell", "r").agg(F.collect_list("c").alias("cs"))
-            .toPandas()
-        )
-        assert len(got) == len(pdf.drop_duplicates(["cell", "r"])), level
-        for c, r, cs in got.itertuples(index=False):
-            want = {int(v) for v in C.np_cell_ring(np.int64(c), int(r))[0] if v >= 0}
-            assert set(cs) == want, (level, r, c)
+        for r in rs:
+            row, got = C._np_block(ix, iy, r, r, level)
+            assert (np.diff(row) >= 0).all(), (level, r)
+            for i, c in enumerate(cell):
+                mine = got[row == i]
+                want = {int(v) for v in C.np_cell_ring(c, r)[0] if v >= 0}
+                assert len(mine) == len(want), (level, r, i)
+                assert set(mine.tolist()) == want, (level, r, i)
+    # per-row spans with rx != ry, against the one-by-one enumeration
+    for level in (0, 3, 7):
+        cell = C.np_cell(lon, lat, level)
+        ix, iy, _ = C.np_cell_decode(cell)
+        rx = rng.integers(0, (1 << level) + 2, len(cell))
+        ry = rng.integers(0, 4, len(cell))
+        row, got = C._np_block(ix, iy, rx, ry, level)
+        for i in range(len(cell)):
+            mine = got[row == i]
+            want = _block_ref(int(ix[i]), int(iy[i]), int(rx[i]), int(ry[i]), level)
+            assert len(mine) == len(want), (level, i)
+            assert set(mine.tolist()) == want, (level, i)
+    # the row budget is checked before any cell is built
+    assert C._np_block([0], [0], [2], [1], 3, max_rows=9) is None
+    assert len(C._np_block([0], [0], [2], [1], 3, max_rows=10)[1]) == 10
 
 
 _BOXES = {"mid": (-10.0, -10.0, 20.0, 15.0), "east": (170.0, -5.0, 180.0, 5.0),
@@ -814,12 +839,10 @@ def test_knn_no_fallback_is_ring_topk_without_sentinels(spark):
 @pytest.mark.parametrize("n_points", [600, None],
                          ids=["brute_gate", "expansion"])
 def test_knn_nan_point_and_query(spark, n_points):
-    # NaN coordinates land in cell (0, 0), and haversine_col clamps a
-    # NaN distance to half the circumference.  The NaN point must not
-    # displace a finite neighbour of the queries around that cell, the
-    # NaN query must get k real rows (never a NULL-id sentinel) — all
-    # equidistant, so the point_id tiebreak picks them — and finite
-    # queries stay exact
+    # the pandas NaNs arrive as NULL coordinates: the NULL point must
+    # not displace a finite neighbour of the queries, the NULL query
+    # gets no row (no NULL-id sentinel either), and finite queries
+    # stay exact
     rng = np.random.default_rng(17)
     lon = rng.uniform(-180.0, -170.0, 600)
     lat = rng.uniform(-90.0, -80.0, 600)
@@ -832,11 +855,51 @@ def test_knn_nan_point_and_query(spark, n_points):
         {"query_id": np.arange(len(qlon)), "lon": qlon, "lat": qlat}))
     got = _knn_rows(knn_join(pts, qs, k=4, level=6, n_points=n_points))
     assert got["point_id"].notna().all()
-    assert len(got) == 4 * len(qlon)
-    _assert_knn_exact(got, 4, lon, lat, qlon, qlat, range(3))
-    nan_q = got[got["query_id"] == 3]
-    assert list(nan_q["rank"]) == [1, 2, 3, 4]
-    assert list(nan_q["point_id"]) == [0, 1, 2, 3]
+    assert 7 not in set(got["point_id"])
+    assert len(got) == 4 * 3
+    _assert_knn_exact(got, 4, lon, lat, qlon, qlat, range(3))  # NaN sorts last
+    assert (got["query_id"] == 3).sum() == 0
+
+
+_NON_FINITE = [(np.nan, 10.0), (10.0, np.nan), (np.nan, np.nan),
+               (np.inf, 10.0), (10.0, -np.inf), (-np.inf, np.inf)]
+
+
+def _non_finite_inputs(spark, n_fin):
+    """``n_fin`` finite points near (10, 10) plus one point per
+    non-finite (lon, lat) pattern, and four finite queries plus one per
+    pattern.  Point ids: finite first; query ids: finite first."""
+    rng = np.random.default_rng(23)
+    lon = np.concatenate([rng.uniform(8.0, 12.0, n_fin), [a for a, _ in _NON_FINITE]])
+    lat = np.concatenate([rng.uniform(8.0, 12.0, n_fin), [b for _, b in _NON_FINITE]])
+    qlon = np.concatenate([[10.0, 9.0, 11.5, -170.0], [a for a, _ in _NON_FINITE]])
+    qlat = np.concatenate([[10.0, 11.0, 8.5, -85.0], [b for _, b in _NON_FINITE]])
+    # rows, not pandas: Arrow would turn a pandas NaN into NULL
+    pts = spark.createDataFrame(
+        [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(lon, lat))],
+        "point_id long, lon double, lat double")
+    qs = spark.createDataFrame(
+        [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(qlon, qlat))],
+        "query_id long, lon double, lat double")
+    return pts, qs, lon, lat, qlon, qlat
+
+
+@pytest.mark.parametrize("n_fin, k", [(300, 5), (3, 5)],
+                         ids=["dense", "fewer_than_k"])
+def test_knn_non_finite_inputs_take_no_pair(spark, n_fin, k):
+    # NaN, +Inf and -Inf in lon, lat or both, on either side: a
+    # non-finite query gets no row, a non-finite point is nobody's
+    # neighbour, and a finite query with fewer than k finite points
+    # gets only those (the query at (-170, -85) has no ring candidate,
+    # so it takes the brute pass)
+    pts, qs, lon, lat, qlon, qlat = _non_finite_inputs(spark, n_fin)
+    for n_points in (len(lon), None):
+        got = _knn_rows(knn_join(pts, qs, k=k, level=6, n_points=n_points))
+        assert set(got["query_id"]) == {0, 1, 2, 3}
+        assert got["point_id"].max() < n_fin
+        kk = min(k, n_fin)
+        assert len(got) == 4 * kk
+        _assert_knn_exact(got, kk, lon[:n_fin], lat[:n_fin], qlon, qlat, range(4))
 
 
 def test_pip_join_many_polygons_executor_side(spark):
@@ -1031,8 +1094,10 @@ def test_pip_join_chunked_never_collects_whole_layer(spark, monkeypatch):
 
 def test_radius_join_exact_vs_bruteforce(spark):
     """Range join exactness: identical pair set to the brute-force
-    cross join at two radii, including polar and antimeridian query
+    cross join at three radii, including polar and antimeridian query
     points (the ring bound must never drop an in-radius point)."""
+    import warnings
+
     import numpy as np
     import pandas as pd
 
@@ -1055,17 +1120,49 @@ def test_radius_join_exact_vs_bruteforce(spark):
     h = (np.sin((la2 - la1) / 2) ** 2
          + np.cos(la1) * np.cos(la2) * np.sin((lo2 - lo1) / 2) ** 2)
     d = 2 * EARTH_RADIUS_M * np.arcsin(np.minimum(1.0, np.sqrt(h)))
-    for radius in (300_000.0, 1_500_000.0):
-        got = radius_join(P, Q, radius).toPandas()
+    # every radius through the three plans: the broadcast rings, the
+    # shuffle fallback (the rings built in a mapInArrow) and the forced
+    # broadcast of those; at 6,000 km rx saturates to the whole circle
+    plans = {"default": {}, "shuffle": {"max_broadcast_rows": 1},
+             "forced": {"broadcast_queries": True}}
+    for radius in (300_000.0, 1_500_000.0, 6_000_000.0):
         want = {(q, p) for q in range(8) for p in range(2500)
                 if d[q, p] <= radius}
-        gotset = set(zip(got["query_id"].astype(int),
-                         got["point_id"].astype(int)))
-        assert gotset == want, radius
+        for plan, kw in plans.items():
+            with warnings.catch_warnings():
+                warnings.simplefilter("ignore")
+                got = radius_join(P, Q, radius, **kw).toPandas()
+            gotset = set(zip(got["query_id"].astype(int),
+                             got["point_id"].astype(int)))
+            assert len(gotset) == len(got), (radius, plan)
+            assert gotset == want, (radius, plan)
     # plan shape: the points side joins via a broadcast of the
     # exploded query rings — no shuffle of the big table
     plan = radius_join(P, Q, 300_000.0)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
+
+
+@pytest.mark.parametrize("radius", [300_000.0, 2.1e7],
+                         ids=["300km", "past_half_circumference"])
+def test_radius_non_finite_inputs_take_no_pair(spark, radius):
+    # NaN, +Inf and -Inf in lon, lat or both, on either side: a pair
+    # with a non-finite coordinate has no distance, so it is never
+    # within the radius, not even one past half the circumference
+    # (pi R, where every finite pair is)
+    import warnings
+
+    from proj_spark.operators.joins import radius_join
+
+    pts, qs, lon, lat, qlon, qlat = _non_finite_inputs(spark, 300)
+    d = _np_haversine(qlon[:, None], qlat[:, None], lon[None, :], lat[None, :])
+    want = {(int(q), int(p)) for q, p in zip(*np.nonzero(d <= radius))}
+    assert want and max(q for q, _ in want) < 4 and max(p for _, p in want) < 300
+    for kw in ({}, {"max_broadcast_rows": 1}, {"broadcast_queries": True}):
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore")
+            got = radius_join(pts, qs, radius, **kw).toPandas()
+        assert got["dist_m"].notna().all(), kw
+        assert set(zip(got["query_id"], got["point_id"])) == want, kw
 
 
 def test_asof_join_matches_merge_asof(spark):

@@ -74,6 +74,12 @@ def test_sql_haversine(spark):
         "SELECT haversine_m(2.3522d, 48.8566d, -0.1276d, 51.5072d) AS d"
     ).collect()[0]["d"]
     assert abs(d - 343_500) < 1_500
+    # a NaN or infinite coordinate has no distance (haversine_col's rule)
+    row = spark.sql(
+        "SELECT haversine_m(CAST('NaN' AS DOUBLE), 1.0d, 2.0d, 3.0d) AS a, "
+        "haversine_m(1.0d, CAST('-Infinity' AS DOUBLE), 2.0d, 3.0d) AS b"
+    ).collect()[0]
+    assert np.isnan(row["a"]) and np.isnan(row["b"])
 
 
 def test_sql_proj_transform_mixed_pairs_and_errors(spark):
@@ -169,3 +175,17 @@ def test_ring_cells_udtf(spark):
                    np_cell_ring(cells[pid:pid + 1], 1).ravel())
         assert got == want, pid
         assert len(got) == 9  # full 3x3 block away from edges
+    # a cell on the pole row loses the row past the pole, and a level-1
+    # ring wider than the globe takes each column once: no -1 padding
+    # and no repeated cell
+    edge = np.array([np_cell(10.0, 89.9, 6), np_cell(10.0, 0.0, 1)])
+    spark.createDataFrame(pd.DataFrame({"pid": [0, 1], "cell": edge})
+                          ).createOrReplaceTempView("ring_edge")
+    out = spark.sql(
+        "SELECT p.pid, rc.cand_cell FROM ring_edge p, "
+        "LATERAL ring_cells(p.cell, 1) rc").toPandas()
+    for pid, n in ((0, 6), (1, 4)):
+        got = out[out["pid"] == pid]["cand_cell"].astype(int).tolist()
+        assert -1 not in got and len(got) == len(set(got)) == n, pid
+        assert set(got) == {int(c) for c in np_cell_ring(edge[pid], 1)[0]
+                            if c >= 0}, pid
