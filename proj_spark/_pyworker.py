@@ -37,15 +37,18 @@ worker that has imported the package.  A UDF body that cloudpickle
 ships by value imports the package when it names a module-level
 proj_spark function, which cloudpickle pickles by reference.
 
-Every Python stage in ``functions/`` and ``operators/`` reads its
-``arrow_udf``/``mapInArrow`` batches (the column's own buffers)
-through the reader here: :func:`_floats` (float64, NaN for null) and
-:func:`_coords` (a ``list<list<list<double>>>`` column as flat x/y
-plus part and geometry offsets, so no body walks per-point Python
-objects); :func:`_nested` and :func:`_doubles` write the output
-(NaN as null).  Naming them imports the package, and with it this
-patch, in every worker.  ``pyarrow`` loads on first use, not on
-``import proj_spark``.
+Every Python stage outside ``streaming/`` (whose stateful stages
+have no Arrow form) is an ``arrow_udf`` or ``mapInArrow`` that reads
+its batches (the column's own buffers) through the reader here:
+:func:`_floats` (float64, NaN for null) and :func:`_coords` (a
+``list<list<list<double>>>`` column as flat x/y plus part and
+geometry offsets, so no body walks per-point Python objects); payload
+bodies in ``sources/`` take ``batch.column(c).to_pylist()``.
+:func:`_nested` and :func:`_doubles` write numeric output (NaN as
+null), :func:`_rows` and :func:`_columns` write a ``mapInArrow``
+batch in the :func:`_schema` of its DDL.  Naming them imports the
+package, and with it this patch, in every worker.  ``pyarrow`` loads
+on first use, not on ``import proj_spark``.
 """
 
 from __future__ import annotations
@@ -213,3 +216,31 @@ def _fields(struct) -> dict:
     """A struct column's fields by name, each null where the struct
     is."""
     return dict(zip([f.name for f in struct.type], struct.flatten()))
+
+
+def _schema(ddl: str):
+    """The Spark ``StructType`` of a DDL string and its Arrow schema.
+    The DDL parser is the JVM's: call this on the driver, give the
+    struct to ``mapInArrow`` (a DDL string there is parsed again) and
+    ship the Arrow schema to the body."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(ddl)
+    return struct, to_arrow_schema(struct)
+
+
+def _columns(cols, schema):
+    """One ``RecordBatch`` of ``schema`` from one list, numpy or Arrow
+    array per field, each converted (Arrow: cast) to its field's
+    type."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [pa.array(col, field.type) for col, field in zip(cols, schema)],
+        schema=schema)
+
+
+def _rows(rows, schema):
+    """One ``RecordBatch`` of ``schema`` from a list of row tuples."""
+    return _columns(list(zip(*rows)) or [()] * len(schema), schema)

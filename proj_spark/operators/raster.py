@@ -22,6 +22,8 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
+from .._pyworker import _columns, _schema
+
 __all__ = ["tile_pyramid", "TILE_PYRAMID_SCHEMA"]
 
 TILE_PYRAMID_SCHEMA = (
@@ -42,10 +44,7 @@ def tile_pyramid(images: DataFrame, zooms: tuple[int, ...] = (0, 1, 2),
     if any(z < 0 for z in zooms):
         raise ValueError(f"zooms must be >= 0, got {zooms}")
     zs = tuple(sorted(set(int(z) for z in zooms)))
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import _parse_datatype_string
-
-    schema = to_arrow_schema(_parse_datatype_string(TILE_PYRAMID_SCHEMA))
+    struct, schema = _schema(TILE_PYRAMID_SCHEMA)
 
     def _tiles(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from ..sources.images import decode_image, encode_png, phash64_batch
@@ -88,10 +87,8 @@ def tile_pyramid(images: DataFrame, zooms: tuple[int, ...] = (0, 1, 2),
             phash_c = np.zeros(len(ids), dtype=np.int64)
             for sh, blks in by_shape.items():
                 phash_c[slot_by_shape[sh]] = phash64_batch(np.stack(blks))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(col, field.type) for col, field in zip(
-                    (ids, zoom_c, tx_c, ty_c, tw_c, th_c, bytes_c, phash_c),
-                    schema)],
-                schema=schema)
+            yield _columns(
+                (ids, zoom_c, tx_c, ty_c, tw_c, th_c, bytes_c, phash_c),
+                schema)
 
-    return images.mapInArrow(_tiles, TILE_PYRAMID_SCHEMA)
+    return images.mapInArrow(_tiles, struct)

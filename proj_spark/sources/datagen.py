@@ -10,8 +10,9 @@ plus derived geo columns ``lon``/``lat``.  Everything is a pure
 function of ``image_id`` through splitmix64 (no library RNG streams, so
 bytes are reproducible across numpy versions and across partitions —
 determinism requirement of SURVEY.md §7 risk 5).  Generation runs as
-``spark.range(n) -> mapInPandas`` so a 10^12-row synthesis is just more
-range partitions; no driver-side data.
+``spark.range(n) -> mapInArrow`` (one body, :func:`_synthesize`, behind
+every range synthesizer here and in :mod:`.media`) so a 10^12-row
+synthesis is just more range partitions; no driver-side data.
 """
 
 from __future__ import annotations
@@ -19,9 +20,10 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
+from .._pyworker import _rows, _schema
 from .images import encode_lossy, encode_png, phash64
 
 __all__ = [
@@ -127,6 +129,82 @@ def raster_smooth_for(seed: int, w: int, h: int) -> np.ndarray:
     return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
 
 
+def caption_for(image_id: str, h: int) -> str:
+    salt = " ".join(_WORDS[(h >> (4 * k)) % len(_WORDS)] for k in range(3))
+    return f"caption for {image_id} {salt}"
+
+
+def _synthesize(spark: SparkSession, n: int, partitions: int | None,
+                ddl: str, row) -> DataFrame:
+    """``spark.range(n) -> mapInArrow``: ``row(seq, meta, i)`` returns
+    the ``ddl`` row of range id ``seq``, where ``meta`` is
+    :func:`meta_for` over the batch and ``i`` the row's index in it.
+    A row depends on ``seq`` alone, so the bytes are the same at any
+    partition count and batch size."""
+    struct, schema = _schema(ddl)
+
+    def _gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            seq = batch.column(0).to_numpy().astype(np.uint64)
+            meta = meta_for(seq)
+            yield _rows([row(int(s), meta, i) for i, s in enumerate(seq)],
+                        schema)
+
+    return spark.range(
+        0, n, 1, partitions or spark.sparkContext.defaultParallelism
+    ).mapInArrow(_gen, struct)
+
+
+def synthesize_images(spark: SparkSession, n: int,
+                      partitions: int | None = None) -> DataFrame:
+    """Deterministic images table with ``n`` rows (pure function of row
+    number; same bytes at any partition count)."""
+    from .images import decode_image
+    from .jpeg import encode_jpeg
+
+    def row(seq, meta, i):
+        image_id = f"img{seq:012d}"
+        seed = int(meta["hash"][i])
+        w, h = int(meta["w"][i]), int(meta["h"][i])
+        arr = raster_for(seed, w, h)
+        fmt = str(meta["fmt"][i])
+        if fmt == "jpeg":
+            data = encode_lossy(arr)
+        elif fmt == "jpg":
+            data = encode_jpeg(arr, quality=98)
+        else:
+            data = encode_png(arr)
+        # phash is computed over the pixels a reader will see
+        return (image_id, data, w, h, fmt, caption_for(image_id, seed),
+                phash64(decode_image(data, fmt)),
+                float(meta["lon"][i]), float(meta["lat"][i]))
+
+    return _synthesize(spark, n, partitions, IMAGES_DDL, row)
+
+
+def _smooth_jpeg(spark: SparkSession, n: int, partitions: int | None,
+                 prefix: str, bit: int, other: str, encode,
+                 restart: bool = False) -> DataFrame:
+    """The smooth-raster JPEG fixtures: row ``seq`` is
+    ``raster_smooth_for`` of its hash through ``encode(arr, sub)``,
+    with subsampling "4:2:0" where hash bit ``bit`` is set, else
+    ``other``; ``restart`` adds a restart interval of 4 MCUs where bit
+    27 is set, else 0, passed to ``encode`` and kept in its own
+    column."""
+    ddl = "image_id string, bytes binary, w int, h int, subsampling string"
+
+    def row(seq, meta, i):
+        seed = int(meta["hash"][i])
+        w, h = int(meta["w"][i]), int(meta["h"][i])
+        sub = "4:2:0" if (seed >> bit) & 1 else other
+        ri = (4 if (seed >> 27) & 1 else 0,) if restart else ()
+        data = encode(raster_smooth_for(seed, w, h), sub, *ri)
+        return (f"{prefix}{seq:012d}", data, w, h, sub) + ri
+
+    return _synthesize(spark, n, partitions,
+                       ddl + (", restart int" if restart else ""), row)
+
+
 def synthesize_jpeg_subsampled(spark: SparkSession, n: int,
                                quality: int = 95,
                                partitions: int | None = None) -> DataFrame:
@@ -135,86 +213,11 @@ def synthesize_jpeg_subsampled(spark: SparkSession, n: int,
     ``encode_jpeg(subsampling=...)`` — "4:2:0" or "4:2:2" chosen by a
     splitmix64 bit so the SQL oracle can replicate the selection.
     Columns: image_id, bytes, w, h, subsampling."""
-    rng_df = spark.range(0, n, 1,
-                         partitions or spark.sparkContext.defaultParallelism)
+    from .jpeg import encode_jpeg
 
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .jpeg import encode_jpeg
-
-        for pdf in batches:
-            seq = pdf["id"].to_numpy(dtype=np.uint64)
-            meta = meta_for(seq)
-            rows = []
-            for i in range(len(seq)):
-                seed = int(meta["hash"][i])
-                w, h = int(meta["w"][i]), int(meta["h"][i])
-                sub = "4:2:0" if (seed >> 21) & 1 else "4:2:2"
-                arr = raster_smooth_for(seed, w, h)
-                data = encode_jpeg(arr, quality, subsampling=sub)
-                rows.append((f"jp{int(seq[i]):012d}", bytearray(data),
-                             w, h, sub))
-            yield pd.DataFrame(rows, columns=[
-                "image_id", "bytes", "w", "h", "subsampling"])
-
-    return rng_df.mapInPandas(
-        _gen,
-        "image_id string, bytes binary, w int, h int, subsampling string")
-
-
-def caption_for(image_id: str, h: int) -> str:
-    salt = " ".join(_WORDS[(h >> (4 * k)) % len(_WORDS)] for k in range(3))
-    return f"caption for {image_id} {salt}"
-
-
-def synthesize_images(spark: SparkSession, n: int,
-                      partitions: int | None = None) -> DataFrame:
-    """Deterministic images table with ``n`` rows (pure function of row
-    number; same bytes at any partition count)."""
-    rng_df = spark.range(0, n, 1, partitions or spark.sparkContext.defaultParallelism)
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            seq = pdf["id"].to_numpy(dtype=np.uint64)
-            meta = meta_for(seq)
-            rows = []
-            for i in range(len(seq)):
-                image_id = f"img{int(seq[i]):012d}"
-                seed = int(meta["hash"][i])
-                w, h = int(meta["w"][i]), int(meta["h"][i])
-                arr = raster_for(seed, w, h)
-                fmt = str(meta["fmt"][i])
-                if fmt == "jpeg":
-                    data = encode_lossy(arr)
-                elif fmt == "jpg":
-                    from .jpeg import encode_jpeg
-
-                    data = encode_jpeg(arr, quality=98)
-                else:
-                    data = encode_png(arr)
-                # phash is computed over the pixels a reader will see
-                from .images import decode_image
-
-                ph = phash64(decode_image(data, fmt))
-                rows.append(
-                    (
-                        image_id,
-                        bytearray(data),
-                        w,
-                        h,
-                        fmt,
-                        caption_for(image_id, seed),
-                        ph,
-                        float(meta["lon"][i]),
-                        float(meta["lat"][i]),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt", "caption",
-                         "phash", "lon", "lat"],
-            )
-
-    return rng_df.mapInPandas(_gen, schema=IMAGES_DDL)
+    return _smooth_jpeg(
+        spark, n, partitions, "jp", 21, "4:2:2",
+        lambda arr, sub: encode_jpeg(arr, quality, subsampling=sub))
 
 
 def synthesize_jpeg_progressive(spark: SparkSession, n: int,
@@ -225,31 +228,12 @@ def synthesize_jpeg_progressive(spark: SparkSession, n: int,
     subsampling ("4:2:0" or "4:4:4") chosen by a splitmix64 bit so the
     SQL oracle can replicate the selection.
     Columns: image_id, bytes, w, h, subsampling."""
-    rng_df = spark.range(0, n, 1,
-                         partitions or spark.sparkContext.defaultParallelism)
+    from .jpeg import encode_jpeg_progressive
 
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .jpeg import encode_jpeg_progressive
-
-        for pdf in batches:
-            seq = pdf["id"].to_numpy(dtype=np.uint64)
-            meta = meta_for(seq)
-            rows = []
-            for i in range(len(seq)):
-                seed = int(meta["hash"][i])
-                w, h = int(meta["w"][i]), int(meta["h"][i])
-                sub = "4:2:0" if (seed >> 23) & 1 else "4:4:4"
-                arr = raster_smooth_for(seed, w, h)
-                data = encode_jpeg_progressive(arr, quality,
-                                               subsampling=sub)
-                rows.append((f"pg{int(seq[i]):012d}", bytearray(data),
-                             w, h, sub))
-            yield pd.DataFrame(rows, columns=[
-                "image_id", "bytes", "w", "h", "subsampling"])
-
-    return rng_df.mapInPandas(
-        _gen,
-        "image_id string, bytes binary, w int, h int, subsampling string")
+    return _smooth_jpeg(
+        spark, n, partitions, "pg", 23, "4:4:4",
+        lambda arr, sub: encode_jpeg_progressive(arr, quality,
+                                                 subsampling=sub))
 
 
 def synthesize_jpeg_arith(spark: SparkSession, n: int,
@@ -261,31 +245,10 @@ def synthesize_jpeg_arith(spark: SparkSession, n: int,
     25 and a restart interval (0 or 4 MCUs) by bit 27, both
     replicable in the SQL oracle.
     Columns: image_id, bytes, w, h, subsampling, restart."""
-    rng_df = spark.range(0, n, 1,
-                         partitions or spark.sparkContext.defaultParallelism)
+    from .jpeg_arith import encode_jpeg_arithmetic
 
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .jpeg_arith import encode_jpeg_arithmetic
-
-        for pdf in batches:
-            seq = pdf["id"].to_numpy(dtype=np.uint64)
-            meta = meta_for(seq)
-            rows = []
-            for i in range(len(seq)):
-                seed = int(meta["hash"][i])
-                w, h = int(meta["w"][i]), int(meta["h"][i])
-                sub = "4:2:0" if (seed >> 25) & 1 else "4:4:4"
-                ri = 4 if (seed >> 27) & 1 else 0
-                arr = raster_smooth_for(seed, w, h)
-                data = encode_jpeg_arithmetic(arr, quality,
-                                              subsampling=sub,
-                                              restart_interval=ri)
-                rows.append((f"aj{int(seq[i]):012d}", bytearray(data),
-                             w, h, sub, ri))
-            yield pd.DataFrame(rows, columns=[
-                "image_id", "bytes", "w", "h", "subsampling", "restart"])
-
-    return rng_df.mapInPandas(
-        _gen,
-        "image_id string, bytes binary, w int, h int, "
-        "subsampling string, restart int")
+    return _smooth_jpeg(
+        spark, n, partitions, "aj", 25, "4:4:4",
+        lambda arr, sub, ri: encode_jpeg_arithmetic(
+            arr, quality, subsampling=sub, restart_interval=ri),
+        restart=True)

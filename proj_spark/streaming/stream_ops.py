@@ -144,8 +144,8 @@ def stream_verify_images(
 ) -> DataFrame:
     """Streaming image-ingest verification: the SAME Arrow-batched
     decode+invariant verifier as the batch path
-    (:func:`proj_spark.sources.images.verify_images` — mapInPandas is
-    stateless, so it composes with readStream unchanged), with the
+    (:func:`proj_spark.sources.images.verify_images` — a stateless
+    ``mapInArrow``, so it composes with readStream unchanged), with the
     event-time column carried through for downstream windows/dedup.
 
     Input: streaming frame with the images-table columns + ``ts``.

@@ -1,14 +1,18 @@
-"""The Arrow reader and writer behind every Python stage in
-``functions/`` and ``operators/`` (``proj_spark/_pyworker.py``): float
-columns to float64 numpy with NaN for null, nested coordinate lists to
-flat x/y plus offsets and back, over sliced batches, nulls, empty parts
-and three-coordinate points; and the bodies that read through them."""
+"""The Arrow reader and writer behind every Python stage outside
+``streaming/`` (``proj_spark/_pyworker.py``): float columns to float64
+numpy with NaN for null, nested coordinate lists to flat x/y plus
+offsets and back, over sliced batches, nulls, empty parts and
+three-coordinate points; row tuples to a record batch; the bodies that
+read through them; and that no batch stage takes another form."""
+
+import ast
+import os
 
 import numpy as np
 import pyarrow as pa
 import pytest
 
-from proj_spark._pyworker import _coords, _floats, _nested
+from proj_spark._pyworker import _coords, _floats, _nested, _rows
 from proj_spark.operators.geometry import _GEOMETRY_ARROW
 
 PARTS = _GEOMETRY_ARROW.field("parts").type
@@ -196,3 +200,54 @@ def test_geodesic_rows_equal_the_scalar_calls(spark):
         g = geoms[r["gid"]]
         assert _same(r["area_m2"], geom_area_m2(**g)), r["gid"]
         assert _same(r["length_m"], geom_length_m(**g)), r["gid"]
+
+
+def test_rows_writes_row_tuples_in_the_schema_types():
+    schema = pa.schema([("id", pa.string()), ("n", pa.int32()),
+                        ("data", pa.binary()), ("x", pa.float64())])
+    batch = _rows([("a", np.int64(3), b"\x00\x01", 0.5),
+                   ("b", 4, b"", float("nan"))], schema)
+    assert batch.schema == schema
+    assert batch.column(0).to_pylist() == ["a", "b"]
+    assert batch.column(1).to_pylist() == [3, 4]
+    assert batch.column(2).to_pylist() == [b"\x00\x01", b""]
+    assert np.isnan(batch.column(3).to_pylist()[1])
+    empty = _rows([], schema)
+    assert empty.schema == schema and empty.num_rows == 0
+    with pytest.raises(pa.ArrowInvalid):
+        _rows([("c", 2**40, b"", 0.0)], schema)  # no silent wrap
+
+
+_PANDAS_STAGES = {"mapInPandas", "pandas_udf", "applyInPandas",
+                  "applyInPandasWithState"}
+
+
+def test_one_python_stage_form():
+    """Every batch Python stage in ``proj_spark/`` is an ``arrow_udf``
+    or ``mapInArrow``: no pandas stage outside ``streaming/`` (whose
+    stateful ``applyInPandasWithState`` has no Arrow form), and no
+    pandas import in ``sources/``."""
+    root = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "proj_spark")
+    found = []
+    for dirpath, _dirs, files in os.walk(root):
+        rel = os.path.relpath(dirpath, root).split(os.sep)
+        for name in sorted(f for f in files if f.endswith(".py")):
+            path = os.path.join(dirpath, name)
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            where = os.path.relpath(path, root)
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Call) and rel[0] != "streaming":
+                    fn = node.func
+                    called = fn.attr if isinstance(fn, ast.Attribute) \
+                        else getattr(fn, "id", None)
+                    if called in _PANDAS_STAGES:
+                        found.append(f"{where}:{node.lineno} {called}")
+                if rel[0] == "sources" and isinstance(
+                        node, (ast.Import, ast.ImportFrom)):
+                    mods = [a.name for a in node.names] \
+                        if isinstance(node, ast.Import) else [node.module]
+                    if any((m or "").split(".")[0] == "pandas" for m in mods):
+                        found.append(f"{where}:{node.lineno} imports pandas")
+    assert not found, found

@@ -54,21 +54,72 @@ def test_meta_deterministic():
 
 
 def test_synthesize_and_verify_spark(spark):
+    from pyspark.sql import functions as F
+
     from proj_spark.sources.datagen import synthesize_images
     from proj_spark.sources.images import verify_images
 
-    imgs = synthesize_images(spark, 40, partitions=4)
+    imgs = synthesize_images(spark, 40, partitions=4).localCheckpoint()
     out = verify_images(imgs).toPandas()
     assert len(out) == 40
     assert out["size_ok"].all()
     assert out["phash_ok"].all()
     assert out["psnr_ok"].all()
     assert out["caption_ok"].all()
-    # determinism across partition counts: same bytes either way
-    one = synthesize_images(spark, 8, partitions=1).toPandas().sort_values("image_id")
-    four = synthesize_images(spark, 8, partitions=4).toPandas().sort_values("image_id")
-    for a, b in zip(one["bytes"], four["bytes"]):
-        assert bytes(a) == bytes(b)
+    # w/h arriving as bigint pass through as the declared int, and
+    # every check still reads them right
+    wide = imgs.select(*[F.col(c).cast("bigint") if c in ("w", "h")
+                         else F.col(c) for c in imgs.columns])
+    assert dict(wide.dtypes)["w"] == "bigint"
+    out = verify_images(wide)
+    assert out.dtypes == [
+        ("image_id", "string"), ("w", "int"), ("h", "int"),
+        ("fmt", "string"), ("caption", "string"), ("phash", "bigint"),
+        ("size_ok", "boolean"), ("phash_ok", "boolean"),
+        ("psnr", "double"), ("psnr_ok", "boolean"),
+        ("caption_ok", "boolean")]
+    rows = out.collect()
+    assert len(rows) == 40
+    assert all(r.size_ok and r.phash_ok and r.psnr_ok and r.caption_ok
+               for r in rows)
+    assert sorted((r.image_id, r.w, r.h) for r in rows) == sorted(
+        (r.image_id, r.w, r.h) for r in imgs.collect())
+
+
+@pytest.fixture
+def small_batches(spark):
+    """Arrow batches of 2 rows: every partition spans several."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("module, name, kwargs", [
+    ("datagen", "synthesize_images", {}),
+    ("datagen", "synthesize_jpeg_subsampled", {}),
+    ("datagen", "synthesize_jpeg_progressive", {}),
+    ("datagen", "synthesize_jpeg_arith", {}),
+    ("media", "synthesize_videos", {"n_frames": 3}),
+    ("media", "synthesize_audio", {"duration_s": 0.05}),
+])
+def test_synthesizer_bytes_do_not_depend_on_partitions(
+        spark, small_batches, module, name, kwargs):
+    """Every range synthesizer's promise: the same rows, bytes and all,
+    at any partition count and batch size."""
+    import importlib
+
+    synth = getattr(importlib.import_module(f"proj_spark.sources.{module}"),
+                    name)
+    one, four = (sorted(tuple(r) for r in
+                        synth(spark, 10, partitions=p, **kwargs).collect())
+                 for p in (1, 4))
+    assert len(one) == 10
+    assert len({r[0] for r in one}) == 10
+    assert one == four
 
 
 # ---------------------------------------------------------------------------

@@ -84,7 +84,7 @@ def test_stream_dedup_first_seen_stateful(spark, tmp_path):
 
 
 def test_stream_verify_images(spark, tmp_path):
-    """Streaming ingest verify: the batch mapInPandas verifier runs on
+    """Streaming ingest verify: the batch mapInArrow verifier runs on
     a readStream unchanged, carries ts through, and every synthesized
     image clears its invariants."""
     from pyspark.sql import functions as F
