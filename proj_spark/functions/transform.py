@@ -42,6 +42,7 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from .._pyworker import _doubles, _floats
 from ..crs import Transform, _check_errors
@@ -54,6 +55,13 @@ __all__ = [
     "transform_crs_to_crs",
     "get_transform",
 ]
+
+# the transform UDFs' return types, built here once: a DDL string in
+# ``arrow_udf`` goes through the JVM's parser at every construct
+_XY_ERR = StructType([StructField(n, DoubleType()) for n in ("x", "y")]
+                     + [StructField("err", StringType())])
+_XYZ_ERR = StructType([StructField(n, DoubleType()) for n in ("x", "y", "z")]
+                      + [StructField("err", StringType())])
 
 # per-Python-worker transform cache (reference thread-local context
 # analog, reference src/context.rs:84-89); UDF bodies reach it
@@ -132,7 +140,7 @@ def proj_udf(src_crs: str, dst_crs: str, errors: str = "mask",
     spec = (src_crs, dst_crs)
     opts = tuple(sorted(options.items()))
 
-    @arrow_udf("x double, y double, err string")
+    @arrow_udf(_XY_ERR)
     def _udf(x: pa.Array, y: pa.Array) -> pa.Array:
         return _transform_frame(_cached_transform(spec, opts), x, y, None,
                                 inverse, errors, "unit")
@@ -153,7 +161,7 @@ def projstring_udf(definition: str, input_units: str = "deg",
     """
     _check_errors(errors)
 
-    @arrow_udf("x double, y double, err string")
+    @arrow_udf(_XY_ERR)
     def _udf(x: pa.Array, y: pa.Array) -> pa.Array:
         return _transform_frame(_cached_transform(definition), x, y, None,
                                 inverse, errors, input_units)
@@ -171,7 +179,7 @@ def projstring_udf3(definition: str, input_units: str = "deg",
     invalid point."""
     _check_errors(errors)
 
-    @arrow_udf("x double, y double, z double, err string")
+    @arrow_udf(_XYZ_ERR)
     def _udf(x: pa.Array, y: pa.Array, z: pa.Array) -> pa.Array:
         return _transform_frame(_cached_transform(definition), x, y, z,
                                 inverse, errors, input_units)

@@ -45,6 +45,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
+from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, StringType,
+                               StructField, StructType)
 
 from .._pyworker import _coords, _doubles, _fields, _nested
 from ..crs import Transform, _check_errors
@@ -68,6 +70,15 @@ __all__ = [
 GEOMETRY_DDL = (
     "kind string, parts array<array<array<double>>>, offsets array<int>"
 )
+# GEOMETRY_DDL and the bounds as Spark types, built here once: a DDL
+# string in ``arrow_udf`` goes through the JVM's parser at every construct
+_GEOMETRY_TYPE = StructType([
+    StructField("kind", StringType()),
+    StructField("parts", ArrayType(ArrayType(ArrayType(DoubleType())))),
+    StructField("offsets", ArrayType(IntegerType())),
+])
+_BOUNDS_TYPE = StructType([StructField(n, DoubleType())
+                           for n in ("minx", "miny", "maxx", "maxy")])
 # the same layout as an Arrow type, for batches built in Python
 _GEOMETRY_ARROW = pa.struct([
     ("kind", pa.string()),
@@ -175,7 +186,7 @@ def transform_geometry(
     spec = (src_crs, dst_crs)
     opts = tuple(sorted(options.items()))
 
-    @arrow_udf(GEOMETRY_DDL)
+    @arrow_udf(_GEOMETRY_TYPE)
     def _udf(g: pa.Array) -> pa.Array:
         # proj_udf's cache key: a worker builds each transform once
         return _transform_geom_batch(g, _cached_transform(spec, opts),
@@ -203,7 +214,7 @@ def geom_bounds_udf():
     """Arrow UDF: geometry -> struct<minx,miny,maxx,maxy> (feeds the
     same pruning path as transform_bounds, O9)."""
 
-    @arrow_udf("minx double, miny double, maxx double, maxy double")
+    @arrow_udf(_BOUNDS_TYPE)
     def _bounds(g: pa.Array) -> pa.Array:
         return _bounds_batch(g)
 

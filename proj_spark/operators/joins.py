@@ -17,8 +17,8 @@ Scale design (10^12-point table, 1000 executors):
   * the exact geometric test runs vectorized per Arrow batch; each
     candidate carries its polygon's position in the broadcast edge
     arrays (no per-row Python; input_hint contract).  Its Python
-    stages (edge pack, PIP test, kNN pre-reduce) read Arrow through
-    ``_pyworker``: rings arrive as flat x/y plus offsets.
+    stages (edge pack, PIP test) read Arrow through ``_pyworker``:
+    rings arrive as flat x/y plus offsets.
   * kNN correctness is guaranteed by a distance bound: a query's top-k
     from ring-r candidates is provably exact when its kth distance is
     below a conservative lower bound of the distance to the ring
@@ -69,6 +69,13 @@ def haversine_col(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Col
     # greatest(-1, NaN) is NaN; negation is exact, so finite bits match
     return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(
         -F.greatest(F.lit(-1.0), -F.sqrt(h)))
+
+
+def _located(points: DataFrame, lon_col: str, lat_col: str) -> DataFrame:
+    """The points whose lon and lat are both set.  ``greatest`` skips a
+    NULL, so :func:`haversine_col` puts a NULL coordinate at pi R from
+    everything; knn and radius drop such points before any cell."""
+    return points.where(F.col(lon_col).isNotNull() & F.col(lat_col).isNotNull())
 
 
 # ---------------------------------------------------------------------------
@@ -443,6 +450,10 @@ def cell_equi_join(
     return l.join(r, "cell")
 
 
+# the finest grid radius_join picks on its own
+_RADIUS_MAX_LEVEL = 14
+
+
 def radius_join(
     points: DataFrame,
     queries: DataFrame,
@@ -452,7 +463,6 @@ def radius_join(
     point_id_col: str = "point_id",
     query_id_col: str = "query_id",
     level: int | None = None,
-    max_level: int = 14,
     max_broadcast_rows: int = 4_000_000,
     broadcast_queries: bool | None = None,
 ) -> DataFrame:
@@ -468,8 +478,8 @@ def radius_join(
     widens to the full circle.  The rings come from numpy
     (:func:`_ring_cells`, as kNN's), each cell once, and join the big
     table's JVM cell column; one codegen haversine filter follows.  A
-    query with a NULL, NaN or +-Inf coordinate, or a point with a NaN
-    or +-Inf one, takes part in no pair.
+    query or a point with a NULL, NaN or +-Inf coordinate takes part in
+    no pair.
 
     ``broadcast_queries`` picks the plan.  None (default) collects the
     queries once, at most ``max_broadcast_rows // (2*ry + 1) + 1`` of
@@ -487,7 +497,7 @@ def radius_join(
     rad_deg = math.degrees(radius_m / EARTH_RADIUS_M)
     if level is None:
         # largest level whose cell lat-height still covers the radius
-        level = max(0, min(max_level,
+        level = max(0, min(_RADIUS_MAX_LEVEL,
                            int(math.floor(math.log2(180.0 / rad_deg)))
                            if rad_deg < 180.0 else 0))
     n = 1 << level
@@ -506,7 +516,7 @@ def radius_join(
         span = np.degrees(2.0 * np.arcsin(ratio))
         return np.minimum(np.ceil(span / cw), n // 2 + 1).astype(np.int64)
 
-    pts = points.withColumn(
+    pts = _located(points, lon_col, lat_col).withColumn(
         "cell", cell_col(F.col(lon_col), F.col(lat_col), level))
     q = queries.select(F.col(query_id_col), F.col(lon_col).alias("q_lon"),
                        F.col(lat_col).alias("q_lat"))
@@ -629,85 +639,43 @@ def _np_block_guard(q_lon: np.ndarray, q_lat: np.ndarray, level: int,
         return np.minimum(np.minimum(g_s, g_n), g_lon)
 
 
-def _running_head(q: pa.Array, carry: tuple, k: int):
-    """Which rows of one batch of query-sorted candidates are among
-    their query's first ``k``: the position in the query's run of equal
-    ids, plus the rows ``carry`` = (last query id, its row count)
-    brings from the previous batch.  Returns the mask and the carry
-    for the next batch; a null query id is never kept."""
-    n = len(q)
-    if n == 0:
-        return np.zeros(0, dtype=bool), carry
-    new_run = np.ones(n, dtype=bool)
-    new_run[1:] = pc.fill_null(pc.not_equal(q[1:], q[:-1]),
-                               True).to_numpy(zero_copy_only=False)
-    starts = np.flatnonzero(new_run)
-    run = np.cumsum(new_run) - 1
-    base = np.zeros(n, dtype=np.int64)
-    if carry[0] is not None and q[0].as_py() == carry[0]:
-        base[run == 0] = carry[1]
-    pos = np.arange(n) - starts[run] + base
-    keep = q.is_valid().to_numpy(zero_copy_only=False) & (pos < k)
-    return keep, (q[n - 1].as_py(), int(pos[-1]) + 1)
-
-
-def _prereduce_topk(cand: DataFrame, k: int, query_id_col: str,
-                    point_id_col: str) -> DataFrame:
-    """Two-phase top-k, phase 1: per-PARTITION top-k per query with NO
-    shuffle — a partition-local sort (sortWithinPartitions, narrow) then
-    an Arrow-batched running head(k) per query.  Cuts the rows entering
-    the final per-query window from O(candidates) to
-    O(k x partitions x queries-per-partition), which is what survives a
-    100x density scale-up; the final window then shuffles only the
-    reduced set."""
-    # point_id tiebreak matches the final window's ordering, so phase 1
-    # always keeps a prefix of the order phase 2 ranks by
-    sorted_ = cand.sortWithinPartitions(query_id_col, "dist_m", point_id_col)
-
-    def _head(batches):
-        carry = (None, 0)
-        for batch in batches:
-            keep, carry = _running_head(batch.column(query_id_col), carry, k)
-            if keep.any():
-                yield batch.filter(pa.array(keep))
-
-    return sorted_.mapInArrow(_head, cand.schema)
-
-
 # the kNN candidate frames carry each query's position in the driver's
 # query table, and the window ranks per position
 _QPOS = "__qpos"
 # the most queries knn_join collects to the driver (radius_join's
 # default max_broadcast_rows)
 _KNN_MAX_QUERIES = 4_000_000
+# unproven queries retry _EXPANSION_ROUNDS wider rings, each
+# ``_EXPANSION_FACTOR * r + 1``, before the brute pass
+_EXPANSION_ROUNDS = 1
+_EXPANSION_FACTOR = 3
 
 
 def _top_k(cand: DataFrame, k: int, point_id_col: str) -> DataFrame:
     """Each query's first ``k`` candidate rows by ``(dist_m,
-    point_id)``, numbered ``rank`` 1..k.  A ``row_number`` window alone,
-    so Spark limits each partition to its first ``k`` rows per query
-    before the shuffle.  The ring rounds and the brute pass both rank
-    here."""
+    point_id)``, numbered ``rank`` 1..k.  A ``row_number`` window alone:
+    Spark plans a partial ``WindowGroupLimit`` below the shuffle, so
+    each partition sends at most ``k`` rows per query (the two-phase
+    top-k), and a final one after it.  Past
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (1000 by default)
+    Spark plans the plain window instead: the same rows, with every
+    candidate shuffled.  Every kNN plan (the ring rounds,
+    ``exact_fallback=False`` and the brute pass) ranks here."""
     w = Window.partitionBy(_QPOS).orderBy(F.col("dist_m").asc(),
                                           F.col(point_id_col).asc())
     return cand.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
-def _candidates(cand: DataFrame, k: int, lon_col: str, lat_col: str,
-                point_id_col: str, query_id_col: str,
-                two_phase: bool) -> DataFrame:
+def _candidates(cand: DataFrame, lon_col: str, lat_col: str,
+                point_id_col: str, query_id_col: str) -> DataFrame:
     """Candidate (query, point) rows as ``__qpos, query_id, q_lon,
-    q_lat, point_id, dist_m`` from a join of points and a query table;
-    with ``two_phase``, only each partition's per-query head(k).  A
-    pair with no distance (a NaN or +-Inf coordinate) is dropped."""
-    cand = cand.select(
+    q_lat, point_id, dist_m`` from a join of points and a query table.
+    A pair with no distance (a NaN or +-Inf coordinate) is dropped."""
+    return cand.select(
         _QPOS, query_id_col, "q_lon", "q_lat", point_id_col,
         haversine_col(F.col(lon_col), F.col(lat_col),
                       F.col("q_lon"), F.col("q_lat")).alias("dist_m"),
     ).where(F.col("dist_m") < F.lit(_BIG_M))  # NaN orders above it
-    if two_phase:
-        cand = _prereduce_topk(cand, k, _QPOS, point_id_col)
-    return cand
 
 
 def _ring_cells(q: pa.Table, level: int, rx, ry: int,
@@ -735,7 +703,7 @@ def _ring_cells(q: pa.Table, level: int, rx, ry: int,
 
 def _ring_round(pts: DataFrame, q: pa.Table, r: int, k: int, level: int,
                 lon_col: str, lat_col: str, point_id_col: str,
-                query_id_col: str, two_phase: bool) -> DataFrame:
+                query_id_col: str) -> DataFrame:
     """One candidate-generation round: the queries' ring-``r`` cells
     come from the driver (:func:`_ring_cells`, numpy, like the PIP
     cover) as a local relation, BROADCAST into an equi-join on the big
@@ -744,8 +712,8 @@ def _ring_round(pts: DataFrame, q: pa.Table, r: int, k: int, level: int,
     queries live in the local relation's rows, not in its code."""
     cells = pts.sparkSession.createDataFrame(_ring_cells(q, level, r, r))
     cand = pts.join(F.broadcast(cells), pts["cell"] == cells["cand_cell"], "inner")
-    return _top_k(_candidates(cand, k, lon_col, lat_col, point_id_col,
-                              query_id_col, two_phase), k, point_id_col)
+    return _top_k(_candidates(cand, lon_col, lat_col, point_id_col,
+                              query_id_col), k, point_id_col)
 
 
 def knn_join(
@@ -760,9 +728,6 @@ def knn_join(
     query_id_col: str = "query_id",
     exact_fallback: bool = True,
     n_points: Optional[int] = None,
-    two_phase: Optional[bool] = None,
-    expansion_rounds: int = 1,
-    expansion_factor: int = 3,
 ) -> DataFrame:
     """k nearest points for every query point (great-circle meters) —
     EXACT at any density.
@@ -782,9 +747,8 @@ def knn_join(
          (:func:`_ring_cells`), which a local relation BROADCASTs into
          an equi-join on the big table's JVM cell column; per-query
          top-k by one ``row_number`` window, which Spark pre-limits to
-         k rows per query before the shuffle.  With ``two_phase``
-         (default: on when the point table is large) a shuffle-free
-         per-partition head(k) runs first as well.
+         k rows per query in each partition before the shuffle
+         (:func:`_top_k`).
       3. **The driver proves each round**: the round's top-k rows come
          back through Arrow (at most k per query); a query is proven
          exact iff it has a k-th candidate and that distance is <= the
@@ -801,9 +765,9 @@ def knn_join(
          the exact brute-force pass (a broadcast of those queries
          only): its <= _BRUTE_PAIRS pairs cost no more than the full
          points scan of another ring round.  A larger remainder (sparse
-         neighborhoods) retries with ring ``expansion_factor*r + 1`` —
-         never a full scan — for ``expansion_rounds`` rounds; whatever
-         is still unproven then takes the brute-force pass.
+         neighborhoods) retries once with ring ``3r + 1`` — never a
+         full scan; whatever is still unproven then takes the
+         brute-force pass.
 
     Construction is EAGER: one job collects the queries (at most
     ``_KNN_MAX_QUERIES``, 4M, else a ``ValueError`` before any ring
@@ -814,13 +778,14 @@ def knn_join(
     collects the queries, runs no ring job and returns round 1's
     top-k rows as they are, proven or not.  The driver reads a round's
     rows back by query id, so a query whose id is NULL or repeats is
-    never proven in a round and takes the brute pass.  A query with a
-    NULL, NaN or +-Inf coordinate, or a point with a NaN or +-Inf one,
-    takes part in no pair: such a query gets no row, and a finite
-    query with fewer than k finite points gets fewer than k.
+    never proven in a round and takes the brute pass.  A query or a
+    point with a NULL, NaN or +-Inf coordinate takes part in no pair:
+    such a query gets no row, and a finite query with fewer than k
+    finite points gets fewer than k.
 
     Output: query_id, q_lon, q_lat, point_id, dist_m, rank (1..k).
     """
+    points = _located(points, lon_col, lat_col)
     block_cells = (2 * ring + 1) ** 2
     if level is None:
         if n_points is None:
@@ -837,21 +802,6 @@ def knn_join(
         # Results are unchanged at any level (exactness guard +
         # fallback); only the candidate density changes.
         level = int(min(max(math.floor(raw), 1), MAX_LEVEL))
-    if two_phase is None:
-        # the pre-reduce pays a Python stage; it wins only when the
-        # per-query candidate set is large — which adaptive level
-        # prevents by construction (measured: 20M points, adaptive
-        # level 11 -> ~40 candidates/query, single-phase faster).
-        if n_points is None:
-            # only reachable with a PINNED level (adaptive counts): the
-            # candidate estimate is unknowable, and a catastrophically
-            # coarse pinned level is exactly when the pre-reduce matters
-            # — default SAFE instead of silently single-phase (round-2
-            # verdict hole: est_cand defaulted to 0.0 here)
-            two_phase = True
-        else:
-            est_cand = n_points * block_cells / 4 ** level
-            two_phase = est_cand > 5000.0
 
     pts = points.withColumn("cell", cell_col(F.col(lon_col), F.col(lat_col), level))
     spark = points.sparkSession
@@ -866,7 +816,7 @@ def knn_join(
     out_cols = [query_id_col, "q_lon", "q_lat", point_id_col, "dist_m", "rank"]
     if not exact_fallback:
         return _ring_round(pts, qt, ring, k, level, lon_col, lat_col, point_id_col,
-                           query_id_col, two_phase).select(*out_cols)
+                           query_id_col).select(*out_cols)
 
     # a remainder this small costs the brute pass at most _BRUTE_PAIRS
     # pairs — no more than the full points scan of one ring round
@@ -882,13 +832,12 @@ def knn_join(
     # a query with a non-finite coordinate has no cell and no distance
     remaining = np.flatnonzero(np.isfinite(q_lon) & np.isfinite(q_lat))
     r, proven = ring, []
-    for rnd in range(max(expansion_rounds, 0) + 1):
+    for rnd in range(_EXPANSION_ROUNDS + 1):
         if rnd:
             # unproven queries (sparse neighborhoods) retry a wider ring
-            r = expansion_factor * r + 1
+            r = _EXPANSION_FACTOR * r + 1
         tk = _ring_round(pts, qt.take(remaining), r, k, level, lon_col, lat_col,
-                         point_id_col, query_id_col, two_phase
-                         ).select(*out_cols).toArrow()
+                         point_id_col, query_id_col).select(*out_cols).toArrow()
         # a query is proven when it has a k-th candidate within the
         # guard (a NaN k-th distance, from fewer than k, never is)
         pos = pc.index_in(tk.column(query_id_col), value_set=ids).to_numpy(
@@ -910,7 +859,7 @@ def knn_join(
     # pole-adjacent queries, k > population) — broadcast those queries;
     # it runs when the result is consumed
     bad = spark.createDataFrame(qt.take(remaining))
-    brute = _candidates(points.crossJoin(F.broadcast(bad)), k, lon_col, lat_col,
-                        point_id_col, query_id_col, two_phase)
+    brute = _candidates(points.crossJoin(F.broadcast(bad)), lon_col, lat_col,
+                        point_id_col, query_id_col)
     return spark.createDataFrame(pa.concat_tables(proven)).unionByName(
         _top_k(brute, k, point_id_col).select(*out_cols))

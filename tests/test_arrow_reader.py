@@ -161,16 +161,6 @@ def test_exterior_bbox_follows_spark_nan_rule():
     assert set(cover.column("poly_id").to_pylist()) == {"a", "h"}
 
 
-def test_running_head_carries_a_query_across_batches():
-    from proj_spark.operators.joins import _running_head
-
-    keep, carry = _running_head(pa.array([None, 1, 1, 2, 2, 2]), (None, 0), 2)
-    assert keep.tolist() == [False, True, True, True, True, False]
-    assert carry == (2, 3)
-    keep, carry = _running_head(pa.array([2, 3, 3, 3]), carry, 2)
-    assert keep.tolist() == [False, True, True, False] and carry == (3, 3)
-
-
 def test_geodesic_rows_equal_the_scalar_calls(spark):
     from proj_spark.operators.geodesic import (geom_area_m2, geom_length_m,
                                                with_geodesic_area,

@@ -353,19 +353,27 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
     assert 0 < n_sel < n_all
 
 
-def test_knn_pinned_level_defaults_two_phase(spark):
-    # round-2 verdict hole: a PINNED level with unknown n_points used to
-    # silently disable the two-phase pre-reduce (est_cand = 0.0); it
-    # must now default SAFE — the plan carries the mapInArrow stage
+def test_knn_top_k_is_spark_window_group_limit(spark):
+    # every kNN plan ranks through one row_number window, which Spark
+    # pre-limits per partition below the shuffle: no Python stage, and
+    # a partial WindowGroupLimit under the Exchange on __qpos
     qs = spark.createDataFrame(pd.DataFrame({
         "query_id": [0, 1], "lon": [1.0, 2.0], "lat": [1.0, 2.0]}))
-    pinned = knn_join(_pts(spark), qs, k=3, level=2, exact_fallback=False)
-    assert "MapInArrow" in _plan(pinned)
-    # with a known (small) point count the estimate applies and the
-    # Python pre-reduce stage is skipped
-    sized = knn_join(_pts(spark), qs, k=3, level=2, exact_fallback=False,
-                     n_points=2000)
-    assert "MapInArrow" not in _plan(sized)
+    # a repeated query id is never proven in a round: the brute branch
+    dup = spark.createDataFrame(pd.DataFrame({
+        "query_id": [0, 0, 1], "lon": [1.0, 2.0, 3.0], "lat": [1.0, 2.0, 3.0]}))
+    plans = {
+        "pinned": knn_join(_pts(spark), qs, k=3, level=2, exact_fallback=False),
+        "pinned_sized": knn_join(_pts(spark), qs, k=3, level=2,
+                                 exact_fallback=False, n_points=2000),
+        "brute": knn_join(_pts(spark), dup, k=3, level=4),
+    }
+    for name, df in plans.items():
+        assert "MapInArrow" not in _plan(df), name
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        below = plan[plan.index("Exchange hashpartitioning(__qpos"):]
+        assert re.search(r"WindowGroupLimit \[__qpos.*, Partial\n", below), name
+        assert ("BroadcastNestedLoopJoin" in plan) == (name == "brute"), name
 
 
 def test_pip_join_chunked_plan_unions_broadcasts(spark):

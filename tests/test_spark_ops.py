@@ -700,7 +700,7 @@ def test_knn_antimeridian_wrap(spark):
         assert list(got[got["query_id"] == qi]["point_id"]) == want
 
 
-def test_knn_adaptive_level_and_two_phase_parity(spark):
+def test_knn_parity_across_levels_and_without_the_pre_limit(spark):
     rng = np.random.default_rng(14)
     npts, nq, k = 2500, 30, 4
     lon = rng.uniform(-40, 40, npts)
@@ -724,13 +724,21 @@ def test_knn_adaptive_level_and_two_phase_parity(spark):
     for qi in range(nq):
         want = list(np.lexsort((np.arange(npts), d[qi]))[:k])
         assert list(base[base["query_id"] == qi]["point_id"]) == want
-    # the two-phase (pre-reduced) top-k returns the identical result
-    tp = (
-        knn_join(pts, qs, k=k, two_phase=True)
-        .select("query_id", "point_id", "rank").toPandas()
-        .sort_values(["query_id", "rank"]).reset_index(drop=True)
-    )
-    assert (tp["point_id"].values == base["point_id"].values).all()
+    # a coarse pinned level (many candidates per query) and the plain
+    # window (Spark's per-partition pre-limit switched off) return the
+    # identical rows
+    def rows(**kw):
+        return (knn_join(pts, qs, k=k, **kw)
+                .select("query_id", "point_id", "rank").toPandas()
+                .sort_values(["query_id", "rank"]).reset_index(drop=True))
+
+    assert rows(level=2).equals(base)
+    key = "spark.sql.optimizer.windowGroupLimitThreshold"
+    spark.conf.set(key, "-1")
+    try:
+        assert rows().equals(base)
+    finally:
+        spark.conf.unset(key)
 
 
 def test_knn_near_pole_exact(spark):
@@ -862,32 +870,36 @@ def test_knn_nan_point_and_query(spark, n_points):
 
 
 _NON_FINITE = [(np.nan, 10.0), (10.0, np.nan), (np.nan, np.nan),
-               (np.inf, 10.0), (10.0, -np.inf), (-np.inf, np.inf)]
+               (np.inf, 10.0), (10.0, -np.inf), (-np.inf, np.inf),
+               (None, 10.0), (10.0, None), (None, None)]
 
 
 def _non_finite_inputs(spark, n_fin):
     """``n_fin`` finite points near (10, 10) plus one point per
-    non-finite (lon, lat) pattern, and four finite queries plus one per
-    pattern.  Point ids: finite first; query ids: finite first."""
+    non-finite (lon, lat) pattern (NULL included), and four finite
+    queries plus one per pattern.  Point ids: finite first; query ids:
+    finite first.  The numpy arrays hold NaN for a NULL."""
     rng = np.random.default_rng(23)
-    lon = np.concatenate([rng.uniform(8.0, 12.0, n_fin), [a for a, _ in _NON_FINITE]])
-    lat = np.concatenate([rng.uniform(8.0, 12.0, n_fin), [b for _, b in _NON_FINITE]])
-    qlon = np.concatenate([[10.0, 9.0, 11.5, -170.0], [a for a, _ in _NON_FINITE]])
-    qlat = np.concatenate([[10.0, 11.0, 8.5, -85.0], [b for _, b in _NON_FINITE]])
+    lon = list(rng.uniform(8.0, 12.0, n_fin)) + [a for a, _ in _NON_FINITE]
+    lat = list(rng.uniform(8.0, 12.0, n_fin)) + [b for _, b in _NON_FINITE]
+    qlon = [10.0, 9.0, 11.5, -170.0] + [a for a, _ in _NON_FINITE]
+    qlat = [10.0, 11.0, 8.5, -85.0] + [b for _, b in _NON_FINITE]
+
+    def rows(xs, ys):
+        return [(i, None if a is None else float(a), None if b is None else float(b))
+                for i, (a, b) in enumerate(zip(xs, ys))]
+
     # rows, not pandas: Arrow would turn a pandas NaN into NULL
-    pts = spark.createDataFrame(
-        [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(lon, lat))],
-        "point_id long, lon double, lat double")
-    qs = spark.createDataFrame(
-        [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(qlon, qlat))],
-        "query_id long, lon double, lat double")
-    return pts, qs, lon, lat, qlon, qlat
+    pts = spark.createDataFrame(rows(lon, lat), "point_id long, lon double, lat double")
+    qs = spark.createDataFrame(rows(qlon, qlat), "query_id long, lon double, lat double")
+    return (pts, qs) + tuple(np.array(v, dtype=np.float64)
+                             for v in (lon, lat, qlon, qlat))
 
 
 @pytest.mark.parametrize("n_fin, k", [(300, 5), (3, 5)],
                          ids=["dense", "fewer_than_k"])
 def test_knn_non_finite_inputs_take_no_pair(spark, n_fin, k):
-    # NaN, +Inf and -Inf in lon, lat or both, on either side: a
+    # NULL, NaN, +Inf and -Inf in lon, lat or both, on either side: a
     # non-finite query gets no row, a non-finite point is nobody's
     # neighbour, and a finite query with fewer than k finite points
     # gets only those (the query at (-170, -85) has no ring candidate,
@@ -1145,8 +1157,8 @@ def test_radius_join_exact_vs_bruteforce(spark):
 @pytest.mark.parametrize("radius", [300_000.0, 2.1e7],
                          ids=["300km", "past_half_circumference"])
 def test_radius_non_finite_inputs_take_no_pair(spark, radius):
-    # NaN, +Inf and -Inf in lon, lat or both, on either side: a pair
-    # with a non-finite coordinate has no distance, so it is never
+    # NULL, NaN, +Inf and -Inf in lon, lat or both, on either side: a
+    # pair with a non-finite coordinate has no distance, so it is never
     # within the radius, not even one past half the circumference
     # (pi R, where every finite pair is)
     import warnings
